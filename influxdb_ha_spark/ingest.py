@@ -166,9 +166,10 @@ def upsert_points(existing: DataFrame, incoming: DataFrame,
     keeping the newest non-null value per field.
 
     `existing` and `incoming` may have different field columns (schema
-    grows on write); output has the union. One shuffle on (time, tags) —
-    the same key the table is partitioned by, so at scale AQE turns this
-    into a partition-local aggregation after the first write.
+    grows on write); output has the union. One shuffle on (time, tags).
+    The result is lazy: `server.write_lines` compacts it once per write
+    (`localCheckpoint`), so the next write upserts into a flat relation
+    instead of stacking another union on the previous plan.
     """
     old = existing.withColumn("__gen", F.lit(0))
     new = incoming.withColumn("__gen", F.lit(1))

@@ -7,10 +7,14 @@ measurement, tags, typed fields, and an optional ns timestamp:
     weather,location=us-midwest temperature=82,humidity=71i 1465839830100400200
 
 Two parsers are provided:
-- `parse_lines_df`  — vectorized `mapInPandas` parser (Arrow-batched; the
-  production path: bytes in, typed rows out, no driver involvement; scales
-  linearly with partitions of the raw-line DataFrame).
-- `parse_line`      — single-point Python parser (unit tests, small batches).
+- `parse_line`      — single-point Python parser. It is the /write path
+  (`server.write_lines`): the request body is already in the driver, so it
+  is parsed there and `pivot_records` pivots it without a Spark job.
+- `parse_lines_df`  — vectorized `mapInPandas` parser over `parse_line`
+  (Arrow-batched; bytes in, typed rows out, no driver involvement; scales
+  linearly with partitions of the raw-line DataFrame). It serves the
+  data-parallel ingests (`ingest.ingest_lines`, `stream_ingest_lines`) and
+  is the reference `pivot_records` is tested against.
 
 Output is "long" shape: (measurement, tags map, field key, field value typed
 columns, time ns). `pivot_points` turns it into a per-measurement wide
@@ -171,7 +175,9 @@ def parse_lines_df(lines: DataFrame, line_col: str = "value",
             for line in pdf[line_col]:
                 if line is not None:
                     recs.extend(parse_line(line, default_time_ns))
-            yield pd.DataFrame(recs, columns=[
+            # object columns: a long column holding nulls would otherwise
+            # become float64 and round integers beyond 2**53
+            yield pd.DataFrame(recs, dtype=object, columns=[
                 "measurement", "tags", "field_key", "f_float", "f_int",
                 "f_bool", "f_str", "time", "error"])
 
@@ -203,6 +209,52 @@ def pivot_points(long_df: DataFrame, measurement: str,
                     ignorenulls=True).alias(fk)
             for fk, col in sorted(field_types.items())]
     return m.groupBy(*keys).agg(*aggs)
+
+
+def pivot_records(recs: list[dict], tag_keys: list[str]):
+    """`pivot_points` on the driver: one measurement's `parse_line` records,
+    in line order → a `pyarrow.Table` with one row per (time, tagset) and
+    columns time + `tag_keys` + sorted field keys.
+
+    A field's type is the one of its earliest point, ties broken by line
+    order. Lines that repeat a (time, tagset) merge like writes do in
+    `ingest.upsert_points`: the later line wins field by field and fields
+    it lacks keep their value. As in `pivot_points`, a value of another type
+    than its field's is dropped.
+    """
+    import pyarrow as pa
+
+    arrow_type = {"f_float": pa.float64(), "f_int": pa.int64(),
+                  "f_bool": pa.bool_(), "f_str": pa.string()}
+
+    def value_col(r: dict) -> str:  # pivot_points' f_float > … > f_str
+        return next((c for c in ("f_float", "f_int", "f_bool")
+                     if r[c] is not None), "f_str")
+
+    first: dict[str, tuple] = {}
+    for i, r in enumerate(recs):
+        order = (r["time"] is None, r["time"] or 0, i)
+        if r["field_key"] not in first or order < first[r["field_key"]][0]:
+            first[r["field_key"]] = (order, value_col(r))
+    fields = sorted(first)
+    col_of = {fk: first[fk][1] for fk in fields}
+    pos = {fk: j for j, fk in enumerate(fields, start=1 + len(tag_keys))}
+    rows: dict[tuple, list] = {}
+    for r in recs:
+        key = (r["time"], *(r["tags"].get(k) for k in tag_keys))
+        row = rows.get(key)
+        if row is None:
+            row = rows[key] = [*key] + [None] * len(fields)
+        v = r[col_of[r["field_key"]]]
+        if v is not None:
+            row[pos[r["field_key"]]] = v
+    schema = pa.schema([("time", pa.int64())]
+                       + [(k, pa.string()) for k in tag_keys]
+                       + [(fk, arrow_type[col_of[fk]]) for fk in fields])
+    cols = list(zip(*rows.values()))
+    return pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, schema.types)],
+        schema=schema)
 
 
 def errors_df(long_df: DataFrame) -> DataFrame:

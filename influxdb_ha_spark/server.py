@@ -542,65 +542,71 @@ def write_lines(engine: Engine, database: str, body: str,
                 default_time_ns: int | None = None) -> int:
     """Batch /write semantics against the in-memory catalog: parse line
     protocol, pivot per measurement, validate partition keys, merge into
-    (or register) each measurement. Returns accepted point count; raises
-    WriteError on malformed lines or unfulfilled partition keys, mirroring
-    the reference's 400s (write_handler.go:74-78, 104-112)."""
-    from .ingest import validate_partition_key
-    from .lineprotocol import parse_lines_df, pivot_points
+    (or register) each measurement. Returns the accepted point count, one
+    per (time, tagset) of each measurement.
+
+    The body is already a string in the driver, so it is parsed there
+    (`lineprotocol.parse_line`, pivoted by `pivot_records`); discovering
+    measurements, tag keys and field types and checking them fires no Spark
+    job. Every check runs for every measurement before any is registered,
+    so a malformed line, an unfulfilled partition key or a field-type
+    conflict raises WriteError and writes nothing, mirroring the
+    reference's 400s (write_handler.go:74-78, 103-112).
+
+    Generations: a new measurement registers the pivoted batch as is. A
+    write to an existing one registers `upsert_points(old, new)` cut by
+    `localCheckpoint`: one compaction job per write, after which reads scan
+    a flat relation whose plan does not grow with the number of writes. The
+    superseded generation is not unpersisted, so a reader still holding it
+    keeps working; Spark's ContextCleaner frees its blocks once nothing
+    references it."""
+    from .ingest import FieldTypeConflict, check_field_types, upsert_points
+    from .lineprotocol import parse_line, pivot_records
 
     spark = engine.catalog.spark
     factor = _PRECISION_NS.get(precision or "ns")
     if factor is None:
         raise WriteError(f"invalid precision {precision!r}")
-    lines = [ln for ln in body.splitlines() if ln.strip()]
-    if not lines:
-        return 0
-    raw = spark.createDataFrame([(ln,) for ln in lines], "value string")
-    long_df = parse_lines_df(raw, default_time_ns=default_time_ns)
-    if factor != 1:
-        long_df = long_df.withColumn(
-            "time", (F.col("time") * F.lit(factor)).cast("long"))
-    long_df = long_df.cache()
-    errs = [r["error"] for r in
-            long_df.where(F.col("error").isNotNull()).select("error").take(1)]
-    if errs:
-        raise WriteError(f"unable to parse points: {errs[0]}")
-    total = 0
-    names = [r["measurement"] for r in
-             long_df.select("measurement").distinct().collect()]
-    for name in sorted(n for n in names if n):
-        tag_keys = sorted(r["k"] for r in
-                          long_df.where(F.col("measurement") == name)
-                          .select(F.explode(F.map_keys("tags")).alias("k"))
-                          .distinct().collect())
-        wide = pivot_points(long_df, name, tag_keys)
+    by_name: dict[str, list[dict]] = {}
+    for line in body.splitlines():
+        for rec in parse_line(line, default_time_ns):
+            if rec["error"] is not None:
+                raise WriteError(f"unable to parse points: {rec['error']}")
+            if rec["time"] is not None:
+                rec["time"] *= factor
+            by_name.setdefault(rec["measurement"], []).append(rec)
+    staged, total = [], 0
+    for name in sorted(by_name):
+        recs = by_name[name]
+        tag_keys = sorted({k for r in recs for k in r["tags"]})
         pk = engine.catalog.partition_key_for(database, name)
-        valid, rejected = validate_partition_key(wide, pk)
-        bad = rejected.take(1)
-        if bad:
+        if pk is not None and any(t not in r["tags"]
+                                  for r in recs for t in pk.tags):
             raise WriteError(
                 f"missing partition key tags {pk.tags} for {name}")
-        try:
-            m = engine.catalog.get(database, name)
-            tags = sorted(set(m.tags) | set(tag_keys))
-            from .ingest import (FieldTypeConflict, check_field_types,
-                                 upsert_points)
+        table = pivot_records(recs, tag_keys)
+        wide = spark.createDataFrame(table)
+        old = engine.catalog.databases.get(database, {}).get(name)
+        tags = tag_keys
+        if old is not None:
+            tags = sorted(set(old.tags) | set(tag_keys))
             try:
-                check_field_types(m.df, valid, tags)
+                check_field_types(old.df, wide, tags)
             except FieldTypeConflict as e:
                 raise WriteError(str(e))  # first-write-wins typing
-            # InfluxDB upsert: same (time, tagset) → newest fields win
-            merged = upsert_points(m.df, valid, tags)
-            fields = [c for c in merged.columns
-                      if c != "time" and c not in tags]
-            engine.catalog.register(Measurement(
-                name=name, database=database, tags=tags, fields=fields,
-                df=merged))
-        except KeyError:
-            fields = [c for c in valid.columns
-                      if c != "time" and c not in tag_keys]
-            engine.catalog.register(Measurement(
-                name=name, database=database, tags=list(tag_keys),
-                fields=fields, df=valid))
-        total += valid.count()
+        staged.append((name, tags, old, wide))
+        total += table.num_rows
+    # compact every measurement before registering any: a failed job
+    # leaves the catalog untouched
+    generations = []
+    for name, tags, old, wide in staged:
+        # InfluxDB upsert: same (time, tagset) → newest fields win
+        df = wide if old is None else (
+            upsert_points(old.df, wide, tags).localCheckpoint(eager=True))
+        generations.append(Measurement(
+            name=name, database=database, tags=tags,
+            fields=[c for c in df.columns if c != "time" and c not in tags],
+            df=df))
+    for m in generations:
+        engine.catalog.register(m)
     return total

@@ -89,6 +89,22 @@ def test_write_partition_key_violation_is_400(http):
     assert "partition key" in json.loads(e.value.read())["error"]
 
 
+def test_rejected_write_writes_nothing(http):
+    """A 400 for one measurement leaves every other one of the body
+    unwritten: `aaa` sorts before `treasures`, which lacks its key tag."""
+    base, _ = http
+    show = base + "/query?db=sharded&q=" + urllib.request.quote(
+        "SHOW MEASUREMENTS")
+    before = json.loads(_get(show)[2])
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(base + "/write?db=sharded",
+              b"aaa v=1 1500000000000000006\n"
+              b"treasures value=1 1500000000000000007")
+    assert e.value.code == 400
+    assert "partition key" in json.loads(e.value.read())["error"]
+    assert json.loads(_get(show)[2]) == before
+
+
 def test_query_multi_statement_and_errors(http):
     base, _ = http
     q = "SELECT count(value) AS n FROM treasures; SHOW MEASUREMENTS"

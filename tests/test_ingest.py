@@ -183,6 +183,104 @@ def test_write_lines_upsert_and_type_conflict(spark):
         write_lines(eng, "db", "m,tag=a x=3i 3000\n")
 
 
+def test_write_lines_rejected_write_writes_nothing(spark):
+    """A 400 leaves the catalog as it was: every measurement is checked
+    before any is registered (write_handler.go:103-112 rejects the whole
+    request before relaying)."""
+    from influxdb_ha_spark.server import Engine, WriteError, write_lines
+    cat = Catalog(spark)
+    cat.partition_keys.append(PartitionKey("db", "", ["host"]))
+    eng = Engine(cat, database="db")
+    with pytest.raises(WriteError,
+                       match=r"missing partition key tags \['host'\] for b"):
+        write_lines(eng, "db", "a,host=h1 v=1 1000\nb v=2 2000")
+    assert "a" not in cat.databases.get("db", {})
+    # a field-type conflict in a later measurement rejects the earlier one
+    write_lines(eng, "db", "b,host=h1 v=1 1000")
+    with pytest.raises(WriteError, match="exists as double"):
+        write_lines(eng, "db", "a,host=h1 v=1 1000\nb,host=h1 v=2i 2000")
+    assert "a" not in cat.databases["db"]
+    # a malformed line anywhere in the body rejects the whole body
+    with pytest.raises(WriteError, match="unable to parse points"):
+        write_lines(eng, "db", "a,host=h1 v=1 1000\nnot-a-point")
+    assert sorted(cat.databases["db"]) == ["b"]
+
+
+def test_write_lines_duplicates_in_one_body(spark):
+    """Lines repeating a (time, tagset) merge as later writes do: the
+    later line wins field by field and fields it lacks keep their value.
+    A field's type comes from its earliest point, ties by line order."""
+    from influxdb_ha_spark.server import Engine, write_lines
+    eng = Engine(Catalog(spark), database="db")
+    n = write_lines(eng, "db", "m,t=a x=1,y=5 1000\n"
+                               "m,t=a x=8 1000\n"
+                               "m,t=b z=1 2000\n"
+                               "m,t=c z=2i 2000\n")
+    assert n == 3
+    m = eng.catalog.get("db", "m")
+    assert dict(m.df.dtypes)["z"] == "double"
+    rows = {(r["time"], r["t"]): (r["x"], r["y"], r["z"])
+            for r in m.df.collect()}
+    assert rows == {(1000, "a"): (8.0, 5.0, None),
+                    (2000, "b"): (None, None, 1.0),
+                    (2000, "c"): (None, None, None)}
+    # the same rule across writes
+    write_lines(eng, "db", "m,t=a x=100 1000\n")
+    rows = {(r["time"], r["t"]): (r["x"], r["y"])
+            for r in eng.catalog.get("db", "m").df.collect()}
+    assert rows[(1000, "a")] == (100.0, 5.0)
+
+
+def test_write_lines_counts_per_write(spark):
+    """Deterministic counts of the write path: the first write of a
+    measurement fires no Spark job, every later one compacts with at most
+    two; the registered plan never stacks unions, no write leaves a cache
+    entry, a reader holding an older generation keeps working, and a
+    DELETE survives the next compaction."""
+    import gc
+    import time as _time
+    from influxdb_ha_spark.server import Engine, write_lines
+    sc = spark.sparkContext
+    # the session is shared: start from an empty cache so the assertion
+    # below is about this write path only
+    spark.catalog.clearCache()
+    eng = Engine(Catalog(spark), database="db")
+    groups, held = [], None
+    for d in range(10):
+        # every batch overlaps the previous one by 50 points
+        body = "\n".join(f"m,host=h{(d * 50 + i) % 7} v={d * 100 + i}i "
+                         f"{d * 50 + i}" for i in range(100))
+        groups.append(f"test-write-lines-{id(eng)}-{d}")
+        sc.setJobGroup(groups[-1], "write_lines")
+        try:
+            assert write_lines(eng, "db", body) == 100
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if d == 1:  # the first compacted generation
+            held = eng.catalog.get("db", "m").df
+    st, jobs = sc.statusTracker(), None
+    for _ in range(50):  # the tracker is fed by the listener bus
+        prev, jobs = jobs, [len(st.getJobIdsForGroup(g)) for g in groups]
+        if jobs == prev:
+            break
+        _time.sleep(0.2)
+    assert jobs[0] == 0 and max(jobs[1:]) <= 2, jobs
+    df = eng.catalog.get("db", "m").df
+    assert "Union" not in df._jdf.queryExecution().analyzed().toString()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    gc.collect()
+    spark._jvm.System.gc()  # let the ContextCleaner see what is unreachable
+    assert held.count() == 150
+    assert df.count() == 550
+    eng.query("DELETE FROM m WHERE host = 'h0'", "db")
+    write_lines(eng, "db", "m,host=h1 v=1i 999999")
+    rows = {r["time"]: (r["host"], r["v"])
+            for r in eng.catalog.get("db", "m").df.collect()}
+    assert len(rows) == 550 - len(range(0, 550, 7)) + 1
+    assert all(host != "h0" for host, _ in rows.values())
+    assert rows[50] == ("h1", 100)  # batch 1 overwrote batch 0's point
+
+
 def test_line_protocol_export_roundtrip(spark):
     """Columnar export → parse round-trip (the reference's row→point
     conversion, importer.go:361-404, without per-row Python)."""

@@ -1,12 +1,15 @@
 """Property-based round-trip: format_point → parse_line recovers the point
 exactly, for arbitrary measurement/tag/field content including characters
-that require escaping (commas, spaces, equals, quotes, backslashes)."""
+that require escaping (commas, spaces, equals, quotes, backslashes); and
+the driver-side pivot of /write agrees with the Spark one."""
 
 import math
 
 from hypothesis import given, settings, strategies as st
 
-from influxdb_ha_spark.lineprotocol import format_point, parse_line
+from influxdb_ha_spark.lineprotocol import (format_point, parse_line,
+                                            parse_lines_df, pivot_points,
+                                            pivot_records)
 
 name = st.text(
     alphabet=st.characters(codec="ascii", exclude_characters="\n\r\\\"",
@@ -88,3 +91,40 @@ def test_floor_bucket_matches_time_bucket_arithmetic(t, interval, offset):
     b = _floor_bucket(t, interval, offset)
     assert b <= t < b + interval  # the bucket actually contains t
     assert (b - offset) % interval == 0  # and sits on the offset grid
+
+
+point = st.tuples(
+    st.sampled_from(["cpu", "disk io"]),
+    st.dictionaries(st.sampled_from(["host", "dc", "rack"]),
+                    st.sampled_from(["a", "b", "c,d", "e f"]), max_size=2),
+    st.dictionaries(st.sampled_from(["x", "y", "z"]),
+                    st.one_of(st.integers(-2**62, 2**62), st.booleans(),
+                              st.floats(allow_nan=False,
+                                        allow_infinity=False),
+                              st.text("ab \",=", max_size=4)),
+                    min_size=1, max_size=3))
+
+
+@settings(max_examples=12, deadline=None)
+@given(points=st.lists(point, min_size=1, max_size=12),
+       times=st.lists(st.integers(0, 2**62), min_size=12, max_size=12,
+                      unique=True))
+def test_pivot_records_matches_pivot_points(spark, points, times):
+    """On bodies without a repeated (time, tagset), `pivot_records` gives
+    the rows and dtypes of `pivot_points(parse_lines_df(...))`, including
+    a field written with two types (the earliest point's type wins and
+    the other values are dropped). Distinct times keep the Spark pivot's
+    type choice free of ties."""
+    lines = [format_point(m, tags, fields, t)
+             for (m, tags, fields), t in zip(points, times)]
+    long_df = parse_lines_df(
+        spark.createDataFrame([(ln,) for ln in lines], "value string"))
+    recs = [r for ln in lines for r in parse_line(ln)]
+    for name in {r["measurement"] for r in recs}:
+        mine = [r for r in recs if r["measurement"] == name]
+        tag_keys = sorted({k for r in mine for k in r["tags"]})
+        got = spark.createDataFrame(pivot_records(mine, tag_keys))
+        want = pivot_points(long_df, name, tag_keys)
+        assert got.dtypes == want.dtypes
+        assert sorted(map(repr, got.collect())) == \
+            sorted(map(repr, want.collect()))
