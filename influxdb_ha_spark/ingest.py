@@ -167,9 +167,10 @@ def upsert_points(existing: DataFrame, incoming: DataFrame,
 
     `existing` and `incoming` may have different field columns (schema
     grows on write); output has the union. One shuffle on (time, tags).
-    The result is lazy: `server.write_lines` compacts it once per write
-    (`localCheckpoint`), so the next write upserts into a flat relation
-    instead of stacking another union on the previous plan.
+    The result is lazy. For a measurement held by the driver,
+    `server.write_lines` compacts it once per write back into a
+    LocalRelation, so the next write upserts into a flat relation instead
+    of stacking another union on the previous plan.
     """
     old = existing.withColumn("__gen", F.lit(0))
     new = incoming.withColumn("__gen", F.lit(1))

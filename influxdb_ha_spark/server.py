@@ -537,6 +537,16 @@ class WriteError(Exception):
     pass
 
 
+def _driver_held(df: DataFrame) -> bool:
+    """Whether every leaf of `df`'s plan is a LocalRelation, i.e. all its
+    rows are held by the driver, as every pivoted /write batch is."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        if leaves.next().getClass().getSimpleName() != "LocalRelation":
+            return False
+    return True
+
+
 def write_lines(engine: Engine, database: str, body: str,
                 precision: str = "ns",
                 default_time_ns: int | None = None) -> int:
@@ -553,13 +563,18 @@ def write_lines(engine: Engine, database: str, body: str,
     conflict raises WriteError and writes nothing, mirroring the
     reference's 400s (write_handler.go:74-78, 103-112).
 
-    Generations: a new measurement registers the pivoted batch as is. A
-    write to an existing one registers `upsert_points(old, new)` cut by
-    `localCheckpoint`: one compaction job per write, after which reads scan
-    a flat relation whose plan does not grow with the number of writes. The
-    superseded generation is not unpersisted, so a reader still holding it
-    keeps working; Spark's ContextCleaner frees its blocks once nothing
-    references it."""
+    Generations: a new measurement registers the pivoted batch, a
+    LocalRelation whose rows live in the driver's plan. A write to a
+    measurement held that way (`_driver_held`: born from /write, possibly
+    filtered by DELETE) is compacted back into the driver:
+    `upsert_points(old, new)` runs once (two jobs) and its rows become the
+    next LocalRelation, so a read scans a flat relation whose plan does not
+    grow with the number of writes, and no generation depends on executor
+    storage. Any other measurement (file-backed, ingested by Spark) is
+    upserted lazily, so a write does not shuffle or copy the whole table
+    and its scans keep pruning and pushdown. A superseded generation is
+    never released explicitly: a reader still holding it keeps working,
+    and it is freed once nothing references it."""
     from .ingest import FieldTypeConflict, check_field_types, upsert_points
     from .lineprotocol import parse_line, pivot_records
 
@@ -600,9 +615,12 @@ def write_lines(engine: Engine, database: str, body: str,
     # leaves the catalog untouched
     generations = []
     for name, tags, old, wide in staged:
-        # InfluxDB upsert: same (time, tagset) → newest fields win
-        df = wide if old is None else (
-            upsert_points(old.df, wide, tags).localCheckpoint(eager=True))
+        df = wide
+        if old is not None:
+            # InfluxDB upsert: same (time, tagset) → newest fields win
+            df = upsert_points(old.df, wide, tags)
+            if _driver_held(old.df):
+                df = spark.createDataFrame(df.toArrow())
         generations.append(Measurement(
             name=name, database=database, tags=tags,
             fields=[c for c in df.columns if c != "time" and c not in tags],

@@ -1,5 +1,7 @@
 """Line protocol, write path, and streaming ingest tests."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -231,19 +233,29 @@ def test_write_lines_duplicates_in_one_body(spark):
     assert rows[(1000, "a")] == (100.0, 5.0)
 
 
+def _job_counts(sc, groups):
+    st, jobs = sc.statusTracker(), None
+    for _ in range(50):  # the tracker is fed by the listener bus
+        prev, jobs = jobs, [len(st.getJobIdsForGroup(g)) for g in groups]
+        if jobs == prev:
+            return jobs
+        time.sleep(0.2)
+    return jobs
+
+
 def test_write_lines_counts_per_write(spark):
     """Deterministic counts of the write path: the first write of a
     measurement fires no Spark job, every later one compacts with at most
     two; the registered plan never stacks unions, no write leaves a cache
-    entry, a reader holding an older generation keeps working, and a
-    DELETE survives the next compaction."""
+    entry or a persisted RDD, a reader holding an older generation keeps
+    working, and a DELETE survives the next compaction."""
     import gc
-    import time as _time
     from influxdb_ha_spark.server import Engine, write_lines
     sc = spark.sparkContext
     # the session is shared: start from an empty cache so the assertion
     # below is about this write path only
     spark.catalog.clearCache()
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
     eng = Engine(Catalog(spark), database="db")
     groups, held = [], None
     for d in range(10):
@@ -258,16 +270,12 @@ def test_write_lines_counts_per_write(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         if d == 1:  # the first compacted generation
             held = eng.catalog.get("db", "m").df
-    st, jobs = sc.statusTracker(), None
-    for _ in range(50):  # the tracker is fed by the listener bus
-        prev, jobs = jobs, [len(st.getJobIdsForGroup(g)) for g in groups]
-        if jobs == prev:
-            break
-        _time.sleep(0.2)
+    jobs = _job_counts(sc, groups)
     assert jobs[0] == 0 and max(jobs[1:]) <= 2, jobs
     df = eng.catalog.get("db", "m").df
     assert "Union" not in df._jdf.queryExecution().analyzed().toString()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= persisted
     gc.collect()
     spark._jvm.System.gc()  # let the ContextCleaner see what is unreachable
     assert held.count() == 150
@@ -279,6 +287,59 @@ def test_write_lines_counts_per_write(spark):
     assert len(rows) == 550 - len(range(0, 550, 7)) + 1
     assert all(host != "h0" for host, _ in rows.values())
     assert rows[50] == ("h1", 100)  # batch 1 overwrote batch 0's point
+
+
+def test_write_lines_generations_survive_block_loss(spark):
+    """A compacted generation depends on no executor-held block: after
+    every RDD block persisted since the first write is removed (what
+    losing the executors that held them does), every write still reads."""
+    from influxdb_ha_spark.server import Engine, write_lines
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    eng = Engine(Catalog(spark), database="db")
+    for d in range(3):
+        write_lines(eng, "db", "\n".join(
+            f"m,host=h{i % 3} v={d}i {d * 10 + i}" for i in range(20)))
+    for rdd_id, rdd in jsc.getPersistentRDDs().items():
+        if rdd_id not in before:
+            rdd.unpersist(True)
+    rows = {r["time"]: r["v"] for r in eng.catalog.get("db", "m").df.collect()}
+    assert rows == {t: min(t // 10, 2) for t in range(40)}
+
+
+def test_write_lines_into_file_backed_measurement_is_lazy(spark, tmp_path):
+    """A write into a measurement that is not held by the driver (here a
+    parquet table) fires no Spark job and copies nothing: the next
+    generation upserts onto the same file scan, which keeps its pushed
+    filters."""
+    from influxdb_ha_spark.server import Engine, write_lines
+    path = str(tmp_path / "m.parquet")
+    spark.createDataFrame([(t, f"h{t % 2}", float(t)) for t in range(10)],
+                          "time long, host string, v double") \
+        .write.parquet(path)
+    cat = Catalog(spark)
+    cat.register_dataframe("db", "m", spark.read.parquet(path),
+                           time_col="time", tags=["host"])
+    eng = Engine(cat, database="db")
+    sc = spark.sparkContext
+    groups = [f"test-file-backed-{id(eng)}-{d}" for d in range(2)]
+    for d, g in enumerate(groups):
+        sc.setJobGroup(g, "write_lines")
+        try:
+            write_lines(eng, "db", f"m,host=h0 v=-1 {d * 4}\n"
+                                   f"m,host=h2 v=5 {100 + d}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _job_counts(sc, groups) == [0, 0]
+    df = eng.catalog.get("db", "m").df
+    assert df.inputFiles()
+    rows = {(r["time"], r["host"]): r["v"] for r in df.collect()}
+    assert len(rows) == 12
+    assert rows[(0, "h0")] == rows[(4, "h0")] == -1.0
+    assert rows[(2, "h0")] == 2.0 and rows[(101, "h2")] == 5.0
+    plan = df.where(F.col("time") < 3)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "PushedFilters: [IsNotNull(time), LessThan(time,3)]" in plan
 
 
 def test_line_protocol_export_roundtrip(spark):
