@@ -31,6 +31,7 @@ from .influxql.clusterql import (Backup, ClusterQLError, CreatePartitionKey,
                                  UpdatePartitionKey, is_admin_statement,
                                  parse_clusterql)
 from .model import Catalog, PartitionKey
+from .result import local_result
 
 
 class ConflictError(Exception):
@@ -54,11 +55,11 @@ class AdminHandler:
         if isinstance(stmt, ShowNodes):
             return self.show_nodes()
         if isinstance(stmt, RemoveNode):
-            return self._empty("name string")  # parity stub
+            return self._empty([("name", "STRING")])  # parity stub
         if isinstance(stmt, SetReplicationFactor):
             key = f"{stmt.database}.{stmt.measurement}" if stmt.database else ""
             self.catalog.replication_factors[key] = stmt.factor
-            return self._empty("ok string")
+            return self._empty([("ok", "STRING")])
         if isinstance(stmt, UpdatePartitionKey):
             return self.update_partition_key(stmt)
         if isinstance(stmt, ShowReplicationFactors):
@@ -67,16 +68,18 @@ class AdminHandler:
             return self.backup(stmt)
         raise ClusterQLError("unhandled statement")
 
-    def _empty(self, schema: str) -> DataFrame:
-        return self.catalog.spark.createDataFrame([], schema)
+    def _empty(self, schema: list[tuple[str, str]]) -> DataFrame:
+        return local_result(self.catalog.spark, [], schema)
 
     # -- partition keys -----------------------------------------------------
     def show_partition_keys(self, database: str | None = None) -> DataFrame:
         rows = [(pk.database, pk.measurement, ".".join(pk.tags))
                 for pk in self.catalog.partition_keys
                 if database is None or pk.database == database]
-        return self.catalog.spark.createDataFrame(
-            rows, "database string, measurement string, tags string")
+        return local_result(
+            self.catalog.spark, rows,
+            [("database", "STRING"), ("measurement", "STRING"),
+             ("tags", "STRING")])
 
     def create_partition_key(self, stmt: CreatePartitionKey) -> DataFrame:
         for pk in self.catalog.partition_keys:
@@ -164,9 +167,10 @@ class AdminHandler:
             writer.parquet(location)
             rows.append((m.database, m.name, location,
                          ".".join(part_cols)))
-        return self.catalog.spark.createDataFrame(
-            rows, "database string, measurement string, location string, "
-                  "partitioned_by string")
+        return local_result(
+            self.catalog.spark, rows,
+            [("database", "STRING"), ("measurement", "STRING"),
+             ("location", "STRING"), ("partitioned_by", "STRING")])
 
     def show_replication_factors(self) -> DataFrame:
         """SHOW REPLICATION FACTORS — the reference's commented-out
@@ -175,8 +179,10 @@ class AdminHandler:
         for key, factor in sorted(self.catalog.replication_factors.items()):
             db, _, m = key.partition(".")
             rows.append((db or "*", m, factor))
-        return self.catalog.spark.createDataFrame(
-            rows, "database string, measurement string, factor int")
+        return local_result(
+            self.catalog.spark, rows,
+            [("database", "STRING"), ("measurement", "STRING"),
+             ("factor", "INT")])
 
     def drop_partition_key(self, stmt: DropPartitionKey) -> DataFrame:
         # language.go:45-48 notes data must be moved before dropping — in
@@ -197,8 +203,8 @@ class AdminHandler:
         except Exception:  # noqa: BLE001
             rows = []
         rows = rows or [("driver", sc.master)]
-        return self.catalog.spark.createDataFrame(
-            rows, "name string, `data location` string")
+        return local_result(self.catalog.spark, rows,
+                            [("name", "STRING"), ("data location", "STRING")])
 
     # -- users / auth (routing.go:140-148, service/auth.go) ------------------
     @staticmethod
@@ -267,5 +273,5 @@ class AdminHandler:
 
     def show_users(self) -> DataFrame:
         rows = [(n, u["admin"]) for n, u in sorted(self.users.items())]
-        return self.catalog.spark.createDataFrame(
-            rows, "`user` string, admin boolean")
+        return local_result(self.catalog.spark, rows,
+                            [("user", "STRING"), ("admin", "BOOLEAN")])

@@ -5,7 +5,7 @@ nodes which gap-fill server-side (merge/query_merge.go:72-81); Spark has no
 built-in equivalent, so this is real engine work (SURVEY.md §4 item 2):
 
 1. build the complete bucket spine for the query time range via
-   `sequence()` + `explode` (per series group — a lateral cross of
+   `sequence()` + `explode` (per series group — a lateral explode of
    distinct-groups × spine, NOT a driver loop);
 2. left-join the aggregated buckets onto the spine;
 3. fill: `null` (default), `none` (drop), number (`coalesce(lit)`),
@@ -13,9 +13,26 @@ built-in equivalent, so this is real engine work (SURVEY.md §4 item 2):
 
 Scale notes: the spine size is range/interval buckets per series — bounded
 by the query's WHERE time range, exactly like InfluxDB (which refuses
-unbounded GROUP BY time() queries). The join key is (group tags, bucket); the
-distinct-groups side is small (it is the series cardinality of the filter),
-so Catalyst broadcast-joins the spine side after AQE sizes it.
+unbounded GROUP BY time() queries). The join key is (group tags, bucket).
+The executed plan broadcasts the AGGREGATED side (the build side of the
+left join) and streams the spine.
+
+The spine lives in ONE partition. It is exploded from a one-split Range
+(ungrouped), from the distinct groups coalesced into one partition
+(grouped), or from the one-row bounds aggregate (open bounds). Generate,
+the spine-streaming broadcast join and Project keep that SinglePartition
+output, so the planner's `ORDER BY time[, tags]` and the window of
+fill(previous|linear) need no Exchange: no range-partitioner sampling job,
+no range shuffle. The partition holds the answer itself (at most
+series × MAX_SPINE_BUCKETS rows, and the driver collects all of them).
+
+Bounds: an explicit WHERE range is a literal, floored to the bucket grid in
+Python (and refused above MAX_SPINE_BUCKETS before any job runs). A missing
+bound is resolved IN THE PLAN from a one-row min/max aggregate over the
+aggregated frame feeding `sequence()`; the same cap is an in-plan
+`raise_error` whose text `spine_cap_error` maps back to the QueryError the
+bounded path raises. The one eager bounds job left is
+`_resolve_open_bounds`, for ungrouped previous/linear only (see there).
 
 Ungrouped previous/linear fills over a LARGE spine (a year of 1 s buckets is
 31 M rows) do not use a keyless Window: the spine is evenly spaced with
@@ -28,9 +45,12 @@ see functions/scan.py for the irregular-time variant). Spines up to
 from __future__ import annotations
 
 import math
+import re
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..errors import QueryError
 
 _SMALL_SPINE = 65_536
 _DAY_NS = 86_400_000_000_000
@@ -39,6 +59,9 @@ _DAY_NS = 86_400_000_000_000
 # A 100M-row generated spine is never what the user meant (1 s buckets over
 # 3 years); erroring beats silently materializing it.
 MAX_SPINE_BUCKETS = 100_000_000
+_CAP_TEXT = ("GROUP BY time() would generate %d buckets (max %d); narrow "
+             "the time range or widen the interval")
+_CAP_RE = re.compile(re.escape(_CAP_TEXT).replace("%d", r"-?\d+"))
 
 
 def _floor_bucket(t_ns: int, interval_ns: int, offset_ns: int) -> int:
@@ -47,11 +70,63 @@ def _floor_bucket(t_ns: int, interval_ns: int, offset_ns: int) -> int:
     return shifted - (shifted % interval_ns) + offset_ns
 
 
+def spine_cap_error(exc: BaseException) -> QueryError | None:
+    """The bounded path's QueryError for an in-plan spine-cap refusal
+    (a Spark error whose text carries the cap message), else None."""
+    m = _CAP_RE.search(str(exc))
+    return QueryError(m.group(0)) if m else None
+
+
+def _one_partition_source(df_aggregated: DataFrame, bucket_col: str,
+                          interval_ns: int, start_ns: int | None,
+                          end_ns: int | None, group_cols: list[str],
+                          offset_ns: int, tz: str | None) -> DataFrame:
+    """One partition: group_cols + `__first` (first UTC bucket, or for tz
+    the start instant, floored later in local time) + `__stop` (exclusive
+    end), one row per series group.
+
+    Explicit bounds are literals; a missing one comes from the min/max
+    bucket of the aggregated frame (observed buckets are already aligned,
+    so they need no floor). The bucket-count cap rides on `__stop`."""
+    spark = df_aggregated.sparkSession
+    if start_ns is not None and tz is None:
+        start_ns = _floor_bucket(start_ns, interval_ns, offset_ns)
+    if start_ns is not None and end_ns is not None:
+        src = (df_aggregated.select(*group_cols).distinct().coalesce(1)
+               if group_cols else spark.range(0, 1, 1, 1))
+        return src.select(*group_cols, F.lit(start_ns).alias("__first"),
+                          F.lit(end_ns).alias("__stop"))
+    lo, hi = F.min(bucket_col), F.max(bucket_col)
+    if group_cols:
+        # per-group extremes in one partition, then the global extremes
+        # over that partition (no keys: the window needs no Exchange)
+        per_group = (df_aggregated.groupBy(*group_cols)
+                     .agg(lo.alias("__lo"), hi.alias("__hi")).coalesce(1))
+        whole = Window.partitionBy()
+        src = per_group.select(*group_cols,
+                               F.min("__lo").over(whole).alias("__lo"),
+                               F.max("__hi").over(whole).alias("__hi"))
+    else:
+        src = df_aggregated.agg(lo.alias("__lo"), hi.alias("__hi"))
+    first = F.lit(start_ns) if start_ns is not None else F.col("__lo")
+    stop = (F.lit(end_ns) if end_ns is not None
+            else F.col("__hi") + F.lit(interval_ns))
+    bounds = src.select(*group_cols, first.alias("__first"),
+                        stop.alias("__stop"))
+    # exact integer twin of _spine_size (`div` on longs, no double)
+    n = F.expr(f"(__stop - 1 - __first) div {interval_ns} + 1")
+    capped = F.when(n > F.lit(MAX_SPINE_BUCKETS), F.raise_error(
+        F.format_string(_CAP_TEXT, n, F.lit(MAX_SPINE_BUCKETS)))
+    ).otherwise(F.col("__stop"))
+    return bounds.select(*group_cols, "__first", capped.alias("__stop"))
+
+
 def bucket_spine(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
                  start_ns: int | None, end_ns: int | None,
                  group_cols: list[str], offset_ns: int = 0,
                  tz: str | None = None) -> DataFrame:
-    """All buckets in [start, end) per distinct group combination.
+    """All buckets in [start, end) per distinct group combination, in one
+    partition.
 
     The spine MUST align with the bucket values the aggregation produced
     (timeutil.time_bucket / time_bucket_tz), so it honors the same
@@ -63,55 +138,37 @@ def bucket_spine(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
     mapped back to its UTC instant with to_utc_timestamp — the exact inverse
     walk time_bucket_tz does per data row, so edges match bit-for-bit.
 
-    When the query gave no explicit time bounds, fall back to the observed
-    min/max bucket (InfluxDB bounds the spine by the WHERE time range;
-    min/max is the sensible batch analog).
+    A missing bound is the observed min bucket / max bucket + interval
+    (InfluxDB bounds the spine by the WHERE time range; min/max is the
+    sensible batch analog), resolved in the plan. No data in range gives no
+    spine rows.
     """
-    if start_ns is None or end_ns is None:
-        lo, hi = df_aggregated.agg(
-            F.min(bucket_col), F.max(bucket_col)).first()
-        if lo is None:
-            return df_aggregated.select(*group_cols, bucket_col).limit(0)
-        # lo/hi are already bucket values (aligned); use them directly.
-        start_ns = lo if start_ns is None else start_ns
-        end_ns = hi + interval_ns if end_ns is None else end_ns
-        bounds_are_buckets = True
-    else:
-        bounds_are_buckets = False
-
+    src = _one_partition_source(df_aggregated, bucket_col, interval_ns,
+                                start_ns, end_ns, group_cols, offset_ns, tz)
+    first, stop = F.col("__first"), F.col("__stop")
+    step = F.lit(interval_ns)
     if tz is None:
-        first_bucket = (start_ns if bounds_are_buckets
-                        else _floor_bucket(start_ns, interval_ns, offset_ns))
-        spine = F.explode(F.sequence(
-            F.lit(first_bucket), F.lit(end_ns - 1),
-            F.lit(interval_ns))).alias(bucket_col)
-    else:
-        # Uniform local-ns sequence starting at floor_local(start), one extra
-        # day of steps as DST slack, mapped back to UTC and clipped at end.
-        base = F.unix_micros(F.from_utc_timestamp(
-            F.timestamp_micros(F.lit(start_ns // 1000)), tz)) * F.lit(1000)
-        shifted = base - F.lit(offset_ns)
-        first_local = (shifted - F.pmod(shifted, F.lit(interval_ns))
-                       + F.lit(offset_ns))
-        steps = F.explode(F.sequence(
-            F.lit(0), F.lit(end_ns - start_ns + _DAY_NS),
-            F.lit(interval_ns))).alias("__step")
-        edges = df_aggregated.sparkSession.range(1).select(steps) \
-            .select((first_local + F.col("__step")).alias("__local"))
-        utc = F.unix_micros(F.to_utc_timestamp(
-            F.timestamp_micros((F.col("__local") / F.lit(1000)).cast("long")),
-            tz)) * F.lit(1000)
-        spine_df = (edges.select(utc.alias(bucket_col))
-                    .where(F.col(bucket_col) < F.lit(end_ns))
-                    .distinct())
-        if group_cols:
-            groups = df_aggregated.select(*group_cols).distinct()
-            return groups.crossJoin(spine_df)
-        return spine_df
-    if group_cols:
-        groups = df_aggregated.select(*group_cols).distinct()
-        return groups.select(*group_cols, spine)
-    return df_aggregated.sparkSession.range(1).select(spine)
+        buckets = F.when(stop > first, F.sequence(first, stop - 1, step))
+        return src.select(*group_cols, F.explode(buckets).alias(bucket_col))
+    # Uniform local-ns sequence starting at floor_local(start), one extra
+    # day of steps as DST slack, mapped back to UTC and clipped at end.
+    first_us = F.expr("(__first - pmod(__first, 1000)) div 1000")
+    base = F.unix_micros(F.from_utc_timestamp(
+        F.timestamp_micros(first_us), tz)) * F.lit(1000)
+    shifted = base - F.lit(offset_ns)
+    first_local = shifted - F.pmod(shifted, step) + F.lit(offset_ns)
+    steps = F.when(stop > first, F.sequence(
+        F.lit(0).cast("long"), stop - first + F.lit(_DAY_NS), step))
+    edges = (src.select(*group_cols, first_local.alias("__local0"),
+                        stop.alias("__stop"), F.explode(steps).alias("__step"))
+             .select(*group_cols, "__stop",
+                     (F.col("__local0") + F.col("__step")).alias("__local")))
+    utc = F.unix_micros(F.to_utc_timestamp(
+        F.timestamp_micros((F.col("__local") / F.lit(1000)).cast("long")),
+        tz)) * F.lit(1000)
+    return (edges.select(*group_cols, utc.alias(bucket_col), "__stop")
+            .where(F.col(bucket_col) < F.col("__stop"))
+            .select(*group_cols, bucket_col).distinct())
 
 
 def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
@@ -135,22 +192,15 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
             keep = keep | p
         return df_aggregated.where(keep)
 
-    if start_ns is None or end_ns is None:
-        # resolve data-driven bounds ONCE (observed buckets are already
-        # aligned, so flooring them below is the identity)
-        lo, hi = df_aggregated.agg(
-            F.min(bucket_col), F.max(bucket_col)).first()
-        if lo is not None:
-            start_ns = lo if start_ns is None else start_ns
-            end_ns = hi + interval_ns if end_ns is None else end_ns
-    nbuckets = _spine_size(df_aggregated, bucket_col, interval_ns,
-                           start_ns, end_ns, offset_ns)
-    if nbuckets > MAX_SPINE_BUCKETS:
-        from ..errors import QueryError
-        raise QueryError(
-            f"GROUP BY time() would generate {nbuckets} buckets "
-            f"(max {MAX_SPINE_BUCKETS}); narrow the time range or widen "
-            "the interval")
+    windowed = mode in ("previous", "linear")
+    if windowed and not group_cols and (start_ns is None or end_ns is None):
+        start_ns, end_ns = _resolve_open_bounds(
+            df_aggregated, bucket_col, interval_ns, start_ns, end_ns)
+    nbuckets = None
+    if start_ns is not None and end_ns is not None:
+        nbuckets = _spine_size(start_ns, end_ns, interval_ns, offset_ns)
+        if nbuckets > MAX_SPINE_BUCKETS:
+            raise QueryError(_CAP_TEXT % (nbuckets, MAX_SPINE_BUCKETS))
     spine = bucket_spine(df_aggregated, bucket_col, interval_ns,
                          start_ns, end_ns, group_cols, offset_ns, tz)
     joined = spine.join(df_aggregated, on=group_cols + [bucket_col], how="left")
@@ -161,10 +211,10 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
         exprs = [F.coalesce(F.col(c), F.lit(mode)).alias(c) for c in value_cols]
         return joined.select(*group_cols, bucket_col, *exprs)
 
-    if not group_cols:
-        if nbuckets > _SMALL_SPINE and mode in ("previous", "linear"):
-            return _fill_ungrouped_segmented(joined, bucket_col, interval_ns,
-                                             mode, value_cols, nbuckets)
+    if not group_cols and windowed and nbuckets is not None \
+            and nbuckets > _SMALL_SPINE:
+        return _fill_ungrouped_segmented(joined, bucket_col, interval_ns,
+                                         mode, value_cols, nbuckets)
 
     if mode == "previous":
         w = (Window.partitionBy(*group_cols).orderBy(bucket_col)
@@ -196,20 +246,28 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
     raise ValueError(f"unknown fill mode: {mode!r}")
 
 
-def _spine_size(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
-                start_ns: int | None, end_ns: int | None,
+def _resolve_open_bounds(df_aggregated: DataFrame, bucket_col: str,
+                         interval_ns: int, start_ns: int | None,
+                         end_ns: int | None) -> tuple[int | None, int | None]:
+    """Eager min/max bucket for an open bound: fill.py's only eager job.
+
+    Only ungrouped previous/linear calls it. Their plan SHAPE depends on
+    the spine size (a keyless window up to _SMALL_SPINE rows, the
+    segmented scan above), and a shape has to be chosen before the plan
+    exists. Every other fill resolves open bounds in the plan. With no
+    data the bounds stay open and the in-plan spine is empty."""
+    lo, hi = df_aggregated.agg(F.min(bucket_col), F.max(bucket_col)).first()
+    if lo is None:
+        return start_ns, end_ns
+    return (lo if start_ns is None else start_ns,
+            hi + interval_ns if end_ns is None else end_ns)
+
+
+def _spine_size(start_ns: int, end_ns: int, interval_ns: int,
                 offset_ns: int = 0) -> int:
     """Bucket count of the spine (exact for UTC; tz spines may differ by the
     DST hours in range — irrelevant for the segmented-path size cutoff)."""
-    if start_ns is None or end_ns is None:
-        lo, hi = df_aggregated.agg(F.min(bucket_col), F.max(bucket_col)).first()
-        if lo is None:
-            return 0
-        start_ns = lo if start_ns is None else start_ns
-        end_ns = hi + interval_ns if end_ns is None else end_ns
-        first_bucket = start_ns
-    else:
-        first_bucket = _floor_bucket(start_ns, interval_ns, offset_ns)
+    first_bucket = _floor_bucket(start_ns, interval_ns, offset_ns)
     return max(0, (end_ns - 1 - first_bucket) // interval_ns + 1)
 
 

@@ -5,7 +5,9 @@ these three routes); this module is the drop-in surface over `Engine`:
 
 - GET/POST /query?q=…&db=…&epoch=…  → InfluxDB JSON results
   (one result object per semicolon-separated statement, like
-  service/query_handler.go:57-66); errors → {"error": …} with 400.
+  service/query_handler.go:57-66); parse/semantic errors → {"error": …}
+  with 400; an execution error (e.g. KILL QUERY) → 200 with the error in
+  that statement's result, and later statements are not run.
 - POST /write?db=…&precision=…      → 204 on success; 400 on parse or
   partition-key failure (write_handler.go:74-78, 104-112); db param
   required (write_handler.go:40-44); gzip bodies accepted (55-63).
@@ -69,6 +71,17 @@ def bind_params(q: str, params_json: str) -> str:
         raise QueryError(f"unsupported parameter type for ${name}")
 
     return _BIND.sub(lambda m: render(m.group(1)), q)
+
+
+def _execution_error(exc: BaseException) -> str:
+    """One-line text for a statement whose execution failed. A job-group
+    cancellation reads like InfluxDB's ErrQueryInterrupted."""
+    text = str(exc)
+    if "cancelled" in text and "job group" in text:
+        return "query interrupted"
+    first = next((ln.strip() for ln in text.splitlines() if ln.strip()),
+                 type(exc).__name__)
+    return first[:500]
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -202,6 +215,13 @@ class _Handler(BaseHTTPRequestHandler):
                 # e.g. "first user must be an admin" → 403
                 self._send(403, {"error": str(e)})
                 return
+            except Exception as e:  # noqa: BLE001 — answered, not dropped
+                # a failed Spark execution (a KILL QUERY cancellation, a
+                # lost task): InfluxDB reports execution errors inside the
+                # statement's result and stops at the first one
+                results.append({"statement_id": i,
+                                "error": _execution_error(e)})
+                break
         if chunked:
             # InfluxDB chunked transfer: newline-delimited JSON documents.
             # Each statement result is split into chunk_size-value pieces

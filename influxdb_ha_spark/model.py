@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .result import local_result
 from .timeutil import timestamp_to_ns
 
 TIME_COL = "time"
@@ -77,7 +78,8 @@ class Measurement:
         """SHOW SERIES: distinct tag combinations (importer.go FetchSeries,
         syncing/series.go:14-29 — `measurement,tag1=v1,...` keys)."""
         if not self.tags:
-            return self.df.sparkSession.createDataFrame([(self.name,)], ["key"])
+            return local_result(self.df.sparkSession, [(self.name,)],
+                                [("key", "STRING")])
         key = F.concat_ws(",", F.lit(self.name), *[
             F.concat_ws("=", F.lit(t), F.col(t)) for t in self.tags])
         return (self.df.select(*self.tags).distinct()
@@ -171,15 +173,16 @@ class Catalog:
         return db_key
 
     # -- SHOW surface (routing.go:121-135 first-available statements) -----
+    # Answers built from catalog metadata are driver-local VALUES
+    # relations (result.local_result): collecting them runs no Spark job.
     def show_databases(self) -> DataFrame:
-        # explicit schema: [] with list-of-column-names cannot infer types
-        return self.spark.createDataFrame(
-            [(d,) for d in sorted(self.databases)], "name string")
+        return local_result(self.spark, [(d,) for d in sorted(self.databases)],
+                            [("name", "STRING")])
 
     def show_measurements(self, database: str) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(m,) for m in sorted(self.databases.get(database, {}))],
-            "name string")
+        return local_result(
+            self.spark, [(m,) for m in sorted(self.databases.get(database, {}))],
+            [("name", "STRING")])
 
     def show_tag_keys(self, database: str, measurement: str | None = None) -> DataFrame:
         rows = []
@@ -187,7 +190,8 @@ class Catalog:
             if measurement and name != measurement:
                 continue
             rows += [(name, t) for t in m.tags]
-        return self.spark.createDataFrame(rows or [], "measurement string, tagKey string")
+        return local_result(self.spark, rows,
+                            [("measurement", "STRING"), ("tagKey", "STRING")])
 
     def show_field_keys(self, database: str, measurement: str | None = None) -> DataFrame:
         rows = []
@@ -196,20 +200,23 @@ class Catalog:
                 continue
             dtypes = dict(m.df.dtypes)
             rows += [(name, f, dtypes.get(f, "unknown")) for f in m.fields]
-        return self.spark.createDataFrame(
-            rows or [], "measurement string, fieldKey string, fieldType string")
+        return local_result(self.spark, rows,
+                            [("measurement", "STRING"), ("fieldKey", "STRING"),
+                             ("fieldType", "STRING")])
 
     def show_tag_values(self, database: str, measurement: str, tag: str) -> DataFrame:
+        # the distinct values are few (a tag's cardinality): gathered into
+        # one partition, the sort needs no range-partitioner sampling job
         m = self.get(database, measurement)
         return (m.df.select(F.lit(tag).alias("key"), F.col(tag).alias("value"))
-                .distinct().orderBy("value"))
+                .distinct().coalesce(1).orderBy("value"))
 
     def show_series(self, database: str, measurement: str | None = None) -> DataFrame:
         dfs = [m.series_df() for name, m in
                sorted(self.databases.get(database, {}).items())
                if measurement is None or name == measurement]
         if not dfs:
-            return self.spark.createDataFrame([], "key string")
+            return local_result(self.spark, [], [("key", "STRING")])
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

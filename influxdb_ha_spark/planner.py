@@ -34,6 +34,7 @@ from .influxql.ast import (BinaryExpr, Call, DurationLit, IntegerLit,
                            NumberLit, RegexLit, SelectField, SelectStatement,
                            SourceList, StringLit, SubQuery, VarRef, Wildcard)
 from .model import Catalog, Measurement, TIME_COL
+from .result import local_result
 from .timeutil import parse_time_literal_ns, time_bucket, time_bucket_tz
 
 TRANSFORMS = {"derivative", "non_negative_derivative", "difference",
@@ -107,10 +108,9 @@ class Planner:
             # selected field does not exist in the measurement
             names = [f.alias or self._default_name(f.expr)
                      for f in stmt.fields]
-            schema = ", ".join([f"`{TIME_COL}` long"] +
-                               [f"`{n}` double" for n in names
-                                if n != TIME_COL])
-            return df.sparkSession.createDataFrame([], schema)
+            schema = [(TIME_COL, "BIGINT")] + [(n, "DOUBLE") for n in names
+                                               if n != TIME_COL]
+            return local_result(df.sparkSession, [], schema)
         calls = self._find_calls(stmt)
 
         if not calls:
@@ -862,10 +862,7 @@ class Planner:
                 self._where_expr(stmt.where, c)
             except QueryError:
                 pass
-        end = c.end_ns
-        if end is None and stmt.where is not None:
-            pass
-        return c.start_ns, end
+        return c.start_ns, c.end_ns
 
     # -- strict partition key (coordinator.go:182-193) ----------------------
     def _check_partition_key(self, stmt: SelectStatement, db: str,

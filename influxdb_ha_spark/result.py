@@ -28,8 +28,8 @@ def _sql_lit(v, typ: str) -> str:
         return f"'{s}'"
     if typ == "DOUBLE":
         return f"CAST({float(v)!r} AS DOUBLE)"
-    if typ == "BIGINT":
-        return f"CAST({int(v)} AS BIGINT)"
+    if typ in ("BIGINT", "INT"):
+        return f"CAST({int(v)} AS {typ})"
     if typ == "BOOLEAN":
         return "true" if v else "false"
     raise ValueError(f"unsupported local-result type: {typ}")
@@ -49,8 +49,20 @@ def local_result(spark, rows, schema: list[tuple[str, str]]) -> DataFrame:
     until a slot frees.
 
     `schema` is [(column_name, SQL type)] with types in
-    {STRING, DOUBLE, BIGINT, BOOLEAN}; values are embedded as escaped SQL
-    literals (bounded meta results only — never row data).
+    {STRING, DOUBLE, BIGINT, INT, BOOLEAN}; values are embedded as escaped
+    SQL literals (bounded meta results only — never row data).
+
+    Callers (every driver-local answer):
+    - server.Engine: SHOW QUERIES, KILL QUERY, EXPLAIN, SELECT … INTO's
+      count, the CQ / retention-policy / subscription / user / grant
+      statements and the DDL acknowledgements;
+    - model.Catalog: SHOW DATABASES / MEASUREMENTS / TAG KEYS / FIELD
+      KEYS, an empty SHOW SERIES, and Measurement.series_df of a tagless
+      measurement;
+    - admin.AdminHandler: SHOW PARTITION KEYS, SHOW NODES, SHOW
+      REPLICATION FACTORS, SHOW USERS, BACKUP's export list and the
+      empty acknowledgements;
+    - planner.Planner: the empty answer to a SELECT of unknown fields.
     """
     names = ", ".join(f"`{n}`" for n, _ in schema)
     if not rows:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .admin import AdminHandler
+from .functions.fill import spine_cap_error
 from .influxql.ast import SelectStatement, ShowStatement
 from .influxql.clusterql import is_admin_statement
 from .influxql.parser import parse_query
@@ -267,6 +268,13 @@ class Engine:
             except KeyError:
                 pass
             return to_influx_series(df, measurement, tag_cols, epoch)
+        except Exception as e:
+            # an open-bounded fill's in-plan spine cap fails the Spark job;
+            # answer it with the bounded path's QueryError
+            cap = None if isinstance(e, QueryError) else spine_cap_error(e)
+            if cap is None:
+                raise
+            raise cap from None
         finally:
             self._running.pop(qid, None)
             sc._jsc.clearJobGroup()

@@ -292,3 +292,94 @@ def test_routing_parity_rejected_vs_added(http):
              urllib.request.quote("KILL QUERY 424242"))
     assert e.value.code == 400
     assert "no such query id" in json.loads(e.value.read())["error"]
+
+
+def _engine_server(spark, name, df, tags):
+    """A fresh engine + server over one measurement (the module fixture's
+    catalog is shared and is left untouched)."""
+    cat = Catalog(spark)
+    cat.register_dataframe("iso", name, df, time_col="time", tags=tags)
+    srv, port = serve(Engine(cat, database="iso",
+                             now_ns=1_700_000_000_000_000_000))
+    return srv, f"http://127.0.0.1:{port}/query?db=iso&q="
+
+
+def test_killed_query_answers_with_json_error(spark, tmp_path):
+    """KILL QUERY cancels the statement's Spark jobs; the killed request
+    gets an InfluxDB JSON error for its statement instead of a dropped
+    connection. A filesystem latch keeps the scan in flight."""
+    import os
+    import threading
+    import time as _time
+
+    from pyspark.sql import functions as F
+
+    started, release = str(tmp_path / "started"), str(tmp_path / "release")
+
+    def hold(v):
+        open(started, "a").close()
+        for _ in range(1200):
+            if os.path.exists(release):
+                break
+            _time.sleep(0.05)
+        return float(v)
+
+    df = spark.range(8).select(F.lit(0).cast("long").alias("time"),
+                               F.lit("x").alias("type"),
+                               F.udf(hold, "double")(F.col("id")).alias("value"))
+    srv, url = _engine_server(spark, "slowtab", df, ["type"])
+    got = {}
+
+    def run():
+        try:
+            got["resp"] = _get(url + urllib.request.quote(
+                "SELECT count(value) AS n FROM slowtab; SHOW MEASUREMENTS"))
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            got["exc"] = exc
+
+    t = threading.Thread(target=run)
+    t.start()
+    try:
+        deadline = _time.time() + 30
+        while not os.path.exists(started):
+            assert _time.time() < deadline, "scan tasks never started"
+            _time.sleep(0.05)
+        _, _, out = _get(url + urllib.request.quote("SHOW QUERIES"))
+        rows = json.loads(out)["results"][0]["series"][0]["values"]
+        qid = next(r[0] for r in rows if "slowtab" in r[1])
+        _get(url + urllib.request.quote(f"KILL QUERY {qid}"))
+        t.join(timeout=60)
+        assert not t.is_alive(), "killed query never answered"
+    finally:
+        open(release, "a").close()
+        t.join(timeout=90)
+        srv.shutdown()
+    assert "exc" not in got, got.get("exc")
+    status, _, body = got["resp"]
+    assert status == 200
+    # the error stops the request: the second statement is not run
+    assert json.loads(body) == {"results": [
+        {"statement_id": 0, "error": "query interrupted"}]}
+
+
+def test_open_bounded_spine_cap_is_400(spark):
+    """An open-bounded GROUP BY time(1ns) fill(0) over the spine cap fails
+    inside the plan; over HTTP it reads exactly like the bounded path's
+    400."""
+    from influxdb_ha_spark.functions.fill import MAX_SPINE_BUCKETS
+    hi = 2 * MAX_SPINE_BUCKETS
+    df = spark.createDataFrame([(0, "x", 1.0), (hi, "x", 2.0)],
+                               "time long, type string, value double")
+    srv, url = _engine_server(spark, "wide", df, ["type"])
+    q = "SELECT count(value) FROM wide WHERE {} GROUP BY time(1ns) fill(0)"
+    try:
+        errors = []
+        for where in (f"time >= 0 AND time <= {hi}", "time >= 0"):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _get(url + urllib.request.quote(q.format(where)))
+            assert e.value.code == 400
+            errors.append(json.loads(e.value.read())["error"])
+    finally:
+        srv.shutdown()
+    assert errors[0] == errors[1]
+    assert errors[0].startswith(f"GROUP BY time() would generate {hi + 1} buckets")

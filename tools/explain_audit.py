@@ -2,8 +2,10 @@
 scale red flags.
 
 For each query, counts shuffles (Exchange), flags single-partition funnels
-(`Exchange SinglePartition`, keyless Window), cartesian/nested-loop joins,
-and row-at-a-time Python (BatchEvalPython = non-Arrow UDF). These are the
+(`Exchange SinglePartition`, keyless Window, and a one-partition producer —
+`Coalesce 1` or a one-split `Range` — feeding a join, sort or window
+without a shuffle in between), cartesian/nested-loop joins, and
+row-at-a-time Python (BatchEvalPython = non-Arrow UDF). These are the
 shapes that break at 100 TB even when sf0.01 correctness is green.
 
 Usage: python tools/explain_audit.py [sf_dir]   (default sf0.001 — plan
@@ -21,7 +23,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 
-# Queries where a SinglePartition exchange is by-construction bounded.
+# Queries where a single-partition funnel (an Exchange SinglePartition, a
+# keyless window, or a one-partition producer feeding a join/sort/window)
+# is by-construction bounded.
 # Every entry MUST carry a bounded-size justification; the audit fails on
 # an empty one, and flags STALE entries whose plans no longer funnel
 # (so the allowlist can't silently rot into a blanket waiver). Spine-based
@@ -127,6 +131,26 @@ BOUNDED_SINGLE_PARTITION = {
                         "above _SMALL_SPINE switch to the segmented scan",
     "iq_fill_linear": "ungrouped fill spine window, capped (fill.py); "
                       "segmented above _SMALL_SPINE",
+    # one-partition fill spines (fill.py): the spine is exploded in ONE
+    # partition so ORDER BY time[, tags] needs no range shuffle; the sort
+    # runs over the answer itself, which the driver collects in full
+    "iq_fill_zero": "one-partition spine feeding the time sort: rows = "
+                    "bucket count (124 here), <= MAX_SPINE_BUCKETS "
+                    "(fill.py hard cap) — the collected answer itself",
+    "iq_fill_null": "one-partition spine feeding the time sort: rows = "
+                    "bucket count, <= MAX_SPINE_BUCKETS (fill.py cap)",
+    "iq_fill_offset": "one-partition offset-aligned spine feeding the time "
+                      "sort: rows = bucket count, <= MAX_SPINE_BUCKETS",
+    "iq_fill_tz": "one-partition tz spine (buckets + one day of DST "
+                  "slack) feeding its distinct and the time sort: rows "
+                  "= bucket count, <= MAX_SPINE_BUCKETS",
+    "iq_kitchen_sink": "grouped spine in one partition (distinct series x "
+                       "buckets, <= series x MAX_SPINE_BUCKETS) streamed "
+                       "through the fill join into the LIMIT 40 top-k; the "
+                       "series come from a keyed distinct",
+    "show_tag_values": "SHOW TAG VALUES sorts the DISTINCT values of one "
+                       "tag in one partition: rows = the tag's cardinality "
+                       "(a series-count bound), after a keyed distinct",
     "emb_kmeans_train": "two 1-row global-aggregate summaries joined",
     "text_zipf": "the rank window runs on the top_n-row (default 500) "
                  "TakeOrderedAndProject result — bounded by the "
@@ -414,11 +438,42 @@ def canonicalize_plan(plan: str) -> str:
     return "\n".join(out)
 
 
+_ONE_PART_SOURCE = re.compile(
+    r"\bCoalesce 1\b|\bRange \(-?\d+, -?\d+, step=-?\d+, splits=1\)")
+_FUNNEL_CONSUMER = re.compile(r"^(Sort|Window|\w*Join)\b")
+
+
+def one_partition_funnels(plan: str) -> int:
+    """One-partition producers (`Coalesce 1`, a one-split `Range`) whose
+    single partition reaches a join, sort or window with no Exchange in
+    between — the operator then runs in ONE task over whatever the
+    producer emits, a funnel no `Exchange SinglePartition` shows."""
+    lines = plan.splitlines()
+    n = 0
+    for i, line in enumerate(lines):
+        if not _ONE_PART_SOURCE.search(line):
+            continue
+        depth = _tree_depth(line)
+        for anc in reversed(lines[:i]):   # walk up the ancestor chain
+            d = _tree_depth(anc)
+            if d >= depth:
+                continue
+            depth = d
+            node = anc[d:]
+            if re.match(r"\w*Exchange\b", node):
+                break
+            if _FUNNEL_CONSUMER.match(node):
+                n += 1
+                break
+    return n
+
+
 def audit_plan(plan: str) -> dict:
     plan = canonicalize_plan(plan)
     out = {
         "exchanges": len(re.findall(r"\bExchange\b", plan)),
         "single_part": len(re.findall(r"Exchange SinglePartition", plan)),
+        "one_part": one_partition_funnels(plan),
         "cartesian": bool(re.search(r"CartesianProduct|BroadcastNestedLoop", plan)),
         "py_row_udf": bool(re.search(r"BatchEvalPython", plan)),
         "arrow_udf": bool(re.search(r"ArrowEvalPython|MapInPandas|"
@@ -447,7 +502,8 @@ def main():
     qs = entry_mod.queries()
     failures = list(check_allowlists(qs))
     stale: list[str] = []
-    print(f"{'query':28s} {'xchg':>4} {'1part':>5} {'bhj':>3} {'smj':>3} flags")
+    print(f"{'query':28s} {'xchg':>4} {'1part':>5} {'1src':>4} {'bhj':>3} "
+          f"{'smj':>3} flags")
     for name, fn in qs.items():
         try:
             df = fn(spark, sf_dir)
@@ -468,19 +524,23 @@ def main():
             flags.append("KEYLESS_WINDOW")
         if a["single_part"] and name not in BOUNDED_SINGLE_PARTITION:
             flags.append(f"SINGLE_PARTITION×{a['single_part']}")
+        if a["one_part"] and name not in BOUNDED_SINGLE_PARTITION:
+            flags.append(f"ONE_PARTITION_FUNNEL×{a['one_part']}")
         if flags:
             failures.append(name) if any(
                 f.startswith(("CARTESIAN", "ROW_PYTHON", "KEYLESS_WINDOW",
-                              "SINGLE_PARTITION")) for f in flags) else None
+                              "SINGLE_PARTITION", "ONE_PARTITION_FUNNEL"))
+                for f in flags) else None
         # staleness: allowlisted funnels that no longer appear mean the
         # waiver outlived the plan it excused
         if name in BOUNDED_SINGLE_PARTITION and not (
-                a["single_part"] or a["keyless_window"]):
+                a["single_part"] or a["keyless_window"] or a["one_part"]):
             stale.append(f"BOUNDED_SINGLE_PARTITION[{name}]")
         if name in ALLOWED_CARTESIAN and not a["cartesian"]:
             stale.append(f"ALLOWED_CARTESIAN[{name}]")
         print(f"{name:28s} {a['exchanges']:>4} {a['single_part']:>5} "
-              f"{a['broadcast_joins']:>3} {a['sortmerge_joins']:>3} "
+              f"{a['one_part']:>4} {a['broadcast_joins']:>3} "
+              f"{a['sortmerge_joins']:>3} "
               f"{' '.join(flags) or '-'}")
 
     spark.stop()

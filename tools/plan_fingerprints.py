@@ -9,8 +9,10 @@ Usage:
     python tools/plan_fingerprints.py [sf_dir]            # compare vs pin
 
 The fingerprint is `explain_audit.audit_plan`'s counters (exchanges,
-single-partition funnels, broadcast/sort-merge join counts, cartesian /
-Arrow-UDF flags). Comparison is directional: MORE exchanges, FEWER
+single-partition funnels, one-partition producers feeding a join/sort/
+window, broadcast/sort-merge join counts, cartesian / Arrow-UDF flags). A
+counter missing from a key's pin (added to the audit after that key was
+last recorded) is not compared for that key. Comparison is directional: MORE exchanges, FEWER
 broadcast joins, MORE sort-merge joins, or a new cartesian/row-Python/
 single-partition is a regression; an IMPROVEMENT (fewer shuffles) is
 reported and should be re-pinned with --record. Plan shape, not data, is
@@ -39,7 +41,7 @@ BASELINE_PATH = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "PLAN_FINGERPRINTS.json")
 
 # fields where a strictly larger value is a scale regression
-WORSE_IF_MORE = ("exchanges", "single_part", "sortmerge_joins")
+WORSE_IF_MORE = ("exchanges", "single_part", "one_part", "sortmerge_joins")
 # fields where a strictly smaller value is a regression (lost broadcast)
 WORSE_IF_FEWER = ("broadcast_joins",)
 # boolean fields that must never newly appear
@@ -86,6 +88,8 @@ def compare(base: dict, cur: dict) -> tuple[list[str], list[str]]:
                 regressions.append(f"{name}: now errors: {c['error']}")
             continue
         for f in WORSE_IF_MORE:
+            if f not in b:
+                continue
             if c[f] > b[f]:
                 regressions.append(f"{name}: {f} {b[f]} -> {c[f]}")
             elif c[f] < b[f]:
