@@ -47,7 +47,7 @@ from __future__ import annotations
 import math
 import re
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import QueryError

@@ -12,11 +12,12 @@ The fingerprint is `explain_audit.audit_plan`'s counters (exchanges,
 single-partition funnels, one-partition producers feeding a join/sort/
 window, broadcast/sort-merge join counts, cartesian / Arrow-UDF flags). A
 counter missing from a key's pin (added to the audit after that key was
-last recorded) is not compared for that key. Comparison is directional: MORE exchanges, FEWER
-broadcast joins, MORE sort-merge joins, or a new cartesian/row-Python/
-single-partition is a regression; an IMPROVEMENT (fewer shuffles) is
-reported and should be re-pinned with --record. Plan shape, not data, is
-fingerprinted — the default sf0.001 keeps the run fast.
+last recorded) is not compared for that key. Comparison is directional:
+MORE exchanges, FEWER broadcast joins, MORE sort-merge joins, or a new
+cartesian/row-Python/single-partition is a regression; an IMPROVEMENT
+(fewer shuffles) is reported and should be re-pinned with --record. Plan
+shape, not data, is fingerprinted — the default sf0.001 keeps the run
+fast.
 
 Caveat: counters are TEXTUAL occurrences in the executed-plan string. A
 `persist()`ed subtree prints its full child plan under every
