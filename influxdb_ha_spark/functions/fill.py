@@ -17,14 +17,19 @@ unbounded GROUP BY time() queries). The join key is (group tags, bucket).
 The executed plan broadcasts the AGGREGATED side (the build side of the
 left join) and streams the spine.
 
-The spine lives in ONE partition. It is exploded from a one-split Range
-(ungrouped), from the distinct groups coalesced into one partition
-(grouped), or from the one-row bounds aggregate (open bounds). Generate,
-the spine-streaming broadcast join and Project keep that SinglePartition
-output, so the planner's `ORDER BY time[, tags]` and the window of
-fill(previous|linear) need no Exchange: no range-partitioner sampling job,
-no range shuffle. The partition holds the answer itself (at most
-series × MAX_SPINE_BUCKETS rows, and the driver collects all of them).
+An ungrouped spine whose answer the driver collects lives in ONE
+partition: it is exploded from a one-split Range, or from the one-row
+bounds aggregate (open bounds). Generate, the spine-streaming broadcast
+join and Project keep that SinglePartition output, so the planner's
+`ORDER BY time` and the keyless window of fill(previous|linear) need no
+Exchange: no range-partitioner sampling job, no range shuffle. That
+partition holds one series, at most MAX_SPINE_BUCKETS rows, which the
+driver collects in full. A grouped spine keeps the partitioning of its
+distinct series groups, because its rows grow with the series count. An
+ungrouped spine whose answer stays in Spark (SELECT … INTO persists it, a
+subquery feeds it on: `one_partition=False`) is exploded from a
+multi-split Range, so the time sort behind it spreads the rows over its
+range partitions.
 
 Bounds: an explicit WHERE range is a literal, floored to the bucket grid in
 Python (and refused above MAX_SPINE_BUCKETS before any job runs). A missing
@@ -77,56 +82,57 @@ def spine_cap_error(exc: BaseException) -> QueryError | None:
     return QueryError(m.group(0)) if m else None
 
 
-def _one_partition_source(df_aggregated: DataFrame, bucket_col: str,
-                          interval_ns: int, start_ns: int | None,
-                          end_ns: int | None, group_cols: list[str],
-                          offset_ns: int, tz: str | None) -> DataFrame:
-    """One partition: group_cols + `__first` (first UTC bucket, or for tz
-    the start instant, floored later in local time) + `__stop` (exclusive
-    end), one row per series group.
+def _spine_source(df_aggregated: DataFrame, bucket_col: str,
+                  interval_ns: int, start_ns: int | None, end_ns: int | None,
+                  group_cols: list[str], offset_ns: int, tz: str | None,
+                  one_partition: bool) -> DataFrame:
+    """group_cols + `__first` (first UTC bucket, or for tz the start
+    instant, floored later in local time) + `__stop` (exclusive end), one
+    row per series group.
 
-    Explicit bounds are literals; a missing one comes from the min/max
-    bucket of the aggregated frame (observed buckets are already aligned,
-    so they need no floor). The bucket-count cap rides on `__stop`."""
+    Ungrouped with `one_partition`, the row sits in one partition; a
+    grouped source is the distinct groups, partitioned as their distinct
+    left them. Explicit bounds are literals; a missing one comes from the
+    one-row min/max bucket aggregate of the aggregated frame (observed
+    buckets are already aligned, so they need no floor), broadcast onto
+    the groups. The bucket-count cap rides on `__stop`."""
     spark = df_aggregated.sparkSession
     if start_ns is not None and tz is None:
         start_ns = _floor_bucket(start_ns, interval_ns, offset_ns)
-    if start_ns is not None and end_ns is not None:
-        src = (df_aggregated.select(*group_cols).distinct().coalesce(1)
-               if group_cols else spark.range(0, 1, 1, 1))
+    open_bounds = start_ns is None or end_ns is None
+    if open_bounds:
+        bounds = df_aggregated.agg(F.min(bucket_col).alias("__lo"),
+                                   F.max(bucket_col).alias("__hi"))
+    if not group_cols and one_partition:
+        src = bounds if open_bounds else spark.range(0, 1, 1, 1)
+    else:
+        src = (df_aggregated.select(*group_cols).distinct() if group_cols
+               else spark.range(1))
+        if open_bounds:
+            src = src.crossJoin(F.broadcast(bounds))
+    if not open_bounds:
         return src.select(*group_cols, F.lit(start_ns).alias("__first"),
                           F.lit(end_ns).alias("__stop"))
-    lo, hi = F.min(bucket_col), F.max(bucket_col)
-    if group_cols:
-        # per-group extremes in one partition, then the global extremes
-        # over that partition (no keys: the window needs no Exchange)
-        per_group = (df_aggregated.groupBy(*group_cols)
-                     .agg(lo.alias("__lo"), hi.alias("__hi")).coalesce(1))
-        whole = Window.partitionBy()
-        src = per_group.select(*group_cols,
-                               F.min("__lo").over(whole).alias("__lo"),
-                               F.max("__hi").over(whole).alias("__hi"))
-    else:
-        src = df_aggregated.agg(lo.alias("__lo"), hi.alias("__hi"))
     first = F.lit(start_ns) if start_ns is not None else F.col("__lo")
     stop = (F.lit(end_ns) if end_ns is not None
             else F.col("__hi") + F.lit(interval_ns))
-    bounds = src.select(*group_cols, first.alias("__first"),
+    framed = src.select(*group_cols, first.alias("__first"),
                         stop.alias("__stop"))
     # exact integer twin of _spine_size (`div` on longs, no double)
     n = F.expr(f"(__stop - 1 - __first) div {interval_ns} + 1")
     capped = F.when(n > F.lit(MAX_SPINE_BUCKETS), F.raise_error(
         F.format_string(_CAP_TEXT, n, F.lit(MAX_SPINE_BUCKETS)))
     ).otherwise(F.col("__stop"))
-    return bounds.select(*group_cols, "__first", capped.alias("__stop"))
+    return framed.select(*group_cols, "__first", capped.alias("__stop"))
 
 
 def bucket_spine(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
                  start_ns: int | None, end_ns: int | None,
                  group_cols: list[str], offset_ns: int = 0,
-                 tz: str | None = None) -> DataFrame:
-    """All buckets in [start, end) per distinct group combination, in one
-    partition.
+                 tz: str | None = None,
+                 one_partition: bool = True) -> DataFrame:
+    """All buckets in [start, end) per distinct group combination (an
+    ungrouped spine in one partition when `one_partition`).
 
     The spine MUST align with the bucket values the aggregation produced
     (timeutil.time_bucket / time_bucket_tz), so it honors the same
@@ -143,8 +149,8 @@ def bucket_spine(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
     sensible batch analog), resolved in the plan. No data in range gives no
     spine rows.
     """
-    src = _one_partition_source(df_aggregated, bucket_col, interval_ns,
-                                start_ns, end_ns, group_cols, offset_ns, tz)
+    src = _spine_source(df_aggregated, bucket_col, interval_ns, start_ns,
+                        end_ns, group_cols, offset_ns, tz, one_partition)
     first, stop = F.col("__first"), F.col("__stop")
     step = F.lit(interval_ns)
     if tz is None:
@@ -177,12 +183,15 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
                  start_ns: int | None = None,
                  end_ns: int | None = None,
                  offset_ns: int = 0,
-                 tz: str | None = None) -> DataFrame:
+                 tz: str | None = None,
+                 one_partition: bool = True) -> DataFrame:
     """Apply fill() to a bucket-aggregated DataFrame.
 
     mode: None → 'null' semantics (emit empty buckets as null);
           'none' → drop empty buckets (no spine join needed);
           'previous' | 'linear' | numeric constant.
+    one_partition: the driver collects the answer, so an ungrouped spine
+          may sit in one partition (False for INTO and subqueries).
     """
     group_cols = group_cols or []
     if mode == "none":
@@ -202,7 +211,8 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
         if nbuckets > MAX_SPINE_BUCKETS:
             raise QueryError(_CAP_TEXT % (nbuckets, MAX_SPINE_BUCKETS))
     spine = bucket_spine(df_aggregated, bucket_col, interval_ns,
-                         start_ns, end_ns, group_cols, offset_ns, tz)
+                         start_ns, end_ns, group_cols, offset_ns, tz,
+                         one_partition)
     joined = spine.join(df_aggregated, on=group_cols + [bucket_col], how="left")
 
     if mode is None or mode == "null":

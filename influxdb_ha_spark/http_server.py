@@ -75,11 +75,24 @@ def bind_params(q: str, params_json: str) -> str:
 
 def _execution_error(exc: BaseException) -> str:
     """One-line text for a statement whose execution failed. A job-group
-    cancellation reads like InfluxDB's ErrQueryInterrupted."""
+    cancellation reads like InfluxDB's ErrQueryInterrupted; a failure in a
+    Python worker reads as its traceback's last line (the exception)."""
     text = str(exc)
     if "cancelled" in text and "job group" in text:
         return "query interrupted"
-    first = next((ln.strip() for ln in text.splitlines() if ln.strip()),
+    java = getattr(exc, "java_exception", None)
+    if java is not None:
+        # PySpark leaves a generic SparkException (a job aborted by a lost
+        # task) unconverted; its str() opens with "An error occurred while
+        # calling oNNN.collectToPython." and the cause is on the Java side
+        text = java.toString()
+    head, tb, rest = text.partition("Traceback (most recent call last):")
+    if tb:
+        frames = rest.split("\n\tat ", 1)[0]
+        lines = [ln for ln in frames.splitlines() if ln.strip()]
+        if lines:
+            return lines[-1].strip()[:500]
+    first = next((ln.strip() for ln in head.splitlines() if ln.strip()),
                  type(exc).__name__)
     return first[:500]
 

@@ -69,6 +69,8 @@ class PlanContext:
     now_ns: int
     start_ns: int | None = None
     end_ns: int | None = None
+    # the driver collects the answer (not SELECT … INTO, not a subquery)
+    to_driver: bool = True
 
 
 class Planner:
@@ -82,17 +84,19 @@ class Planner:
         self.strict_partition_key = strict_partition_key
 
     # ------------------------------------------------------------------
-    def plan(self, stmt: SelectStatement) -> DataFrame:
+    def plan(self, stmt: SelectStatement, nested: bool = False) -> DataFrame:
+        """DataFrame of a SELECT; `nested` for a subquery's inner plan."""
         db = stmt.source.database or self.database
         if stmt.source.regex is not None:
-            return self._plan_regex_source(stmt, db)
+            return self._plan_regex_source(stmt, db, nested)
         if isinstance(stmt.source, SourceList):
-            return self._plan_source_list(stmt, db)
+            return self._plan_source_list(stmt, db, nested)
         if isinstance(stmt.source, SubQuery):
             m = self._subquery_measurement(stmt.source, db)
         else:
             m = self.catalog.get(db, stmt.source.name)
-        ctx = PlanContext(measurement=m, now_ns=self.now_ns)
+        ctx = PlanContext(measurement=m, now_ns=self.now_ns,
+                          to_driver=not nested and stmt.into is None)
 
         df = m.df
         if stmt.where is not None:
@@ -226,7 +230,7 @@ class Planner:
         though coordinator.go:376-387 recurses into SubQuery nodes in
         preparation); on Spark the inner plan simply becomes the scan."""
         inner_stmt = src.stmt
-        inner_df = self.plan(inner_stmt)
+        inner_df = self.plan(inner_stmt, nested=True)
         cols = inner_df.columns
         tags: list[str] = []
         isrc = inner_stmt.source
@@ -244,7 +248,8 @@ class Planner:
         return Measurement(name="(subquery)", database=db, tags=tags,
                            fields=fields, df=inner_df)
 
-    def _plan_source_list(self, stmt: SelectStatement, db: str) -> DataFrame:
+    def _plan_source_list(self, stmt: SelectStatement, db: str,
+                          nested: bool) -> DataFrame:
         """FROM m1, m2 — per-measurement plans unioned with a `measurement`
         column (README.md:196-200: rejected by the reference on partitioned
         data; the Spark union is the natural semantics)."""
@@ -253,14 +258,15 @@ class Planner:
         for ref in stmt.source.refs:
             sub = copy.deepcopy(stmt)
             sub.source = ref
-            outs.append(self.plan(sub).withColumn(
+            outs.append(self.plan(sub, nested).withColumn(
                 "measurement", F.lit(ref.name)))
         result = outs[0]
         for o in outs[1:]:
             result = result.unionByName(o, allowMissingColumns=True)
         return result
 
-    def _plan_regex_source(self, stmt: SelectStatement, db: str) -> DataFrame:
+    def _plan_regex_source(self, stmt: SelectStatement, db: str,
+                           nested: bool) -> DataFrame:
         """FROM /re/ — run the statement against every matching measurement
         and union the results, tagged with a `measurement` column (the
         analog of InfluxDB's per-measurement series names; influxql supports
@@ -277,7 +283,8 @@ class Planner:
         for n in names:
             sub = copy.deepcopy(stmt)
             sub.source = type(stmt.source)(name=n, database=db)
-            outs.append(self.plan(sub).withColumn("measurement", F.lit(n)))
+            outs.append(self.plan(sub, nested).withColumn("measurement",
+                                                          F.lit(n)))
         result = outs[0]
         for o in outs[1:]:
             result = result.unionByName(o, allowMissingColumns=True)
@@ -373,7 +380,7 @@ class Planner:
                                value_names, group_tags,
                                start_ns=tr[0], end_ns=tr[1],
                                offset_ns=stmt.group_by_offset_ns,
-                               tz=stmt.tz)
+                               tz=stmt.tz, one_partition=ctx.to_driver)
         return out
 
     def _apply_transform(self, out: DataFrame, texpr: Call, inner_col: str,

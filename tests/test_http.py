@@ -383,3 +383,35 @@ def test_open_bounded_spine_cap_is_400(spark):
         srv.shutdown()
     assert errors[0] == errors[1]
     assert errors[0].startswith(f"GROUP BY time() would generate {hi + 1} buckets")
+
+
+@pytest.mark.parametrize("source", ["udf", "rdd"])
+def test_failed_execution_error_names_cause(spark, source):
+    """A statement whose Spark job fails answers with the failure's cause.
+    A failing UDF arrives as PySpark's PythonException; a failing RDD
+    stage as an unconverted Py4JJavaError whose own text names only the
+    py4j call."""
+    from pyspark.sql import functions as F
+
+    def boom(v):
+        raise ValueError(f"cannot read value {v}")
+
+    if source == "udf":
+        df = spark.range(2).select(F.col("id").alias("time"),
+                                   F.lit("x").alias("type"),
+                                   F.udf(boom, "double")("id").alias("value"))
+    else:
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize([0, 1], 2).map(
+                lambda i: (i, "x", boom(i))),
+            "time long, type string, value double")
+    srv, url = _engine_server(spark, "broken", df, ["type"])
+    try:
+        status, _, body = _get(url + urllib.request.quote(
+            "SELECT count(value) FROM broken"))
+    finally:
+        srv.shutdown()
+    assert status == 200
+    (res,) = json.loads(body)["results"]
+    assert res["statement_id"] == 0
+    assert res["error"].startswith("ValueError: cannot read value "), res

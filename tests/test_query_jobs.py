@@ -56,7 +56,7 @@ ROTATION = [
 EXPECTED_JOBS = {
     "group_1h": (0, 3),
     "group_1h_tag": (0, 3),
-    "group_1d_tag": (0, 4),
+    "group_1d_tag": (0, 6),
     "raw_limit": (0, 1),
     "fill_linear": (0, 3),
     "fill_open": (0, 4),
@@ -115,10 +115,10 @@ def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("kind", ["group_1h", "group_1h_tag", "group_1d_tag",
-                                  "fill_linear", "fill_open"])
-def test_group_by_time_needs_no_range_shuffle(events_engine, kind):
-    """The spine sits in one partition, so ORDER BY time[, tags] and the
+@pytest.mark.parametrize("kind", ["group_1h", "group_1h_tag", "fill_linear",
+                                  "fill_open"])
+def test_ungrouped_group_by_time_needs_no_range_shuffle(events_engine, kind):
+    """An ungrouped spine sits in one partition, so ORDER BY time and the
     fill window are satisfied without a range exchange. The one
     SinglePartition gather allowed is the open-bounded fill's one-row
     min/max bucket aggregate."""
@@ -126,6 +126,50 @@ def test_group_by_time_needs_no_range_shuffle(events_engine, kind):
     plan = _executed_plan(events_engine.query_df(q)).lower()
     assert "rangepartitioning" not in plan, plan
     assert plan.count("exchange singlepartition") == (kind == "fill_open"), plan
+
+
+@pytest.mark.parametrize("where,gathers", [(_w(2, 14), 0), ("time < now()", 1)])
+def test_grouped_spine_keeps_series_partitioning(events_engine, where,
+                                                 gathers):
+    """A grouped spine is not gathered into one partition: its rows grow
+    with the series count, so the join and the sort stay spread out. An
+    open bound adds one SinglePartition gather, the one-row min/max bucket
+    aggregate broadcast onto the series."""
+    from tools.explain_audit import audit_plan
+    q = ("SELECT mean(value) FROM events "
+         f"WHERE {where} GROUP BY time(1d), event_type")
+    plan = _executed_plan(events_engine.query_df(q))
+    got = audit_plan(plan)
+    assert got["one_part"] == 0 and got["single_part"] == gathers, plan
+    assert "Coalesce 1" not in plan, plan
+
+
+def test_into_and_subquery_spines_are_not_one_partition(spark, events_engine):
+    """Only an answer the driver collects gets the one-partition spine.
+    SELECT … INTO persists its answer, so the target measurement keeps the
+    range-sorted partitions; a subquery's inner fill feeds more Spark work.
+    AQE partition coalescing is off here, or it would merge this small
+    answer into one partition either way."""
+    from tools.explain_audit import audit_plan
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parts > 1
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for i, where in enumerate([_w(2, 14), "time < now()"]):
+            events_engine.query_df(
+                f"SELECT count(value) AS n INTO into_fill_{i} FROM events "
+                f"WHERE {where} GROUP BY time(1d) fill(0)")
+            target = events_engine.catalog.get("default", f"into_fill_{i}")
+            assert target.df.rdd.getNumPartitions() == parts, where
+    finally:
+        spark.conf.set(key, old)
+    sub = events_engine.query_df(
+        "SELECT max(n) FROM (SELECT count(value) AS n FROM events "
+        f"WHERE {_w(2, 14)} GROUP BY time(1d) fill(0))")
+    plan = _executed_plan(sub)
+    assert audit_plan(plan)["one_part"] == 0, plan
 
 
 def test_show_measurements_is_local(events_engine):

@@ -131,9 +131,10 @@ BOUNDED_SINGLE_PARTITION = {
                         "above _SMALL_SPINE switch to the segmented scan",
     "iq_fill_linear": "ungrouped fill spine window, capped (fill.py); "
                       "segmented above _SMALL_SPINE",
-    # one-partition fill spines (fill.py): the spine is exploded in ONE
-    # partition so ORDER BY time[, tags] needs no range shuffle; the sort
-    # runs over the answer itself, which the driver collects in full
+    # one-partition fill spines (fill.py): an ungrouped spine whose answer
+    # the driver collects is exploded in ONE partition, so ORDER BY time
+    # needs no range shuffle; the sort runs over the answer itself (one
+    # series), which the driver collects in full
     "iq_fill_zero": "one-partition spine feeding the time sort: rows = "
                     "bucket count (124 here), <= MAX_SPINE_BUCKETS "
                     "(fill.py hard cap) — the collected answer itself",
@@ -144,10 +145,6 @@ BOUNDED_SINGLE_PARTITION = {
     "iq_fill_tz": "one-partition tz spine (buckets + one day of DST "
                   "slack) feeding its distinct and the time sort: rows "
                   "= bucket count, <= MAX_SPINE_BUCKETS",
-    "iq_kitchen_sink": "grouped spine in one partition (distinct series x "
-                       "buckets, <= series x MAX_SPINE_BUCKETS) streamed "
-                       "through the fill join into the LIMIT 40 top-k; the "
-                       "series come from a keyed distinct",
     "show_tag_values": "SHOW TAG VALUES sorts the DISTINCT values of one "
                        "tag in one partition: rows = the tag's cardinality "
                        "(a series-count bound), after a keyed distinct",

@@ -10,9 +10,8 @@ Usage:
 
 The fingerprint is `explain_audit.audit_plan`'s counters (exchanges,
 single-partition funnels, one-partition producers feeding a join/sort/
-window, broadcast/sort-merge join counts, cartesian / Arrow-UDF flags). A
-counter missing from a key's pin (added to the audit after that key was
-last recorded) is not compared for that key. Comparison is directional:
+window, broadcast/sort-merge join counts, cartesian / Arrow-UDF flags).
+Every counter is compared for every key. Comparison is directional:
 MORE exchanges, FEWER broadcast joins, MORE sort-merge joins, or a new
 cartesian/row-Python/single-partition is a regression; an IMPROVEMENT
 (fewer shuffles) is reported and should be re-pinned with --record. Plan
@@ -89,8 +88,6 @@ def compare(base: dict, cur: dict) -> tuple[list[str], list[str]]:
                 regressions.append(f"{name}: now errors: {c['error']}")
             continue
         for f in WORSE_IF_MORE:
-            if f not in b:
-                continue
             if c[f] > b[f]:
                 regressions.append(f"{name}: {f} {b[f]} -> {c[f]}")
             elif c[f] < b[f]:
