@@ -11,11 +11,22 @@ built-in equivalent, so this is real engine work (SURVEY.md §4 item 2):
 3. fill: `null` (default), `none` (drop), number (`coalesce(lit)`),
    `previous` (`last(ignorenulls) over`), `linear` (lead/lag interpolation).
 
+Where the fill runs: a plain aggregate with `GROUP BY time()` whose answer
+the driver collects (/query, not SELECT … INTO, not a subquery), without
+tz(), is finished on the driver. Spark runs only its aggregated frame and
+`fill_collected` fills each collected series over `collected_spine`, with
+the same bounds, cap and arithmetic as the plan below (result.FinishSpec
+holds the choice). Every other answer keeps the Spark spine built here:
+SELECT … INTO, subqueries, tz(), outer transforms such as
+derivative(mean(…)), EXPLAIN, and the contract keys that plan the same
+statements. The planner still builds that spine for a finished answer; it
+is what EXPLAIN shows.
+
 Scale notes: the spine size is range/interval buckets per series — bounded
 by the query's WHERE time range, exactly like InfluxDB (which refuses
-unbounded GROUP BY time() queries). The join key is (group tags, bucket).
-The executed plan broadcasts the AGGREGATED side (the build side of the
-left join) and streams the spine.
+unbounded GROUP BY time() queries). The join key is (group tags, bucket),
+tags matched null-safely. The executed plan broadcasts the AGGREGATED side
+(the build side of the left join) and streams the spine.
 
 An ungrouped spine whose answer the driver collects lives in ONE
 partition: it is exploded from a one-split Range, or from the one-row
@@ -37,7 +48,8 @@ bound is resolved IN THE PLAN from a one-row min/max aggregate over the
 aggregated frame feeding `sequence()`; the same cap is an in-plan
 `raise_error` whose text `spine_cap_error` maps back to the QueryError the
 bounded path raises. The one eager bounds job left is
-`_resolve_open_bounds`, for ungrouped previous/linear only (see there).
+`_resolve_open_bounds`, for an ungrouped previous/linear fill whose answer
+stays in Spark (see there).
 
 Ungrouped previous/linear fills over a LARGE spine (a year of 1 s buckets is
 31 M rows) do not use a keyless Window: the spine is evenly spaced with
@@ -202,7 +214,8 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
         return df_aggregated.where(keep)
 
     windowed = mode in ("previous", "linear")
-    if windowed and not group_cols and (start_ns is None or end_ns is None):
+    if windowed and not group_cols and not one_partition \
+            and (start_ns is None or end_ns is None):
         start_ns, end_ns = _resolve_open_bounds(
             df_aggregated, bucket_col, interval_ns, start_ns, end_ns)
     nbuckets = None
@@ -213,7 +226,7 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
     spine = bucket_spine(df_aggregated, bucket_col, interval_ns,
                          start_ns, end_ns, group_cols, offset_ns, tz,
                          one_partition)
-    joined = spine.join(df_aggregated, on=group_cols + [bucket_col], how="left")
+    joined = _join_spine(spine, df_aggregated, bucket_col, group_cols)
 
     if mode is None or mode == "null":
         return joined
@@ -256,16 +269,38 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
     raise ValueError(f"unknown fill mode: {mode!r}")
 
 
+def _join_spine(spine: DataFrame, df_aggregated: DataFrame, bucket_col: str,
+                group_cols: list[str]) -> DataFrame:
+    """Left join of the aggregated buckets onto the spine: group_cols,
+    bucket_col, then the aggregated value columns. Tags match null-safely,
+    so a series whose tag is null keeps its values (a plain equi-join
+    would fill every bucket of it)."""
+    if not group_cols:
+        return spine.join(df_aggregated, on=[bucket_col], how="left")
+    values = [c for c in df_aggregated.columns
+              if c not in group_cols and c != bucket_col]
+    right = df_aggregated.select(
+        *[F.col(g).alias(f"__g{i}") for i, g in enumerate(group_cols)],
+        F.col(bucket_col).alias("__b"), *values)
+    cond = F.col(bucket_col) == F.col("__b")
+    for i, g in enumerate(group_cols):
+        cond = cond & F.col(g).eqNullSafe(F.col(f"__g{i}"))
+    return spine.join(right, cond, "left").select(*group_cols, bucket_col,
+                                                  *values)
+
+
 def _resolve_open_bounds(df_aggregated: DataFrame, bucket_col: str,
                          interval_ns: int, start_ns: int | None,
                          end_ns: int | None) -> tuple[int | None, int | None]:
     """Eager min/max bucket for an open bound: fill.py's only eager job.
 
-    Only ungrouped previous/linear calls it. Their plan SHAPE depends on
-    the spine size (a keyless window up to _SMALL_SPINE rows, the
-    segmented scan above), and a shape has to be chosen before the plan
-    exists. Every other fill resolves open bounds in the plan. With no
-    data the bounds stay open and the in-plan spine is empty."""
+    Only ungrouped previous/linear whose answer stays in Spark (SELECT …
+    INTO, a subquery) calls it. Their plan SHAPE depends on the spine size
+    (a keyless window up to _SMALL_SPINE rows, the segmented scan above),
+    and a shape has to be chosen before the plan exists. A one-partition
+    spine always takes the keyless window, which needs no partitioning, so
+    it and every other fill resolve open bounds in the plan. With no data
+    the bounds stay open and the in-plan spine is empty."""
     lo, hi = df_aggregated.agg(F.min(bucket_col), F.max(bucket_col)).first()
     if lo is None:
         return start_ns, end_ns
@@ -279,6 +314,67 @@ def _spine_size(start_ns: int, end_ns: int, interval_ns: int,
     DST hours in range — irrelevant for the segmented-path size cutoff)."""
     first_bucket = _floor_bucket(start_ns, interval_ns, offset_ns)
     return max(0, (end_ns - 1 - first_bucket) // interval_ns + 1)
+
+
+def collected_spine(buckets: list[int], interval_ns: int,
+                    start_ns: int | None, end_ns: int | None,
+                    offset_ns: int = 0) -> range:
+    """The spine of an answer the driver finishes (see `fill_collected`).
+
+    Explicit bounds are taken as `_spine_source` takes them (the start
+    floored to the bucket grid). A missing bound comes from the collected
+    `buckets`, as the in-plan min/max bucket does, so it costs no second
+    scan and no job; with no data the spine is empty. An open-bounded
+    spine over MAX_SPINE_BUCKETS is refused here, before any filled row
+    exists, with the bounded path's text (the explicit-bounded refusal
+    already happened in `fill_buckets` while planning)."""
+    if start_ns is not None:
+        start_ns = _floor_bucket(start_ns, interval_ns, offset_ns)
+    if start_ns is None or end_ns is None:
+        if not buckets:
+            return range(0)
+        if start_ns is None:
+            start_ns = min(buckets)
+        if end_ns is None:
+            end_ns = max(buckets) + interval_ns
+        n = _spine_size(start_ns, end_ns, interval_ns, offset_ns)
+        if n > MAX_SPINE_BUCKETS:
+            raise QueryError(_CAP_TEXT % (n, MAX_SPINE_BUCKETS))
+    return range(start_ns, end_ns, interval_ns)
+
+
+def fill_collected(spine: range, observed: dict[int, tuple],
+                   mode: str | float | int | None,
+                   fill_values: tuple, width: int) -> list[tuple]:
+    """Driver twin of `fill_buckets` for one collected series: the value
+    tuple of every spine bucket, in spine order.
+
+    `observed` maps a bucket to its aggregated values; a bucket off the
+    spine is dropped, as the spine's left join drops it. `fill_values`
+    holds the numeric fill literal per value column, already coerced to
+    the planned column's type. Linear interpolation keeps the Spark
+    expression's order of operations, so the doubles are identical."""
+    empty = (None,) * width
+    rows = [observed.get(b, empty) for b in spine]
+    if mode is None or mode == "null" or not rows:
+        return rows
+    if mode not in ("previous", "linear"):
+        return [tuple(f if v is None else v for v, f in zip(r, fill_values))
+                for r in rows]
+    cols = [list(c) for c in zip(*rows)]
+    for col in cols:
+        known = [i for i, v in enumerate(col) if v is not None]
+        if mode == "previous":
+            for i, j in zip(known, known[1:] + [len(col)]):
+                col[i + 1:j] = [col[i]] * (j - i - 1)
+            continue
+        for i, j in zip(known, known[1:]):
+            prev_v, next_v = col[i], col[j]
+            prev_b, next_b = spine[i], spine[j]
+            for k in range(i + 1, j):
+                col[k] = prev_v + (next_v - prev_v) * (
+                    float(spine[k] - prev_b) / float(next_b - prev_b))
+    return list(zip(*cols))
 
 
 def _fill_ungrouped_segmented(joined: DataFrame, bucket_col: str,

@@ -34,7 +34,7 @@ from .influxql.ast import (BinaryExpr, Call, DurationLit, IntegerLit,
                            NumberLit, RegexLit, SelectField, SelectStatement,
                            SourceList, StringLit, SubQuery, VarRef, Wildcard)
 from .model import Catalog, Measurement, TIME_COL
-from .result import local_result
+from .result import FinishSpec, attach_finish, local_result
 from .timeutil import parse_time_literal_ns, time_bucket, time_bucket_tz
 
 TRANSFORMS = {"derivative", "non_negative_derivative", "difference",
@@ -57,6 +57,11 @@ _SEQUENTIAL_TRANSFORMS = {"holt_winters", "holt_winters_with_fit",
                           "kaufmans_adaptive_moving_average"}
 
 
+_INTEGRAL_TYPES = {"long", "integer", "short", "byte"}
+_NUMERIC_TYPES = _INTEGRAL_TYPES | {"double"}
+_SCALAR_TYPES = _NUMERIC_TYPES | {"string", "boolean"}
+
+
 # Re-exported from errors.py so existing `from .planner import QueryError`
 # call sites keep working; defined there so leaf modules (timeutil) can
 # raise them without a circular import.
@@ -71,6 +76,11 @@ class PlanContext:
     end_ns: int | None = None
     # the driver collects the answer (not SELECT … INTO, not a subquery)
     to_driver: bool = True
+    # the frame a fill spine is built from: its distinct groups are the
+    # answer's series, listed for SLIMIT without exploding the spine
+    spine_groups: DataFrame | None = None
+    # set when the driver finishes the answer from its aggregated frame
+    finish: FinishSpec | None = None
 
 
 class Planner:
@@ -138,7 +148,8 @@ class Planner:
         else:
             out = self._plan_aggregate(stmt, df, m, group_tags, ctx)
 
-        out = self._apply_series_limits(stmt, out, group_tags)
+        out = self._apply_series_limits(stmt, out, group_tags,
+                                        ctx.spine_groups)
         order = [F.col(TIME_COL).desc() if stmt.order_desc else F.col(TIME_COL).asc()] \
             if TIME_COL in out.columns else []
         if order:
@@ -150,6 +161,8 @@ class Planner:
             # applied post-merge, globally — fixes the reference's
             # per-node LIMIT semantics (query_merge.go:86-92, SURVEY §2.6)
             out = out.limit(stmt.limit)
+        if ctx.finish is not None:
+            attach_finish(out, ctx.finish)
         return out
 
     def _unknown_refs(self, stmt: SelectStatement,
@@ -374,14 +387,73 @@ class Planner:
                 # fill to holt_winters output either)
                 return out
 
-        if stmt.group_by_time_ns and stmt.fill != "none_skip_spine":
+        if stmt.group_by_time_ns:
             tr = self._time_range(stmt, ctx)
+            bucketed = out
             out = fill_buckets(out, TIME_COL, stmt.group_by_time_ns, stmt.fill,
                                value_names, group_tags,
                                start_ns=tr[0], end_ns=tr[1],
                                offset_ns=stmt.group_by_offset_ns,
                                tz=stmt.tz, one_partition=ctx.to_driver)
+            if stmt.fill != "none":
+                ctx.spine_groups = bucketed
+            if ctx.to_driver and not outer_transforms:
+                ctx.finish = self._finish_spec(stmt, bucketed, out,
+                                               group_tags, value_names, tr)
         return out
+
+    def _finish_spec(self, stmt: SelectStatement, bucketed: DataFrame,
+                     planned: DataFrame, group_tags: list[str],
+                     value_names: list[str],
+                     tr: tuple[int | None, int | None]) -> FinishSpec | None:
+        """The one choice of the driver finisher (result.FinishSpec): a
+        plain GROUP BY time() aggregate, collected, without tz(), whose
+        column types the finisher reproduces. Types come from the planned
+        frame's schema, which shows Spark's coercion (count() under
+        fill(linear) is DOUBLE; fill(0) on a string aggregate is "0");
+        reading a schema runs no job."""
+        if stmt.tz:
+            return None
+        planned_t = {f.name: f.dataType.typeName()
+                     for f in planned.schema.fields}
+        bucketed_t = {f.name: f.dataType.typeName()
+                      for f in bucketed.schema.fields}
+        if len(planned_t) != len(planned.columns) \
+                or bucketed_t.get(TIME_COL) != "long" \
+                or any(bucketed_t.get(t) != "string" for t in group_tags):
+            return None
+        literal = (isinstance(stmt.fill, (int, float))
+                   and not isinstance(stmt.fill, bool))
+        casts, fill_values = [], []
+        for c in value_names:
+            p, b = planned_t.get(c), bucketed_t.get(c)
+            if b not in _SCALAR_TYPES or (stmt.fill == "linear"
+                                          and b not in _NUMERIC_TYPES):
+                return None
+            if p == b:
+                casts.append(None)
+            elif p == "double" and b in _INTEGRAL_TYPES:
+                casts.append(float)
+            else:
+                return None
+            if not literal:
+                fill_values.append(None)
+            elif p == "double":
+                fill_values.append(float(stmt.fill))
+            elif p in _INTEGRAL_TYPES and isinstance(stmt.fill, int):
+                fill_values.append(stmt.fill)
+            elif p == "string" and isinstance(stmt.fill, int):
+                fill_values.append(str(stmt.fill))
+            else:
+                return None
+        return FinishSpec(
+            aggregated=bucketed, group_tags=tuple(group_tags),
+            value_cols=tuple(value_names), casts=tuple(casts),
+            fill_values=tuple(fill_values), fill=stmt.fill,
+            interval_ns=stmt.group_by_time_ns,
+            offset_ns=stmt.group_by_offset_ns, start_ns=tr[0], end_ns=tr[1],
+            order_desc=bool(stmt.order_desc), offset=stmt.offset or 0,
+            limit=stmt.limit, soffset=stmt.soffset, slimit=stmt.slimit)
 
     def _apply_transform(self, out: DataFrame, texpr: Call, inner_col: str,
                          tname: str, group_tags: list[str],
@@ -611,21 +683,32 @@ class Planner:
 
     # -- series limits (SLIMIT/SOFFSET — query_merge.go:93-98) -------------
     def _apply_series_limits(self, stmt: SelectStatement, out: DataFrame,
-                             group_tags: list[str]) -> DataFrame:
+                             group_tags: list[str],
+                             spine_groups: DataFrame | None) -> DataFrame:
         if stmt.slimit is None and stmt.soffset is None:
             return out
         if not group_tags:
             return out
-        lo = (stmt.soffset or 0)
-        n = stmt.slimit if stmt.slimit is not None else (1 << 31)
         # Scalable form: rank only the distinct series keys (bounded by
         # series cardinality, not row count), then broadcast-semi-join the
         # selected keys back. A dense_rank over a keyless Window would pull
-        # every result row into a single partition.
-        picked = (out.select(*group_tags).distinct()
-                  .orderBy(*[F.col(t) for t in group_tags])
-                  .offset(lo).limit(n))
-        return out.join(F.broadcast(picked), on=group_tags, how="inner")
+        # every result row into a single partition. A filled answer's
+        # series are the distinct groups of the frame its spine is built
+        # from, so they are listed there, not from the exploded spine.
+        # Tags match null-safely: a null tag is a series of its own.
+        src = spine_groups if spine_groups is not None else out
+        picked = (src.select(*[F.col(t).alias(f"__s{i}")
+                               for i, t in enumerate(group_tags)])
+                  .distinct()
+                  .orderBy(*[F.col(f"__s{i}") for i in range(len(group_tags))])
+                  .offset(stmt.soffset or 0))
+        if stmt.slimit is not None:
+            picked = picked.limit(stmt.slimit)
+        cond = None
+        for i, t in enumerate(group_tags):
+            c = F.col(t).eqNullSafe(F.col(f"__s{i}"))
+            cond = c if cond is None else cond & c
+        return out.join(F.broadcast(picked), cond, "left_semi")
 
     # -- expression helpers ------------------------------------------------
     def _expand_tags(self, tags: list[str], m: Measurement) -> list[str]:

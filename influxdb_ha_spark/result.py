@@ -6,17 +6,31 @@ tags, columns, values}]}]}` with column 0 always `time`
 by default or numeric epoch per the `epoch` parameter
 (coordinator.go:210-216).
 
-This is a presentation layer over a bounded result: `collect()` happens here
-and only here, after the engine has applied LIMITs — mirroring the
-reference, which streams JSON rows to the client.
+This is a presentation layer over a bounded result, and the answer is
+collected here in one of two ways before one shaper builds the JSON:
+
+- a plain aggregate with `GROUP BY time()` whose answer the driver collects
+  carries a `FinishSpec` (attached by the planner). Spark runs only its
+  aggregated frame (WHERE plus GROUP BY), collected with `toArrow()`; the
+  driver fills each series' buckets (`functions/fill.fill_collected`),
+  resolves open bounds from the collected buckets, and applies SLIMIT/
+  SOFFSET, ORDER BY time and OFFSET/LIMIT. This is the reference's
+  coordinator shaping the merged per-node answers in-process
+  (coordinator.go:131-158, merge/query_merge.go:106-209);
+- every other DataFrame is collected whole with `collect()`, after the
+  engine has applied its LIMITs in the plan.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from datetime import datetime, timezone
+from itertools import islice
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 
+from .functions.fill import collected_spine, fill_collected
 from .timeutil import PRECISIONS
 
 
@@ -86,36 +100,155 @@ def _format_time(ns: int, epoch: str | None):
     return ns // PRECISIONS[epoch]
 
 
+@dataclass(frozen=True)
+class FinishSpec:
+    """How the driver finishes a collected `GROUP BY time()` answer from
+    its aggregated frame. Built by `Planner.plan`, which keeps returning
+    the full Spark plan (EXPLAIN, SELECT … INTO, subqueries and the
+    contract keys run that one)."""
+    aggregated: DataFrame       # time, group tags, value columns
+    group_tags: tuple[str, ...]
+    value_cols: tuple[str, ...]
+    # per value column, from the planned frame's schema: a cast for the
+    # collected values (float where Spark's coercion made an integer
+    # aggregate DOUBLE) and the numeric fill literal in the column's type
+    casts: tuple
+    fill_values: tuple
+    fill: str | float | int | None
+    interval_ns: int
+    offset_ns: int
+    start_ns: int | None
+    end_ns: int | None
+    order_desc: bool
+    offset: int
+    limit: int | None
+    soffset: int | None
+    slimit: int | None
+
+
+_FINISH = "_influx_finish"
+
+
+def attach_finish(df: DataFrame, spec: FinishSpec) -> None:
+    """Mark `df` (the full plan) as finished on the driver by `spec`. A
+    DataFrame derived from it carries no spec, so it is collected."""
+    setattr(df, _FINISH, spec)
+
+
+def _tag_order(key: tuple) -> tuple:
+    # ASC NULLS FIRST, Spark's default ascending order
+    return tuple((v is not None, v) for v in key)
+
+
+def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
+    """The answer rows of `spec`: the aggregated frame is Spark's last
+    step; fill, bounds, SLIMIT, ORDER BY time and OFFSET/LIMIT run here,
+    in the planner's order."""
+    tbl = spec.aggregated.toArrow()
+    times = tbl.column("time").to_pylist()
+    keys = (list(zip(*[tbl.column(t).to_pylist() for t in spec.group_tags]))
+            if spec.group_tags else [()] * len(times))
+    values = list(zip(*[tbl.column(c).to_pylist() for c in spec.value_cols]))
+    spine_fill = spec.fill != "none"
+
+    series: dict[tuple, dict[int, tuple]] = {}
+    if spine_fill and not spec.group_tags:
+        series[()] = {}   # an ungrouped spine exists without data
+    for t, k, v in zip(times, keys, values):
+        if spine_fill or any(x is not None for x in v):
+            series.setdefault(k, {})[t] = v
+    picked = sorted(series, key=_tag_order)
+    if spec.group_tags and (spec.slimit is not None
+                            or spec.soffset is not None):
+        lo = spec.soffset or 0
+        picked = picked[lo:None if spec.slimit is None else lo + spec.slimit]
+
+    if spine_fill:
+        spine = collected_spine(times, spec.interval_ns, spec.start_ns,
+                                spec.end_ns, spec.offset_ns)
+        filled = [fill_collected(spine, series[k], spec.fill,
+                                 spec.fill_values, len(spec.value_cols))
+                  for k in picked]
+        order = (range(len(spine) - 1, -1, -1) if spec.order_desc
+                 else range(len(spine)))
+        rows = ((spine[i], k, f[i]) for i in order
+                for k, f in zip(picked, filled))
+    else:
+        rows = [(t, k, v) for k in picked for t, v in series[k].items()]
+        # stable: equal times keep the tag order of `picked`
+        rows.sort(key=itemgetter(0), reverse=spec.order_desc)
+    stop = None if spec.limit is None else spec.offset + spec.limit
+    casts = spec.casts if any(spec.casts) else None
+    out = []
+    for t, k, v in islice(rows, spec.offset, stop):
+        if casts:
+            v = tuple(x if c is None or x is None else c(x)
+                      for x, c in zip(v, casts))
+        out.append((t,) + k + v)
+    return ["time", *spec.group_tags, *spec.value_cols], out
+
+
+def collect_rows(df: DataFrame) -> tuple[list[str], list[tuple]]:
+    """The columns and rows of an answer: finished on the driver when the
+    planner attached a FinishSpec, else the collected plan."""
+    spec = df.__dict__.get(_FINISH)
+    if spec is not None:
+        return _finished_rows(spec)
+    return df.columns, df.collect()
+
+
 def to_influx_series(df: DataFrame, measurement: str,
                      tag_cols: list[str] | None = None,
                      epoch: str | None = None,
                      statement_id: int = 0,
                      messages: list[tuple[str, str]] | None = None) -> dict:
-    """Shape a result DataFrame into the InfluxDB JSON result object.
+    """Collect a result DataFrame and shape it into the InfluxDB JSON
+    result object."""
+    columns, rows = collect_rows(df)
+    return shape_series(columns, rows, measurement, tag_cols, epoch,
+                        statement_id, messages)
+
+
+def shape_series(columns: list[str], rows, measurement: str,
+                 tag_cols: list[str] | None = None,
+                 epoch: str | None = None,
+                 statement_id: int = 0,
+                 messages: list[tuple[str, str]] | None = None) -> dict:
+    """The InfluxDB JSON result object of collected rows (tuples aligned
+    with `columns`).
 
     Rows are grouped into one series per tag combination
     (groupResultsByTags, coordinator.go:48-70); `time` leads the columns.
     """
-    tag_cols = [t for t in (tag_cols or []) if t in df.columns]
-    value_cols = [c for c in df.columns if c not in tag_cols]
+    pos: dict[str, int] = {}
+    for i, c in enumerate(columns):
+        pos.setdefault(c, i)
+    tag_cols = [t for t in (tag_cols or []) if t in pos]
+    value_cols = [c for c in columns if c not in tag_cols]
     if "time" in value_cols:  # time first (coordinator.go:134)
         value_cols = ["time"] + [c for c in value_cols if c != "time"]
+    tag_idx = [pos[t] for t in tag_cols]
+    val_idx = [pos[c] for c in value_cols]
+    timed = [j for j, c in enumerate(value_cols) if c == "time"]
+    stamps: dict[int, object] = {}
 
     series_map: dict[tuple, dict] = {}
-    for row in df.collect():
-        key = tuple(row[t] for t in tag_cols)
+    for row in rows:
+        key = tuple(row[i] for i in tag_idx)
         s = series_map.get(key)
         if s is None:
             s = {"name": measurement,
-                 "tags": {t: row[t] for t in tag_cols} if tag_cols else {},
+                 "tags": dict(zip(tag_cols, key)) if tag_cols else {},
                  "columns": list(value_cols), "values": []}
             series_map[key] = s
-        vals = []
-        for c in value_cols:
-            v = row[c]
-            if c == "time" and v is not None:
-                v = _format_time(v, epoch)
-            vals.append(v)
+        vals = [row[i] for i in val_idx]
+        for j in timed:
+            v = vals[j]
+            if v is not None:
+                f = stamps.get(v)
+                if f is None:
+                    f = stamps[v] = _format_time(v, epoch)
+                vals[j] = f
         s["values"].append(vals)
 
     out_series = list(series_map.values())

@@ -1,0 +1,232 @@
+"""The driver finisher answers exactly like the Spark spine.
+
+A collected plain `GROUP BY time()` aggregate carries a `FinishSpec`:
+Spark stops at the aggregated frame and the driver fills, bounds, sorts,
+limits and shapes it (result.py). Each case here plans one statement and
+compares `to_influx_series` on that spec path with the same DataFrame
+collected whole by Spark and shaped by the same shaper; the JSON must be
+identical byte for byte. Statements that keep the Spark spine (tz(), outer
+transforms, row selectors, raw selects, SELECT … INTO, subqueries) must
+carry no spec.
+"""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+from hypothesis import assume, given, settings, strategies as st
+
+from influxdb_ha_spark.errors import QueryError
+from influxdb_ha_spark.functions.fill import MAX_SPINE_BUCKETS
+from influxdb_ha_spark.influxql.parser import parse_query
+from influxdb_ha_spark.model import Catalog
+from influxdb_ha_spark.planner import Planner
+from influxdb_ha_spark.result import (_FINISH, shape_series,
+                                      to_influx_series)
+from influxdb_ha_spark.server import Engine
+
+H = 3_600_000_000_000
+NOW = 100 * H
+
+# two tags, one of them null for some points; gaps in every series;
+# double, long and string fields
+ROWS = [(2 * H + 60, "a", "x", 1.0, 3, "s1"),
+        (2 * H + 90, "a", "y", 2.5, 1, "s0"),
+        (5 * H, "a", "x", 4.0, 4, "s2"),
+        (9 * H + 7, "a", None, 10.0, 5, None),
+        (4 * H, None, "x", 3.0, 6, "s3"),
+        (7 * H, None, "y", 9.0, 7, "s4"),
+        (8 * H, "b", "x", 1.0, 8, "s5"),
+        (11 * H, "c", "y", -2.0, -1, "s6")]
+
+
+@pytest.fixture(scope="module")
+def cat(spark):
+    df = spark.createDataFrame(
+        ROWS, "time long, host string, dc string, v double, i long, s string")
+    c = Catalog(spark)
+    c.register_dataframe("db", "m", df, time_col="time", tags=["host", "dc"])
+    return c
+
+
+def _plan(cat, q):
+    return Planner(cat, "db", now_ns=NOW).plan(parse_query(q))
+
+
+def _both(cat, q, epoch=None):
+    """(spec path JSON, Spark path JSON) of one statement."""
+    df = _plan(cat, q)
+    assert df.__dict__.get(_FINISH) is not None, q
+    tags = [t for t in ("host", "dc") if t in df.columns]
+    got = json.dumps(to_influx_series(df, "m", tags, epoch))
+    want = json.dumps(shape_series(df.columns, df.collect(), "m", tags,
+                                   epoch))
+    return got, want
+
+
+CLOSED = f"time >= {H} AND time < {12 * H}"
+BOUNDS = [CLOSED,
+          f"time >= {3 * H + 5}",              # half-open, start only
+          f"time < {6 * H}",                   # half-open, end only
+          "time < now()",                      # open start
+          "dc = 'x'",                          # no time bound at all
+          f"time >= {50 * H} AND time < {60 * H}",   # no data in range
+          f"time >= {50 * H}"]                 # open, no data in range
+FILLS = ["", "fill(none)", "fill(null)", "fill(0)", "fill(previous)",
+         "fill(linear)", "fill(1.5)", "fill(-2)"]
+
+
+@pytest.mark.parametrize("where", BOUNDS)
+@pytest.mark.parametrize("fill", FILLS)
+def test_finish_matches_spine(cat, where, fill):
+    # grouped and ungrouped alternate over the grid, so every fill mode
+    # and every bound is checked both ways
+    grouped = (BOUNDS.index(where) + FILLS.index(fill)) % 2
+    group = "time(2h, 1h), host" if grouped else "time(1h)"
+    got, want = _both(cat, f"SELECT max(v), count(v) FROM m WHERE {where} "
+                           f"GROUP BY {group} {fill}")
+    assert got == want
+
+
+@pytest.mark.parametrize("q", [
+    # Spark's coercion shows in the JSON: count() is DOUBLE under
+    # fill(linear) and fill(1.5), stays BIGINT under fill(0); a string
+    # aggregate under fill(0) prints "0"
+    f"SELECT count(v) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(linear)",
+    f"SELECT count(v) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(1.5)",
+    f"SELECT count(v) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(0)",
+    f"SELECT sum(i) FROM m WHERE {CLOSED} GROUP BY time(1h), dc fill(linear)",
+    f"SELECT first(s) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(0)",
+    f"SELECT last(s), max(i) FROM m WHERE {CLOSED} GROUP BY time(1h), host "
+    "fill(previous)",
+    f"SELECT mean(v) AS mv, sum(i) AS si FROM m WHERE {CLOSED} "
+    "GROUP BY time(1h), host, dc fill(-2)",
+    # ORDER BY time DESC, OFFSET/LIMIT and SLIMIT/SOFFSET, with null tags
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), host fill(0) "
+    "ORDER BY time DESC",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), host fill(0) "
+    "LIMIT 7 OFFSET 5",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), host fill(0) "
+    "SLIMIT 2 SOFFSET 1",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), host, dc "
+    "fill(none) ORDER BY time DESC LIMIT 4 OFFSET 1 SLIMIT 3 SOFFSET 1",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), * fill(linear) "
+    "ORDER BY time DESC LIMIT 9 SLIMIT 2",
+    "SELECT max(v) FROM m WHERE time < now() GROUP BY time(1h), host "
+    "fill(previous) SOFFSET 2",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(0) LIMIT 0",
+])
+def test_finish_matches_spine_shapes(cat, q):
+    got, want = _both(cat, q)
+    assert got == want
+
+
+def test_finish_matches_spine_rfc3339(cat):
+    got, want = _both(cat, f"SELECT max(v) FROM m WHERE {CLOSED} "
+                           "GROUP BY time(90m, 20m), host fill(0)", None)
+    assert got == want
+    got, want = _both(cat, f"SELECT max(v) FROM m WHERE {CLOSED} "
+                           "GROUP BY time(90m, 20m), host fill(0)", "ms")
+    assert got == want
+
+
+@settings(max_examples=20, deadline=None)
+@given(where=st.sampled_from(BOUNDS), fill=st.sampled_from(FILLS),
+       group=st.sampled_from(["", ", host", ", dc", ", host, dc"]),
+       interval=st.sampled_from(["1h", "2h", "3h, 1h", "45m"]),
+       fields=st.sampled_from(["max(v)", "count(v), first(s)", "sum(i)",
+                               "mean(v) AS mv, min(i) AS mi"]),
+       desc=st.booleans(), limit=st.sampled_from(["", "LIMIT 5",
+                                                  "LIMIT 3 OFFSET 4"]),
+       slimit=st.sampled_from(["", "SLIMIT 2", "SLIMIT 1 SOFFSET 1"]))
+def test_finish_matches_spine_sampled(cat, where, fill, group, interval,
+                                      fields, desc, limit, slimit):
+    # a string aggregate under fill(linear) or a float fill keeps the
+    # Spark spine (test_other_statements_keep_the_spark_spine)
+    assume("first(s)" not in fields or fill not in ("fill(linear)",
+                                                     "fill(1.5)"))
+    order = "ORDER BY time DESC" if desc else ""
+    q = (f"SELECT {fields} FROM m WHERE {where} GROUP BY time({interval})"
+         f"{group} {fill} {order} {limit} {slimit}")
+    got, want = _both(cat, q)
+    assert got == want
+
+
+@pytest.mark.parametrize("q", [
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(0) "
+    "tz('America/New_York')",
+    f"SELECT derivative(mean(v), 1h) FROM m WHERE {CLOSED} GROUP BY time(1h)",
+    f"SELECT holt_winters(mean(v), 2, 0) FROM m WHERE {CLOSED} "
+    "GROUP BY time(1h)",
+    f"SELECT top(v, 2) FROM m WHERE {CLOSED} GROUP BY time(2h)",
+    f"SELECT v FROM m WHERE {CLOSED}",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY host",
+    # a float fill literal on a string aggregate would need Spark's
+    # double-to-string rendering; linear interpolation needs numbers
+    f"SELECT first(s) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(1.5)",
+    f"SELECT first(s) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(linear)",
+])
+def test_other_statements_keep_the_spark_spine(cat, q):
+    df = _plan(cat, q)
+    assert df.__dict__.get(_FINISH) is None, q
+
+
+def test_into_and_subquery_keep_the_spark_spine(cat):
+    planner = Planner(cat, "db", now_ns=NOW)
+    inner = parse_query(f"SELECT max(v) FROM m WHERE {CLOSED} "
+                        "GROUP BY time(1h) fill(0)")
+    assert planner.plan(inner, nested=True).__dict__.get(_FINISH) is None
+    into = parse_query(f"SELECT max(v) INTO t FROM m WHERE {CLOSED} "
+                       "GROUP BY time(1h) fill(0)")
+    assert planner.plan(into).__dict__.get(_FINISH) is None
+    # the outer statement over a subquery is collected, so it finishes
+    got, want = _both(cat, "SELECT max(mv) FROM (SELECT max(v) AS mv FROM m "
+                           f"WHERE {CLOSED} GROUP BY time(1h), host) "
+                           f"WHERE {CLOSED} GROUP BY time(2h) fill(0)")
+    assert got == want
+
+
+def test_null_tag_series_keep_their_values(cat):
+    """A null tag is a series of its own on both paths: the spine's join
+    and SLIMIT's semi-join match tags null-safely."""
+    res = to_influx_series(_plan(cat, f"SELECT max(v) FROM m WHERE {CLOSED} "
+                                      "GROUP BY time(1h), host fill(0) "
+                                      "SLIMIT 2"), "m", ["host"], "ns")
+    series = res["results"][0]["series"]
+    assert [s["tags"] for s in series] == [{"host": None}, {"host": "a"}]
+    assert [v for _, v in series[0]["values"] if v] == [3.0, 9.0]
+
+
+def test_open_bounded_cap_refused_before_filling(spark):
+    """The finisher refuses an open-bounded spine over the cap with the
+    bounded path's text, before it builds any filled row."""
+    df = spark.createDataFrame([(0, 1.0), (2 * MAX_SPINE_BUCKETS, 2.0)],
+                               "time long, v double")
+    c = Catalog(spark)
+    c.register_dataframe("db", "m", df, time_col="time", tags=[])
+    eng = Engine(c, database="db", now_ns=NOW)
+    base = "SELECT max(v) FROM m WHERE {} GROUP BY time(1ns) fill(0)"
+    with pytest.raises(QueryError) as bounded:
+        eng.query(base.format(f"time >= 0 AND time < {2 * MAX_SPINE_BUCKETS + 1}"))
+    open_df = eng.query_df(base.format("time >= 0"))
+    assert open_df.__dict__.get(_FINISH) is not None
+    with pytest.raises(QueryError) as open_:
+        to_influx_series(open_df, "m")
+    assert str(open_.value) == str(bounded.value)
+
+
+def test_into_and_collected_slimit_pick_the_same_series(spark, cat):
+    """SLIMIT 2 SOFFSET 1 with fill(0): SELECT … INTO (the Spark spine,
+    series listed from the aggregated frame) stores the series the
+    collected answer (the driver finisher) returns."""
+    eng = Engine(cat, database="db", now_ns=NOW)
+    sel = (f"SELECT max(v) AS mv {{}} FROM m WHERE {CLOSED} "
+           "GROUP BY time(1h), host fill(0) SLIMIT 2 SOFFSET 1")
+    collected = eng.query(sel.format(""), epoch="ns")["results"][0]["series"]
+    eng.query(sel.format("INTO slimit_target"))
+    stored = cat.get("db", "slimit_target").df
+    stored_hosts = sorted({r["host"] for r in stored.select("host").collect()},
+                          key=lambda h: (h is not None, h))
+    assert [s["tags"]["host"] for s in collected] == stored_hosts == ["a", "b"]
+    assert stored.count() == sum(len(s["values"]) for s in collected)

@@ -4,6 +4,7 @@ three routes (service/server.go:31-35)."""
 
 import gzip
 import json
+import time
 import urllib.error
 import urllib.request
 
@@ -304,10 +305,10 @@ def _engine_server(spark, name, df, tags):
     return srv, f"http://127.0.0.1:{port}/query?db=iso&q="
 
 
-def test_killed_query_answers_with_json_error(spark, tmp_path):
-    """KILL QUERY cancels the statement's Spark jobs; the killed request
-    gets an InfluxDB JSON error for its statement instead of a dropped
-    connection. A filesystem latch keeps the scan in flight."""
+def _kill_mid_query(spark, tmp_path, q):
+    """Send `q` (over the slow table `slowtab`) on a thread, KILL QUERY it
+    once its scan tasks run, and return (answer, job group of the killed
+    query, engine). A filesystem latch keeps the scan in flight."""
     import os
     import threading
     import time as _time
@@ -332,8 +333,7 @@ def test_killed_query_answers_with_json_error(spark, tmp_path):
 
     def run():
         try:
-            got["resp"] = _get(url + urllib.request.quote(
-                "SELECT count(value) AS n FROM slowtab; SHOW MEASUREMENTS"))
+            got["resp"] = _get(url + urllib.request.quote(q))
         except Exception as exc:  # noqa: BLE001 — asserted below
             got["exc"] = exc
 
@@ -355,11 +355,44 @@ def test_killed_query_answers_with_json_error(spark, tmp_path):
         t.join(timeout=90)
         srv.shutdown()
     assert "exc" not in got, got.get("exc")
-    status, _, body = got["resp"]
+    return got["resp"], f"influxql-q{qid}", srv.RequestHandlerClass.engine
+
+
+def test_killed_query_answers_with_json_error(spark, tmp_path):
+    """KILL QUERY cancels the statement's Spark jobs; the killed request
+    gets an InfluxDB JSON error for its statement instead of a dropped
+    connection."""
+    (status, _, body), _, _ = _kill_mid_query(
+        spark, tmp_path,
+        "SELECT count(value) AS n FROM slowtab; SHOW MEASUREMENTS")
     assert status == 200
     # the error stops the request: the second statement is not run
     assert json.loads(body) == {"results": [
         {"statement_id": 0, "error": "query interrupted"}]}
+
+
+def test_killed_finished_query_leaves_no_running_job(spark, tmp_path):
+    """KILL QUERY during a statement the driver finishes (its aggregated
+    frame runs in Spark, fill and shaping on the driver) answers `query
+    interrupted`, and no job of its group is left running."""
+    q = "SELECT count(value) AS n FROM slowtab WHERE time >= 0 AND " \
+        f"time < {12 * 3_600_000_000_000} GROUP BY time(1h) fill(0)"
+    (status, _, body), group, engine = _kill_mid_query(spark, tmp_path, q)
+    assert "_influx_finish" in engine.query_df(q).__dict__
+    assert status == 200
+    assert json.loads(body) == {"results": [
+        {"statement_id": 0, "error": "query interrupted"}]}
+    st = spark.sparkContext.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert jobs
+    for _ in range(50):   # the status tracker follows the listener bus
+        running = [j for j in jobs
+                   if getattr(st.getJobInfo(j), "status", None) == "RUNNING"]
+        if not running:
+            break
+        time.sleep(0.2)
+    assert not running, running
+    assert not engine._running
 
 
 def test_open_bounded_spine_cap_is_400(spark):

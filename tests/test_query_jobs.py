@@ -5,7 +5,10 @@ shuffle or broadcast stage, plus the result job), so they are asserted
 exactly: a new Exchange, a range-partitioner sampling job or an eager
 `.first()` while building shows up as a changed count. The statements are
 the nine shapes of the `query` benchmark rotation, over a small `events`
-table from the repo's own generator (tools/gen_scale.gen_events).
+table from the repo's own generator (tools/gen_scale.gen_events), plus the
+`ingest` benchmark's read. Each answer is collected the way /query
+collects it (`to_influx_series`), so a plain GROUP BY time() aggregate
+runs only its aggregated frame in Spark and is finished on the driver.
 """
 
 from __future__ import annotations
@@ -17,7 +20,8 @@ import pytest
 from influxdb_ha_spark.errors import QueryError
 from influxdb_ha_spark.functions.fill import MAX_SPINE_BUCKETS
 from influxdb_ha_spark.model import Catalog, events_measurement
-from influxdb_ha_spark.server import Engine
+from influxdb_ha_spark.result import to_influx_series
+from influxdb_ha_spark.server import Engine, write_lines
 
 JAN1 = 1_704_067_200_000_000_000
 DAY = 86_400_000_000_000
@@ -52,18 +56,27 @@ ROTATION = [
     ("show_measurements", "SHOW MEASUREMENTS"),
 ]
 
-# (jobs while building the DataFrame, jobs while collecting it)
+# (jobs while building the DataFrame, jobs while collecting it); the five
+# GROUP BY time() shapes and the ingest read run the aggregated frame only:
+# its shuffle stage and the result stage
 EXPECTED_JOBS = {
-    "group_1h": (0, 3),
-    "group_1h_tag": (0, 3),
-    "group_1d_tag": (0, 6),
+    "group_1h": (0, 2),
+    "group_1h_tag": (0, 2),
+    "group_1d_tag": (0, 2),
     "raw_limit": (0, 1),
-    "fill_linear": (0, 3),
-    "fill_open": (0, 4),
+    "fill_linear": (0, 2),
+    "fill_open": (0, 2),
     "subquery": (0, 4),
     "show_tag_values": (0, 2),
     "show_measurements": (0, 0),
+    "ingest_read": (0, 2),
 }
+
+# the `ingest` benchmark's read-after-write, over a measurement born from
+# /write (one driver-held generation)
+INGEST_READ = ("SELECT count(usage), sum(usage), max(load) FROM cpu "
+               f"WHERE time >= {JAN1} AND time < {JAN1 + 10 * HOUR} "
+               "GROUP BY time(10m), region fill(none)")
 
 
 @pytest.fixture(scope="module")
@@ -73,7 +86,11 @@ def events_engine(spark, tmp_path_factory):
     gen_events(spark, 5000, 100).coalesce(1).write.parquet(
         str(d / "events.parquet"))
     cat, _ = events_measurement(spark, str(d))
-    return Engine(cat, database="default", now_ns=NOW)
+    eng = Engine(cat, database="default", now_ns=NOW)
+    write_lines(eng, "default", "\n".join(
+        f"cpu,region=r{i % 3},host=h{i % 7} usage={i % 11}i,load={i / 8} "
+        f"{JAN1 + i * 37_000_000_000}" for i in range(1000)))
+    return eng
 
 
 def _jobs(sc, group):
@@ -96,17 +113,18 @@ def _counted(spark, eng, kind, q):
         sc.setJobGroup(f"qj-build-{kind}", kind)
         df = eng.query_df(q)
         sc.setJobGroup(f"qj-run-{kind}", kind)
-        rows = df.collect()
+        res = to_influx_series(df, "events", ["event_type", "region"], "ns")
     finally:
         sc._jsc.clearJobGroup()
-    return (_jobs(sc, f"qj-build-{kind}"), _jobs(sc, f"qj-run-{kind}")), rows
+    return ((_jobs(sc, f"qj-build-{kind}"), _jobs(sc, f"qj-run-{kind}")),
+            res["results"][0]["series"])
 
 
 def test_rotation_job_counts(spark, events_engine):
     got = {}
-    for kind, q in ROTATION:
-        counts, rows = _counted(spark, events_engine, kind, q)
-        assert rows, kind
+    for kind, q in ROTATION + [("ingest_read", INGEST_READ)]:
+        counts, series = _counted(spark, events_engine, kind, q)
+        assert series, kind
         got[kind] = counts
     assert got == EXPECTED_JOBS
 
@@ -237,22 +255,29 @@ def test_open_bounds_no_data_in_range(gappy, fill, group):
 
 def test_open_bounded_fill_builds_without_jobs(spark, gappy):
     """Open bounds are resolved in the plan (0 build jobs), except the
-    shape choice of ungrouped previous/linear."""
+    shape choice of an ungrouped previous/linear fill whose answer stays
+    in Spark (here a subquery's inner plan); a collected one always takes
+    the one-partition keyless window."""
+    from influxdb_ha_spark.influxql.parser import parse_query
+    from influxdb_ha_spark.planner import Planner
     sc = spark.sparkContext
-    for q, want in [
+    planner = Planner(gappy.catalog, "db", now_ns=NOW)
+    for q, nested, want in [
             ("SELECT max(v) FROM m WHERE time < now() GROUP BY time(1h) "
-             "fill(0)", 0),
+             "fill(0)", False, 0),
             ("SELECT max(v) FROM m WHERE time < now() GROUP BY time(1h), "
-             "host fill(linear)", 0),
+             "host fill(linear)", False, 0),
             ("SELECT max(v) FROM m WHERE time < now() GROUP BY time(1h) "
-             "fill(previous)", 2)]:   # the eager min/max: shuffle + result
-        group = f"qj-open-{hash(q)}"
+             "fill(previous)", False, 0),
+            ("SELECT max(v) FROM m WHERE time < now() GROUP BY time(1h) "
+             "fill(previous)", True, 2)]:  # eager min/max: shuffle + result
+        group = f"qj-open-{hash(q)}-{nested}"
         try:
             sc.setJobGroup(group, "open")
-            gappy.query_df(q)
+            planner.plan(parse_query(q), nested=nested)
         finally:
             sc._jsc.clearJobGroup()
-        assert _jobs(sc, group) == want, q
+        assert _jobs(sc, group) == want, (q, nested)
 
 
 def test_open_bounded_spine_cap_matches_bounded(spark):
