@@ -13,12 +13,17 @@ matter how many times queries run. Callers that interleave consumption
 of two results from the SAME operator (rare — the driver and bench are
 both sequential) should call the operator, fully consume, then call
 again; `release()` drops everything eagerly for session teardown.
+Concurrent callers (one thread per HTTP request) are serialised by one
+module lock, so a tag never holds two live generations.
 """
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame
 
 _LIVE: dict[str, DataFrame] = {}
+_LOCK = threading.Lock()
 
 
 def keep(tag: str, df: DataFrame) -> DataFrame:
@@ -31,35 +36,38 @@ def keep(tag: str, df: DataFrame) -> DataFrame:
     keeps serving, where unpersist+re-persist would throw the warm data
     away and recompute the subtree (measured +0.7 s warm at sf0.1 on
     doc_near_dups_fast)."""
-    prev = _LIVE.get(tag)
-    if prev is not None:
-        try:
-            same = prev._jdf.queryExecution().analyzed().sameResult(
-                df._jdf.queryExecution().analyzed())
-        except Exception:
-            same = False
-        if same:
-            return prev
-        _LIVE.pop(tag, None)
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # session may already be stopped
-    _LIVE[tag] = df.persist()
-    return _LIVE[tag]
+    with _LOCK:
+        prev = _LIVE.get(tag)
+        if prev is not None:
+            try:
+                same = prev._jdf.queryExecution().analyzed().sameResult(
+                    df._jdf.queryExecution().analyzed())
+            except Exception:
+                same = False
+            if same:
+                return prev
+            _LIVE.pop(tag, None)
+            try:
+                prev.unpersist()
+            except Exception:
+                pass  # session may already be stopped
+        _LIVE[tag] = df.persist()
+        return _LIVE[tag]
 
 
 def release(tag: str | None = None) -> None:
     """Unpersist one tag's generation, or all of them (tag=None)."""
-    tags = [tag] if tag is not None else list(_LIVE)
-    for t in tags:
-        prev = _LIVE.pop(t, None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+    with _LOCK:
+        tags = [tag] if tag is not None else list(_LIVE)
+        for t in tags:
+            prev = _LIVE.pop(t, None)
+            if prev is not None:
+                try:
+                    prev.unpersist()
+                except Exception:
+                    pass
 
 
 def live_tags() -> list[str]:
-    return sorted(_LIVE)
+    with _LOCK:
+        return sorted(_LIVE)

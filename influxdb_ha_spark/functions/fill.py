@@ -16,11 +16,12 @@ the driver collects (/query, not SELECT … INTO, not a subquery), without
 tz(), is finished on the driver. Spark runs only its aggregated frame and
 `fill_collected` fills each collected series over `collected_spine`, with
 the same bounds, cap and arithmetic as the plan below (result.FinishSpec
-holds the choice). Every other answer keeps the Spark spine built here:
-SELECT … INTO, subqueries, tz(), outer transforms such as
-derivative(mean(…)), EXPLAIN, and the contract keys that plan the same
-statements. The planner still builds that spine for a finished answer; it
-is what EXPLAIN shows.
+holds the choice). /query plans no spine for such an answer: the planner
+stops at the aggregated frame and takes the filled columns' types from
+`fill_values` applied to it, analysed only. Every other answer keeps the
+Spark spine built here: SELECT … INTO, subqueries, tz(), outer transforms
+such as derivative(mean(…)); so do the full plans that EXPLAIN shows and
+the contract keys run.
 
 Scale notes: the spine size is range/interval buckets per series — bounded
 by the query's WHERE time range, exactly like InfluxDB (which refuses
@@ -220,9 +221,8 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
             df_aggregated, bucket_col, interval_ns, start_ns, end_ns)
     nbuckets = None
     if start_ns is not None and end_ns is not None:
-        nbuckets = _spine_size(start_ns, end_ns, interval_ns, offset_ns)
-        if nbuckets > MAX_SPINE_BUCKETS:
-            raise QueryError(_CAP_TEXT % (nbuckets, MAX_SPINE_BUCKETS))
+        nbuckets = checked_spine_size(start_ns, end_ns, interval_ns,
+                                      offset_ns)
     spine = bucket_spine(df_aggregated, bucket_col, interval_ns,
                          start_ns, end_ns, group_cols, offset_ns, tz,
                          one_partition)
@@ -230,23 +230,36 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
 
     if mode is None or mode == "null":
         return joined
-    if isinstance(mode, (int, float)) and not isinstance(mode, bool):
-        exprs = [F.coalesce(F.col(c), F.lit(mode)).alias(c) for c in value_cols]
-        return joined.select(*group_cols, bucket_col, *exprs)
-
     if not group_cols and windowed and nbuckets is not None \
             and nbuckets > _SMALL_SPINE:
         return _fill_ungrouped_segmented(joined, bucket_col, interval_ns,
                                          mode, value_cols, nbuckets)
+    return joined.select(*group_cols, bucket_col,
+                         *fill_values(mode, value_cols, bucket_col,
+                                      group_cols))
 
+
+def fill_values(mode: str | float | int | None, value_cols: list[str],
+                bucket_col: str, group_cols: list[str]) -> list:
+    """The value columns of fill(mode) over the spine-joined frame
+    (group_cols, bucket_col, value_cols), each keeping its name.
+
+    `fill_buckets` selects them; the planner applies them to the
+    aggregated frame, analysed only, to read the types Spark's coercion
+    gives the filled columns (count() under fill(linear) is DOUBLE,
+    fill(0) on a string aggregate is a string)."""
+    if mode is None or mode in ("null", "none"):
+        return [F.col(c) for c in value_cols]
+    if isinstance(mode, (int, float)) and not isinstance(mode, bool):
+        return [F.coalesce(F.col(c), F.lit(mode)).alias(c)
+                for c in value_cols]
     if mode == "previous":
         w = (Window.partitionBy(*group_cols).orderBy(bucket_col)
              if group_cols else Window.orderBy(bucket_col))
         wprev = w.rowsBetween(Window.unboundedPreceding, 0)
-        exprs = [F.coalesce(F.col(c),
-                            F.last(F.col(c), ignorenulls=True).over(wprev)).alias(c)
-                 for c in value_cols]
-        return joined.select(*group_cols, bucket_col, *exprs)
+        return [F.coalesce(F.col(c),
+                           F.last(F.col(c), ignorenulls=True).over(wprev)).alias(c)
+                for c in value_cols]
     if mode == "linear":
         w = (Window.partitionBy(*group_cols).orderBy(bucket_col)
              if group_cols else Window.orderBy(bucket_col))
@@ -265,7 +278,7 @@ def fill_buckets(df_aggregated: DataFrame, bucket_col: str, interval_ns: int,
                 (F.col(bucket_col) - prev_b).cast("double")
                 / (next_b - prev_b).cast("double"))
             exprs.append(F.coalesce(v, interp).alias(c))
-        return joined.select(*group_cols, bucket_col, *exprs)
+        return exprs
     raise ValueError(f"unknown fill mode: {mode!r}")
 
 
@@ -316,6 +329,16 @@ def _spine_size(start_ns: int, end_ns: int, interval_ns: int,
     return max(0, (end_ns - 1 - first_bucket) // interval_ns + 1)
 
 
+def checked_spine_size(start_ns: int, end_ns: int, interval_ns: int,
+                       offset_ns: int = 0) -> int:
+    """`_spine_size`, refused with the cap's QueryError above
+    MAX_SPINE_BUCKETS."""
+    n = _spine_size(start_ns, end_ns, interval_ns, offset_ns)
+    if n > MAX_SPINE_BUCKETS:
+        raise QueryError(_CAP_TEXT % (n, MAX_SPINE_BUCKETS))
+    return n
+
+
 def collected_spine(buckets: list[int], interval_ns: int,
                     start_ns: int | None, end_ns: int | None,
                     offset_ns: int = 0) -> range:
@@ -326,8 +349,8 @@ def collected_spine(buckets: list[int], interval_ns: int,
     `buckets`, as the in-plan min/max bucket does, so it costs no second
     scan and no job; with no data the spine is empty. An open-bounded
     spine over MAX_SPINE_BUCKETS is refused here, before any filled row
-    exists, with the bounded path's text (the explicit-bounded refusal
-    already happened in `fill_buckets` while planning)."""
+    exists, with the bounded path's text (the planner refuses an
+    explicit-bounded one while planning, before any job runs)."""
     if start_ns is not None:
         start_ns = _floor_bucket(start_ns, interval_ns, offset_ns)
     if start_ns is None or end_ns is None:
@@ -337,9 +360,7 @@ def collected_spine(buckets: list[int], interval_ns: int,
             start_ns = min(buckets)
         if end_ns is None:
             end_ns = max(buckets) + interval_ns
-        n = _spine_size(start_ns, end_ns, interval_ns, offset_ns)
-        if n > MAX_SPINE_BUCKETS:
-            raise QueryError(_CAP_TEXT % (n, MAX_SPINE_BUCKETS))
+        checked_spine_size(start_ns, end_ns, interval_ns, offset_ns)
     return range(start_ns, end_ns, interval_ns)
 
 

@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import conf_parts, ensure_min_parallelism, input_bytes
+from .util import conf_parts, ensure_min_parallelism, scale_parts
 
 
 def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
@@ -133,7 +133,7 @@ def _symmetric(edges: DataFrame) -> DataFrame:
 
 
 # Source-parquet bytes per partition for the label_prop vote exchange
-# and cache (r13, guide §2.1/§2.2 "size partitions to the data, not the
+# and cache, via util.scale_parts (r13, guide §2.1/§2.2 "size partitions to the data, not the
 # cluster"): r12 measured the session-fixed shuffle count as the residual
 # sf10 super-linearity — isolated label_prop at shuffle=128 ran 0.58× vs
 # the 32 default (SCALE_r12.json shuffle_dial_sf10). 8 MiB of source
@@ -153,36 +153,6 @@ _CACHE_PART_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_PART_BYTES",
 _PARTS_CAP = 8192  # runaway-input backstop: 8192 × 8 MiB ≈ 64 GB source
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """See util.input_bytes (shared with the similarity pair stages)."""
-    return input_bytes(df)
-
-
-def _conf_parts(df: DataFrame) -> int:
-    """See util.conf_parts."""
-    return conf_parts(df)
-
-
-def _shuffle_parts(df: DataFrame) -> int:
-    """Scale-adaptive partition count for the iterative loops' edge
-    caches and per-round exchanges: the session's shuffle-partition
-    setting as the FLOOR, grown with the plan's file-input bytes
-    (ceil(bytes / _CACHE_PART_BYTES), capped). The session conf is never
-    shrunk — at gate/bench scale this returns exactly the conf, so the
-    r12 after-plans and fingerprints still describe the shape; at the
-    r12 sf10 decade it returns ~150 where the measured dial optimum was
-    128. Consumed by label_propagation ONLY (its explicit vote
-    repartition — REPARTITION_BY_NUM, never AQE-coalesced — and its
-    cache share the count); the other loops pin the session count
-    after same-day interleaved A/Bs measured the adaptive count as a
-    loss there (see _CACHE_PART_BYTES and the per-loop notes)."""
-    base = _conf_parts(df)
-    b = _input_bytes(df)
-    if b <= 0:
-        return base
-    return max(base, min(_PARTS_CAP, -(-b // _CACHE_PART_BYTES)))
-
-
 def _keyed_persist(df: DataFrame, key: str,
                    parts: int | None = None) -> DataFrame:
     """Hash-partition by the per-round join key BEFORE persisting (r12,
@@ -200,7 +170,7 @@ def _keyed_persist(df: DataFrame, key: str,
     downstream fold in this module is integer/order-free.
 
     `parts` (r13): callers that must share ONE partition count between
-    the cache and other per-round exchanges pass the _shuffle_parts
+    the cache and other per-round exchanges pass the scale_parts
     value they computed; default recomputes it here. NOTE (r12 advice):
     when the count comes from the session conf (the base regime), the
     zero-exchange re-attach property of downstream aggregations is
@@ -208,7 +178,8 @@ def _keyed_persist(df: DataFrame, key: str,
     aggregation exchange below this count at runtime, re-introducing a
     small O(|V|) exchange; the adaptive regime's explicit
     REPARTITION_BY_NUM exchanges are never coalesced."""
-    return df.repartition(parts or _shuffle_parts(df), key).persist()
+    parts = parts or scale_parts(df, _CACHE_PART_BYTES, _PARTS_CAP)
+    return df.repartition(parts, key).persist()
 
 
 # Frontier-side join hint for the per-round edge join: SHUFFLE_HASH
@@ -413,7 +384,7 @@ def pagerank(edges: DataFrame, iters: int = 10,
     # count, keeping the whole r12 zero-per-round-exchange round shape
     # byte-for-byte.
     sym = _symmetric(edges)
-    edges_k = _keyed_persist(sym, "src", _conf_parts(sym))
+    edges_k = _keyed_persist(sym, "src", conf_parts(sym))
     out = (edges_k.groupBy(F.col("src").alias("node"))
            .agg(F.count(F.lit(1)).alias("outdeg"))).persist()
     n = out.count()
@@ -493,7 +464,7 @@ def components(edges: DataFrame, rounds: int = 8,
     # recorded at the pagerank loop).
     closed = sym.unionByName(nodes.select(F.col("node").alias("src"),
                                           F.col("node").alias("dst")))
-    adj = _keyed_persist(closed, "src", _conf_parts(closed))
+    adj = _keyed_persist(closed, "src", conf_parts(closed))
     lab = _truncate_lineage(
         nodes.withColumn("component", F.col("node").cast("long")), reliable)
     for _ in range(rounds):
@@ -551,7 +522,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 8,
     # r13: session-count cache — the adaptive count was A/B'd here too
     # (cache-only change) and LOST ~1.3× at sf10 (65.5-72.8 s at conf vs
     # 88.5 s adaptive, interleaved); only label_prop's vote exchange
-    # profits from the data-proportional count (see _shuffle_parts).
+    # profits from the data-proportional count (see _CACHE_PART_BYTES).
     #
     # r12 DECREMENTAL peeling (guide §1.2 step 1 — change the
     # algorithm, not the constants): the old loop re-filtered the FULL
@@ -576,7 +547,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 8,
     # tests/test_r12_optimizations.py; measured 140.2/122.0 →
     # 56.7/59.3 s at sf10, k=80, 8 rounds).
     raw = _symmetric(edges)
-    sym = _keyed_persist(raw, "src", _conf_parts(raw))
+    sym = _keyed_persist(raw, "src", conf_parts(raw))
     cur = _truncate_lineage(
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("__d")), reliable)
@@ -649,7 +620,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4,
     # scale-adaptive count (input-size-derived), computed once and
     # shared by the cache and the per-round vote repartition below.
     raw = _symmetric(edges)
-    parts = _shuffle_parts(raw)
+    parts = scale_parts(raw, _CACHE_PART_BYTES, _PARTS_CAP)
     sym = _keyed_persist(raw, "src", parts)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     lab = _truncate_lineage(
@@ -848,7 +819,7 @@ def bfs(edges: DataFrame, seeds: DataFrame, rounds: int = 4,
     # _keyed_persist) — the expand join streams the cache every round.
     # Session-count cache (the r13 kcore/pagerank negative result).
     raw = _symmetric(edges)
-    sym = _keyed_persist(raw, "src", _conf_parts(raw))
+    sym = _keyed_persist(raw, "src", conf_parts(raw))
     reached = _truncate_lineage(
         seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
         .withColumn("dist", F.lit(0)), reliable)
@@ -920,7 +891,7 @@ def _seed_distances(edges: DataFrame, seeds: DataFrame, rounds: int,
     # r12: src-partitioned edge cache + SHUFFLE_HASH frontier join
     # (see _keyed_persist); session-count cache (r13 negative result)
     raw = _symmetric(edges)
-    sym = _keyed_persist(raw, "src", _conf_parts(raw))
+    sym = _keyed_persist(raw, "src", conf_parts(raw))
     reached = _truncate_lineage(
         seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
         .select("node", F.col("node").alias("seed"))
@@ -1041,7 +1012,7 @@ def sssp(edges: DataFrame, seeds: DataFrame, rounds: int = 6,
     raw = w.unionByName(
         w.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
                  "__c"))
-    sym = _keyed_persist(raw, "src", _conf_parts(raw))
+    sym = _keyed_persist(raw, "src", conf_parts(raw))
     dist = _truncate_lineage(
         seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
         .withColumn("dist", F.lit(0).cast("long")), reliable)
@@ -1113,7 +1084,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     # (session-count cache — the pagerank r13 negative result applies
     # verbatim: this loop shares its round shape)
     sym = _symmetric(edges)
-    edges_k = _keyed_persist(sym, "src", _conf_parts(sym))
+    edges_k = _keyed_persist(sym, "src", conf_parts(sym))
     outdeg = (edges_k.groupBy(F.col("src").alias("node"))
               .agg(F.count(F.lit(1)).alias("outdeg")))
     sd = (seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
@@ -1208,8 +1179,8 @@ def hits(edges: DataFrame, iters: int = 8,
                         F.col(edges.columns[1]).alias("dst"))
            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
            .distinct())
-    e = _keyed_persist(raw, "src", _conf_parts(raw))
-    e_dst = _keyed_persist(e, "dst", _conf_parts(raw))
+    e = _keyed_persist(raw, "src", conf_parts(raw))
+    e_dst = _keyed_persist(e, "dst", conf_parts(raw))
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct().persist())

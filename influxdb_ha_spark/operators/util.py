@@ -50,6 +50,42 @@ def scale_parts(df: DataFrame, part_bytes: int, cap: int) -> int:
     return max(base, min(cap, -(-b // part_bytes)))
 
 
+_ONE_SPLIT = "_one_split"
+
+
+def one_split(df: DataFrame) -> bool:
+    """Whether Spark reads `df` as one split: projections and filters over
+    one leaf that is either a file scan planned as one partition or a
+    driver-held LocalRelation no larger than
+    `spark.sql.files.maxPartitionBytes` by the plan's size estimate.
+
+    Reads plans only (no job) and is cached on `df`, so it is computed
+    once per DataFrame: a measurement's generation is one."""
+    got = df.__dict__.get(_ONE_SPLIT)
+    if got is None:
+        got = df.__dict__[_ONE_SPLIT] = _one_split(df)
+    return got
+
+
+def _one_split(df: DataFrame) -> bool:
+    qe = df._jdf.queryExecution()
+    node = qe.optimizedPlan()
+    while node.getClass().getSimpleName() in ("Project", "Filter"):
+        node = node.children().head()
+    leaf = node.getClass().getSimpleName()
+    if leaf == "LocalRelation":
+        limit = df.sparkSession._jsparkSession.sessionState().conf() \
+            .filesMaxPartitionBytes()
+        return int(qe.optimizedPlan().stats().sizeInBytes()) <= limit
+    if leaf != "LogicalRelation":
+        return False
+    scans = qe.sparkPlan().collectLeaves()
+    scan = scans.head()
+    return (scans.size() == 1
+            and scan.getClass().getSimpleName() == "FileSourceScanExec"
+            and scan.inputRDD().getNumPartitions() == 1)
+
+
 def salted_agg(df: DataFrame, keys: list[str],
                aggs: dict[str, tuple[str, str]], salt: int = 16) -> DataFrame:
     """Two-phase salted aggregation for skewed group keys.

@@ -21,19 +21,20 @@ scan; the only Python in the hot path is plan *construction*.
 from __future__ import annotations
 
 import time as _time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .functions.aggregates import AGGREGATES, agg_column
-from .functions.fill import fill_buckets
+from .functions.fill import checked_spine_size, fill_buckets, fill_values
 from .functions.math import MATH_FUNCS, apply_math, binary_op
 from .functions import transforms as T
 from .influxql.ast import (BinaryExpr, Call, DurationLit, IntegerLit,
                            NumberLit, RegexLit, SelectField, SelectStatement,
                            SourceList, StringLit, SubQuery, VarRef, Wildcard)
 from .model import Catalog, Measurement, TIME_COL
+from .operators.util import one_split
 from .result import FinishSpec, attach_finish, local_result
 from .timeutil import parse_time_literal_ns, time_bucket, time_bucket_tz
 
@@ -76,6 +77,8 @@ class PlanContext:
     end_ns: int | None = None
     # the driver collects the answer (not SELECT … INTO, not a subquery)
     to_driver: bool = True
+    # plan only what /query collects (Planner.plan's `answer`)
+    answer: bool = False
     # the frame a fill spine is built from: its distinct groups are the
     # answer's series, listed for SLIMIT without exploding the spine
     spine_groups: DataFrame | None = None
@@ -94,8 +97,15 @@ class Planner:
         self.strict_partition_key = strict_partition_key
 
     # ------------------------------------------------------------------
-    def plan(self, stmt: SelectStatement, nested: bool = False) -> DataFrame:
-        """DataFrame of a SELECT; `nested` for a subquery's inner plan."""
+    def plan(self, stmt: SelectStatement, nested: bool = False,
+             answer: bool = False) -> DataFrame:
+        """DataFrame of a SELECT; `nested` for a subquery's inner plan.
+
+        `answer` asks for the plan /query runs: a statement the driver
+        finishes (result.FinishSpec) is planned only up to the aggregated
+        frame it collects, which carries the spec. Without it, and for
+        every other statement, this is the full Spark plan (EXPLAIN,
+        SELECT … INTO, subqueries and the contract keys run that one)."""
         db = stmt.source.database or self.database
         if stmt.source.regex is not None:
             return self._plan_regex_source(stmt, db, nested)
@@ -106,7 +116,8 @@ class Planner:
         else:
             m = self.catalog.get(db, stmt.source.name)
         ctx = PlanContext(measurement=m, now_ns=self.now_ns,
-                          to_driver=not nested and stmt.into is None)
+                          to_driver=not nested and stmt.into is None,
+                          answer=answer)
 
         df = m.df
         if stmt.where is not None:
@@ -147,6 +158,9 @@ class Planner:
             out = self._plan_transform_raw_multi(stmt, df, m, group_tags, ctx)
         else:
             out = self._plan_aggregate(stmt, df, m, group_tags, ctx)
+            if answer and ctx.finish is not None:
+                attach_finish(out, ctx.finish)
+                return out
 
         out = self._apply_series_limits(stmt, out, group_tags,
                                         ctx.spine_groups)
@@ -327,7 +341,6 @@ class Planner:
                       if stmt.tz else
                       time_bucket(F.col(TIME_COL), stmt.group_by_time_ns,
                                   stmt.group_by_offset_ns))
-            df = df.withColumn("__bucket", bucket)
             keys.append("__bucket")
         keys += group_tags
 
@@ -357,9 +370,6 @@ class Planner:
             self._collect_aggs(expr, agg_exprs)
             post_fields.append((name, expr))
 
-        grouped = df.groupBy(*[F.col(k) for k in keys]) if keys else df.groupBy()
-        agged = grouped.agg(*[c.alias(n) for n, c in agg_exprs.items()])
-
         sel: list[Column] = []
         if stmt.group_by_time_ns:
             sel.append(F.col("__bucket").alias(TIME_COL))
@@ -368,7 +378,25 @@ class Planner:
         for name, expr in post_fields:
             sel.append(self._post_agg_expr(expr).alias(name))
             value_names.append(name)
-        out = agged.select(*sel)
+
+        def aggregate(src: DataFrame) -> DataFrame:
+            if stmt.group_by_time_ns:
+                src = src.withColumn("__bucket", bucket)
+            grouped = (src.groupBy(*[F.col(k) for k in keys]) if keys
+                       else src.groupBy())
+            return grouped.agg(*[c.alias(n) for n, c in agg_exprs.items()]) \
+                .select(*sel)
+
+        # The driver may finish this answer (result.FinishSpec). Over a
+        # source Spark reads as one split, the frame it collects is
+        # aggregated in that one partition (the WHERE is pushed below the
+        # coalesce): the partial and final aggregate share a stage, so it
+        # runs as one job with no shuffle.
+        finishing = (ctx.to_driver and bool(stmt.group_by_time_ns)
+                     and not stmt.tz and not outer_transforms)
+        one_part = finishing and one_split(m.df)
+        src = df.coalesce(1) if one_part and ctx.answer else df
+        out = aggregate(src)
 
         for tname, texpr, inner_col in outer_transforms:
             # the transform's window rides over the aggregated frame, so
@@ -388,7 +416,23 @@ class Planner:
                 return out
 
         if stmt.group_by_time_ns:
-            tr = self._time_range(stmt, ctx)
+            tr = (ctx.start_ns, ctx.end_ns)   # tracked by the WHERE walk
+            spec = (self._finish_spec(stmt, out, group_tags, value_names, tr)
+                    if finishing else None)
+            if spec is not None:
+                if one_part and src is df:
+                    spec = replace(spec, aggregated=aggregate(df.coalesce(1)))
+                ctx.finish = spec
+                if ctx.answer:
+                    # the answer plan ends here; the spine it skips would
+                    # refuse an explicit range over the cap while planning
+                    if stmt.fill != "none" and None not in tr:
+                        checked_spine_size(tr[0], tr[1], stmt.group_by_time_ns,
+                                           stmt.group_by_offset_ns)
+                    return spec.aggregated
+            elif src is not df:
+                # declined: the full plan over the source as it is
+                out = aggregate(df)
             bucketed = out
             out = fill_buckets(out, TIME_COL, stmt.group_by_time_ns, stmt.fill,
                                value_names, group_tags,
@@ -397,39 +441,40 @@ class Planner:
                                tz=stmt.tz, one_partition=ctx.to_driver)
             if stmt.fill != "none":
                 ctx.spine_groups = bucketed
-            if ctx.to_driver and not outer_transforms:
-                ctx.finish = self._finish_spec(stmt, bucketed, out,
-                                               group_tags, value_names, tr)
         return out
 
     def _finish_spec(self, stmt: SelectStatement, bucketed: DataFrame,
-                     planned: DataFrame, group_tags: list[str],
-                     value_names: list[str],
+                     group_tags: list[str], value_names: list[str],
                      tr: tuple[int | None, int | None]) -> FinishSpec | None:
-        """The one choice of the driver finisher (result.FinishSpec): a
-        plain GROUP BY time() aggregate, collected, without tz(), whose
-        column types the finisher reproduces. Types come from the planned
-        frame's schema, which shows Spark's coercion (count() under
-        fill(linear) is DOUBLE; fill(0) on a string aggregate is "0");
-        reading a schema runs no job."""
-        if stmt.tz:
-            return None
-        planned_t = {f.name: f.dataType.typeName()
-                     for f in planned.schema.fields}
+        """The driver finisher's spec (result.FinishSpec) for a plain
+        GROUP BY time() aggregate, collected, without tz() (`finishing` in
+        _plan_aggregate), or None when the finisher cannot reproduce its
+        column types. The filled types come from the fill's own value
+        expressions (`fill_values`) over the aggregated frame, which show
+        Spark's coercion (count() under fill(linear) is DOUBLE; fill(0) on
+        a string aggregate is "0"); reading their schema analyses them
+        and runs no job."""
         bucketed_t = {f.name: f.dataType.typeName()
                       for f in bucketed.schema.fields}
-        if len(planned_t) != len(planned.columns) \
+        if len(bucketed_t) != len(bucketed.columns) \
                 or bucketed_t.get(TIME_COL) != "long" \
-                or any(bucketed_t.get(t) != "string" for t in group_tags):
+                or any(bucketed_t.get(t) != "string" for t in group_tags) \
+                or any(bucketed_t.get(c) not in _SCALAR_TYPES
+                       or (stmt.fill == "linear"
+                           and bucketed_t.get(c) not in _NUMERIC_TYPES)
+                       for c in value_names):
             return None
+        planned_t = bucketed_t
+        if stmt.fill not in (None, "null", "none"):
+            filled = bucketed.select(*fill_values(stmt.fill, value_names,
+                                                  TIME_COL, group_tags))
+            planned_t = {f.name: f.dataType.typeName()
+                         for f in filled.schema.fields}
         literal = (isinstance(stmt.fill, (int, float))
                    and not isinstance(stmt.fill, bool))
-        casts, fill_values = [], []
+        casts, literals = [], []
         for c in value_names:
             p, b = planned_t.get(c), bucketed_t.get(c)
-            if b not in _SCALAR_TYPES or (stmt.fill == "linear"
-                                          and b not in _NUMERIC_TYPES):
-                return None
             if p == b:
                 casts.append(None)
             elif p == "double" and b in _INTEGRAL_TYPES:
@@ -437,19 +482,19 @@ class Planner:
             else:
                 return None
             if not literal:
-                fill_values.append(None)
+                literals.append(None)
             elif p == "double":
-                fill_values.append(float(stmt.fill))
+                literals.append(float(stmt.fill))
             elif p in _INTEGRAL_TYPES and isinstance(stmt.fill, int):
-                fill_values.append(stmt.fill)
+                literals.append(stmt.fill)
             elif p == "string" and isinstance(stmt.fill, int):
-                fill_values.append(str(stmt.fill))
+                literals.append(str(stmt.fill))
             else:
                 return None
         return FinishSpec(
             aggregated=bucketed, group_tags=tuple(group_tags),
             value_cols=tuple(value_names), casts=tuple(casts),
-            fill_values=tuple(fill_values), fill=stmt.fill,
+            fill_values=tuple(literals), fill=stmt.fill,
             interval_ns=stmt.group_by_time_ns,
             offset_ns=stmt.group_by_offset_ns, start_ns=tr[0], end_ns=tr[1],
             order_desc=bool(stmt.order_desc), offset=stmt.offset or 0,
@@ -942,17 +987,6 @@ class Planner:
         if isinstance(e, StringLit):
             return e.value
         raise QueryError(f"expected literal argument, got {e!r}")
-
-    def _time_range(self, stmt: SelectStatement,
-                    ctx: PlanContext) -> tuple[int | None, int | None]:
-        # re-walk WHERE (cheap) so fill() knows the query bounds
-        c = PlanContext(ctx.measurement, ctx.now_ns)
-        if stmt.where is not None:
-            try:
-                self._where_expr(stmt.where, c)
-            except QueryError:
-                pass
-        return c.start_ns, c.end_ns
 
     # -- strict partition key (coordinator.go:182-193) ----------------------
     def _check_partition_key(self, stmt: SelectStatement, db: str,

@@ -11,7 +11,9 @@ collected here in one of two ways before one shaper builds the JSON:
 
 - a plain aggregate with `GROUP BY time()` whose answer the driver collects
   carries a `FinishSpec` (attached by the planner). Spark runs only its
-  aggregated frame (WHERE plus GROUP BY), collected with `toArrow()`; the
+  aggregated frame (WHERE plus GROUP BY), collected with `toArrow()`: one
+  job over a source read as one split, two otherwise (its shuffle stage
+  and the result stage). /query plans nothing past that frame. The
   driver fills each series' buckets (`functions/fill.fill_collected`),
   resolves open bounds from the collected buckets, and applies SLIMIT/
   SOFFSET, ORDER BY time and OFFSET/LIMIT. This is the reference's
@@ -103,13 +105,16 @@ def _format_time(ns: int, epoch: str | None):
 @dataclass(frozen=True)
 class FinishSpec:
     """How the driver finishes a collected `GROUP BY time()` answer from
-    its aggregated frame. Built by `Planner.plan`, which keeps returning
+    its aggregated frame. Built by `Planner.plan`, which attaches it to
     the full Spark plan (EXPLAIN, SELECT … INTO, subqueries and the
-    contract keys run that one)."""
-    aggregated: DataFrame       # time, group tags, value columns
+    contract keys run that one) or, asked for /query's answer plan, to
+    the aggregated frame itself."""
+    # time, group tags, value columns; over a one-split source it is
+    # aggregated in one partition (one job)
+    aggregated: DataFrame
     group_tags: tuple[str, ...]
     value_cols: tuple[str, ...]
-    # per value column, from the planned frame's schema: a cast for the
+    # per value column, from the filled columns' types: a cast for the
     # collected values (float where Spark's coercion made an integer
     # aggregate DOUBLE) and the numeric fill literal in the column's type
     casts: tuple
@@ -130,8 +135,9 @@ _FINISH = "_influx_finish"
 
 
 def attach_finish(df: DataFrame, spec: FinishSpec) -> None:
-    """Mark `df` (the full plan) as finished on the driver by `spec`. A
-    DataFrame derived from it carries no spec, so it is collected."""
+    """Mark `df` (the full plan, or the answer plan) as finished on the
+    driver by `spec`. A DataFrame derived from it carries no spec, so it
+    is collected."""
     setattr(df, _FINISH, spec)
 
 

@@ -19,7 +19,9 @@ from __future__ import annotations
 
 import itertools
 import re
+import threading
 import time
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -136,9 +138,22 @@ class Engine:
         # SHOW QUERIES / KILL QUERY bookkeeping: qid → Spark job group.
         self._qid = itertools.count(1)
         self._running: dict[int, dict] = {}
+        # /write: one lock per (database, measurement), see write_lines
+        self._write_locks: dict[tuple[str, str], threading.Lock] = {}
+        self._write_locks_guard = threading.Lock()
+
+    def write_lock(self, database: str, name: str) -> threading.Lock:
+        """The lock a /write holds on one measurement while it reads,
+        merges and registers its next generation."""
+        with self._write_locks_guard:
+            return self._write_locks.setdefault((database, name),
+                                                threading.Lock())
 
     # -- the /query surface --------------------------------------------------
-    def query_df(self, q: str, database: str | None = None) -> DataFrame:
+    def query_df(self, q: str, database: str | None = None,
+                 answer: bool = False) -> DataFrame:
+        """The DataFrame of one statement: the full plan, or with `answer`
+        the plan `query` collects (Planner.plan's `answer`)."""
         db = database or self.database
         if _REJECTED.match(q):
             # routing.go:113-119 → 400
@@ -208,7 +223,7 @@ class Engine:
         if isinstance(stmt, SelectStatement):
             planner = Planner(self.catalog, db, now_ns=self.now_ns,
                               **self.planner_kw)
-            out = planner.plan(stmt)
+            out = planner.plan(stmt, answer=answer)
             if stmt.into is not None:
                 # batch SELECT … INTO target: materialize the result as a
                 # new measurement (InfluxDB writes it back; the CQ runner
@@ -256,7 +271,7 @@ class Engine:
                               "group": group}
         sc.setJobGroup(group, q[:120], interruptOnCancel=True)
         try:
-            df = self.query_df(q, database)
+            df = self.query_df(q, database, answer=True)
             rows = df.columns
             if not rows:
                 return empty_result()
@@ -571,6 +586,12 @@ def write_lines(engine: Engine, database: str, body: str,
     conflict raises WriteError and writes nothing, mirroring the
     reference's 400s (write_handler.go:74-78, 103-112).
 
+    Concurrent writes: from reading a measurement's old generation to
+    registering the merged one, the write holds that measurement's
+    `Engine.write_lock` (all of them for a body naming several, taken in
+    name order), so two writers to one measurement cannot both merge
+    into the same old generation and drop each other's points.
+
     Generations: a new measurement registers the pivoted batch, a
     LocalRelation whose rows live in the driver's plan. A write to a
     measurement held that way (`_driver_held`: born from /write, possibly
@@ -583,10 +604,8 @@ def write_lines(engine: Engine, database: str, body: str,
     and its scans keep pruning and pushdown. A superseded generation is
     never released explicitly: a reader still holding it keeps working,
     and it is freed once nothing references it."""
-    from .ingest import FieldTypeConflict, check_field_types, upsert_points
-    from .lineprotocol import parse_line, pivot_records
+    from .lineprotocol import parse_line
 
-    spark = engine.catalog.spark
     factor = _PRECISION_NS.get(precision or "ns")
     if factor is None:
         raise WriteError(f"invalid precision {precision!r}")
@@ -598,6 +617,19 @@ def write_lines(engine: Engine, database: str, body: str,
             if rec["time"] is not None:
                 rec["time"] *= factor
             by_name.setdefault(rec["measurement"], []).append(rec)
+    with ExitStack() as held:
+        for name in sorted(by_name):
+            held.enter_context(engine.write_lock(database, name))
+        return _merge_and_register(engine, database, by_name)
+
+
+def _merge_and_register(engine: Engine, database: str,
+                        by_name: dict[str, list[dict]]) -> int:
+    """write_lines' checks, merges and registration, under its locks."""
+    from .ingest import FieldTypeConflict, check_field_types, upsert_points
+    from .lineprotocol import pivot_records
+
+    spark = engine.catalog.spark
     staged, total = [], 0
     for name in sorted(by_name):
         recs = by_name[name]

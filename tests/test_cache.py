@@ -47,3 +47,32 @@ def test_operators_register_their_caches(spark):
     minhash_jaccard_estimate(df).collect()
     assert "minhash_jaccard_estimate.sigs" in cache.live_tags()
     cache.release()
+
+
+def test_concurrent_keep_leaves_one_generation(spark):
+    """keep() from many threads on one tag: every generation but the last
+    is unpersisted, so one stays live and release() brings the session's
+    persisted RDDs back to where they were."""
+    import threading
+    cache.release()
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    frames = [spark.range(i + 1) for i in range(8)]
+    start = threading.Barrier(len(frames))
+
+    def run(df):
+        start.wait()
+        cache.keep("t.race", df)
+
+    threads = [threading.Thread(target=run, args=(f,)) for f in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert cache.live_tags() == ["t.race"]
+    assert sum(f.storageLevel.useMemory for f in frames) == 1
+    for f in frames:   # materialises every cache still registered
+        f.count()
+    cache.release()
+    assert cache.live_tags() == []
+    assert jsc.getPersistentRDDs().size() == baseline

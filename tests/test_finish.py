@@ -2,12 +2,15 @@
 
 A collected plain `GROUP BY time()` aggregate carries a `FinishSpec`:
 Spark stops at the aggregated frame and the driver fills, bounds, sorts,
-limits and shapes it (result.py). Each case here plans one statement and
-compares `to_influx_series` on that spec path with the same DataFrame
-collected whole by Spark and shaped by the same shaper; the JSON must be
-identical byte for byte. Statements that keep the Spark spine (tz(), outer
-transforms, row selectors, raw selects, SELECT … INTO, subqueries) must
-carry no spec.
+limits and shapes it (result.py). /query plans such an answer only up to
+that frame (`Planner.plan(..., answer=True)`). Each case here plans one
+statement both ways and compares `to_influx_series` of the answer plan
+with the full plan collected whole by Spark and shaped by the same
+shaper; the JSON must be identical byte for byte. Statements that keep
+the Spark spine (tz(), outer transforms, row selectors, raw selects,
+SELECT … INTO, subqueries) must carry no spec. Every contract `iq_*`
+statement the finisher takes is also answered through `Engine.query` and
+compared with its full plan.
 """
 
 from __future__ import annotations
@@ -50,16 +53,18 @@ def cat(spark):
     return c
 
 
-def _plan(cat, q):
-    return Planner(cat, "db", now_ns=NOW).plan(parse_query(q))
+def _plan(cat, q, answer=False):
+    return Planner(cat, "db", now_ns=NOW).plan(parse_query(q), answer=answer)
 
 
 def _both(cat, q, epoch=None):
-    """(spec path JSON, Spark path JSON) of one statement."""
+    """(spec path JSON, Spark path JSON) of one statement: the answer plan
+    /query runs, finished on the driver, and the full plan collected."""
     df = _plan(cat, q)
-    assert df.__dict__.get(_FINISH) is not None, q
+    answer = _plan(cat, q, answer=True)
+    assert answer.__dict__.get(_FINISH) is not None, q
     tags = [t for t in ("host", "dc") if t in df.columns]
-    got = json.dumps(to_influx_series(df, "m", tags, epoch))
+    got = json.dumps(to_influx_series(answer, "m", tags, epoch))
     want = json.dumps(shape_series(df.columns, df.collect(), "m", tags,
                                    epoch))
     return got, want
@@ -216,6 +221,28 @@ def test_open_bounded_cap_refused_before_filling(spark):
     assert str(open_.value) == str(bounded.value)
 
 
+def test_explicit_bounded_cap_refused_while_planning(spark, cat):
+    """The answer plan skips the spine, but an explicit range over the
+    cap is still refused while planning, with the full plan's text and
+    before any job runs (over HTTP this is the 400 of
+    test_http.test_open_bounded_spine_cap_is_400)."""
+    q = (f"SELECT max(v) FROM m WHERE time >= 0 AND time < "
+         f"{2 * MAX_SPINE_BUCKETS + 1} GROUP BY time(1ns), host fill(0)")
+    with pytest.raises(QueryError) as full:
+        _plan(cat, q)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("finish-cap", "cap")
+        with pytest.raises(QueryError) as answer:
+            _plan(cat, q, answer=True)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert str(answer.value) == str(full.value)
+    assert f"would generate {2 * MAX_SPINE_BUCKETS + 1} buckets" in str(
+        answer.value)
+    assert list(sc.statusTracker().getJobIdsForGroup("finish-cap")) == []
+
+
 def test_into_and_collected_slimit_pick_the_same_series(spark, cat):
     """SLIMIT 2 SOFFSET 1 with fill(0): SELECT … INTO (the Spark spine,
     series listed from the aggregated frame) stores the series the
@@ -230,3 +257,73 @@ def test_into_and_collected_slimit_pick_the_same_series(spark, cat):
                           key=lambda h: (h is not None, h))
     assert [s["tags"]["host"] for s in collected] == stored_hosts == ["a", "b"]
     assert stored.count() == sum(len(s["values"]) for s in collected)
+
+
+# -- the contract's iq_* statements through /query ---------------------------
+
+def _contract_statements() -> dict[str, str]:
+    """The InfluxQL statement of every contract `iq_*` key, read by calling
+    the key with the entry's `_iq` replaced by a recorder (no Spark)."""
+    import __spark_entry__ as entry
+
+    class Statement(Exception):
+        pass
+
+    def record(spark, sf, q, **kw):
+        raise Statement(q)
+
+    out, planned = {}, entry._iq
+    entry._iq = record
+    try:
+        for name, fn in entry.queries().items():
+            if name.startswith("iq_"):
+                with pytest.raises(Statement) as got:
+                    fn(None, None)
+                out[name] = got.value.args[0]
+    finally:
+        entry._iq = planned
+    return out
+
+
+CONTRACT = _contract_statements()
+# the plain GROUP BY time() aggregates without tz(): the finished answers
+CONTRACT_FINISHED = ["iq_bucket_offset", "iq_fill_linear", "iq_fill_null",
+                     "iq_fill_offset", "iq_fill_previous", "iq_fill_zero",
+                     "iq_kitchen_sink", "iq_mean_1d_tag", "iq_mean_1h"]
+
+
+@pytest.fixture(scope="module")
+def contract_engine(spark, tmp_path_factory):
+    """The contract keys' `events` catalog over a one-file gen_events
+    table, behind an Engine at the contract's now()."""
+    import __spark_entry__ as entry
+    from tools.gen_scale import gen_events
+    d = tmp_path_factory.mktemp("contract_events")
+    gen_events(spark, 5000, 100).coalesce(1).write.parquet(
+        str(d / "events.parquet"))
+    return Engine(entry._catalog(spark, str(d)), database="default",
+                  now_ns=entry.NOW_NS)
+
+
+def test_contract_finished_statements(contract_engine):
+    planner = Planner(contract_engine.catalog, "default",
+                      now_ns=contract_engine.now_ns)
+    finished = sorted(k for k, q in CONTRACT.items()
+                      if planner.plan(parse_query(q)).__dict__.get(_FINISH))
+    assert finished == CONTRACT_FINISHED
+
+
+@pytest.mark.parametrize("key", CONTRACT_FINISHED)
+def test_contract_query_matches_full_plan(contract_engine, key):
+    """/query's answer (the aggregated frame, finished on the driver)
+    equals the key's full Spark plan collected and shaped, byte for
+    byte."""
+    q = CONTRACT[key]
+    full = contract_engine.query_df(q)
+    answer = contract_engine.query_df(q, answer=True)
+    assert answer.__dict__.get(_FINISH) is not None
+    tags = [t for t in ("event_type",) if t in full.columns]
+    want = shape_series(full.columns, full.collect(), "events", tags, "ns")
+    got = contract_engine.query(q, epoch="ns")
+    assert got["results"][0]["series"], key
+    assert json.dumps(got) == json.dumps(want)

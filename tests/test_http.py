@@ -448,3 +448,51 @@ def test_failed_execution_error_names_cause(spark, source):
     (res,) = json.loads(body)["results"]
     assert res["statement_id"] == 0
     assert res["error"].startswith("ValueError: cannot read value "), res
+
+
+def test_concurrent_writes_keep_every_point(spark):
+    """Eight writers /write disjoint points to one measurement at once;
+    each write merges into the generation it read, so without the
+    per-measurement write lock one writer's merge can replace another's
+    and drop its points. Every point must be readable afterwards."""
+    import threading
+    engine = Engine(Catalog(spark), database="conc")
+    engine.query("CREATE DATABASE conc")
+    srv, port = serve(engine)
+    base = f"http://127.0.0.1:{port}"
+    writers, batches, per_batch = 8, 2, 10
+    start = threading.Barrier(writers)
+    errors = []
+
+    def write(w):
+        try:
+            start.wait()
+            for b in range(batches):
+                body = "\n".join(
+                    f"cpu,writer=w{w} v={w * 1000 + b * per_batch + i} "
+                    f"{1_700_000_000_000_000_000 + b * per_batch + i}"
+                    for i in range(per_batch)).encode()
+                status, _, _ = _post(base + "/write?db=conc", body)
+                assert status == 204
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=write, args=(w,))
+               for w in range(writers)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        assert not errors, errors
+        res = engine.query("SELECT v, writer FROM cpu",
+                           database="conc", epoch="ns")
+    finally:
+        srv.shutdown()
+    got = {(s["tags"]["writer"], t, v) for s in res["results"][0]["series"]
+           for t, v in s["values"]}
+    want = {(f"w{w}", 1_700_000_000_000_000_000 + b * per_batch + i,
+             float(w * 1000 + b * per_batch + i))
+            for w in range(writers) for b in range(batches)
+            for i in range(per_batch)}
+    assert got == want

@@ -6,13 +6,16 @@ exactly: a new Exchange, a range-partitioner sampling job or an eager
 `.first()` while building shows up as a changed count. The statements are
 the nine shapes of the `query` benchmark rotation, over a small `events`
 table from the repo's own generator (tools/gen_scale.gen_events), plus the
-`ingest` benchmark's read. Each answer is collected the way /query
-collects it (`to_influx_series`), so a plain GROUP BY time() aggregate
-runs only its aggregated frame in Spark and is finished on the driver.
+`ingest` benchmark's read. Each answer is planned and collected the way
+/query does it (`Engine.query_df(..., answer=True)`, `to_influx_series`),
+so a plain GROUP BY time() aggregate plans and runs only its aggregated
+frame in Spark and is finished on the driver; over a source Spark reads
+as one split, that frame aggregates in one partition.
 """
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
@@ -57,20 +60,23 @@ ROTATION = [
 ]
 
 # (jobs while building the DataFrame, jobs while collecting it); the five
-# GROUP BY time() shapes and the ingest read run the aggregated frame only:
-# its shuffle stage and the result stage
+# GROUP BY time() shapes and the ingest read run the aggregated frame only,
+# over a one-split source in one stage: partial and final aggregate share
+# the one partition, so there is no shuffle stage
 EXPECTED_JOBS = {
-    "group_1h": (0, 2),
-    "group_1h_tag": (0, 2),
-    "group_1d_tag": (0, 2),
+    "group_1h": (0, 1),
+    "group_1h_tag": (0, 1),
+    "group_1d_tag": (0, 1),
     "raw_limit": (0, 1),
-    "fill_linear": (0, 2),
-    "fill_open": (0, 2),
+    "fill_linear": (0, 1),
+    "fill_open": (0, 1),
     "subquery": (0, 4),
     "show_tag_values": (0, 2),
     "show_measurements": (0, 0),
-    "ingest_read": (0, 2),
+    "ingest_read": (0, 1),
 }
+FINISHED = ["group_1h", "group_1h_tag", "group_1d_tag", "fill_linear",
+            "fill_open"]
 
 # the `ingest` benchmark's read-after-write, over a measurement born from
 # /write (one driver-held generation)
@@ -80,17 +86,27 @@ INGEST_READ = ("SELECT count(usage), sum(usage), max(load) FROM cpu "
 
 
 @pytest.fixture(scope="module")
-def events_engine(spark, tmp_path_factory):
+def events_dir(spark, tmp_path_factory):
+    """A one-file `events` table: Spark reads it as one split."""
     from tools.gen_scale import gen_events
     d = tmp_path_factory.mktemp("events")
     gen_events(spark, 5000, 100).coalesce(1).write.parquet(
         str(d / "events.parquet"))
-    cat, _ = events_measurement(spark, str(d))
+    return str(d)
+
+
+def _engine(spark, events_dir):
+    cat, _ = events_measurement(spark, events_dir)
     eng = Engine(cat, database="default", now_ns=NOW)
     write_lines(eng, "default", "\n".join(
         f"cpu,region=r{i % 3},host=h{i % 7} usage={i % 11}i,load={i / 8} "
         f"{JAN1 + i * 37_000_000_000}" for i in range(1000)))
     return eng
+
+
+@pytest.fixture(scope="module")
+def events_engine(spark, events_dir):
+    return _engine(spark, events_dir)
 
 
 def _jobs(sc, group):
@@ -111,7 +127,7 @@ def _counted(spark, eng, kind, q):
     sc = spark.sparkContext
     try:
         sc.setJobGroup(f"qj-build-{kind}", kind)
-        df = eng.query_df(q)
+        df = eng.query_df(q, answer=True)
         sc.setJobGroup(f"qj-run-{kind}", kind)
         res = to_influx_series(df, "events", ["event_type", "region"], "ns")
     finally:
@@ -129,8 +145,71 @@ def test_rotation_job_counts(spark, events_engine):
     assert got == EXPECTED_JOBS
 
 
+def test_multi_split_source_keeps_two_jobs(spark, events_dir):
+    """A source Spark reads as more than one split keeps the two-stage
+    aggregate: its shuffle stage and the result stage. The one-split
+    check reads the conf once per measurement generation, so the engine
+    here is built under the small split size."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        eng = _engine(spark, events_dir)
+        assert eng.catalog.get("default", "events").df \
+            .rdd.getNumPartitions() > 1
+        for kind in ["group_1h", "fill_open", "ingest_read"]:
+            q = INGEST_READ if kind == "ingest_read" else dict(ROTATION)[kind]
+            counts, series = _counted(spark, eng, f"multi-{kind}", q)
+            assert series and counts == (0, 2), kind
+    finally:
+        spark.conf.set(key, old)
+
+
 def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("kind", FINISHED + ["ingest_read"])
+def test_answer_plan_is_the_aggregated_frame(events_engine, kind):
+    """/query plans a finished answer only up to the aggregated frame it
+    collects: no spine (Generate), no spine join, no fill window, no
+    sort; over a one-split source, no Exchange either."""
+    from influxdb_ha_spark.result import _FINISH
+    q = INGEST_READ if kind == "ingest_read" else dict(ROTATION)[kind]
+    df = events_engine.query_df(q, answer=True)
+    assert df.__dict__.get(_FINISH) is not None
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for node in ("Generate", "Join", "Window", "Sort"):
+        assert node not in plan, (node, plan)
+    executed = _executed_plan(df)
+    assert "Exchange" not in executed and "Coalesce 1" in executed, executed
+
+
+def _shape(df):
+    """The optimized plan without expression ids, which differ per build."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"#\d+L?", "", text)
+
+
+@pytest.mark.parametrize("q", [
+    dict(ROTATION)["subquery"],
+    dict(ROTATION)["raw_limit"],
+    "SELECT count(value) AS n INTO into_shape FROM events "
+    f"WHERE {_w(2, 14)} GROUP BY time(1d) fill(0)",
+    "SELECT max(n) FROM (SELECT count(value) AS n FROM events "
+    f"WHERE {_w(2, 14)} GROUP BY time(1d) fill(0))",
+    f"SELECT mean(value) FROM events WHERE {_w(2, 14)} GROUP BY time(1d) "
+    "fill(0) tz('America/New_York')",
+    f"SELECT derivative(mean(value), 1h) FROM events WHERE {_w(3, 7)} "
+    "GROUP BY time(1h)"])
+def test_unfinished_statements_plan_as_before(events_engine, q):
+    """SELECT … INTO, subqueries and every statement the driver does not
+    finish get the full plan with or without `answer`."""
+    from influxdb_ha_spark.influxql.parser import parse_query
+    from influxdb_ha_spark.planner import Planner
+    planner = Planner(events_engine.catalog, "default", now_ns=NOW)
+    full = planner.plan(parse_query(q))
+    assert _shape(planner.plan(parse_query(q), answer=True)) == _shape(full)
 
 
 @pytest.mark.parametrize("kind", ["group_1h", "group_1h_tag", "fill_linear",

@@ -1,23 +1,26 @@
 """Focused pins for the r13 optimization round's internal changes.
 
 The invariant the scale-adaptive partition count relies on: `parts` is
-purely a PHYSICAL layout knob — any value of _shuffle_parts (the session
-floor, or the input-size-derived adaptive count consumed by
-label_propagation's vote repartition + cache) produces row-identical
-results for every iterative graph loop, because every per-round fold is
-an integer sum/min/count (fold-order-free). The loops that pin the
-session count after the r13 negative results (pagerank/PPR/components/
-kcore/bfs/sssp/hits) must be INSENSITIVE to the dial — the same
-parametrized checks assert that.
+purely a PHYSICAL layout knob — any value of util.scale_parts with
+graph's dial (the session floor, or the input-size-derived adaptive
+count consumed by label_propagation's vote repartition + cache)
+produces row-identical results for every iterative graph loop, because
+every per-round fold is an integer sum/min/count (fold-order-free). The
+loops that pin the session count after the r13 negative results
+(pagerank/PPR/components/kcore/bfs/sssp/hits) must be INSENSITIVE to the
+dial — the same parametrized checks assert that.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
+from influxdb_ha_spark.operators.util import (conf_parts, input_bytes,
+                                              scale_parts)
+
 
 @pytest.fixture(scope="module")
 def parquet_edges(spark, tmp_path_factory):
-    """A small random graph WRITTEN TO PARQUET so _input_bytes sees real
+    """A small random graph WRITTEN TO PARQUET so input_bytes sees real
     file-source bytes (createDataFrame plans have no input files and
     always take the session-floor path)."""
     import random
@@ -35,29 +38,35 @@ def _collect(df, *keys):
     return sorted(tuple(r) for r in df.select(*keys).collect())
 
 
+def _shuffle_parts(df):
+    """The partition count graph's label_propagation takes: scale_parts
+    with graph's dial and cap, read at call time so monkeypatches hold."""
+    from influxdb_ha_spark.operators import graph as GR
+    return scale_parts(df, GR._CACHE_PART_BYTES, GR._PARTS_CAP)
+
+
 def test_shuffle_parts_scales_with_input_bytes(spark, parquet_edges,
                                                monkeypatch):
     """parts == session floor on small inputs; grows ceil(bytes/dial)
     once the input outweighs the dial; never exceeds the cap."""
     from influxdb_ha_spark.operators import graph as GR
-    base = GR._conf_parts(parquet_edges)
-    assert GR._shuffle_parts(parquet_edges) == base  # tiny file → floor
-    nbytes = GR._input_bytes(parquet_edges)
+    base = conf_parts(parquet_edges)
+    assert _shuffle_parts(parquet_edges) == base  # tiny file → floor
+    nbytes = input_bytes(parquet_edges)
     assert nbytes > 0
     monkeypatch.setattr(GR, "_CACHE_PART_BYTES", max(1, nbytes // 10))
-    grown = GR._shuffle_parts(parquet_edges)
+    grown = _shuffle_parts(parquet_edges)
     assert grown in (10, 11) and grown > base
     monkeypatch.setattr(GR, "_CACHE_PART_BYTES", 1)
-    assert GR._shuffle_parts(parquet_edges) == min(GR._PARTS_CAP, nbytes)
+    assert _shuffle_parts(parquet_edges) == min(GR._PARTS_CAP, nbytes)
     monkeypatch.setattr(GR, "_PARTS_CAP", 9)
-    assert GR._shuffle_parts(parquet_edges) == max(base, 9)  # cap binds
+    assert _shuffle_parts(parquet_edges) == max(base, 9)  # cap binds
 
 
 def test_input_bytes_zero_for_local_frames(spark):
-    from influxdb_ha_spark.operators import graph as GR
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    assert GR._input_bytes(df) == 0
-    assert GR._shuffle_parts(df) == GR._conf_parts(df)
+    assert input_bytes(df) == 0
+    assert _shuffle_parts(df) == conf_parts(df)
 
 
 @pytest.mark.parametrize("op", ["pagerank", "label_propagation",
@@ -83,9 +92,9 @@ def test_adaptive_parts_row_identical(spark, parquet_edges, monkeypatch,
                         "node", "core_degree")
 
     base = run(parquet_edges)
-    nbytes = GR._input_bytes(parquet_edges)
+    nbytes = input_bytes(parquet_edges)
     monkeypatch.setattr(GR, "_CACHE_PART_BYTES", max(1, nbytes // 7))
-    assert GR._shuffle_parts(parquet_edges) > GR._conf_parts(parquet_edges)
+    assert _shuffle_parts(parquet_edges) > conf_parts(parquet_edges)
     adaptive = run(parquet_edges)
     assert adaptive == base
     assert len(base) > 0
@@ -102,7 +111,7 @@ def test_ppr_adaptive_parts_row_identical(spark, parquet_edges,
                         "node", "ppr_fp")
 
     base = run()
-    nbytes = GR._input_bytes(parquet_edges)
+    nbytes = input_bytes(parquet_edges)
     monkeypatch.setattr(GR, "_CACHE_PART_BYTES", max(1, nbytes // 7))
     adaptive = run()
     assert adaptive == base and len(base) > 0
