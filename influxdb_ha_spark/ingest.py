@@ -17,11 +17,15 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .model import Catalog, Measurement, PartitionKey, TIME_COL
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 @dataclass
@@ -167,10 +171,10 @@ def upsert_points(existing: DataFrame, incoming: DataFrame,
 
     `existing` and `incoming` may have different field columns (schema
     grows on write); output has the union. One shuffle on (time, tags).
-    The result is lazy. For a measurement held by the driver,
-    `server.write_lines` compacts it once per write back into a
-    LocalRelation, so the next write upserts into a flat relation instead
-    of stacking another union on the previous plan.
+    The result is lazy: `server.write_lines` uses it for measurements whose
+    rows live outside the driver (file-backed, ingested by Spark, SELECT …
+    INTO targets), so a write neither shuffles nor copies the table.
+    Measurements born from /write are merged by `upsert_rows` instead.
     """
     old = existing.withColumn("__gen", F.lit(0))
     new = incoming.withColumn("__gen", F.lit(1))
@@ -182,17 +186,47 @@ def upsert_points(existing: DataFrame, incoming: DataFrame,
     return both.groupBy(*keys).agg(*aggs)
 
 
+def upsert_rows(existing: pa.Table, incoming: pa.Table,
+                tags: list[str]) -> pa.Table:
+    """`upsert_points` on the driver, for rows held as `pyarrow.Table`s:
+    the same rule (same (time, tagset) → newest non-null field wins), the
+    same output columns in the same order, and no Spark job.
+
+    The rows are concatenated old then new, with missing columns filled
+    with nulls, and grouped on (time, tags) in input order
+    (`use_threads=False`), keeping each field's last non-null value."""
+    import pyarrow as pa
+
+    both = pa.concat_tables([existing, incoming], promote_options="default")
+    keys = [TIME_COL] + [t for t in tags if t in both.column_names]
+    fields = [c for c in both.column_names if c not in keys]
+    # positional names, so no "<field>_last" output name can collide with
+    # another column's
+    k = [f"k{i}" for i in range(len(keys))]
+    f = [f"f{i}" for i in range(len(fields))]
+    out = (both.select(keys + fields).rename_columns(k + f)
+           .group_by(k, use_threads=False)
+           .aggregate([(c, "last") for c in f]))
+    return out.select(k + [f"{c}_last" for c in f]) \
+        .rename_columns(keys + fields)
+
+
 class FieldTypeConflict(ValueError):
     """InfluxDB rejects writes whose field type conflicts with the
     first-written type for that field (first-write-wins typing)."""
 
 
-def check_field_types(existing: DataFrame, incoming: DataFrame,
+def check_field_types(existing: DataFrame, incoming: pa.Schema,
                       tags: list[str]) -> None:
-    et, it = dict(existing.dtypes), dict(incoming.dtypes)
-    for c, t in it.items():
+    """Raise FieldTypeConflict if the incoming Arrow schema sends a field
+    with another type than `existing` holds it as."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    et = dict(existing.dtypes)
+    for c, t in zip(incoming.names, incoming.types):
         if c == TIME_COL or c in tags or c.startswith("__"):
             continue
+        t = from_arrow_type(t).simpleString()
         old = et.get(c)
         if old is not None and old != t:
             raise FieldTypeConflict(

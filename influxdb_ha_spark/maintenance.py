@@ -27,6 +27,11 @@ def enforce_retention(catalog: Catalog, database: str, now_ns: int) -> dict:
 
     Returns {measurement: cutoff_ns} for measurements that were trimmed.
     Duration "0s"/absent means keep-forever (InfluxDB semantics).
+
+    Each measurement is trimmed under its `Catalog.write_lock`, so a
+    concurrent /write cannot merge into the untrimmed generation. The rows
+    of a measurement held by the driver are trimmed in Arrow (no Spark
+    job), so the next write merges into the trimmed rows.
     """
     rps = catalog.retention_policies.get(database, [])
     default = next((r for r in rps if r.get("default")), None)
@@ -37,10 +42,16 @@ def enforce_retention(catalog: Catalog, database: str, now_ns: int) -> dict:
         return {}
     cutoff = now_ns - dur
     out = {}
-    for name, m in list(catalog.databases.get(database, {}).items()):
-        if m is None:
-            continue
-        m.df = m.df.where(F.col(TIME_COL) >= F.lit(cutoff))
+    for name in list(catalog.databases.get(database, {})):
+        with catalog.write_lock(database, name):
+            m = catalog.databases.get(database, {}).get(name)
+            if m is None:
+                continue
+            if m.rows is None:
+                m.df = m.df.where(F.col(TIME_COL) >= F.lit(cutoff))
+            else:
+                import pyarrow.compute as pc
+                m.hold(m.rows.filter(pc.field(TIME_COL) >= cutoff))
         out[name] = cutoff
     return out
 

@@ -18,13 +18,18 @@ replaces hash routing (coordinator.go:304-362).
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .result import local_result
 from .timeutil import timestamp_to_ns
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 TIME_COL = "time"
 
@@ -73,6 +78,25 @@ class Measurement:
     df: DataFrame
     retention_policy: str = "autogen"
     path: str | None = None  # physical location when hive-partitioned
+    # The rows of a measurement born from /write, held by the driver; `df`
+    # is then `spark.createDataFrame(rows)`. None for file-backed,
+    # Spark-ingested and SELECT … INTO measurements.
+    rows: pa.Table | None = None
+
+    @classmethod
+    def held(cls, spark: SparkSession, name: str, database: str,
+             tags: list[str], rows: pa.Table) -> Measurement:
+        """A measurement whose rows the driver holds; building its
+        DataFrame (a LocalRelation) fires no Spark job."""
+        return cls(name=name, database=database, tags=list(tags),
+                   fields=[c for c in rows.column_names
+                           if c != TIME_COL and c not in tags],
+                   df=spark.createDataFrame(rows), rows=rows)
+
+    def hold(self, rows: pa.Table) -> None:
+        """Replace a held measurement's rows and the DataFrame over them."""
+        self.rows = rows
+        self.df = self.df.sparkSession.createDataFrame(rows)
 
     def series_df(self) -> DataFrame:
         """SHOW SERIES: distinct tag combinations (importer.go FetchSeries,
@@ -112,6 +136,16 @@ class Catalog:
         self.partition_keys: list[PartitionKey] = []
         self.retention_policies: dict[str, list[dict]] = {}
         self.replication_factors: dict[str, int] = {"": 2}  # resolver.go:36 default 2
+        self._write_locks: dict[tuple[str, str], threading.Lock] = {}
+        self._write_locks_guard = threading.Lock()
+
+    def write_lock(self, database: str, name: str) -> threading.Lock:
+        """The lock held on one measurement by everything that reads its
+        current generation and replaces it: /write, DELETE / DROP SERIES
+        and retention enforcement."""
+        with self._write_locks_guard:
+            return self._write_locks.setdefault((database, name),
+                                                threading.Lock())
 
     # -- registration -----------------------------------------------------
     def register(self, m: Measurement) -> None:

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import itertools
 import re
-import threading
 import time
 from contextlib import ExitStack
 
@@ -138,16 +137,6 @@ class Engine:
         # SHOW QUERIES / KILL QUERY bookkeeping: qid → Spark job group.
         self._qid = itertools.count(1)
         self._running: dict[int, dict] = {}
-        # /write: one lock per (database, measurement), see write_lines
-        self._write_locks: dict[tuple[str, str], threading.Lock] = {}
-        self._write_locks_guard = threading.Lock()
-
-    def write_lock(self, database: str, name: str) -> threading.Lock:
-        """The lock a /write holds on one measurement while it reads,
-        merges and registers its next generation."""
-        with self._write_locks_guard:
-            return self._write_locks.setdefault((database, name),
-                                                threading.Lock())
 
     # -- the /query surface --------------------------------------------------
     def query_df(self, q: str, database: str | None = None,
@@ -190,10 +179,11 @@ class Engine:
             # no Spark job — SHOW QUERIES stays live even when every task
             # slot is busy (which is exactly when an operator reaches for
             # it).
-            now = time.time()
+            # a snapshot: other requests add and remove entries meanwhile
+            now, running = time.time(), self._running.copy()
             rows = [(str(qid), r["query"], r["database"],
                      round(now - r["started"], 3), "interactive")
-                    for qid, r in sorted(self._running.items())]
+                    for qid, r in sorted(running.items())]
             rows += [(s.id, s.name or "", db, None, "streaming")
                      for s in self.catalog.spark.streams.active]
             return local_result(
@@ -204,14 +194,15 @@ class Engine:
         m = _KILL_QUERY.match(q)
         if m:
             qid = int(m.group(1))
-            if qid not in self._running:
+            # one read: the query may finish between a check and an index
+            running = self._running.get(qid)
+            if running is None:
                 raise QueryError(f"no such query id: {qid}")
             # Spark-native kill: cancel every job tagged with the query's
             # job group (interruptOnCancel was set at submission). The
             # result must be job-free too — a busy cluster is the whole
             # point of killing something.
-            self.catalog.spark.sparkContext.cancelJobGroup(
-                self._running[qid]["group"])
+            self.catalog.spark.sparkContext.cancelJobGroup(running["group"])
             return local_result(self.catalog.spark, [(qid, "killed")],
                                 [("qid", "BIGINT"), ("status", "STRING")])
 
@@ -392,26 +383,7 @@ class Engine:
                                  ("privilege", "STRING")])
         m = _DELETE.match(q)
         if m:
-            # DELETE FROM m|/re/ [WHERE …] — same broadcast path as DROP
-            # SERIES (routing.go:98-111); WHERE may include time bounds.
-            name, cond = m.group(1), m.group(2)
-            if name.startswith("/") and name.endswith("/") and len(name) > 1:
-                rx = re.compile(name[1:-1])
-                targets = [mm for mm in
-                           self.catalog.databases.get(db, {}).values()
-                           if rx.search(mm.name)]
-            else:
-                targets = [self.catalog.get(db, name.strip('"'))]
-            for meas in targets:
-                if cond:
-                    from .influxql.parser import Parser
-                    from .planner import PlanContext
-                    expr = Parser(cond).parse_expr()
-                    planner = Planner(self.catalog, db, now_ns=self.now_ns)
-                    ctx = PlanContext(meas, planner.now_ns)
-                    meas.df = meas.df.where(~planner._where_expr(expr, ctx))
-                else:
-                    meas.df = meas.df.limit(0)
+            self._delete_points(m.group(1), m.group(2), db)
             return ok()
         return None
 
@@ -519,27 +491,51 @@ class Engine:
         elif m.group(3):  # DROP MEASUREMENT
             self.catalog.databases.get(db, {}).pop(m.group(3), None)
         elif m.group(5):  # DELETE/DROP SERIES FROM m|/re/ [WHERE tag='v' …]
-            name, cond = m.group(5), m.group(6)
-            if name.startswith("/") and name.endswith("/") and len(name) > 1:
-                # DROP SERIES FROM /regex/ — InfluxQL 1.x regex sources
-                # apply the drop across every matching measurement
-                rx = re.compile(name[1:-1])
-                targets = [mm for mm in
-                           self.catalog.databases.get(db, {}).values()
-                           if rx.search(mm.name)]
-            else:
-                targets = [self.catalog.get(db, name.strip('"'))]
-            for meas in targets:
-                if cond:
-                    from .influxql.parser import Parser
-                    expr = Parser(cond).parse_expr()
-                    planner = Planner(self.catalog, db, now_ns=self.now_ns)
-                    from .planner import PlanContext
-                    ctx = PlanContext(meas, planner.now_ns)
-                    meas.df = meas.df.where(~planner._where_expr(expr, ctx))
-                else:
-                    meas.df = meas.df.limit(0)
+            self._delete_points(m.group(5), m.group(6), db)
         return local_result(spark, [], [("ok", "STRING")])
+
+    def _delete_points(self, name: str, cond: str | None, db: str) -> None:
+        """DELETE FROM and DELETE/DROP SERIES FROM m|/re/ [WHERE …]: drop
+        the points matching WHERE (tag and time conditions; all points
+        without one). A /regex/ source applies to every matching
+        measurement, as InfluxQL 1.x regex sources do.
+
+        Each target is changed under its `Catalog.write_lock`, so a
+        concurrent /write cannot merge into the generation before the
+        delete and register over it. A measurement held by the driver
+        re-collects its remaining rows here: one Spark job per DELETE with
+        WHERE, none per later write."""
+        if name.startswith("/") and name.endswith("/") and len(name) > 1:
+            rx = re.compile(name[1:-1])
+            names = [n for n in sorted(self.catalog.databases.get(db, {}))
+                     if rx.search(n)]
+        else:
+            names = [self.catalog.get(db, name.strip('"')).name]
+        planner = expr = None
+        if cond:
+            from .influxql.parser import Parser
+            from .planner import PlanContext
+            expr = Parser(cond).parse_expr()
+            planner = Planner(self.catalog, db, now_ns=self.now_ns)
+        for n in names:
+            with self.catalog.write_lock(db, n):
+                meas = self.catalog.databases.get(db, {}).get(n)
+                if meas is None:  # dropped meanwhile
+                    continue
+                if expr is None:
+                    if meas.rows is None:
+                        meas.df = meas.df.limit(0)
+                    else:
+                        meas.hold(meas.rows.slice(0, 0))
+                    continue
+                hit = planner._where_expr(expr, PlanContext(meas,
+                                                            planner.now_ns))
+                # a point WHERE does not match (a null tag compared) stays
+                kept = meas.df.where(~F.coalesce(hit, F.lit(False)))
+                if meas.rows is None:
+                    meas.df = kept
+                else:
+                    meas.hold(kept.toArrow().cast(meas.rows.schema))
 
     @staticmethod
     def _measurement_of(q: str) -> str | None:
@@ -560,16 +556,6 @@ class WriteError(Exception):
     pass
 
 
-def _driver_held(df: DataFrame) -> bool:
-    """Whether every leaf of `df`'s plan is a LocalRelation, i.e. all its
-    rows are held by the driver, as every pivoted /write batch is."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    while leaves.hasNext():
-        if leaves.next().getClass().getSimpleName() != "LocalRelation":
-            return False
-    return True
-
-
 def write_lines(engine: Engine, database: str, body: str,
                 precision: str = "ns",
                 default_time_ns: int | None = None) -> int:
@@ -588,22 +574,23 @@ def write_lines(engine: Engine, database: str, body: str,
 
     Concurrent writes: from reading a measurement's old generation to
     registering the merged one, the write holds that measurement's
-    `Engine.write_lock` (all of them for a body naming several, taken in
+    `Catalog.write_lock` (all of them for a body naming several, taken in
     name order), so two writers to one measurement cannot both merge
     into the same old generation and drop each other's points.
 
-    Generations: a new measurement registers the pivoted batch, a
-    LocalRelation whose rows live in the driver's plan. A write to a
-    measurement held that way (`_driver_held`: born from /write, possibly
-    filtered by DELETE) is compacted back into the driver:
-    `upsert_points(old, new)` runs once (two jobs) and its rows become the
-    next LocalRelation, so a read scans a flat relation whose plan does not
-    grow with the number of writes, and no generation depends on executor
-    storage. Any other measurement (file-backed, ingested by Spark) is
-    upserted lazily, so a write does not shuffle or copy the whole table
-    and its scans keep pruning and pushdown. A superseded generation is
-    never released explicitly: a reader still holding it keeps working,
-    and it is freed once nothing references it."""
+    Generations: a measurement born from /write is held by the driver:
+    `Measurement.rows` is a `pyarrow.Table` and its DataFrame the
+    LocalRelation over it. A write into it merges in Arrow on the driver
+    (`ingest.upsert_rows`, the `upsert_points` rule) and builds one
+    DataFrame, the merged generation's, so it fires no Spark job; a read
+    scans a flat relation whose plan does not grow with the number of
+    writes, and no generation depends on executor storage. Any other
+    measurement (file-backed, ingested by Spark, a SELECT … INTO target)
+    is upserted lazily with `upsert_points`, so a write does not shuffle
+    or copy the whole table and its scans keep pruning and pushdown. A
+    superseded generation is never released explicitly: a reader still
+    holding it keeps working, and it is freed once nothing references
+    it."""
     from .lineprotocol import parse_line
 
     factor = _PRECISION_NS.get(precision or "ns")
@@ -619,14 +606,15 @@ def write_lines(engine: Engine, database: str, body: str,
             by_name.setdefault(rec["measurement"], []).append(rec)
     with ExitStack() as held:
         for name in sorted(by_name):
-            held.enter_context(engine.write_lock(database, name))
+            held.enter_context(engine.catalog.write_lock(database, name))
         return _merge_and_register(engine, database, by_name)
 
 
 def _merge_and_register(engine: Engine, database: str,
                         by_name: dict[str, list[dict]]) -> int:
     """write_lines' checks, merges and registration, under its locks."""
-    from .ingest import FieldTypeConflict, check_field_types, upsert_points
+    from .ingest import (FieldTypeConflict, check_field_types, upsert_points,
+                         upsert_rows)
     from .lineprotocol import pivot_records
 
     spark = engine.catalog.spark
@@ -640,31 +628,33 @@ def _merge_and_register(engine: Engine, database: str,
             raise WriteError(
                 f"missing partition key tags {pk.tags} for {name}")
         table = pivot_records(recs, tag_keys)
-        wide = spark.createDataFrame(table)
         old = engine.catalog.databases.get(database, {}).get(name)
         tags = tag_keys
         if old is not None:
             tags = sorted(set(old.tags) | set(tag_keys))
             try:
-                check_field_types(old.df, wide, tags)
+                check_field_types(old.df, table.schema, tags)
             except FieldTypeConflict as e:
                 raise WriteError(str(e))  # first-write-wins typing
-        staged.append((name, tags, old, wide))
+        staged.append((name, tags, old, table))
         total += table.num_rows
-    # compact every measurement before registering any: a failed job
-    # leaves the catalog untouched
+    # merge every measurement before registering any: a failure leaves the
+    # catalog untouched
     generations = []
-    for name, tags, old, wide in staged:
-        df = wide
-        if old is not None:
-            # InfluxDB upsert: same (time, tagset) → newest fields win
-            df = upsert_points(old.df, wide, tags)
-            if _driver_held(old.df):
-                df = spark.createDataFrame(df.toArrow())
-        generations.append(Measurement(
-            name=name, database=database, tags=tags,
-            fields=[c for c in df.columns if c != "time" and c not in tags],
-            df=df))
+    for name, tags, old, table in staged:
+        # InfluxDB upsert: same (time, tagset) → newest fields win
+        if old is None:
+            m = Measurement.held(spark, name, database, tags, table)
+        elif old.rows is not None:
+            m = Measurement.held(spark, name, database, tags,
+                                 upsert_rows(old.rows, table, tags))
+        else:
+            df = upsert_points(old.df, spark.createDataFrame(table), tags)
+            m = Measurement(name=name, database=database, tags=tags,
+                            fields=[c for c in df.columns
+                                    if c != "time" and c not in tags],
+                            df=df)
+        generations.append(m)
     for m in generations:
         engine.catalog.register(m)
     return total

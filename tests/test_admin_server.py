@@ -523,6 +523,57 @@ def test_retention_enforcement(spark):
     trimmed = enforce_retention(cat, "db", now_ns=10 * 10**9)
     assert trimmed == {"m": 5 * 10**9}
     assert cat.get("db", "m").df.count() == 5  # times 5..9 survive
+    # a measurement born from /write has its held rows trimmed, so the
+    # next write merges into the trimmed rows and the expired points stay
+    # gone
+    from influxdb_ha_spark.server import write_lines
+    eng = Engine(cat, database="db")
+    write_lines(eng, "db", "\n".join(f"w,tag=a v={i} {i * 10**9}"
+                                     for i in range(10)))
+    trimmed = enforce_retention(cat, "db", now_ns=10 * 10**9)
+    assert trimmed == {"m": 5 * 10**9, "w": 5 * 10**9}
+    assert cat.get("db", "w").rows.num_rows == 5
+    write_lines(eng, "db", f"w,tag=a v=10 {10 * 10**9}")
+    m = cat.get("db", "w")
+    want = [i * 10**9 for i in range(5, 11)]
+    assert sorted(r["time"] for r in m.df.collect()) == want
+    assert sorted(m.rows["time"].to_pylist()) == want
+
+
+def test_show_queries_during_concurrent_queries(engine):
+    """SHOW QUERIES lists a snapshot of the running queries: it never
+    fails while eight other threads start and finish queries."""
+    import sys
+    import threading
+    import time
+
+    errors = []
+
+    def run():
+        try:
+            for _ in range(4):
+                engine.query("SELECT count(value) FROM treasures")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often: races show sooner
+    try:
+        for t in threads:
+            t.start()
+        shows, deadline = 0, time.time() + 300
+        while any(t.is_alive() for t in threads) and time.time() < deadline:
+            res = engine.query("SHOW QUERIES")
+            assert "error" not in res["results"][0], res
+            shows += 1
+        for t in threads:
+            t.join(max(1.0, deadline - time.time()))
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert shows
 
 
 def test_show_tag_values_key_variants(engine):

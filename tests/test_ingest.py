@@ -243,12 +243,41 @@ def _job_counts(sc, groups):
     return jobs
 
 
+def _python_workers() -> set[int]:
+    """Pids of the Python worker processes below this process: the
+    `pyspark.daemon` its JVM starts for the first Python task, and the
+    daemon's forks."""
+    import glob
+    import os
+    children: dict[int, list[int]] = {}
+    cmdline: dict[int, bytes] = {}
+    for stat in glob.glob("/proc/[0-9]*/stat"):
+        pid = int(stat.split("/")[2])
+        try:
+            with open(stat) as f:  # "pid (comm) state ppid ..."
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmdline[pid] = f.read()
+        except OSError:  # the process exited meanwhile
+            continue
+        children.setdefault(ppid, []).append(pid)
+    out, todo = set(), [os.getpid()]
+    while todo:
+        for pid in children.get(todo.pop(), []):
+            todo.append(pid)
+            if any(m in cmdline.get(pid, b"")
+                   for m in (b"pyspark.daemon", b"pyspark.worker")):
+                out.add(pid)
+    return out
+
+
 def test_write_lines_counts_per_write(spark):
-    """Deterministic counts of the write path: the first write of a
-    measurement fires no Spark job, every later one compacts with at most
-    two; the registered plan never stacks unions, no write leaves a cache
-    entry or a persisted RDD, a reader holding an older generation keeps
-    working, and a DELETE survives the next compaction."""
+    """Deterministic counts of the write path: no write into a measurement
+    born from /write fires a Spark job or starts a Python worker (the
+    merge runs in Arrow on the driver); the registered plan never stacks
+    unions, no write leaves a cache entry or a persisted RDD, a reader
+    holding an older generation keeps working, and a DELETE survives the
+    next write."""
     import gc
     from influxdb_ha_spark.server import Engine, write_lines
     sc = spark.sparkContext
@@ -256,6 +285,7 @@ def test_write_lines_counts_per_write(spark):
     # below is about this write path only
     spark.catalog.clearCache()
     persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    workers = _python_workers()
     eng = Engine(Catalog(spark), database="db")
     groups, held = [], None
     for d in range(10):
@@ -268,10 +298,11 @@ def test_write_lines_counts_per_write(spark):
             assert write_lines(eng, "db", body) == 100
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        if d == 1:  # the first compacted generation
+        if d == 1:  # the first merged generation
             held = eng.catalog.get("db", "m").df
     jobs = _job_counts(sc, groups)
-    assert jobs[0] == 0 and max(jobs[1:]) <= 2, jobs
+    assert jobs == [0] * 10, jobs
+    assert _python_workers() <= workers
     df = eng.catalog.get("db", "m").df
     assert "Union" not in df._jdf.queryExecution().analyzed().toString()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -287,6 +318,35 @@ def test_write_lines_counts_per_write(spark):
     assert len(rows) == 550 - len(range(0, 550, 7)) + 1
     assert all(host != "h0" for host, _ in rows.values())
     assert rows[50] == ("h1", 100)  # batch 1 overwrote batch 0's point
+
+
+def test_delete_waits_for_the_write_lock(spark):
+    """DELETE changes a measurement under its write lock: while the lock
+    is held (as a /write holds it from reading the old generation to
+    registering the merged one) a DELETE blocks, and once it has run its
+    effect survives the next write. A point without the tag WHERE tests
+    is not deleted."""
+    import threading
+    from influxdb_ha_spark.server import Engine, write_lines
+    eng = Engine(Catalog(spark), database="db")
+    write_lines(eng, "db", "m,host=a v=1 1000\nm,host=b v=2 2000\nm v=4 4000")
+    done = threading.Event()
+
+    def delete():
+        eng.query("DELETE FROM m WHERE host = 'a'", "db")
+        done.set()
+
+    t = threading.Thread(target=delete)
+    with eng.catalog.write_lock("db", "m"):
+        t.start()
+        assert not done.wait(2)
+    t.join(120)
+    assert done.is_set()
+    write_lines(eng, "db", "m,host=b v=3 3000")
+    m = eng.catalog.get("db", "m")
+    want = {(2000, "b", 2.0), (3000, "b", 3.0), (4000, None, 4.0)}
+    assert {(r["time"], r["host"], r["v"]) for r in m.df.collect()} == want
+    assert set(zip(*m.rows.to_pydict().values())) == want
 
 
 def test_write_lines_generations_survive_block_loss(spark):

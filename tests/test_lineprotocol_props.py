@@ -1,12 +1,14 @@
 """Property-based round-trip: format_point → parse_line recovers the point
 exactly, for arbitrary measurement/tag/field content including characters
 that require escaping (commas, spaces, equals, quotes, backslashes); and
-the driver-side pivot of /write agrees with the Spark one."""
+the driver-side pivot and upsert of /write agree with the Spark ones."""
 
 import math
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
+from influxdb_ha_spark.ingest import upsert_points, upsert_rows
 from influxdb_ha_spark.lineprotocol import (format_point, parse_line,
                                             parse_lines_df, pivot_points,
                                             pivot_records)
@@ -128,3 +130,50 @@ def test_pivot_records_matches_pivot_points(spark, points, times):
         assert got.dtypes == want.dtypes
         assert sorted(map(repr, got.collect())) == \
             sorted(map(repr, want.collect()))
+
+
+# field name → (Arrow type, values); ints reach past 2**53, where a double
+# would round them
+_FIELDS = {
+    "fi": (pa.int64(), st.one_of(st.sampled_from([2**53 + 1, -(2**62) - 3]),
+                                 st.integers(-2**63, 2**63 - 1))),
+    "ff": (pa.float64(), st.floats(allow_nan=False)),
+    "fs": (pa.string(), st.text("ab,", max_size=3)),
+    "fb": (pa.bool_(), st.booleans()),
+}
+
+
+@st.composite
+def generation(draw, min_rows):
+    """One generation of a measurement's rows: unique (time, tagset) keys
+    from a small domain (so two generations overlap), null tags, null
+    fields, and its own subset of tag and field columns."""
+    tags = draw(st.lists(st.sampled_from(["ta", "tb"]), unique=True))
+    fields = draw(st.lists(st.sampled_from(sorted(_FIELDS)), min_size=1,
+                           unique=True))
+    rows = draw(st.dictionaries(
+        st.tuples(st.integers(0, 3),
+                  *[st.sampled_from([None, "x", "y"]) for _ in tags]),
+        st.tuples(*[st.none() | _FIELDS[f][1] for f in fields]),
+        min_size=min_rows, max_size=6))
+    schema = pa.schema([("time", pa.int64())]
+                       + [(t, pa.string()) for t in tags]
+                       + [(f, _FIELDS[f][0]) for f in fields])
+    cols = list(zip(*[k + v for k, v in rows.items()])) or [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, schema.types)],
+        schema=schema)
+
+
+@settings(max_examples=25, deadline=None)
+@given(old=generation(0), new=generation(1))
+def test_upsert_rows_matches_upsert_points(spark, old, new):
+    """The driver's Arrow merge of a /write-born measurement gives the
+    columns (in order), dtypes and rows of the Spark `upsert_points`."""
+    tags = sorted({"ta", "tb"} & set(old.column_names + new.column_names))
+    got = spark.createDataFrame(upsert_rows(old, new, tags))
+    want = upsert_points(spark.createDataFrame(old),
+                         spark.createDataFrame(new), tags)
+    assert got.dtypes == want.dtypes
+    assert sorted(map(repr, got.collect())) == \
+        sorted(map(repr, want.collect()))
