@@ -138,6 +138,69 @@ AGGREGATES: dict[str, tuple] = {
 }
 
 
+# The five aggregates the reference merges exactly (Σcounts, Σsums,
+# Σsum/Σcount, min of mins, max of maxes: calls.go:278-389,
+# query_merge.go:143-146). Over rows the driver holds they run in pyarrow
+# (`held_aggregate`) instead of Spark. name → whether its field must be
+# a number.
+ARROW_AGGREGATES: dict[str, bool] = {"count": False, "sum": True,
+                                     "mean": True, "min": True, "max": True}
+
+
+def held_aggregate(rows, keep, time_col: str, interval_ns: int,
+                   offset_ns: int, group_tags: list[str],
+                   values: list[tuple[str, str, str]]):
+    """`GROUP BY time(interval, offset), group_tags` of driver-held rows
+    (a `pyarrow.Table`) in pyarrow: the aggregated frame the planner
+    would run in Spark, with columns `time_col`, `group_tags`, then one per
+    `values` entry (output name, ARROW_AGGREGATES name, field). `keep`
+    maps the rows to the WHERE mask (a null drops the row, as in Spark's
+    WHERE), or is None.
+
+    The values equal Spark's over the same rows in one partition: groups
+    are built in row order (`use_threads=False`), so each float sum adds
+    in row order from 0.0, as Spark's Sum and Average do; mean sums its
+    field as double and divides by the count, as Spark's avg does; min and
+    max keep the first of equal values (0.0 and -0.0), as Greatest and
+    Least do. NaN orders differently in Spark, so the planner only sends
+    NaN-free fields here."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..timeutil import time_bucket_values
+
+    if keep is not None:
+        rows = rows.filter(keep(rows))
+    cols = {"b": time_bucket_values(rows.column(time_col), interval_ns,
+                                    offset_ns)}
+    keys = ["b"]
+    for i, t in enumerate(group_tags):
+        keys.append(f"k{i}")
+        cols[keys[-1]] = rows.column(t)
+    # positional names: no output name can collide with a column's
+    calls = list(dict.fromkeys((fn, f) for _, fn, f in values))
+    aggs = []
+    for j, (fn, f) in enumerate(calls):
+        if fn == "mean":
+            cols[f"v{j}"] = rows.column(f).cast(pa.float64())
+            aggs += [(f"v{j}", "sum"), (f"v{j}", "count")]
+        else:
+            cols[f"v{j}"] = rows.column(f)
+            aggs.append((f"v{j}", fn))
+    out = pa.table(cols).group_by(keys, use_threads=False).aggregate(aggs)
+    done = {}
+    for j, (fn, f) in enumerate(calls):
+        if fn == "mean":
+            done[fn, f] = pc.divide(out[f"v{j}_sum"],
+                                    out[f"v{j}_count"].cast(pa.float64()))
+        else:
+            done[fn, f] = out[f"v{j}_{fn}"]
+    return pa.Table.from_arrays(
+        [out["b"], *[out[k] for k in keys[1:]],
+         *[done[fn, f] for _, fn, f in values]],
+        names=[time_col, *group_tags, *[n for n, _, _ in values]])
+
+
 def is_aggregate(name: str) -> bool:
     return name.lower() in AGGREGATES
 

@@ -13,8 +13,9 @@ built-in equivalent, so this is real engine work (SURVEY.md §4 item 2):
 
 Where the fill runs: a plain aggregate with `GROUP BY time()` whose answer
 the driver collects (/query, not SELECT … INTO, not a subquery), without
-tz(), is finished on the driver. Spark runs only its aggregated frame and
-`fill_collected` fills each collected series over `collected_spine`, with
+tz(), is finished on the driver. Spark runs only its aggregated frame (or
+pyarrow aggregates the rows the driver holds, `aggregates.held_aggregate`)
+and `fill_collected` fills each collected series over `collected_spine`, with
 the same bounds, cap and arithmetic as the plan below (result.FinishSpec
 holds the choice). /query plans no spine for such an answer: the planner
 stops at the aggregated frame and takes the filled columns' types from

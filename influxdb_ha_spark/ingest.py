@@ -194,7 +194,11 @@ def upsert_rows(existing: pa.Table, incoming: pa.Table,
 
     The rows are concatenated old then new, with missing columns filled
     with nulls, and grouped on (time, tags) in input order
-    (`use_threads=False`), keeping each field's last non-null value."""
+    (`use_threads=False`), keeping each field's last non-null value. The
+    merged table becomes the measurement's next held generation
+    (`Measurement.held`): no DataFrame is built over it, and no row
+    crosses to the JVM, until a Spark plan reads it; the reads /query
+    finishes on the driver aggregate it in pyarrow."""
     import pyarrow as pa
 
     both = pa.concat_tables([existing, incoming], promote_options="default")
@@ -216,18 +220,19 @@ class FieldTypeConflict(ValueError):
     first-written type for that field (first-write-wins typing)."""
 
 
-def check_field_types(existing: DataFrame, incoming: pa.Schema,
+def check_field_types(existing: dict[str, str], incoming: pa.Schema,
                       tags: list[str]) -> None:
     """Raise FieldTypeConflict if the incoming Arrow schema sends a field
-    with another type than `existing` holds it as."""
+    with another type than the measurement holds it as. `existing` maps
+    its columns to Spark type names (`Measurement.column_types`, read from
+    a held measurement's Arrow schema)."""
     from pyspark.sql.pandas.types import from_arrow_type
 
-    et = dict(existing.dtypes)
     for c, t in zip(incoming.names, incoming.types):
         if c == TIME_COL or c in tags or c.startswith("__"):
             continue
         t = from_arrow_type(t).simpleString()
-        old = et.get(c)
+        old = existing.get(c)
         if old is not None and old != t:
             raise FieldTypeConflict(
                 f"field {c!r} already exists as {old}, write sends {t}")

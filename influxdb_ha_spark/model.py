@@ -69,40 +69,78 @@ def _is_utc_zone(tz: str | None) -> bool:
 
 @dataclass
 class Measurement:
-    """A measurement: schema roles + a DataFrame provider."""
+    """A measurement: schema roles + a DataFrame provider.
+
+    A measurement born from /write is held by the driver: `rows` is its
+    `pyarrow.Table` and `df`, the LocalRelation over those rows, is built
+    only when first read (once per generation), so a write and a read the
+    driver answers from `rows` never ship the rows to the JVM. `rows` is
+    None for file-backed, Spark-ingested and SELECT … INTO measurements."""
 
     name: str
     database: str
     tags: list[str]
     fields: list[str]
-    df: DataFrame
+    # None when `rows` is given: built from them when first read
+    df: DataFrame | None = field(repr=False)
     retention_policy: str = "autogen"
     path: str | None = None  # physical location when hive-partitioned
-    # The rows of a measurement born from /write, held by the driver; `df`
-    # is then `spark.createDataFrame(rows)`. None for file-backed,
-    # Spark-ingested and SELECT … INTO measurements.
-    rows: pa.Table | None = None
+    rows: pa.Table | None = field(default=None, repr=False)
+    # the session a held measurement's `df` is built in
+    spark: SparkSession | None = field(default=None, repr=False)
+
+    def __post_init__(self):
+        if self.rows is not None and self.df is None:
+            del self.df   # __getattr__ builds it when first read
+
+    def __getattr__(self, name: str):
+        # only reached while a held generation's `df` is not built yet
+        if name != "df" or self.__dict__.get("rows") is None:
+            raise AttributeError(name)
+        df = self.__dict__["df"] = self.spark.createDataFrame(self.rows)
+        return df
 
     @classmethod
     def held(cls, spark: SparkSession, name: str, database: str,
              tags: list[str], rows: pa.Table) -> Measurement:
-        """A measurement whose rows the driver holds; building its
-        DataFrame (a LocalRelation) fires no Spark job."""
+        """A measurement whose rows the driver holds; its DataFrame is
+        built when first read."""
         return cls(name=name, database=database, tags=list(tags),
                    fields=[c for c in rows.column_names
                            if c != TIME_COL and c not in tags],
-                   df=spark.createDataFrame(rows), rows=rows)
+                   df=None, rows=rows, spark=spark)
 
     def hold(self, rows: pa.Table) -> None:
-        """Replace a held measurement's rows and the DataFrame over them."""
+        """Replace a held measurement's rows; the DataFrame over them is
+        built when next read."""
         self.rows = rows
-        self.df = self.df.sparkSession.createDataFrame(rows)
+        self.__dict__.pop("df", None)
+
+    def column_types(self) -> dict[str, str]:
+        """Column name → Spark type name (`DataFrame.dtypes`), read from a
+        held measurement's Arrow schema without building its DataFrame."""
+        if self.rows is None:
+            return dict(self.df.dtypes)
+        from pyspark.sql.pandas.types import from_arrow_type
+        return {f.name: from_arrow_type(f.type).simpleString()
+                for f in self.rows.schema}
 
     def series_df(self) -> DataFrame:
         """SHOW SERIES: distinct tag combinations (importer.go FetchSeries,
-        syncing/series.go:14-29 — `measurement,tag1=v1,...` keys)."""
+        syncing/series.go:14-29 — `measurement,tag1=v1,...` keys). A held
+        measurement answers from its rows as a VALUES relation."""
+        spark = self.spark if self.rows is not None else self.df.sparkSession
         if not self.tags:
-            return local_result(self.df.sparkSession, [(self.name,)],
+            return local_result(spark, [(self.name,)], [("key", "STRING")])
+        if self.rows is not None and set(self.tags) <= set(
+                self.rows.column_names):
+            combos = self.rows.select(self.tags).group_by(
+                self.tags, use_threads=False).aggregate([]).to_pylist()
+            # concat_ws skips a null tag's value: the part is the bare key
+            keys = sorted(",".join([self.name] + [
+                t if c[t] is None else f"{t}={c[t]}" for t in self.tags])
+                for c in combos)
+            return local_result(spark, [(k,) for k in keys],
                                 [("key", "STRING")])
         key = F.concat_ws(",", F.lit(self.name), *[
             F.concat_ws("=", F.lit(t), F.col(t)) for t in self.tags])
@@ -232,7 +270,7 @@ class Catalog:
         for name, m in sorted(self.databases.get(database, {}).items()):
             if measurement and name != measurement:
                 continue
-            dtypes = dict(m.df.dtypes)
+            dtypes = m.column_types()
             rows += [(name, f, dtypes.get(f, "unknown")) for f in m.fields]
         return local_result(self.spark, rows,
                             [("measurement", "STRING"), ("fieldKey", "STRING"),
@@ -242,6 +280,12 @@ class Catalog:
         # the distinct values are few (a tag's cardinality): gathered into
         # one partition, the sort needs no range-partitioner sampling job
         m = self.get(database, measurement)
+        if m.rows is not None and m.column_types().get(tag) == "string":
+            # held: the distinct values as a VALUES relation, nulls first
+            values = m.rows.column(tag).unique().to_pylist()
+            values.sort(key=lambda v: (v is not None, v))
+            return local_result(self.spark, [(tag, v) for v in values],
+                                [("key", "STRING"), ("value", "STRING")])
         return (m.df.select(F.lit(tag).alias("key"), F.col(tag).alias("value"))
                 .distinct().coalesce(1).orderBy("value"))
 

@@ -22,11 +22,13 @@ from __future__ import annotations
 
 import time as _time
 from dataclasses import dataclass, replace
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .functions.aggregates import AGGREGATES, agg_column
+from .functions.aggregates import (AGGREGATES, ARROW_AGGREGATES, agg_column,
+                                   held_aggregate)
 from .functions.fill import checked_spine_size, fill_buckets, fill_values
 from .functions.math import MATH_FUNCS, apply_math, binary_op
 from .functions import transforms as T
@@ -61,6 +63,12 @@ _SEQUENTIAL_TRANSFORMS = {"holt_winters", "holt_winters_with_fit",
 _INTEGRAL_TYPES = {"long", "integer", "short", "byte"}
 _NUMERIC_TYPES = _INTEGRAL_TYPES | {"double"}
 _SCALAR_TYPES = _NUMERIC_TYPES | {"string", "boolean"}
+_INT64 = (-2**63, 2**63 - 1)
+
+_FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
+# WHERE comparisons → pyarrow.compute kernels (held rows)
+_ARROW_CMP = {"=": "equal", "!=": "not_equal", "<": "less",
+              "<=": "less_equal", ">": "greater", ">=": "greater_equal"}
 
 
 # Re-exported from errors.py so existing `from .planner import QueryError`
@@ -84,6 +92,34 @@ class PlanContext:
     spine_groups: DataFrame | None = None
     # set when the driver finishes the answer from its aggregated frame
     finish: FinishSpec | None = None
+
+
+def _held_type(rows, name: str) -> str | None:
+    """The Spark type name of column `name` of held rows ("string",
+    "long", "double", "boolean"), or None for a missing column or one
+    whose name another column's equals up to case (Spark resolves names
+    case-insensitively)."""
+    import pyarrow as pa
+
+    low = name.lower()
+    if name not in rows.column_names or sum(
+            c.lower() == low for c in rows.column_names) != 1:
+        return None
+    typ = rows.schema.field(name).type
+    return {pa.string(): "string", pa.int64(): "long",
+            pa.float64(): "double", pa.bool_(): "boolean"}.get(typ, str(typ))
+
+
+def _held_ordered(rows, name: str) -> bool:
+    """Whether pyarrow orders column `name` of held rows as Spark does: a
+    BIGINT, or a DOUBLE without NaN (Spark orders NaN above every number
+    and equal to itself)."""
+    import pyarrow.compute as pc
+
+    typ = _held_type(rows, name)
+    return typ == "long" or (
+        typ == "double"
+        and not pc.any(pc.is_nan(rows.column(name))).as_py())
 
 
 class Planner:
@@ -118,6 +154,12 @@ class Planner:
         ctx = PlanContext(measurement=m, now_ns=self.now_ns,
                           to_driver=not nested and stmt.into is None,
                           answer=answer)
+        # decided before any Spark Column is built: a statement answered
+        # from held rows needs no DataFrame, no py4j call and no job
+        held = (self._held_finish(stmt, m, ctx, db)
+                if ctx.to_driver and m.rows is not None else None)
+        if held is not None and answer:
+            return held
 
         df = m.df
         if stmt.where is not None:
@@ -176,7 +218,9 @@ class Planner:
             # per-node LIMIT semantics (query_merge.go:86-92, SURVEY §2.6)
             out = out.limit(stmt.limit)
         if ctx.finish is not None:
-            attach_finish(out, ctx.finish)
+            # the full plan of an answer from held rows carries the same
+            # Arrow computation as the answer
+            attach_finish(out, held or ctx.finish)
         return out
 
     def _unknown_refs(self, stmt: SelectStatement,
@@ -184,7 +228,7 @@ class Planner:
         """Field/tag names referenced in the SELECT list that the
         measurement does not have (time/tags/fields)."""
         known = set(m.tags) | set(m.fields) | {TIME_COL}
-        known |= set(m.df.columns)
+        known |= set(m.column_types())
         out: set[str] = set()
 
         def walk(e):
@@ -238,7 +282,7 @@ class Planner:
             if isinstance(e, Call) and e.args and isinstance(e.args[0], Wildcard):
                 numeric = {"int", "bigint", "smallint", "tinyint",
                            "float", "double", "decimal"}
-                dtypes = dict(m.df.dtypes)
+                dtypes = m.column_types()
                 flds = [fl for fl in m.fields
                         if dtypes.get(fl, "").split("(")[0] in numeric] \
                     if e.name != "count" else m.fields
@@ -348,11 +392,8 @@ class Planner:
         agg_exprs: dict[str, Column] = {}
         outer_transforms: list[tuple[str, Call, str]] = []
         post_fields: list[tuple[str, object]] = []  # (output name, expr)
-        used: dict[str, int] = {}  # duplicate unaliased names → _N suffix,
-        reserved = {f.alias for f in stmt.fields if f.alias}
-        for i, f in enumerate(stmt.fields):        # as in the raw-multi path
-            name = self._uniq_name(f.alias or self._default_name(f.expr),
-                                   f.alias is not None, used, reserved)
+        for i, (f, name) in enumerate(zip(stmt.fields,
+                                          self._field_names(stmt))):
             expr = f.expr
             if isinstance(expr, Call) and expr.name in TRANSFORMS and \
                     self._has_inner_agg(expr):
@@ -470,6 +511,17 @@ class Planner:
                                                   TIME_COL, group_tags))
             planned_t = {f.name: f.dataType.typeName()
                          for f in filled.schema.fields}
+        return self._spec(stmt, bucketed, group_tags, value_names, tr,
+                          bucketed_t, planned_t)
+
+    @staticmethod
+    def _spec(stmt: SelectStatement, aggregated, group_tags: list[str],
+              value_names: list[str], tr: tuple[int | None, int | None],
+              bucketed_t: dict, planned_t: dict) -> FinishSpec | None:
+        """The FinishSpec over `aggregated`, given each value column's
+        aggregated and filled type (Spark type names): a cast where the
+        fill makes an integer aggregate DOUBLE, and the fill literal in
+        the filled type; None when the finisher cannot reproduce it."""
         literal = (isinstance(stmt.fill, (int, float))
                    and not isinstance(stmt.fill, bool))
         casts, literals = [], []
@@ -492,13 +544,126 @@ class Planner:
             else:
                 return None
         return FinishSpec(
-            aggregated=bucketed, group_tags=tuple(group_tags),
+            aggregated=aggregated, group_tags=tuple(group_tags),
             value_cols=tuple(value_names), casts=tuple(casts),
             fill_values=tuple(literals), fill=stmt.fill,
             interval_ns=stmt.group_by_time_ns,
             offset_ns=stmt.group_by_offset_ns, start_ns=tr[0], end_ns=tr[1],
             order_desc=bool(stmt.order_desc), offset=stmt.offset or 0,
             limit=stmt.limit, soffset=stmt.soffset, slimit=stmt.slimit)
+
+    def _held_finish(self, stmt: SelectStatement, m: Measurement,
+                     ctx: PlanContext, db: str) -> FinishSpec | None:
+        """The FinishSpec of a statement answered from a held measurement's
+        rows in pyarrow (`held_aggregate`, run when the answer is
+        collected), or None to plan it in Spark.
+
+        It takes a plain `GROUP BY time()` aggregate the driver collects,
+        without tz(), whose select fields are each a bare count, sum, mean,
+        min or max of a field (ARROW_AGGREGATES), whose WHERE `_held_where`
+        takes, and whose group keys are string tags. Every fill is
+        finished as `_finish_spec` finishes it; the filled types follow
+        Spark's coercion of the fill expression over a BIGINT or DOUBLE
+        aggregate (fill(linear) and a float literal make it DOUBLE; an
+        integer literal keeps the type)."""
+        rows = m.rows
+        fill = stmt.fill
+        literal = isinstance(fill, (int, float)) and not isinstance(fill, bool)
+        if (not stmt.group_by_time_ns or stmt.group_by_time_ns <= 0
+                or stmt.tz or _held_type(rows, TIME_COL) != "long"
+                or rows.column(TIME_COL).null_count
+                or not (literal or fill in (None, "null", "none", "previous",
+                                            "linear"))
+                or (literal and isinstance(fill, int)
+                    and not _INT64[0] <= fill <= _INT64[1])):
+            return None
+        group_tags = self._expand_tags(stmt.group_by_tags, m)
+        if any(t not in m.tags or _held_type(rows, t) != "string"
+               for t in group_tags):
+            return None
+        stmt = self._expand_wildcard_calls(stmt, m)
+        if self._unknown_refs(stmt, m):
+            return None
+        values, types = [], []
+        for f, name in zip(stmt.fields, self._field_names(stmt)):
+            e = f.expr
+            if not (isinstance(e, Call) and e.name in ARROW_AGGREGATES
+                    and len(e.args) == 1 and isinstance(e.args[0], VarRef)):
+                return None
+            field = e.args[0].name
+            typ = _held_type(rows, field)
+            if typ is None or (ARROW_AGGREGATES[e.name]
+                               and typ not in ("long", "double")) \
+                    or (e.name in ("min", "max")
+                        and not _held_ordered(rows, field)):
+                return None
+            values.append((name, e.name, field))
+            types.append("long" if e.name == "count"
+                         else "double" if e.name == "mean" else typ)
+        value_names = [n for n, _, _ in values]
+        if len({TIME_COL, *group_tags, *value_names}) \
+                != 1 + len(group_tags) + len(values):
+            return None
+        tracked = replace(ctx)
+        keep = None
+        if stmt.where is not None:
+            keep = self._held_where(stmt.where, tracked, rows)
+            if keep is None:
+                return None
+        ctx.start_ns, ctx.end_ns = tracked.start_ns, tracked.end_ns
+        if self.strict_partition_key:
+            self._check_partition_key(stmt, db, m)
+        tr = (ctx.start_ns, ctx.end_ns)
+        if fill != "none" and None not in tr:
+            checked_spine_size(tr[0], tr[1], stmt.group_by_time_ns,
+                               stmt.group_by_offset_ns)
+        as_double = fill == "linear" or isinstance(fill, float)
+        return self._spec(
+            stmt, partial(held_aggregate, rows, keep, TIME_COL,
+                          stmt.group_by_time_ns, stmt.group_by_offset_ns,
+                          group_tags, values),
+            group_tags, value_names, tr, dict(zip(value_names, types)),
+            {c: "double" if as_double else t
+             for c, t in zip(value_names, types)})
+
+    def _held_where(self, expr, ctx: PlanContext, rows):
+        """WHERE over held rows: a function of a `pyarrow.Table` to the
+        boolean mask Spark's WHERE gives (null where Spark's is null), or
+        None when `expr` is outside what pyarrow answers the same way.
+
+        It takes AND/OR (Kleene, three-valued like Spark's) of time
+        comparisons and of a tag or field compared with a literal of its
+        kind: a string with a string, a BIGINT or DOUBLE with a number.
+        Time bounds are tracked on `ctx` as `_where_expr` tracks them
+        (`_time_bound`). Regexes, field math and mixed-type comparisons
+        are left to Spark."""
+        import pyarrow.compute as pc
+
+        if not isinstance(expr, BinaryExpr):
+            return None
+        if expr.op in ("AND", "OR"):
+            left = self._held_where(expr.lhs, ctx, rows)
+            right = left and self._held_where(expr.rhs, ctx, rows)
+            if right is None:
+                return None
+            both = pc.and_kleene if expr.op == "AND" else pc.or_kleene
+            return lambda t: both(left(t), right(t))
+        lhs, op, rhs = self._oriented(expr)
+        if op not in _ARROW_CMP or not isinstance(lhs, VarRef):
+            return None
+        if lhs.name.lower() == "time":
+            col, val = TIME_COL, self._time_bound(op, rhs, ctx)
+        else:
+            col, val = lhs.name, getattr(rhs, "value", None)
+            if not ((isinstance(rhs, StringLit)
+                     and _held_type(rows, col) == "string")
+                    or (isinstance(rhs, (NumberLit, IntegerLit))
+                        and _held_ordered(rows, col))):
+                return None
+        if isinstance(val, int) and not _INT64[0] <= val <= _INT64[1]:
+            return None
+        cmp = getattr(pc, _ARROW_CMP[op])
+        return lambda t: cmp(t.column(col), val)
 
     def _apply_transform(self, out: DataFrame, texpr: Call, inner_col: str,
                          tname: str, group_tags: list[str],
@@ -635,11 +800,7 @@ class Planner:
                     "transforms in one SELECT")
         keys = [TIME_COL] + group_tags
         out = None
-        used: dict[str, int] = {}
-        reserved = {f.alias for f in stmt.fields if f.alias}
-        for f in stmt.fields:
-            uniq = self._uniq_name(f.alias or self._default_name(f.expr),
-                                   f.alias is not None, used, reserved)
+        for f, uniq in zip(stmt.fields, self._field_names(stmt)):
             s1 = copy.copy(stmt)
             s1.fields = [type(f)(expr=f.expr, alias=uniq)]
             o = self._plan_transform_raw(s1, df, m, group_tags, ctx)
@@ -881,6 +1042,15 @@ class Planner:
             return expr.name
         return "expr"
 
+    def _field_names(self, stmt: SelectStatement) -> list[str]:
+        """The output name of each select field: its alias, or its default
+        name with the _N suffix InfluxDB appends to a repeated one."""
+        used: dict[str, int] = {}
+        reserved = {f.alias for f in stmt.fields if f.alias}
+        return [self._uniq_name(f.alias or self._default_name(f.expr),
+                                f.alias is not None, used, reserved)
+                for f in stmt.fields]
+
     @staticmethod
     def _uniq_name(name: str, is_alias: bool, used: dict,
                    reserved: set) -> str:
@@ -910,12 +1080,28 @@ class Planner:
             return self._comparison(expr, ctx)
         raise QueryError(f"unsupported WHERE expression: {expr!r}")
 
-    def _comparison(self, expr: BinaryExpr, ctx: PlanContext) -> Column:
+    @staticmethod
+    def _oriented(expr: BinaryExpr) -> tuple:
+        """(lhs, op, rhs) of a comparison, a field or tag moved left."""
         lhs, rhs, op = expr.lhs, expr.rhs, expr.op
         if isinstance(rhs, VarRef) and not isinstance(lhs, VarRef):
-            lhs, rhs = rhs, lhs
-            flip = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
-            op = flip.get(op, op)
+            return rhs, _FLIP.get(op, op), lhs
+        return lhs, op, rhs
+
+    def _time_bound(self, op: str, rhs, ctx: PlanContext) -> int:
+        """The ns of `time <op> rhs`; narrows the query time range that
+        fill spines use (ctx.start_ns / ctx.end_ns)."""
+        ns = self._time_value_ns(rhs, ctx)
+        if op in (">", ">="):
+            s = ns + (1 if op == ">" else 0)
+            ctx.start_ns = max(ctx.start_ns, s) if ctx.start_ns is not None else s
+        elif op in ("<", "<="):
+            e = ns + (1 if op == "<=" else 0)
+            ctx.end_ns = min(ctx.end_ns, e) if ctx.end_ns is not None else e
+        return ns
+
+    def _comparison(self, expr: BinaryExpr, ctx: PlanContext) -> Column:
+        lhs, op, rhs = self._oriented(expr)
         if not isinstance(lhs, VarRef):
             # field arithmetic in WHERE: `value * 2 > 100`, abs(value) < n…
             # — both sides through the scalar expression builder (influxql
@@ -926,17 +1112,8 @@ class Planner:
             raise QueryError(f"unsupported comparison: {expr!r}")
 
         if lhs.name.lower() == "time":
-            ns = self._time_value_ns(rhs, ctx)
-            col = F.col(TIME_COL)
-            out = self._cmp(col, op, F.lit(ns))
-            # track the query time range for fill spines
-            if op in (">", ">="):
-                s = ns + (1 if op == ">" else 0)
-                ctx.start_ns = max(ctx.start_ns, s) if ctx.start_ns is not None else s
-            elif op in ("<", "<="):
-                e = ns + (1 if op == "<=" else 0)
-                ctx.end_ns = min(ctx.end_ns, e) if ctx.end_ns is not None else e
-            return out
+            return self._cmp(F.col(TIME_COL), op,
+                             F.lit(self._time_bound(op, rhs, ctx)))
 
         col = F.col(lhs.name)
         if isinstance(rhs, RegexLit):

@@ -10,15 +10,24 @@ This is a presentation layer over a bounded result, and the answer is
 collected here in one of two ways before one shaper builds the JSON:
 
 - a plain aggregate with `GROUP BY time()` whose answer the driver collects
-  carries a `FinishSpec` (attached by the planner). Spark runs only its
-  aggregated frame (WHERE plus GROUP BY), collected with `toArrow()`: one
-  job over a source read as one split, two otherwise (its shuffle stage
-  and the result stage). /query plans nothing past that frame. The
-  driver fills each series' buckets (`functions/fill.fill_collected`),
-  resolves open bounds from the collected buckets, and applies SLIMIT/
-  SOFFSET, ORDER BY time and OFFSET/LIMIT. This is the reference's
-  coordinator shaping the merged per-node answers in-process
-  (coordinator.go:131-158, merge/query_merge.go:106-209);
+  has a `FinishSpec` (built by the planner). Its aggregated rows (WHERE
+  plus GROUP BY) come from one of two places:
+  - over a measurement the driver holds (`Measurement.rows`, born from
+    /write) and a statement pyarrow answers as Spark does, they are
+    aggregated in pyarrow from those rows when collected
+    (`functions/aggregates.held_aggregate`): /query then builds no
+    DataFrame, makes no py4j call and runs no Spark job, and its answer
+    is the FinishSpec itself;
+  - otherwise Spark runs only the aggregated frame, collected with
+    `toArrow()`: one job over a source read as one split, two otherwise
+    (its shuffle stage and the result stage). /query plans nothing past
+    that frame.
+  Either way the driver then fills each series' buckets
+  (`functions/fill.fill_collected`), resolves open bounds from the
+  collected buckets, and applies SLIMIT/SOFFSET, ORDER BY time and
+  OFFSET/LIMIT. This is the reference's coordinator re-aggregating and
+  shaping the merged per-node answers in-process (coordinator.go:131-158,
+  196-237; merge/query_merge.go:106-209);
 - every other DataFrame is collected whole with `collect()`, after the
   engine has applied its LIMITs in the plan.
 """
@@ -29,11 +38,15 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from itertools import islice
 from operator import itemgetter
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
 
 from .functions.fill import collected_spine, fill_collected
 from .timeutil import PRECISIONS
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def _sql_lit(v, typ: str) -> str:
@@ -73,8 +86,9 @@ def local_result(spark, rows, schema: list[tuple[str, str]]) -> DataFrame:
       count, the CQ / retention-policy / subscription / user / grant
       statements and the DDL acknowledgements;
     - model.Catalog: SHOW DATABASES / MEASUREMENTS / TAG KEYS / FIELD
-      KEYS, an empty SHOW SERIES, and Measurement.series_df of a tagless
-      measurement;
+      KEYS, an empty SHOW SERIES, Measurement.series_df of a tagless
+      measurement, and SHOW SERIES / TAG VALUES of a measurement the
+      driver holds (answered from its rows);
     - admin.AdminHandler: SHOW PARTITION KEYS, SHOW NODES, SHOW
       REPLICATION FACTORS, SHOW USERS, BACKUP's export list and the
       empty acknowledgements;
@@ -105,13 +119,18 @@ def _format_time(ns: int, epoch: str | None):
 @dataclass(frozen=True)
 class FinishSpec:
     """How the driver finishes a collected `GROUP BY time()` answer from
-    its aggregated frame. Built by `Planner.plan`, which attaches it to
-    the full Spark plan (EXPLAIN, SELECT … INTO, subqueries and the
-    contract keys run that one) or, asked for /query's answer plan, to
-    the aggregated frame itself."""
-    # time, group tags, value columns; over a one-split source it is
-    # aggregated in one partition (one job)
-    aggregated: DataFrame
+    its aggregated rows. Built by `Planner.plan`, which attaches it to the
+    full Spark plan (EXPLAIN, SELECT … INTO, subqueries and the contract
+    keys run that one). Asked for /query's answer plan, the planner
+    attaches it to the aggregated frame itself, or, for an answer from
+    held rows, returns the spec as the answer.
+
+    `columns` are the answer's columns, as a DataFrame's are."""
+    # the aggregated rows (time, group tags, value columns): a DataFrame,
+    # collected with toArrow() (over a one-split source it aggregates in
+    # one partition: one job), or the pyarrow aggregation of a held
+    # measurement's rows, run when collected
+    aggregated: DataFrame | Callable[[], pa.Table]
     group_tags: tuple[str, ...]
     value_cols: tuple[str, ...]
     # per value column, from the filled columns' types: a cast for the
@@ -130,6 +149,10 @@ class FinishSpec:
     soffset: int | None
     slimit: int | None
 
+    @property
+    def columns(self) -> list[str]:
+        return ["time", *self.group_tags, *self.value_cols]
+
 
 _FINISH = "_influx_finish"
 
@@ -147,10 +170,12 @@ def _tag_order(key: tuple) -> tuple:
 
 
 def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
-    """The answer rows of `spec`: the aggregated frame is Spark's last
-    step; fill, bounds, SLIMIT, ORDER BY time and OFFSET/LIMIT run here,
-    in the planner's order."""
-    tbl = spec.aggregated.toArrow()
+    """The answer rows of `spec`: the aggregated rows are collected
+    (Spark's last step, or pyarrow's over held rows); fill, bounds,
+    SLIMIT, ORDER BY time and OFFSET/LIMIT run here, in the planner's
+    order."""
+    agg = spec.aggregated
+    tbl = agg.toArrow() if isinstance(agg, DataFrame) else agg()
     times = tbl.column("time").to_pylist()
     keys = (list(zip(*[tbl.column(t).to_pylist() for t in spec.group_tags]))
             if spec.group_tags else [()] * len(times))
@@ -191,25 +216,26 @@ def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
             v = tuple(x if c is None or x is None else c(x)
                       for x, c in zip(v, casts))
         out.append((t,) + k + v)
-    return ["time", *spec.group_tags, *spec.value_cols], out
+    return spec.columns, out
 
 
-def collect_rows(df: DataFrame) -> tuple[list[str], list[tuple]]:
-    """The columns and rows of an answer: finished on the driver when the
-    planner attached a FinishSpec, else the collected plan."""
-    spec = df.__dict__.get(_FINISH)
+def collect_rows(df: DataFrame | FinishSpec) -> tuple[list[str], list[tuple]]:
+    """The columns and rows of an answer: finished on the driver when it
+    is a FinishSpec or the planner attached one, else the collected
+    plan."""
+    spec = df if isinstance(df, FinishSpec) else df.__dict__.get(_FINISH)
     if spec is not None:
         return _finished_rows(spec)
     return df.columns, df.collect()
 
 
-def to_influx_series(df: DataFrame, measurement: str,
+def to_influx_series(df: DataFrame | FinishSpec, measurement: str,
                      tag_cols: list[str] | None = None,
                      epoch: str | None = None,
                      statement_id: int = 0,
                      messages: list[tuple[str, str]] | None = None) -> dict:
-    """Collect a result DataFrame and shape it into the InfluxDB JSON
-    result object."""
+    """Collect an answer (a DataFrame, or a FinishSpec) and shape it into
+    the InfluxDB JSON result object."""
     columns, rows = collect_rows(df)
     return shape_series(columns, rows, measurement, tag_cols, epoch,
                         statement_id, messages)

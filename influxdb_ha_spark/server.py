@@ -22,6 +22,7 @@ import re
 import time
 from contextlib import ExitStack
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,7 +33,7 @@ from .influxql.clusterql import is_admin_statement
 from .influxql.parser import parse_query
 from .model import Catalog, Measurement
 from .planner import Planner, QueryError
-from .result import empty_result, local_result, to_influx_series
+from .result import FinishSpec, empty_result, local_result, to_influx_series
 from .streaming.cq import ContinuousQuery, CQRunner
 
 # routing.go:113-119 rejects DropShard/ShowShards/ShowStats/ShowDiagnostics/
@@ -140,9 +141,11 @@ class Engine:
 
     # -- the /query surface --------------------------------------------------
     def query_df(self, q: str, database: str | None = None,
-                 answer: bool = False) -> DataFrame:
+                 answer: bool = False) -> DataFrame | FinishSpec:
         """The DataFrame of one statement: the full plan, or with `answer`
-        the plan `query` collects (Planner.plan's `answer`)."""
+        the plan `query` collects (Planner.plan's `answer`; for an answer
+        from a measurement the driver holds, a FinishSpec and no
+        DataFrame)."""
         db = database or self.database
         if _REJECTED.match(q):
             # routing.go:113-119 → 400
@@ -262,18 +265,19 @@ class Engine:
                               "group": group}
         sc.setJobGroup(group, q[:120], interruptOnCancel=True)
         try:
-            df = self.query_df(q, database, answer=True)
-            rows = df.columns
-            if not rows:
+            # a DataFrame, or a FinishSpec answered from held rows
+            answer = self.query_df(q, database, answer=True)
+            columns = answer.columns
+            if not columns:
                 return empty_result()
             measurement = self._measurement_of(q) or ""
             tag_cols = []
             try:
                 m = self.catalog.get(database or self.database, measurement)
-                tag_cols = [t for t in m.tags if t in df.columns]
+                tag_cols = [t for t in m.tags if t in columns]
             except KeyError:
                 pass
-            return to_influx_series(df, measurement, tag_cols, epoch)
+            return to_influx_series(answer, measurement, tag_cols, epoch)
         except Exception as e:
             # an open-bounded fill's in-plan spine cap fails the Spark job;
             # answer it with the bounded path's QueryError
@@ -503,8 +507,11 @@ class Engine:
         Each target is changed under its `Catalog.write_lock`, so a
         concurrent /write cannot merge into the generation before the
         delete and register over it. A measurement held by the driver
-        re-collects its remaining rows here: one Spark job per DELETE with
-        WHERE, none per later write."""
+        filters its rows in pyarrow with the WHERE mask /query uses
+        (`Planner._held_where`), so a DELETE runs no Spark job. A WHERE
+        outside that mask's subset (a regex, field math) is planned in
+        Spark, and the measurement is no longer held: later writes upsert
+        it lazily, like a file-backed one."""
         if name.startswith("/") and name.endswith("/") and len(name) > 1:
             rx = re.compile(name[1:-1])
             names = [n for n in sorted(self.catalog.databases.get(db, {}))
@@ -528,14 +535,17 @@ class Engine:
                     else:
                         meas.hold(meas.rows.slice(0, 0))
                     continue
-                hit = planner._where_expr(expr, PlanContext(meas,
-                                                            planner.now_ns))
+                ctx = PlanContext(meas, planner.now_ns)
                 # a point WHERE does not match (a null tag compared) stays
-                kept = meas.df.where(~F.coalesce(hit, F.lit(False)))
-                if meas.rows is None:
-                    meas.df = kept
-                else:
-                    meas.hold(kept.toArrow().cast(meas.rows.schema))
+                hit = (planner._held_where(expr, ctx, meas.rows)
+                       if meas.rows is not None else None)
+                if hit is not None:
+                    drop = pc.fill_null(hit(meas.rows), False)
+                    meas.hold(meas.rows.filter(pc.invert(drop)))
+                    continue
+                hit = planner._where_expr(expr, ctx)
+                meas.df = meas.df.where(~F.coalesce(hit, F.lit(False)))
+                meas.rows = None
 
     @staticmethod
     def _measurement_of(q: str) -> str | None:
@@ -579,12 +589,14 @@ def write_lines(engine: Engine, database: str, body: str,
     into the same old generation and drop each other's points.
 
     Generations: a measurement born from /write is held by the driver:
-    `Measurement.rows` is a `pyarrow.Table` and its DataFrame the
-    LocalRelation over it. A write into it merges in Arrow on the driver
-    (`ingest.upsert_rows`, the `upsert_points` rule) and builds one
-    DataFrame, the merged generation's, so it fires no Spark job; a read
-    scans a flat relation whose plan does not grow with the number of
-    writes, and no generation depends on executor storage. Any other
+    `Measurement.rows` is a `pyarrow.Table`. A write into it merges in
+    Arrow on the driver (`ingest.upsert_rows`, the `upsert_points` rule)
+    and builds no DataFrame (the LocalRelation over the rows is built
+    only when a Spark plan first reads them), so it fires no Spark job
+    and ships no rows to the JVM. A /query the driver finishes reads the
+    rows in pyarrow too (`Planner._held_finish`); any other read scans a
+    flat relation whose plan does not grow with the number of writes,
+    and no generation depends on executor storage. Any other
     measurement (file-backed, ingested by Spark, a SELECT … INTO target)
     is upserted lazily with `upsert_points`, so a write does not shuffle
     or copy the whole table and its scans keep pruning and pushdown. A
@@ -633,7 +645,7 @@ def _merge_and_register(engine: Engine, database: str,
         if old is not None:
             tags = sorted(set(old.tags) | set(tag_keys))
             try:
-                check_field_types(old.df, table.schema, tags)
+                check_field_types(old.column_types(), table.schema, tags)
             except FieldTypeConflict as e:
                 raise WriteError(str(e))  # first-write-wins typing
         staged.append((name, tags, old, table))

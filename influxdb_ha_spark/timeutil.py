@@ -92,6 +92,16 @@ def time_bucket(time_col: Column, interval_ns: int, offset_ns: int = 0) -> Colum
     return (shifted - _pmod(shifted, interval_ns)) + F.lit(offset_ns)
 
 
+def time_bucket_values(times, interval_ns: int, offset_ns: int = 0):
+    """`time_bucket` over a null-free int64 Arrow column on the driver:
+    the same floor toward −∞ (negative times, offsets), in the same
+    wrapping int64 arithmetic (numpy's `%` takes the divisor's sign, as
+    `pmod` does for a positive interval)."""
+    import pyarrow as pa
+    shifted = times.to_numpy() - offset_ns
+    return pa.array(shifted - shifted % interval_ns + offset_ns)
+
+
 def _pmod(col: Column, divisor: int) -> Column:
     return F.pmod(col, F.lit(divisor))
 

@@ -10,7 +10,10 @@ shaper; the JSON must be identical byte for byte. Statements that keep
 the Spark spine (tz(), outer transforms, row selectors, raw selects,
 SELECT … INTO, subqueries) must carry no spec. Every contract `iq_*`
 statement the finisher takes is also answered through `Engine.query` and
-compared with its full plan.
+compared with its full plan. Over rows the driver holds (a measurement
+born from /write) the aggregated rows come from pyarrow instead of Spark;
+those answers are compared with the same rows registered as a DataFrame
+that is not held.
 """
 
 from __future__ import annotations
@@ -327,3 +330,159 @@ def test_contract_query_matches_full_plan(contract_engine, key):
     got = contract_engine.query(q, epoch="ns")
     assert got["results"][0]["series"], key
     assert json.dumps(got) == json.dumps(want)
+
+
+# -- answers from rows the driver holds (pyarrow, no Spark job) --------------
+
+
+def _held_engines(spark, rows):
+    """Two engines over the same rows: one holds them (a measurement born
+    from /write), the other registers them as a DataFrame it does not
+    hold, so every statement is planned in Spark."""
+    from influxdb_ha_spark.model import Measurement
+    tags = ["host", "dc"]
+    held, plain = Catalog(spark), Catalog(spark)
+    held.register(Measurement.held(spark, "m", "db", tags, rows))
+    plain.register(Measurement(name="m", database="db", tags=tags,
+                               fields=["i", "v"],
+                               df=spark.createDataFrame(rows), rows=None))
+    return (Engine(held, database="db", now_ns=NOW),
+            Engine(plain, database="db", now_ns=NOW))
+
+
+def _table(points):
+    import pyarrow as pa
+    schema = pa.schema([("time", pa.int64()), ("host", pa.string()),
+                        ("dc", pa.string()), ("i", pa.int64()),
+                        ("v", pa.float64())])
+    cols = list(zip(*points)) if points else [[]] * len(schema)
+    return pa.Table.from_arrays([pa.array(c, type=t)
+                                 for c, t in zip(cols, schema.types)],
+                                schema=schema)
+
+
+POINTS = st.lists(st.tuples(
+    st.integers(-5 * H, 15 * H),                  # negative times too
+    st.sampled_from(["a", "b", None]), st.sampled_from(["x", "y", None]),
+    st.one_of(st.none(), st.integers(-1000, 1000)),
+    st.one_of(st.none(), st.floats(-1e6, 1e6))), max_size=30)
+AGG = st.sampled_from(["count", "sum", "mean", "min", "max"])
+HELD_WHERE = ["", CLOSED, f"time >= {-3 * H + 7}", f"time <= {6 * H}",
+              "time < now()", f"time >= {50 * H} AND time < {60 * H}",
+              f"time > {-H} AND host = 'a'", "host != 'b'",
+              "host = 'a' OR dc = 'y'", f"(host = 'b' OR v > 0) AND time < {H}",
+              "i <= 3", "10 > v OR i = 7", "v >= -2.5 AND dc < 'y'",
+              "i > 2.5", "v != 3"]
+HELD_FILLS = ["", "fill(none)", "fill(null)", "fill(previous)",
+              "fill(linear)", "fill(0)", "fill(1.5)", "fill(-2)"]
+
+
+@settings(max_examples=60, deadline=None)
+@given(points=POINTS,
+       calls=st.lists(st.tuples(AGG, st.sampled_from(["i", "v"]),
+                                st.booleans()), min_size=1, max_size=3),
+       where=st.sampled_from(HELD_WHERE), fill=st.sampled_from(HELD_FILLS),
+       group=st.sampled_from(["", ", host", ", dc", ", *"]),
+       interval=st.sampled_from(["1h", "2h, 30m", "45m", "3h, 100m"]),
+       desc=st.booleans(),
+       limit=st.sampled_from(["", "LIMIT 4", "LIMIT 3 OFFSET 2"]),
+       slimit=st.sampled_from(["", "SLIMIT 2", "SLIMIT 1 SOFFSET 1"]))
+def test_held_answer_matches_spark(spark, points, calls, where, fill, group,
+                                   interval, desc, limit, slimit):
+    """/query over held rows (pyarrow, finished on the driver) answers
+    byte for byte like the same rows planned in Spark: every aggregate,
+    WHERE shape and fill of the subset, with negative times, offsets,
+    null tags and fields, int and double fields, empty windows,
+    SLIMIT/SOFFSET and ORDER BY time DESC."""
+    from influxdb_ha_spark.result import FinishSpec
+    held, plain = _held_engines(spark, _table(points))
+    fields = ", ".join(f"{fn}({f})" + (f" AS {fn}_{f}_{k}" if alias else "")
+                       for k, (fn, f, alias) in enumerate(calls))
+    order = "ORDER BY time DESC" if desc else ""
+    cond = f"WHERE {where}" if where else ""
+    q = (f"SELECT {fields} FROM m {cond} GROUP BY time({interval}){group} "
+         f"{fill} {order} {limit} {slimit}")
+    assert isinstance(held.query_df(q, answer=True), FinishSpec), q
+    assert not isinstance(plain.query_df(q, answer=True), FinishSpec), q
+    for epoch in ("ns", None):
+        assert json.dumps(held.query(q, epoch=epoch)) == json.dumps(
+            plain.query(q, epoch=epoch)), q
+
+
+NAN_POINTS = [(H, "a", "x", 1, float("nan")), (2 * H, "b", "y", 2, 4.0),
+              (2 * H + 5, "a", None, None, -0.0), (3 * H, None, "x", 3, 0.0)]
+
+
+@pytest.mark.parametrize("q", [
+    # outside the subset: planned in Spark
+    f"SELECT max(v) FROM m WHERE host =~ /a/ AND {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h) fill(0) "
+    "tz('America/New_York')",
+    f"SELECT percentile(i, 50) FROM m WHERE {CLOSED} GROUP BY time(1h)",
+    f"SELECT count(distinct(i)) FROM m WHERE {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(i) * 2 FROM m WHERE {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(i) FROM m WHERE i * 2 > 3 AND {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(i) FROM m WHERE host = 1 AND {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(i) FROM m WHERE i = 'a' AND {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(i) FROM m WHERE {CLOSED} GROUP BY time(1h), i",
+    f"SELECT sum(host) FROM m WHERE {CLOSED} GROUP BY time(1h)",
+    f"SELECT max(i) FROM m WHERE {CLOSED} GROUP BY host",
+    f"SELECT i FROM m WHERE {CLOSED}",
+    # Spark orders NaN above every number: min, max and comparisons of a
+    # field holding NaN stay in Spark
+    f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h)",
+    f"SELECT count(v) FROM m WHERE v > 0 AND {CLOSED} GROUP BY time(1h)",
+])
+def test_declined_held_statements_keep_spark(spark, q):
+    """A statement outside the pyarrow subset is planned in Spark over the
+    held rows, and answers like the rows that are not held."""
+    from influxdb_ha_spark.result import FinishSpec
+    held, plain = _held_engines(spark, _table(NAN_POINTS))
+    assert not isinstance(held.query_df(q, answer=True), FinishSpec), q
+    assert json.dumps(held.query(q, epoch="ns")) == json.dumps(
+        plain.query(q, epoch="ns"))
+
+
+@pytest.mark.parametrize("q", [
+    f"SELECT sum(v), mean(v), count(v) FROM m WHERE {CLOSED} "
+    "GROUP BY time(1h), host",
+    f"SELECT max(i), min(i) FROM m WHERE dc = 'x' OR {CLOSED} "
+    "GROUP BY time(1h)",
+])
+def test_nan_free_held_statements_stay_in_arrow(spark, q):
+    """NaN sums, means and counts like IEEE in both engines, so only the
+    fields compared or ordered must be NaN-free."""
+    from influxdb_ha_spark.result import FinishSpec
+    held, plain = _held_engines(spark, _table(NAN_POINTS))
+    assert isinstance(held.query_df(q, answer=True), FinishSpec), q
+    assert json.dumps(held.query(q, epoch="ns")) == json.dumps(
+        plain.query(q, epoch="ns"))
+
+
+@pytest.mark.parametrize("first,second", [(0.0, -0.0), (-0.0, 0.0)])
+def test_held_signed_zeros_match_spark(spark, first, second):
+    """min and max of equal values (0.0 and -0.0) keep the first one in
+    both engines; sums start from 0.0 in both, so a sum of -0.0 is 0.0."""
+    from influxdb_ha_spark.result import FinishSpec
+    held, plain = _held_engines(spark, _table([
+        (H, "a", "x", 1, first), (H + 1, "a", "x", 2, second),
+        (2 * H, "a", "x", 3, -0.0), (2 * H + 1, "b", "x", 3, -0.0)]))
+    q = (f"SELECT min(v), max(v), sum(v), mean(v) FROM m WHERE {CLOSED} "
+         "GROUP BY time(1h), host")
+    assert isinstance(held.query_df(q, answer=True), FinishSpec)
+    assert json.dumps(held.query(q, epoch="ns")) == json.dumps(
+        plain.query(q, epoch="ns"))
+
+
+def test_held_full_plan_carries_the_arrow_answer(spark):
+    """The full plan of a held answer (EXPLAIN, the traced benchmark) is
+    the Spark plan, and collecting it runs the same pyarrow aggregation as
+    /query's answer."""
+    held, _ = _held_engines(spark, _table([(H, "a", "x", 1, 2.0),
+                                           (3 * H, "b", None, None, 5.0)]))
+    q = f"SELECT sum(i), max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), host"
+    full = held.query_df(q)
+    spec = full.__dict__.get(_FINISH)
+    assert spec is not None and not hasattr(spec.aggregated, "toArrow")
+    assert to_influx_series(full, "m", ["host"], "ns") == held.query(
+        q, epoch="ns")

@@ -137,6 +137,36 @@ def test_reliable_checkpoint_matches_local_and_errors_without_dir(
     assert c_rel == c_local
 
 
+def test_reliable_checkpoint_matches_local_for_every_loop(spark, tmp_path):
+    """Every other iterative loop gives the same rows with reliable=True
+    (checkpoint() to the checkpoint dir) as with localCheckpoint, on one
+    tiny graph: two triangles joined by a bridge, a pendant, and a
+    separate pair."""
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4),
+             (6, 7), (8, 9)]
+    e = _edges(spark, pairs)
+    we = spark.createDataFrame([(a, b, (a * b) % 5 + 1) for a, b in pairs],
+                               "src long, dst long, cost long")
+    seeds = spark.createDataFrame([(1,), (8,)], "node long")
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    loops = {
+        "kcore": lambda **kw: G.kcore(e, k=2, rounds=4, **kw),
+        "label_propagation": lambda **kw: G.label_propagation(e, rounds=3,
+                                                              **kw),
+        "personalized_pagerank": lambda **kw: G.personalized_pagerank(
+            e, seeds, iters=4, **kw),
+        "bfs": lambda **kw: G.bfs(e, seeds, rounds=3, **kw),
+        "sssp": lambda **kw: G.sssp(we, seeds, rounds=4, **kw),
+        "closeness": lambda **kw: G.closeness(e, seeds, rounds=3, **kw),
+        "hits": lambda **kw: G.hits(e, iters=3, **kw),
+    }
+    for name, run in loops.items():
+        local = sorted(tuple(r) for r in run().collect())
+        assert local, name
+        assert sorted(tuple(r) for r in run(reliable=True).collect()) \
+            == local, name
+
+
 def test_degree_histogram_exact_buckets(spark):
     # star: hub degree 5 (bucket 2: [4,7]), leaves degree 1 (bucket 0)
     # plus a 4-cycle: all degree 2 (bucket 1: [2,3])

@@ -349,6 +349,95 @@ def test_delete_waits_for_the_write_lock(spark):
     assert set(zip(*m.rows.to_pydict().values())) == want
 
 
+def _held_and_plain(spark, body):
+    """Two engines over the rows of one /write body: one holds them (the
+    measurement is born from /write), the other registers the same rows
+    as a DataFrame it does not hold."""
+    from influxdb_ha_spark.model import Measurement
+    from influxdb_ha_spark.server import Engine, write_lines
+    held = Engine(Catalog(spark), database="db")
+    write_lines(held, "db", body)
+    m = held.catalog.get("db", "m")
+    plain = Engine(Catalog(spark), database="db")
+    plain.catalog.register(Measurement(
+        name="m", database="db", tags=m.tags, fields=m.fields,
+        df=spark.createDataFrame(m.rows)))
+    return held, plain
+
+
+HELD_BODY = "\n".join([
+    "m,host=a,dc=x v=1,n=1i 1000", "m,host=b,dc=x v=2 2000",
+    "m,dc=y v=4,n=4i 4000",            # no host: the compared tag is null
+    "m,host=a v=5,s=\"\u00e9t\u00e9\" 5000", "m,host=\u00e9,dc=y v=-0,n=6i 6000",
+    "m,host=b,dc=z v=7 -7000"])
+
+
+def _rows(m):
+    rows = m.rows.to_pylist() if m.rows is not None else [
+        r.asDict() for r in m.df.collect()]
+    return sorted(rows, key=lambda r: r["time"])
+
+
+@pytest.mark.parametrize("where", [
+    "host = 'a'", "host != 'a'", "host = 'a' OR time > 4500",
+    "dc = 'x' AND time < 1500", "v > 1.5", "time >= 0"])
+def test_held_delete_matches_spark_delete(spark, where):
+    """DELETE on held rows filters them in pyarrow with /query's WHERE
+    mask and runs no Spark job; it keeps the same rows as the Spark
+    DELETE of a measurement that is not held, including the point whose
+    compared tag is null."""
+    held, plain = _held_and_plain(spark, HELD_BODY)
+    sc = spark.sparkContext
+    group = f"test-held-delete-{id(held)}"
+    sc.setJobGroup(group, "held delete")
+    try:
+        held._delete_points("m", where, "db")
+    finally:
+        sc._jsc.clearJobGroup()
+    plain.query(f"DELETE FROM m WHERE {where}", "db")
+    m = held.catalog.get("db", "m")
+    assert m.rows is not None and "df" not in m.__dict__
+    assert _job_counts(sc, [group]) == [0]
+    assert _rows(m) == _rows(plain.catalog.get("db", "m"))
+
+
+def test_held_delete_outside_the_subset_uses_spark(spark):
+    """A DELETE WHERE pyarrow does not answer like Spark (a regex) is
+    planned in Spark; the measurement is then no longer held, and later
+    writes still upsert into it."""
+    from influxdb_ha_spark.server import write_lines
+    held, plain = _held_and_plain(spark, HELD_BODY)
+    for eng in (held, plain):
+        eng.query("DELETE FROM m WHERE host =~ /^a/", "db")
+    m = held.catalog.get("db", "m")
+    assert m.rows is None
+    assert _rows(m) == _rows(plain.catalog.get("db", "m"))
+    write_lines(held, "db", "m,host=b,dc=x v=9 2000")
+    rows = _rows(held.catalog.get("db", "m"))
+    assert [r["v"] for r in rows if r["time"] == 2000] == [9.0]
+    assert all(r["host"] != "a" for r in rows)
+
+
+@pytest.mark.parametrize("q", [
+    "SHOW SERIES", "SHOW SERIES FROM m", "SHOW SERIES FROM m LIMIT 2 OFFSET 1",
+    "SHOW FIELD KEYS", "SHOW FIELD KEYS FROM m",
+    "SHOW TAG VALUES FROM m WITH KEY = host",
+    "SHOW TAG VALUES FROM m WITH KEY IN (dc, host)",
+    "SHOW TAG VALUES FROM m WITH KEY =~ /o/",
+    "SHOW TAG KEYS FROM m"])
+def test_held_show_matches_spark(spark, q):
+    """SHOW over held rows answers from the rows as VALUES relations,
+    without building the measurement's DataFrame, byte for byte like the
+    rows that are not held: null tags first, the Spark type names of the
+    fields."""
+    import json
+    held, plain = _held_and_plain(spark, HELD_BODY)
+    got = json.dumps(held.query(q, "db"))
+    assert got == json.dumps(plain.query(q, "db"))
+    assert "df" not in held.catalog.get("db", "m").__dict__
+    assert json.loads(got)["results"][0]["series"], q
+
+
 def test_write_lines_generations_survive_block_loss(spark):
     """A compacted generation depends on no executor-held block: after
     every RDD block persisted since the first write is removed (what

@@ -10,7 +10,10 @@ table from the repo's own generator (tools/gen_scale.gen_events), plus the
 /query does it (`Engine.query_df(..., answer=True)`, `to_influx_series`),
 so a plain GROUP BY time() aggregate plans and runs only its aggregated
 frame in Spark and is finished on the driver; over a source Spark reads
-as one split, that frame aggregates in one partition.
+as one split, that frame aggregates in one partition. The `ingest` read
+targets a measurement born from /write, whose rows the driver holds: it
+is aggregated in pyarrow and runs no job at all; its shape over a copy
+of those rows that is not held (`cpu_spark`) shows the Spark plan.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ import pytest
 
 from influxdb_ha_spark.errors import QueryError
 from influxdb_ha_spark.functions.fill import MAX_SPINE_BUCKETS
-from influxdb_ha_spark.model import Catalog, events_measurement
+from influxdb_ha_spark.model import Catalog, Measurement, events_measurement
 from influxdb_ha_spark.result import to_influx_series
 from influxdb_ha_spark.server import Engine, write_lines
 
@@ -60,9 +63,10 @@ ROTATION = [
 ]
 
 # (jobs while building the DataFrame, jobs while collecting it); the five
-# GROUP BY time() shapes and the ingest read run the aggregated frame only,
-# over a one-split source in one stage: partial and final aggregate share
-# the one partition, so there is no shuffle stage
+# GROUP BY time() shapes run the aggregated frame only, over a one-split
+# source in one stage: partial and final aggregate share the one
+# partition, so there is no shuffle stage. The ingest read is answered
+# from the rows the driver holds, in pyarrow.
 EXPECTED_JOBS = {
     "group_1h": (0, 1),
     "group_1h_tag": (0, 1),
@@ -73,7 +77,7 @@ EXPECTED_JOBS = {
     "subquery": (0, 4),
     "show_tag_values": (0, 2),
     "show_measurements": (0, 0),
-    "ingest_read": (0, 1),
+    "ingest_read": (0, 0),
 }
 FINISHED = ["group_1h", "group_1h_tag", "group_1d_tag", "fill_linear",
             "fill_open"]
@@ -83,6 +87,8 @@ FINISHED = ["group_1h", "group_1h_tag", "group_1d_tag", "fill_linear",
 INGEST_READ = ("SELECT count(usage), sum(usage), max(load) FROM cpu "
                f"WHERE time >= {JAN1} AND time < {JAN1 + 10 * HOUR} "
                "GROUP BY time(10m), region fill(none)")
+# the same read over a copy of cpu's rows that the driver does not hold
+INGEST_READ_SPARK = INGEST_READ.replace("FROM cpu", "FROM cpu_spark")
 
 
 @pytest.fixture(scope="module")
@@ -95,12 +101,20 @@ def events_dir(spark, tmp_path_factory):
     return str(d)
 
 
+def _cpu_lines(n, first=0):
+    return "\n".join(
+        f"cpu,region=r{i % 3},host=h{i % 7} usage={i % 11}i,load={i / 8} "
+        f"{JAN1 + i * 37_000_000_000}" for i in range(first, first + n))
+
+
 def _engine(spark, events_dir):
     cat, _ = events_measurement(spark, events_dir)
     eng = Engine(cat, database="default", now_ns=NOW)
-    write_lines(eng, "default", "\n".join(
-        f"cpu,region=r{i % 3},host=h{i % 7} usage={i % 11}i,load={i / 8} "
-        f"{JAN1 + i * 37_000_000_000}" for i in range(1000)))
+    write_lines(eng, "default", _cpu_lines(1000))
+    cpu = cat.get("default", "cpu")
+    cat.register(Measurement(name="cpu_spark", database="default",
+                             tags=cpu.tags, fields=cpu.fields,
+                             df=spark.createDataFrame(cpu.rows)))
     return eng
 
 
@@ -158,11 +172,43 @@ def test_multi_split_source_keeps_two_jobs(spark, events_dir):
         assert eng.catalog.get("default", "events").df \
             .rdd.getNumPartitions() > 1
         for kind in ["group_1h", "fill_open", "ingest_read"]:
-            q = INGEST_READ if kind == "ingest_read" else dict(ROTATION)[kind]
+            q = (INGEST_READ_SPARK if kind == "ingest_read"
+                 else dict(ROTATION)[kind])
             counts, series = _counted(spark, eng, f"multi-{kind}", q)
             assert series and counts == (0, 2), kind
     finally:
         spark.conf.set(key, old)
+
+
+def test_held_write_read_cycles_run_no_job(spark):
+    """The `ingest` benchmark's op, ten times into one measurement: each
+    1000-point /write merges in Arrow and each read-after-write is
+    answered from the held rows in pyarrow. No cycle fires a Spark job or
+    starts a Python worker, and the held rows are never shipped to the JVM
+    (the measurement's DataFrame is never built)."""
+    from influxdb_ha_spark.result import FinishSpec
+    from tests.test_ingest import _python_workers
+    sc = spark.sparkContext
+    workers = _python_workers()
+    eng = Engine(Catalog(spark), database="default", now_ns=NOW)
+    groups = []
+    for d in range(10):
+        groups.append(f"qj-held-cycle-{id(eng)}-{d}")
+        sc.setJobGroup(groups[-1], "held cycle")
+        try:
+            # each batch overlaps the previous one by half
+            write_lines(eng, "default", _cpu_lines(1000, d * 500))
+            answer = eng.query_df(INGEST_READ, answer=True)
+            assert isinstance(answer, FinishSpec)
+            series = to_influx_series(answer, "cpu", ["region"],
+                                      "ns")["results"][0]["series"]
+        finally:
+            sc._jsc.clearJobGroup()
+        assert [s["tags"]["region"] for s in series] == ["r0", "r1", "r2"]
+    assert [_jobs(sc, g) for g in groups] == [0] * 10
+    assert _python_workers() <= workers
+    cpu = eng.catalog.get("default", "cpu")
+    assert cpu.rows.num_rows == 5500 and "df" not in cpu.__dict__
 
 
 def _executed_plan(df):
@@ -175,7 +221,7 @@ def test_answer_plan_is_the_aggregated_frame(events_engine, kind):
     collects: no spine (Generate), no spine join, no fill window, no
     sort; over a one-split source, no Exchange either."""
     from influxdb_ha_spark.result import _FINISH
-    q = INGEST_READ if kind == "ingest_read" else dict(ROTATION)[kind]
+    q = INGEST_READ_SPARK if kind == "ingest_read" else dict(ROTATION)[kind]
     df = events_engine.query_df(q, answer=True)
     assert df.__dict__.get(_FINISH) is not None
     plan = df._jdf.queryExecution().optimizedPlan().toString()
