@@ -22,11 +22,15 @@ DataFrame matching the model.Measurement layout.
 
 Type rules follow InfluxDB 1.x: `1i` → int, `t/true/f/false` → bool, quoted
 → string, bare number → float; missing timestamp → ingest time (we require
-explicit timestamps in deterministic tests).
+explicit timestamps in deterministic tests). A number outside the
+line-protocol grammar (`nan`, `inf`, `1_5`, `+1`) or its range (`1e400`,
+an integer beyond BIGINT) makes the line an error record, "invalid
+number", as InfluxDB 1.x answers it.
 """
 
 from __future__ import annotations
 
+import math
 import re
 from collections.abc import Iterator
 
@@ -38,6 +42,38 @@ LONG_SCHEMA = ("measurement string, tags map<string,string>, "
                "f_str string, time long, error string")
 
 _ESCAPED_COMMA_SPACE = re.compile(r"\\([,\s=])")
+
+# InfluxDB 1.x number grammar (models/points.go scanNumber): an optional
+# minus, ASCII digits with at most one decimal point and, for a float, an
+# exponent; an integer ends in `i`, an unsigned one in `u`. No NaN, no
+# infinity, no `+` sign, no digit separators.
+_FLOAT = re.compile(r"-?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?")
+_INT = re.compile(r"-?[0-9]+i|[0-9]+u")
+_TIMESTAMP = re.compile(r"[+-]?[0-9]+")
+_INT64 = (-2**63, 2**63 - 1)
+
+
+def _number(v: str) -> tuple[str, float | int]:
+    """A field value in the number grammar → ("f_int", int) or
+    ("f_float", float); ValueError "invalid number" for anything else, a
+    float that is not finite (1e400) or an integer outside BIGINT."""
+    if _INT.fullmatch(v):
+        n = int(v[:-1])
+        if _INT64[0] <= n <= _INT64[1]:
+            return "f_int", n
+    elif _FLOAT.fullmatch(v):
+        x = float(v)
+        if math.isfinite(x):
+            return "f_float", x
+    raise ValueError(f"invalid number {v!r}")
+
+
+def _timestamp(v: str) -> int:
+    if _TIMESTAMP.fullmatch(v):
+        n = int(v)
+        if _INT64[0] <= n <= _INT64[1]:
+            return n
+    raise ValueError(f"invalid timestamp {v!r}")
 
 
 def _split_escaped(s: str, sep: str) -> list[str]:
@@ -122,7 +158,7 @@ def parse_line(line: str, default_time_ns: int | None = None) -> list[dict]:
         if len(parts) < 2:
             raise ValueError("missing fields")
         head, fields_part = parts[0], parts[1]
-        ts = int(parts[2]) if len(parts) >= 3 else default_time_ns
+        ts = _timestamp(parts[2]) if len(parts) >= 3 else default_time_ns
         head_parts = _split_escaped(head, ",")
         measurement = _unescape(head_parts[0])
         if not measurement:
@@ -145,10 +181,8 @@ def parse_line(line: str, default_time_ns: int | None = None) -> list[dict]:
                 rec["f_bool"] = True
             elif v in ("f", "F", "false", "False", "FALSE"):
                 rec["f_bool"] = False
-            elif v.endswith("i") or v.endswith("u"):
-                rec["f_int"] = int(v[:-1])
             else:
-                rec["f_float"] = float(v)
+                col, rec[col] = _number(v)
             out.append(rec)
         if not out:
             raise ValueError("no fields")

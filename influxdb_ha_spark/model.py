@@ -25,6 +25,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.util import one_split
 from .result import local_result
 from .timeutil import timestamp_to_ns
 
@@ -67,6 +68,10 @@ def _is_utc_zone(tz: str | None) -> bool:
         return False
 
 
+_COPY = "_driver_copy"
+_COPY_LOCK = threading.Lock()
+
+
 @dataclass
 class Measurement:
     """A measurement: schema roles + a DataFrame provider.
@@ -75,7 +80,14 @@ class Measurement:
     `pyarrow.Table` and `df`, the LocalRelation over those rows, is built
     only when first read (once per generation), so a write and a read the
     driver answers from `rows` never ship the rows to the JVM. `rows` is
-    None for file-backed, Spark-ingested and SELECT … INTO measurements."""
+    None for file-backed, Spark-ingested and SELECT … INTO measurements;
+    the write, DELETE and retention paths read it as "the driver holds
+    the source of truth".
+
+    /query's answer plan may also read a driver copy of a generation the
+    driver does not hold (`answer_rows`): one `df.toArrow()` of a `df`
+    Spark reads as one split, kept on that DataFrame, so it lives exactly
+    as long as the generation."""
 
     name: str
     database: str
@@ -115,6 +127,28 @@ class Measurement:
         built when next read."""
         self.rows = rows
         self.__dict__.pop("df", None)
+
+    def answer_rows(self) -> pa.Table | None:
+        """The rows /query's answer plan reads on the driver: the held
+        rows, or else a driver copy of the current generation when Spark
+        reads `df` as one split (`operators.util.one_split`, bounded by
+        `spark.sql.files.maxPartitionBytes`), or else None.
+
+        The copy is `df.toArrow()`, one Spark job, taken the first time an
+        answer asks for it and memoised on `df` (as `one_split` caches its
+        result), so a DELETE or retention that replaces `df` drops the
+        copy with the old frame. A write into a measurement that is not
+        held registers an upsert over its scan, which is not one split."""
+        if self.rows is not None:
+            return self.rows
+        df = self.df
+        if not one_split(df):
+            return None
+        with _COPY_LOCK:   # concurrent first answers take one copy
+            got = df.__dict__.get(_COPY)
+            if got is None:
+                got = df.__dict__[_COPY] = df.toArrow()
+        return got
 
     def column_types(self) -> dict[str, str]:
         """Column name → Spark type name (`DataFrame.dtypes`), read from a
@@ -276,16 +310,22 @@ class Catalog:
                             [("measurement", "STRING"), ("fieldKey", "STRING"),
                              ("fieldType", "STRING")])
 
-    def show_tag_values(self, database: str, measurement: str, tag: str) -> DataFrame:
+    def show_tag_values(self, database: str, measurement: str, tag: str,
+                        answer: bool = False) -> DataFrame:
+        """The distinct values of one tag, nulls first. Over rows the
+        driver holds, or with `answer` (/query's answer) over the driver
+        copy of a one-split source (`Measurement.answer_rows`), they are a
+        VALUES relation and run no Spark job."""
+        m = self.get(database, measurement)
+        if m.column_types().get(tag) == "string":
+            rows = m.answer_rows() if answer else m.rows
+            if rows is not None:
+                values = rows.column(tag).unique().to_pylist()
+                values.sort(key=lambda v: (v is not None, v))
+                return local_result(self.spark, [(tag, v) for v in values],
+                                    [("key", "STRING"), ("value", "STRING")])
         # the distinct values are few (a tag's cardinality): gathered into
         # one partition, the sort needs no range-partitioner sampling job
-        m = self.get(database, measurement)
-        if m.rows is not None and m.column_types().get(tag) == "string":
-            # held: the distinct values as a VALUES relation, nulls first
-            values = m.rows.column(tag).unique().to_pylist()
-            values.sort(key=lambda v: (v is not None, v))
-            return local_result(self.spark, [(tag, v) for v in values],
-                                [("key", "STRING"), ("value", "STRING")])
         return (m.df.select(F.lit(tag).alias("key"), F.col(tag).alias("value"))
                 .distinct().coalesce(1).orderBy("value"))
 

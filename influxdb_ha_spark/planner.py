@@ -139,9 +139,15 @@ class Planner:
 
         `answer` asks for the plan /query runs: a statement the driver
         finishes (result.FinishSpec) is planned only up to the aggregated
-        frame it collects, which carries the spec. Without it, and for
-        every other statement, this is the full Spark plan (EXPLAIN,
-        SELECT … INTO, subqueries and the contract keys run that one)."""
+        frame it collects, which carries the spec. When pyarrow can
+        aggregate it from rows on the driver (`_held_finish`), the answer
+        is the spec itself and no DataFrame is built: over a measurement
+        the driver holds, or, with `answer` only, over the driver copy of
+        a catalog measurement Spark reads as one split
+        (`Measurement.answer_rows`). Without `answer`, and for every other
+        statement, this is the full Spark plan (EXPLAIN, SELECT … INTO,
+        subqueries and the contract keys run that one); it never takes a
+        driver copy, so it does not depend on earlier answers."""
         db = stmt.source.database or self.database
         if stmt.source.regex is not None:
             return self._plan_regex_source(stmt, db, nested)
@@ -155,9 +161,10 @@ class Planner:
                           to_driver=not nested and stmt.into is None,
                           answer=answer)
         # decided before any Spark Column is built: a statement answered
-        # from held rows needs no DataFrame, no py4j call and no job
-        held = (self._held_finish(stmt, m, ctx, db)
-                if ctx.to_driver and m.rows is not None else None)
+        # from driver rows needs no DataFrame and, over held rows, no job
+        copy = answer and not isinstance(stmt.source, SubQuery)
+        held = (self._held_finish(stmt, m, ctx, db, copy)
+                if ctx.to_driver and (copy or m.rows is not None) else None)
         if held is not None and answer:
             return held
 
@@ -553,57 +560,65 @@ class Planner:
             limit=stmt.limit, soffset=stmt.soffset, slimit=stmt.slimit)
 
     def _held_finish(self, stmt: SelectStatement, m: Measurement,
-                     ctx: PlanContext, db: str) -> FinishSpec | None:
-        """The FinishSpec of a statement answered from a held measurement's
-        rows in pyarrow (`held_aggregate`, run when the answer is
-        collected), or None to plan it in Spark.
+                     ctx: PlanContext, db: str,
+                     copy: bool) -> FinishSpec | None:
+        """The FinishSpec of a statement answered from rows on the driver
+        in pyarrow (`held_aggregate`, run when the answer is collected),
+        or None to plan it in Spark. The rows are the measurement's held
+        rows or, with `copy`, `Measurement.answer_rows` (which may take the
+        driver copy of a one-split source); column types are read from
+        their Arrow schema.
 
         It takes a plain `GROUP BY time()` aggregate the driver collects,
         without tz(), whose select fields are each a bare count, sum, mean,
         min or max of a field (ARROW_AGGREGATES), whose WHERE `_held_where`
-        takes, and whose group keys are string tags. Every fill is
+        takes, and whose group keys are string tags. The rows are read
+        only once the statement's shape is in that subset. Every fill is
         finished as `_finish_spec` finishes it; the filled types follow
         Spark's coercion of the fill expression over a BIGINT or DOUBLE
         aggregate (fill(linear) and a float literal make it DOUBLE; an
         integer literal keeps the type)."""
-        rows = m.rows
         fill = stmt.fill
         literal = isinstance(fill, (int, float)) and not isinstance(fill, bool)
         if (not stmt.group_by_time_ns or stmt.group_by_time_ns <= 0
-                or stmt.tz or _held_type(rows, TIME_COL) != "long"
-                or rows.column(TIME_COL).null_count
+                or stmt.tz
                 or not (literal or fill in (None, "null", "none", "previous",
                                             "linear"))
                 or (literal and isinstance(fill, int)
                     and not _INT64[0] <= fill <= _INT64[1])):
             return None
         group_tags = self._expand_tags(stmt.group_by_tags, m)
-        if any(t not in m.tags or _held_type(rows, t) != "string"
-               for t in group_tags):
+        if any(t not in m.tags for t in group_tags):
             return None
         stmt = self._expand_wildcard_calls(stmt, m)
         if self._unknown_refs(stmt, m):
             return None
-        values, types = [], []
+        values = []
         for f, name in zip(stmt.fields, self._field_names(stmt)):
             e = f.expr
             if not (isinstance(e, Call) and e.name in ARROW_AGGREGATES
                     and len(e.args) == 1 and isinstance(e.args[0], VarRef)):
                 return None
-            field = e.args[0].name
-            typ = _held_type(rows, field)
-            if typ is None or (ARROW_AGGREGATES[e.name]
-                               and typ not in ("long", "double")) \
-                    or (e.name in ("min", "max")
-                        and not _held_ordered(rows, field)):
-                return None
-            values.append((name, e.name, field))
-            types.append("long" if e.name == "count"
-                         else "double" if e.name == "mean" else typ)
+            values.append((name, e.name, e.args[0].name))
         value_names = [n for n, _, _ in values]
         if len({TIME_COL, *group_tags, *value_names}) \
                 != 1 + len(group_tags) + len(values):
             return None
+        rows = m.answer_rows() if copy else m.rows
+        if (rows is None or _held_type(rows, TIME_COL) != "long"
+                or rows.column(TIME_COL).null_count
+                or any(_held_type(rows, t) != "string" for t in group_tags)):
+            return None
+        types = []
+        for _, fn, field in values:
+            typ = _held_type(rows, field)
+            if typ is None or (ARROW_AGGREGATES[fn]
+                               and typ not in ("long", "double")) \
+                    or (fn in ("min", "max")
+                        and not _held_ordered(rows, field)):
+                return None
+            types.append("long" if fn == "count"
+                         else "double" if fn == "mean" else typ)
         tracked = replace(ctx)
         keep = None
         if stmt.where is not None:

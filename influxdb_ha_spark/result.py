@@ -12,12 +12,14 @@ collected here in one of two ways before one shaper builds the JSON:
 - a plain aggregate with `GROUP BY time()` whose answer the driver collects
   has a `FinishSpec` (built by the planner). Its aggregated rows (WHERE
   plus GROUP BY) come from one of two places:
-  - over a measurement the driver holds (`Measurement.rows`, born from
-    /write) and a statement pyarrow answers as Spark does, they are
-    aggregated in pyarrow from those rows when collected
-    (`functions/aggregates.held_aggregate`): /query then builds no
-    DataFrame, makes no py4j call and runs no Spark job, and its answer
-    is the FinishSpec itself;
+  - for a statement pyarrow answers as Spark does, they are aggregated in
+    pyarrow when collected (`functions/aggregates.held_aggregate`) from
+    rows on the driver (`Measurement.answer_rows`): the rows of a
+    measurement the driver holds (born from /write), or the driver copy
+    of a source Spark reads as one split (one `toArrow()` job the first
+    time a generation is answered, none after it). /query then builds no
+    DataFrame and runs no Spark job, and its answer is the FinishSpec
+    itself;
   - otherwise Spark runs only the aggregated frame, collected with
     `toArrow()`: one job over a source read as one split, two otherwise
     (its shuffle stage and the result stage). /query plans nothing past
@@ -87,8 +89,9 @@ def local_result(spark, rows, schema: list[tuple[str, str]]) -> DataFrame:
       statements and the DDL acknowledgements;
     - model.Catalog: SHOW DATABASES / MEASUREMENTS / TAG KEYS / FIELD
       KEYS, an empty SHOW SERIES, Measurement.series_df of a tagless
-      measurement, and SHOW SERIES / TAG VALUES of a measurement the
-      driver holds (answered from its rows);
+      measurement, SHOW SERIES / TAG VALUES of a measurement the driver
+      holds (answered from its rows) and /query's SHOW TAG VALUES over
+      the driver copy of a one-split source;
     - admin.AdminHandler: SHOW PARTITION KEYS, SHOW NODES, SHOW
       REPLICATION FACTORS, SHOW USERS, BACKUP's export list and the
       empty acknowledgements;
@@ -123,13 +126,13 @@ class FinishSpec:
     full Spark plan (EXPLAIN, SELECT … INTO, subqueries and the contract
     keys run that one). Asked for /query's answer plan, the planner
     attaches it to the aggregated frame itself, or, for an answer from
-    held rows, returns the spec as the answer.
+    rows on the driver, returns the spec as the answer.
 
     `columns` are the answer's columns, as a DataFrame's are."""
     # the aggregated rows (time, group tags, value columns): a DataFrame,
     # collected with toArrow() (over a one-split source it aggregates in
-    # one partition: one job), or the pyarrow aggregation of a held
-    # measurement's rows, run when collected
+    # one partition: one job), or the pyarrow aggregation of rows on the
+    # driver (held, or a one-split source's copy), run when collected
     aggregated: DataFrame | Callable[[], pa.Table]
     group_tags: tuple[str, ...]
     value_cols: tuple[str, ...]
@@ -171,7 +174,7 @@ def _tag_order(key: tuple) -> tuple:
 
 def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
     """The answer rows of `spec`: the aggregated rows are collected
-    (Spark's last step, or pyarrow's over held rows); fill, bounds,
+    (Spark's last step, or pyarrow's over driver rows); fill, bounds,
     SLIMIT, ORDER BY time and OFFSET/LIMIT run here, in the planner's
     order."""
     agg = spec.aggregated

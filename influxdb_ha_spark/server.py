@@ -144,8 +144,8 @@ class Engine:
                  answer: bool = False) -> DataFrame | FinishSpec:
         """The DataFrame of one statement: the full plan, or with `answer`
         the plan `query` collects (Planner.plan's `answer`; for an answer
-        from a measurement the driver holds, a FinishSpec and no
-        DataFrame)."""
+        from rows on the driver, a FinishSpec and no DataFrame). SHOW TAG
+        VALUES takes `answer` too (`Catalog.show_tag_values`)."""
         db = database or self.database
         if _REJECTED.match(q):
             # routing.go:113-119 → 400
@@ -246,7 +246,7 @@ class Engine:
                     [("written", "STRING"), ("n", "BIGINT")])
             return out
         if isinstance(stmt, ShowStatement):
-            return self._show(stmt, db)
+            return self._show(stmt, db, answer)
         raise QueryError(f"unsupported statement: {q[:60]}")
 
     def query(self, q: str, database: str | None = None,
@@ -265,7 +265,7 @@ class Engine:
                               "group": group}
         sc.setJobGroup(group, q[:120], interruptOnCancel=True)
         try:
-            # a DataFrame, or a FinishSpec answered from held rows
+            # a DataFrame, or a FinishSpec answered from driver rows
             answer = self.query_df(q, database, answer=True)
             columns = answer.columns
             if not columns:
@@ -392,7 +392,8 @@ class Engine:
         return None
 
     # -- SHOW routing (routing.go:121-135) ------------------------------------
-    def _show(self, stmt: ShowStatement, db: str) -> DataFrame:
+    def _show(self, stmt: ShowStatement, db: str,
+              answer: bool) -> DataFrame:
         if stmt.cardinality:
             # SHOW <x> [EXACT] CARDINALITY (influxql 1.x cardinality
             # statements): EXACT counts the meta scan; the bare form is
@@ -409,7 +410,7 @@ class Engine:
             scoped = bool(stmt.measurement or stmt.measurement_regex
                           or stmt.with_key or stmt.with_keys
                           or stmt.with_key_regex)
-            inner = self._show_inner(stmt, db)
+            inner = self._show_inner(stmt, db, answer)
             if stmt.exact or scoped:
                 return inner.agg(F.count(F.lit(1)).alias("count"))
             from .operators.sketch import hll_distinct
@@ -420,7 +421,7 @@ class Engine:
             return est.select(
                 F.floor(F.coalesce(F.col("est_distinct"), F.lit(0.0))
                         + F.lit(0.5)).cast("long").alias("count"))
-        out = self._show_inner(stmt, db)
+        out = self._show_inner(stmt, db, answer)
         # SHOW ... LIMIT/OFFSET — paginated meta scans (the reference pages
         # SHOW SERIES 1000 at a time, syncing/series.go:67-89)
         if stmt.offset:
@@ -429,7 +430,8 @@ class Engine:
             out = out.limit(stmt.limit)
         return out
 
-    def _show_inner(self, stmt: ShowStatement, db: str) -> DataFrame:
+    def _show_inner(self, stmt: ShowStatement, db: str,
+                    answer: bool) -> DataFrame:
         what = stmt.what.upper()
         database = stmt.database or db
         if what == "DATABASES":
@@ -459,7 +461,8 @@ class Engine:
             else:
                 rx = re.compile(stmt.with_key_regex)
                 keys = [t for t in m.tags if rx.search(t)]
-            dfs = [self.catalog.show_tag_values(database, stmt.measurement, k)
+            dfs = [self.catalog.show_tag_values(database, stmt.measurement, k,
+                                                answer)
                    for k in keys]
             if not dfs:
                 return local_result(self.catalog.spark, [],

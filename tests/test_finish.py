@@ -10,14 +10,15 @@ shaper; the JSON must be identical byte for byte. Statements that keep
 the Spark spine (tz(), outer transforms, row selectors, raw selects,
 SELECT … INTO, subqueries) must carry no spec. Every contract `iq_*`
 statement the finisher takes is also answered through `Engine.query` and
-compared with its full plan. Over rows the driver holds (a measurement
-born from /write) the aggregated rows come from pyarrow instead of Spark;
-those answers are compared with the same rows registered as a DataFrame
-that is not held.
+compared with its full plan. Over rows on the driver (a measurement born
+from /write, or the driver copy of a source Spark reads as one split) the
+aggregated rows come from pyarrow instead of Spark; those answers are
+compared with the full Spark plan over the same rows in one parquet file.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 
 import pytest
@@ -293,6 +294,9 @@ CONTRACT = _contract_statements()
 CONTRACT_FINISHED = ["iq_bucket_offset", "iq_fill_linear", "iq_fill_null",
                      "iq_fill_offset", "iq_fill_previous", "iq_fill_zero",
                      "iq_kitchen_sink", "iq_mean_1d_tag", "iq_mean_1h"]
+# those pyarrow answers from the driver copy of `events`: all but the
+# regex WHERE of iq_kitchen_sink
+CONTRACT_COPIED = [k for k in CONTRACT_FINISHED if k != "iq_kitchen_sink"]
 
 
 @pytest.fixture(scope="module")
@@ -318,13 +322,15 @@ def test_contract_finished_statements(contract_engine):
 
 @pytest.mark.parametrize("key", CONTRACT_FINISHED)
 def test_contract_query_matches_full_plan(contract_engine, key):
-    """/query's answer (the aggregated frame, finished on the driver)
-    equals the key's full Spark plan collected and shaped, byte for
-    byte."""
+    """/query's answer (finished on the driver from the aggregated frame,
+    or from pyarrow over the driver copy of the one-file source) equals
+    the key's full Spark plan collected and shaped, byte for byte."""
+    from influxdb_ha_spark.result import FinishSpec
     q = CONTRACT[key]
     full = contract_engine.query_df(q)
     answer = contract_engine.query_df(q, answer=True)
-    assert answer.__dict__.get(_FINISH) is not None
+    assert isinstance(answer, FinishSpec) == (key in CONTRACT_COPIED)
+    assert isinstance(answer, FinishSpec) or answer.__dict__.get(_FINISH)
     tags = [t for t in ("event_type",) if t in full.columns]
     want = shape_series(full.columns, full.collect(), "events", tags, "ns")
     got = contract_engine.query(q, epoch="ns")
@@ -332,22 +338,71 @@ def test_contract_query_matches_full_plan(contract_engine, key):
     assert json.dumps(got) == json.dumps(want)
 
 
-# -- answers from rows the driver holds (pyarrow, no Spark job) --------------
+# -- answers from rows on the driver (pyarrow, no Spark job) -----------------
+
+_COPIES = itertools.count()
 
 
-def _held_engines(spark, rows):
-    """Two engines over the same rows: one holds them (a measurement born
-    from /write), the other registers them as a DataFrame it does not
-    hold, so every statement is planned in Spark."""
+@pytest.fixture(scope="module")
+def parquet_root(tmp_path_factory):
+    return tmp_path_factory.mktemp("driver_rows")
+
+
+def _held_engines(spark, rows, root):
+    """Three engines over the same rows, each answering /query from rows
+    on the driver: `held` holds them (a measurement born from /write);
+    `plain` registers them as a DataFrame over a LocalRelation and `file`
+    as one parquet file, both read by Spark as one split, so /query
+    answers them from the driver copy of that source."""
+    import pyarrow.parquet as pq
     from influxdb_ha_spark.model import Measurement
     tags = ["host", "dc"]
-    held, plain = Catalog(spark), Catalog(spark)
+    held, plain, file = Catalog(spark), Catalog(spark), Catalog(spark)
     held.register(Measurement.held(spark, "m", "db", tags, rows))
     plain.register(Measurement(name="m", database="db", tags=tags,
                                fields=["i", "v"],
                                df=spark.createDataFrame(rows), rows=None))
-    return (Engine(held, database="db", now_ns=NOW),
-            Engine(plain, database="db", now_ns=NOW))
+    path = str(root / f"m{next(_COPIES)}.parquet")
+    pq.write_table(rows, path)
+    file.register_dataframe("db", "m", spark.read.parquet(path),
+                            time_col="time", tags=tags)
+    return tuple(Engine(c, database="db", now_ns=NOW)
+                 for c in (held, plain, file))
+
+
+def _assert_matches_full_plan(engines, q):
+    """Every engine's /query answer equals the full Spark plan of the
+    parquet engine (the Spark spine, which takes no driver copy),
+    collected and shaped, byte for byte. One split keeps Spark's float
+    sums in row order, as pyarrow's are. The held and LocalRelation
+    answers also equal each other byte for byte; compared with the
+    parquet source, a statement without GROUP BY time() has its series
+    sorted first, because the engine leaves them in Spark's hash order,
+    which depends on the source (FOUND in CHANGES.md)."""
+    def by_series(res):
+        if "GROUP BY time" not in q:
+            res["results"][0]["series"].sort(key=json.dumps)
+        return json.dumps(res)
+
+    full = engines[-1].query_df(q)
+    tags = [t for t in ("host", "dc") if t in full.columns]
+    rows = full.collect()
+    for epoch in ("ns", None):
+        want = shape_series(full.columns, rows, "m", tags, epoch)
+        held, plain, file = (e.query(q, epoch=epoch) for e in engines)
+        assert json.dumps(file) == json.dumps(want), q
+        assert json.dumps(held) == json.dumps(plain), q
+        assert by_series(held) == by_series(want), q
+
+
+def _driver_answers(engines, q) -> bool:
+    """Whether /query answers `q` from driver rows (a FinishSpec), which
+    must be the same on every route."""
+    from influxdb_ha_spark.result import FinishSpec
+    got = {isinstance(e.query_df(q, answer=True), FinishSpec)
+           for e in engines}
+    assert len(got) == 1, q
+    return got.pop()
 
 
 def _table(points):
@@ -365,7 +420,8 @@ POINTS = st.lists(st.tuples(
     st.integers(-5 * H, 15 * H),                  # negative times too
     st.sampled_from(["a", "b", None]), st.sampled_from(["x", "y", None]),
     st.one_of(st.none(), st.integers(-1000, 1000)),
-    st.one_of(st.none(), st.floats(-1e6, 1e6))), max_size=30)
+    st.one_of(st.none(), st.floats(-1e6, 1e6), st.just(float("nan")))),
+    max_size=30)
 AGG = st.sampled_from(["count", "sum", "mean", "min", "max"])
 HELD_WHERE = ["", CLOSED, f"time >= {-3 * H + 7}", f"time <= {6 * H}",
               "time < now()", f"time >= {50 * H} AND time < {60 * H}",
@@ -387,26 +443,26 @@ HELD_FILLS = ["", "fill(none)", "fill(null)", "fill(previous)",
        desc=st.booleans(),
        limit=st.sampled_from(["", "LIMIT 4", "LIMIT 3 OFFSET 2"]),
        slimit=st.sampled_from(["", "SLIMIT 2", "SLIMIT 1 SOFFSET 1"]))
-def test_held_answer_matches_spark(spark, points, calls, where, fill, group,
-                                   interval, desc, limit, slimit):
-    """/query over held rows (pyarrow, finished on the driver) answers
-    byte for byte like the same rows planned in Spark: every aggregate,
+def test_held_answer_matches_spark(spark, parquet_root, points, calls, where,
+                                   fill, group, interval, desc, limit,
+                                   slimit):
+    """/query over driver rows (pyarrow, finished on the driver) answers
+    byte for byte like the full Spark plan: held rows, and the driver
+    copy of a LocalRelation and of a parquet file, for every aggregate,
     WHERE shape and fill of the subset, with negative times, offsets,
-    null tags and fields, int and double fields, empty windows,
-    SLIMIT/SOFFSET and ORDER BY time DESC."""
-    from influxdb_ha_spark.result import FinishSpec
-    held, plain = _held_engines(spark, _table(points))
+    null tags and fields, NaN, int and double fields, empty windows,
+    SLIMIT/SOFFSET and ORDER BY time DESC. A NaN in a field that is
+    compared or ordered sends the statement to Spark on every route."""
+    engines = _held_engines(spark, _table(points), parquet_root)
     fields = ", ".join(f"{fn}({f})" + (f" AS {fn}_{f}_{k}" if alias else "")
                        for k, (fn, f, alias) in enumerate(calls))
     order = "ORDER BY time DESC" if desc else ""
     cond = f"WHERE {where}" if where else ""
     q = (f"SELECT {fields} FROM m {cond} GROUP BY time({interval}){group} "
          f"{fill} {order} {limit} {slimit}")
-    assert isinstance(held.query_df(q, answer=True), FinishSpec), q
-    assert not isinstance(plain.query_df(q, answer=True), FinishSpec), q
-    for epoch in ("ns", None):
-        assert json.dumps(held.query(q, epoch=epoch)) == json.dumps(
-            plain.query(q, epoch=epoch)), q
+    nan = any(p[4] != p[4] for p in points if p[4] is not None)
+    assert _driver_answers(engines, q) or nan, q
+    _assert_matches_full_plan(engines, q)
 
 
 NAN_POINTS = [(H, "a", "x", 1, float("nan")), (2 * H, "b", "y", 2, 4.0),
@@ -433,14 +489,12 @@ NAN_POINTS = [(H, "a", "x", 1, float("nan")), (2 * H, "b", "y", 2, 4.0),
     f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h)",
     f"SELECT count(v) FROM m WHERE v > 0 AND {CLOSED} GROUP BY time(1h)",
 ])
-def test_declined_held_statements_keep_spark(spark, q):
+def test_declined_held_statements_keep_spark(spark, parquet_root, q):
     """A statement outside the pyarrow subset is planned in Spark over the
-    held rows, and answers like the rows that are not held."""
-    from influxdb_ha_spark.result import FinishSpec
-    held, plain = _held_engines(spark, _table(NAN_POINTS))
-    assert not isinstance(held.query_df(q, answer=True), FinishSpec), q
-    assert json.dumps(held.query(q, epoch="ns")) == json.dumps(
-        plain.query(q, epoch="ns"))
+    driver's rows or the copied source, and answers like the full plan."""
+    engines = _held_engines(spark, _table(NAN_POINTS), parquet_root)
+    assert not _driver_answers(engines, q), q
+    _assert_matches_full_plan(engines, q)
 
 
 @pytest.mark.parametrize("q", [
@@ -449,37 +503,35 @@ def test_declined_held_statements_keep_spark(spark, q):
     f"SELECT max(i), min(i) FROM m WHERE dc = 'x' OR {CLOSED} "
     "GROUP BY time(1h)",
 ])
-def test_nan_free_held_statements_stay_in_arrow(spark, q):
+def test_nan_free_held_statements_stay_in_arrow(spark, parquet_root, q):
     """NaN sums, means and counts like IEEE in both engines, so only the
     fields compared or ordered must be NaN-free."""
-    from influxdb_ha_spark.result import FinishSpec
-    held, plain = _held_engines(spark, _table(NAN_POINTS))
-    assert isinstance(held.query_df(q, answer=True), FinishSpec), q
-    assert json.dumps(held.query(q, epoch="ns")) == json.dumps(
-        plain.query(q, epoch="ns"))
+    engines = _held_engines(spark, _table(NAN_POINTS), parquet_root)
+    assert _driver_answers(engines, q), q
+    _assert_matches_full_plan(engines, q)
 
 
 @pytest.mark.parametrize("first,second", [(0.0, -0.0), (-0.0, 0.0)])
-def test_held_signed_zeros_match_spark(spark, first, second):
+def test_held_signed_zeros_match_spark(spark, parquet_root, first, second):
     """min and max of equal values (0.0 and -0.0) keep the first one in
     both engines; sums start from 0.0 in both, so a sum of -0.0 is 0.0."""
-    from influxdb_ha_spark.result import FinishSpec
-    held, plain = _held_engines(spark, _table([
+    engines = _held_engines(spark, _table([
         (H, "a", "x", 1, first), (H + 1, "a", "x", 2, second),
-        (2 * H, "a", "x", 3, -0.0), (2 * H + 1, "b", "x", 3, -0.0)]))
+        (2 * H, "a", "x", 3, -0.0), (2 * H + 1, "b", "x", 3, -0.0)]),
+        parquet_root)
     q = (f"SELECT min(v), max(v), sum(v), mean(v) FROM m WHERE {CLOSED} "
          "GROUP BY time(1h), host")
-    assert isinstance(held.query_df(q, answer=True), FinishSpec)
-    assert json.dumps(held.query(q, epoch="ns")) == json.dumps(
-        plain.query(q, epoch="ns"))
+    assert _driver_answers(engines, q)
+    _assert_matches_full_plan(engines, q)
 
 
-def test_held_full_plan_carries_the_arrow_answer(spark):
+def test_held_full_plan_carries_the_arrow_answer(spark, parquet_root):
     """The full plan of a held answer (EXPLAIN, the traced benchmark) is
     the Spark plan, and collecting it runs the same pyarrow aggregation as
     /query's answer."""
-    held, _ = _held_engines(spark, _table([(H, "a", "x", 1, 2.0),
-                                           (3 * H, "b", None, None, 5.0)]))
+    held, _, _ = _held_engines(spark, _table([(H, "a", "x", 1, 2.0),
+                                              (3 * H, "b", None, None, 5.0)]),
+                               parquet_root)
     q = f"SELECT sum(i), max(v) FROM m WHERE {CLOSED} GROUP BY time(1h), host"
     full = held.query_df(q)
     spec = full.__dict__.get(_FINISH)

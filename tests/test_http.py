@@ -106,6 +106,30 @@ def test_rejected_write_writes_nothing(http):
     assert json.loads(_get(show)[2]) == before
 
 
+@pytest.mark.parametrize("value", [b"nan", b"-Infinity", b"1e400", b"1_5",
+                                   b"9223372036854775808i"])
+def test_invalid_number_write_is_400(http, value):
+    """A field value outside the line-protocol number grammar or range is a
+    400 "invalid number", and the body's valid lines are not written
+    either."""
+    base, _ = http
+    read = base + "/query?db=sharded&epoch=ns&q=" + urllib.request.quote(
+        "SELECT value FROM treasures WHERE type='numbers'")
+    _post(base + "/write?db=sharded",
+          b"treasures,type=numbers value=1 1500000000000000010")
+    before = json.loads(_get(read)[2])
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(base + "/write?db=sharded",
+              b"treasures,type=numbers value=2 1500000000000000011\n"
+              b"treasures,type=numbers value=" + value
+              + b" 1500000000000000012")
+    assert e.value.code == 400
+    assert "invalid number" in json.loads(e.value.read())["error"]
+    assert json.loads(_get(read)[2]) == before
+    assert [v[0] for v in before["results"][0]["series"][0]["values"]] == [
+        1500000000000000010]
+
+
 def test_query_multi_statement_and_errors(http):
     base, _ = http
     q = "SELECT count(value) AS n FROM treasures; SHOW MEASUREMENTS"

@@ -428,12 +428,15 @@ def test_held_delete_outside_the_subset_uses_spark(spark):
 def test_held_show_matches_spark(spark, q):
     """SHOW over held rows answers from the rows as VALUES relations,
     without building the measurement's DataFrame, byte for byte like the
-    rows that are not held: null tags first, the Spark type names of the
+    Spark plan of the rows that are not held (the full plan, which takes
+    no driver copy): null tags first, the Spark type names of the
     fields."""
     import json
+    from influxdb_ha_spark.result import to_influx_series
     held, plain = _held_and_plain(spark, HELD_BODY)
     got = json.dumps(held.query(q, "db"))
-    assert got == json.dumps(plain.query(q, "db"))
+    assert got == json.dumps(to_influx_series(
+        plain.query_df(q, "db"), plain._measurement_of(q) or ""))
     assert "df" not in held.catalog.get("db", "m").__dict__
     assert json.loads(got)["results"][0]["series"], q
 

@@ -6,6 +6,7 @@ the driver-side pivot and upsert of /write agree with the Spark ones."""
 import math
 
 import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from influxdb_ha_spark.ingest import upsert_points, upsert_rows
@@ -56,6 +57,45 @@ def test_roundtrip(measurement, tags, fields, time_ns):
             assert math.isclose(got[k], v, rel_tol=0, abs_tol=0) or got[k] == v
         else:
             assert got[k] == v
+
+
+@pytest.mark.parametrize("value", [
+    "nan", "NaN", "-nan", "inf", "-inf", "Infinity", "-Infinity", "1e400",
+    "-1e400", "1_5", "1_5i", "+1", "+1i", "0x10", "1.5.2", "1e", ".e5",
+    "-", "", "1.5i", "1e3i", "9223372036854775808i", "-9223372036854775809i",
+    "-5u", "٣", "1__0"])
+def test_invalid_numbers_are_error_records(value):
+    """Only the line-protocol number grammar with a finite value in range
+    parses (InfluxDB 1.x models/points.go); the rest is one error record
+    naming "invalid number"."""
+    recs = parse_line(f"m v={value} 1")
+    assert len(recs) == 1 and recs[0]["measurement"] is None, recs
+    assert "invalid number" in recs[0]["error"]
+
+
+@pytest.mark.parametrize("value,col,want", [
+    ("1", "f_float", 1.0), ("-0.5", "f_float", -0.5), (".5", "f_float", 0.5),
+    ("5.", "f_float", 5.0), ("1e+16", "f_float", 1e16),
+    ("1.5E-07", "f_float", 1.5e-07), ("-1e308", "f_float", -1e308),
+    ("7i", "f_int", 7), ("-9223372036854775808i", "f_int", -2**63),
+    ("9223372036854775807i", "f_int", 2**63 - 1), ("5u", "f_int", 5)])
+def test_valid_numbers_parse(value, col, want):
+    (rec,) = parse_line(f"m v={value} 1")
+    assert rec["error"] is None and rec[col] == want
+    assert type(rec[col]) is type(want)
+
+
+@pytest.mark.parametrize("ts", ["1_0", "1e3", "1.0", "٣", "9223372036854775808"])
+def test_invalid_timestamps_are_error_records(ts):
+    recs = parse_line(f"m v=1 {ts}")
+    assert len(recs) == 1 and "invalid timestamp" in recs[0]["error"]
+
+
+@settings(max_examples=200, deadline=None)
+@given(x=st.floats(allow_nan=False, allow_infinity=False))
+def test_finite_float_roundtrip(x):
+    (rec,) = parse_line(format_point("m", {}, {"v": x}, 1))
+    assert rec["error"] is None and rec["f_float"] == x
 
 
 @settings(max_examples=200, deadline=None)

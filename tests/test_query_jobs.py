@@ -7,13 +7,15 @@ exactly: a new Exchange, a range-partitioner sampling job or an eager
 the nine shapes of the `query` benchmark rotation, over a small `events`
 table from the repo's own generator (tools/gen_scale.gen_events), plus the
 `ingest` benchmark's read. Each answer is planned and collected the way
-/query does it (`Engine.query_df(..., answer=True)`, `to_influx_series`),
-so a plain GROUP BY time() aggregate plans and runs only its aggregated
-frame in Spark and is finished on the driver; over a source Spark reads
-as one split, that frame aggregates in one partition. The `ingest` read
+/query does it (`Engine.query_df(..., answer=True)`, `to_influx_series`).
+`events` is one parquet file, which Spark reads as one split, so /query
+answers a plain GROUP BY time() aggregate and SHOW TAG VALUES from one
+driver copy of it (`Measurement.answer_rows`): the copy costs one job the
+first time a generation is answered and none after it. The `ingest` read
 targets a measurement born from /write, whose rows the driver holds: it
-is aggregated in pyarrow and runs no job at all; its shape over a copy
-of those rows that is not held (`cpu_spark`) shows the Spark plan.
+is aggregated in pyarrow and runs no job at all. When Spark does run a
+finished answer (no copy), it plans and runs only the aggregated frame,
+in one partition over a one-split source.
 """
 
 from __future__ import annotations
@@ -62,20 +64,20 @@ ROTATION = [
     ("show_measurements", "SHOW MEASUREMENTS"),
 ]
 
-# (jobs while building the DataFrame, jobs while collecting it); the five
-# GROUP BY time() shapes run the aggregated frame only, over a one-split
-# source in one stage: partial and final aggregate share the one
-# partition, so there is no shuffle stage. The ingest read is answered
-# from the rows the driver holds, in pyarrow.
+# (jobs while building the DataFrame, jobs while collecting it), once the
+# `events` generation's driver copy exists: the five GROUP BY time() shapes
+# and SHOW TAG VALUES are answered from it in pyarrow, the ingest read
+# from the rows the driver holds. The raw LIMIT and the subquery stay in
+# Spark.
 EXPECTED_JOBS = {
-    "group_1h": (0, 1),
-    "group_1h_tag": (0, 1),
-    "group_1d_tag": (0, 1),
+    "group_1h": (0, 0),
+    "group_1h_tag": (0, 0),
+    "group_1d_tag": (0, 0),
     "raw_limit": (0, 1),
-    "fill_linear": (0, 1),
-    "fill_open": (0, 1),
+    "fill_linear": (0, 0),
+    "fill_open": (0, 0),
     "subquery": (0, 4),
-    "show_tag_values": (0, 2),
+    "show_tag_values": (0, 0),
     "show_measurements": (0, 0),
     "ingest_read": (0, 0),
 }
@@ -151,6 +153,7 @@ def _counted(spark, eng, kind, q):
 
 
 def test_rotation_job_counts(spark, events_engine):
+    events_engine.catalog.get("default", "events").answer_rows()
     got = {}
     for kind, q in ROTATION + [("ingest_read", INGEST_READ)]:
         counts, series = _counted(spark, events_engine, kind, q)
@@ -178,6 +181,154 @@ def test_multi_split_source_keeps_two_jobs(spark, events_dir):
             assert series and counts == (0, 2), kind
     finally:
         spark.conf.set(key, old)
+
+
+def _copy_of(eng):
+    from influxdb_ha_spark.model import _COPY
+    return eng.catalog.get("default", "events").df.__dict__.get(_COPY)
+
+
+def _full_series(eng, q):
+    """The full Spark plan of `q` (no driver copy), collected and shaped
+    as /query shapes its answer."""
+    from influxdb_ha_spark.result import shape_series
+    full = eng.query_df(q)
+    tags = [t for t in ("event_type",) if t in full.columns]
+    return shape_series(full.columns, full.collect(), "events", tags,
+                        "ns")["results"][0]["series"]
+
+
+def test_copy_costs_one_job_per_generation(spark, events_dir):
+    """The first answer that needs the driver copy takes it, in one job
+    while building; every later answer of the generation runs none."""
+    from influxdb_ha_spark.result import FinishSpec
+    eng = _engine(spark, events_dir)
+    assert _copy_of(eng) is None
+    got = []
+    for i, kind in enumerate(FINISHED + ["show_tag_values", "group_1h"]):
+        counts, series = _counted(spark, eng, f"first-{i}-{kind}",
+                                  dict(ROTATION)[kind])
+        assert series, kind
+        got.append(counts)
+    assert got == [(1, 0)] + [(0, 0)] * 6
+    assert isinstance(eng.query_df(dict(ROTATION)["group_1h"], answer=True),
+                      FinishSpec)
+    assert _copy_of(eng).num_rows == 5000
+
+
+def test_concurrent_first_answers_take_one_copy(spark, events_dir,
+                                                monkeypatch):
+    """Eight threads (more than the cores) answering a generation's first
+    /query at once take one copy between them: one `toArrow()`, one
+    table, the same answer."""
+    import sys
+    import threading
+    eng = _engine(spark, events_dir)
+    df = eng.catalog.get("default", "events").df
+    taken, to_arrow = [], type(df).toArrow
+
+    def counted(self):
+        taken.append(self)
+        return to_arrow(self)
+
+    monkeypatch.setattr(type(df), "toArrow", counted)
+    q = dict(ROTATION)["group_1d_tag"]
+    copies, answers, errors = [], [], []
+
+    def answer():
+        try:
+            answers.append(eng.query(q, epoch="ns"))
+            copies.append(eng.catalog.get("default", "events").answer_rows())
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=answer) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert len(taken) == 1 and taken[0] is df
+    assert len(copies) == 8 and len({id(c) for c in copies}) == 1
+    assert all(a == answers[0] for a in answers)
+
+
+@pytest.mark.parametrize("change", ["delete", "retention"])
+def test_delete_and_retention_drop_the_copy(spark, events_dir, change):
+    """DELETE and retention replace the generation's DataFrame, so the
+    copy goes with the old one: the next answer takes a new copy (one
+    job) of what is left, and answers like the full Spark plan."""
+    from influxdb_ha_spark.maintenance import enforce_retention
+    eng = _engine(spark, events_dir)
+    q = dict(ROTATION)["group_1d_tag"]
+    before = eng.query(q, epoch="ns")["results"][0]["series"]
+    assert _copy_of(eng) is not None
+    if change == "delete":
+        eng.query("DELETE FROM events WHERE event_type = 'click'")
+    else:
+        eng.catalog.retention_policies["default"] = [
+            {"name": "r", "duration": "30d", "default": True}]
+        enforce_retention(eng.catalog, "default", NOW)   # keeps from day 10
+    assert _copy_of(eng) is None
+    counts, series = _counted(spark, eng, f"after-{change}", q)
+    assert counts == (1, 0) and series != before
+    assert series == _full_series(eng, q)
+    if change == "delete":
+        assert "click" not in {s["tags"]["event_type"] for s in series}
+    else:
+        assert min(v[0] for s in series for v in s["values"]
+                   if v[1] is not None) == JAN1 + 10 * DAY
+
+
+def test_write_into_events_sends_reads_to_spark(spark, events_dir):
+    """A /write into `events` registers an upsert over the file scan,
+    which is not one split: its answers go back to Spark (the aggregated
+    frame, whose plan now holds the upsert's shuffle too) and take no
+    copy."""
+    from influxdb_ha_spark.result import FinishSpec
+    eng = _engine(spark, events_dir)
+    q = dict(ROTATION)["group_1h_tag"]
+    eng.query(q)
+    write_lines(eng, "default",
+                f"events,event_type=click value=1e6,event_id=1i,user_id=1i "
+                f"{JAN1 + 6 * DAY}")
+    assert _copy_of(eng) is None
+    assert not isinstance(eng.query_df(q, answer=True), FinishSpec)
+    counts, series = _counted(spark, eng, "after-write", q)
+    assert counts == (0, 3) and _copy_of(eng) is None
+    assert series == _full_series(eng, q)
+    assert max(v[2] for v in series[0]["values"] if v[2] is not None) == 1e6
+
+
+def test_full_plans_and_explain_take_no_copy(spark, events_dir):
+    """Planner.plan without `answer` (EXPLAIN, SELECT … INTO, subqueries,
+    the contract keys, the traced benchmark pass) and EXPLAIN itself never
+    take the copy, so their plans do not depend on earlier answers."""
+    from influxdb_ha_spark.influxql.parser import parse_query
+    from influxdb_ha_spark.planner import Planner
+    eng = _engine(spark, events_dir)
+    planner = Planner(eng.catalog, "default", now_ns=NOW)
+    sc = spark.sparkContext
+    group = f"qj-no-copy-{id(eng)}"
+    try:
+        sc.setJobGroup(group, "no copy")
+        for kind in FINISHED:
+            q = dict(ROTATION)[kind]
+            planner.plan(parse_query(q))
+            eng.query_df(q)
+            eng.query_df(f"EXPLAIN {q}")
+        eng.query_df(dict(ROTATION)["show_tag_values"])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert _copy_of(eng) is None
+    assert _jobs(sc, group) == 0
+    eng.query(f"EXPLAIN ANALYZE {dict(ROTATION)['group_1h']}")
+    assert _copy_of(eng) is None
 
 
 def test_held_write_read_cycles_run_no_job(spark):
@@ -216,11 +367,14 @@ def _executed_plan(df):
 
 
 @pytest.mark.parametrize("kind", FINISHED + ["ingest_read"])
-def test_answer_plan_is_the_aggregated_frame(events_engine, kind):
-    """/query plans a finished answer only up to the aggregated frame it
-    collects: no spine (Generate), no spine join, no fill window, no
-    sort; over a one-split source, no Exchange either."""
+def test_answer_plan_is_the_aggregated_frame(events_engine, kind,
+                                             monkeypatch):
+    """Without a driver copy (as for a statement pyarrow declines once it
+    has read the copy), /query plans a finished answer only up to the
+    aggregated frame it collects: no spine (Generate), no spine join, no
+    fill window, no sort; over a one-split source, no Exchange either."""
     from influxdb_ha_spark.result import _FINISH
+    monkeypatch.setattr(Measurement, "answer_rows", lambda m: m.rows)
     q = INGEST_READ_SPARK if kind == "ingest_read" else dict(ROTATION)[kind]
     df = events_engine.query_df(q, answer=True)
     assert df.__dict__.get(_FINISH) is not None
