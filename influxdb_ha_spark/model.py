@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import os
 import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
@@ -68,8 +70,81 @@ def _is_utc_zone(tz: str | None) -> bool:
         return False
 
 
-_COPY = "_driver_copy"
-_COPY_LOCK = threading.Lock()
+# Together the driver copies of one-split generations
+# (`Measurement.answer_rows`) hold at most this many bytes of the driver's
+# heap: taking a copy drops the least recently read others first, and a
+# copy larger than the whole budget answers once and is not kept.
+COPY_BUDGET_BYTES = 256 << 20
+# keys of a generation's DataFrame `__dict__`: its copy's Arrow schema
+# (False when it takes no copy), the copy, and the lock it is taken under
+_COPY_SCHEMA, _COPY, _COPY_LOCK = ("_driver_copy_schema", "_driver_copy",
+                                   "_driver_copy_lock")
+# id(df) → (weakref to df, copy bytes), least recently read first; the
+# lock guards this bookkeeping only and is never held over a Spark job
+_copies: OrderedDict[int, tuple[weakref.ref, int]] = OrderedDict()
+_copies_lock = threading.Lock()
+
+
+def _copy_schema(m: Measurement, df: DataFrame) -> pa.Schema | None:
+    """The Arrow schema of the driver copy of `df`, from its plan (no
+    job), or None when it takes none: `df` is not read as one split
+    (`operators.util.one_split`), its time is not a BIGINT, two of its
+    column names are equal up to case, or the plan's size estimate of the
+    copied columns is over COPY_BUDGET_BYTES. The copy keeps only what
+    pyarrow's answers read: the time, the string tags and the BIGINT,
+    DOUBLE and BOOLEAN fields (not a string field such as `events.props`)."""
+    import pyarrow as pa
+
+    if not one_split(df):
+        return None
+    types = dict(df.dtypes)
+    if (types.get(TIME_COL) != "bigint"
+            or len({c.lower() for c in types}) != len(types)):
+        return None
+    arrow = {"string": pa.string(), "bigint": pa.int64(),
+             "double": pa.float64(), "boolean": pa.bool_()}
+    cols = [TIME_COL] + [t for t in m.tags if types.get(t) == "string"] + [
+        f for f in m.fields if types.get(f) in ("bigint", "double", "boolean")]
+    size = _copy_frame(df, cols)._jdf.queryExecution().optimizedPlan() \
+        .stats().sizeInBytes()
+    if int(size) > COPY_BUDGET_BYTES:
+        return None
+    return pa.schema([(c, arrow[types[c]]) for c in cols])
+
+
+def _copy_frame(df: DataFrame, cols: list[str]) -> DataFrame:
+    return df.select(*[F.col("`" + c.replace("`", "``") + "`") for c in cols])
+
+
+def _keep_copy(df: DataFrame, table: pa.Table) -> None:
+    """Keep `table` as the driver copy of `df` within COPY_BUDGET_BYTES,
+    dropping the least recently read copies of other generations first;
+    a table larger than the budget is not kept, and its generation takes
+    no copy again."""
+    size = table.nbytes
+    with _copies_lock:
+        if size > COPY_BUDGET_BYTES:
+            df.__dict__[_COPY_SCHEMA] = False
+            return
+        for key, (ref, _) in list(_copies.items()):
+            if ref() is None:   # a dead generation: its copy went with it
+                del _copies[key]
+        used = sum(n for _, n in _copies.values())
+        while _copies and used + size > COPY_BUDGET_BYTES:
+            _, (ref, n) = _copies.popitem(last=False)
+            old = ref()
+            if old is not None:
+                old.__dict__.pop(_COPY, None)
+            used -= n
+        _copies[id(df)] = (weakref.ref(df), size)
+        df.__dict__[_COPY] = table
+
+
+def _touch_copy(df: DataFrame) -> None:
+    with _copies_lock:
+        got = _copies.get(id(df))
+        if got is not None and got[0]() is df:
+            _copies.move_to_end(id(df))
 
 
 @dataclass
@@ -85,9 +160,10 @@ class Measurement:
     the source of truth".
 
     /query's answer plan may also read a driver copy of a generation the
-    driver does not hold (`answer_rows`): one `df.toArrow()` of a `df`
-    Spark reads as one split, kept on that DataFrame, so it lives exactly
-    as long as the generation."""
+    driver does not hold (`answer_rows`): one `toArrow()` of the time, tag
+    and numeric field columns of a `df` Spark reads as one split, kept on
+    that DataFrame, so it lives no longer than the generation; all such
+    copies share COPY_BUDGET_BYTES."""
 
     name: str
     database: str
@@ -128,26 +204,47 @@ class Measurement:
         self.rows = rows
         self.__dict__.pop("df", None)
 
+    def answer_schema(self) -> pa.Schema | None:
+        """The Arrow schema of `answer_rows`, read without a Spark job: the
+        held rows' schema, or the driver copy's (`_copy_schema`, cached on
+        `df`), or None when there are no such rows."""
+        if self.rows is not None:
+            return self.rows.schema
+        df = self.df
+        got = df.__dict__.get(_COPY_SCHEMA)
+        if got is None:
+            got = df.__dict__[_COPY_SCHEMA] = _copy_schema(self, df) or False
+        return got or None
+
     def answer_rows(self) -> pa.Table | None:
         """The rows /query's answer plan reads on the driver: the held
-        rows, or else a driver copy of the current generation when Spark
-        reads `df` as one split (`operators.util.one_split`, bounded by
-        `spark.sql.files.maxPartitionBytes`), or else None.
+        rows, or else the driver copy of the current generation when it
+        takes one (`answer_schema`), or else None.
 
-        The copy is `df.toArrow()`, one Spark job, taken the first time an
-        answer asks for it and memoised on `df` (as `one_split` caches its
-        result), so a DELETE or retention that replaces `df` drops the
-        copy with the old frame. A write into a measurement that is not
-        held registers an upsert over its scan, which is not one split."""
+        The copy is one `toArrow()` job of the schema's columns, taken the
+        first time an answer asks for it and kept on `df` (as `one_split`
+        caches its result), so a DELETE or retention that replaces `df`
+        drops the copy with the old frame; COPY_BUDGET_BYTES bounds all
+        copies together. A write into a measurement that is not held
+        registers an upsert over its scan, which is not one split."""
         if self.rows is not None:
             return self.rows
-        df = self.df
-        if not one_split(df):
+        schema = self.answer_schema()
+        if schema is None:
             return None
-        with _COPY_LOCK:   # concurrent first answers take one copy
+        df = self.df
+        got = df.__dict__.get(_COPY)
+        if got is not None:   # a kept copy never waits for another's job
+            _touch_copy(df)
+            return got
+        # concurrent first answers of one generation take one copy
+        with df.__dict__.setdefault(_COPY_LOCK, threading.Lock()):
             got = df.__dict__.get(_COPY)
             if got is None:
-                got = df.__dict__[_COPY] = df.toArrow()
+                got = _copy_frame(df, schema.names).toArrow()
+                if got.schema.types != schema.types:
+                    got = got.cast(schema)
+                _keep_copy(df, got)
         return got
 
     def column_types(self) -> dict[str, str]:
@@ -316,9 +413,13 @@ class Catalog:
         driver holds, or with `answer` (/query's answer) over the driver
         copy of a one-split source (`Measurement.answer_rows`), they are a
         VALUES relation and run no Spark job."""
+        import pyarrow as pa
+
         m = self.get(database, measurement)
-        if m.column_types().get(tag) == "string":
-            rows = m.answer_rows() if answer else m.rows
+        schema = m.answer_schema() if answer or m.rows is not None else None
+        if schema is not None and tag in schema.names \
+                and schema.field(tag).type == pa.string():
+            rows = m.answer_rows()
             if rows is not None:
                 values = rows.column(tag).unique().to_pylist()
                 values.sort(key=lambda v: (v is not None, v))

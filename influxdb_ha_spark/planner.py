@@ -94,29 +94,29 @@ class PlanContext:
     finish: FinishSpec | None = None
 
 
-def _held_type(rows, name: str) -> str | None:
-    """The Spark type name of column `name` of held rows ("string",
-    "long", "double", "boolean"), or None for a missing column or one
-    whose name another column's equals up to case (Spark resolves names
-    case-insensitively)."""
+def _held_type(schema, name: str) -> str | None:
+    """The Spark type name of column `name` of driver rows with Arrow
+    `schema` ("string", "long", "double", "boolean"), or None for a
+    missing column or one whose name another column's equals up to case
+    (Spark resolves names case-insensitively)."""
     import pyarrow as pa
 
     low = name.lower()
-    if name not in rows.column_names or sum(
-            c.lower() == low for c in rows.column_names) != 1:
+    if name not in schema.names or sum(
+            c.lower() == low for c in schema.names) != 1:
         return None
-    typ = rows.schema.field(name).type
+    typ = schema.field(name).type
     return {pa.string(): "string", pa.int64(): "long",
             pa.float64(): "double", pa.bool_(): "boolean"}.get(typ, str(typ))
 
 
 def _held_ordered(rows, name: str) -> bool:
-    """Whether pyarrow orders column `name` of held rows as Spark does: a
+    """Whether pyarrow orders column `name` of driver rows as Spark does: a
     BIGINT, or a DOUBLE without NaN (Spark orders NaN above every number
     and equal to itself)."""
     import pyarrow.compute as pc
 
-    typ = _held_type(rows, name)
+    typ = _held_type(rows.schema, name)
     return typ == "long" or (
         typ == "double"
         and not pc.any(pc.is_nan(rows.column(name))).as_py())
@@ -567,13 +567,15 @@ class Planner:
         or None to plan it in Spark. The rows are the measurement's held
         rows or, with `copy`, `Measurement.answer_rows` (which may take the
         driver copy of a one-split source); column types are read from
-        their Arrow schema.
+        their Arrow schema (`Measurement.answer_schema`, no job).
 
         It takes a plain `GROUP BY time()` aggregate the driver collects,
         without tz(), whose select fields are each a bare count, sum, mean,
         min or max of a field (ARROW_AGGREGATES), whose WHERE `_held_where`
         takes, and whose group keys are string tags. The rows are read
-        only once the statement's shape is in that subset. Every fill is
+        only once the statement's shape, WHERE included, is in that subset
+        on the schema; then a DOUBLE that min, max or the WHERE orders
+        must hold no NaN (`_held_ordered`). Every fill is
         finished as `_finish_spec` finishes it; the filled types follow
         Spark's coercion of the fill expression over a BIGINT or DOUBLE
         aggregate (fill(linear) and a float literal make it DOUBLE; an
@@ -604,27 +606,32 @@ class Planner:
         if len({TIME_COL, *group_tags, *value_names}) \
                 != 1 + len(group_tags) + len(values):
             return None
-        rows = m.answer_rows() if copy else m.rows
-        if (rows is None or _held_type(rows, TIME_COL) != "long"
-                or rows.column(TIME_COL).null_count
-                or any(_held_type(rows, t) != "string" for t in group_tags)):
+        # the structure is checked on the rows' schema; the rows (over a
+        # copy, one job the first time) are read only once it holds
+        schema = m.answer_schema() if copy else m.rows.schema
+        if (schema is None or _held_type(schema, TIME_COL) != "long"
+                or any(_held_type(schema, t) != "string" for t in group_tags)):
             return None
-        types = []
+        types, ordered = [], set()
         for _, fn, field in values:
-            typ = _held_type(rows, field)
+            typ = _held_type(schema, field)
             if typ is None or (ARROW_AGGREGATES[fn]
-                               and typ not in ("long", "double")) \
-                    or (fn in ("min", "max")
-                        and not _held_ordered(rows, field)):
+                               and typ not in ("long", "double")):
                 return None
+            if fn in ("min", "max"):
+                ordered.add(field)
             types.append("long" if fn == "count"
                          else "double" if fn == "mean" else typ)
         tracked = replace(ctx)
         keep = None
         if stmt.where is not None:
-            keep = self._held_where(stmt.where, tracked, rows)
+            keep = self._held_where(stmt.where, tracked, schema, ordered)
             if keep is None:
                 return None
+        rows = m.answer_rows() if copy else m.rows
+        if (rows is None or rows.column(TIME_COL).null_count
+                or not all(_held_ordered(rows, c) for c in ordered)):
+            return None
         ctx.start_ns, ctx.end_ns = tracked.start_ns, tracked.end_ns
         if self.strict_partition_key:
             self._check_partition_key(stmt, db, m)
@@ -641,10 +648,13 @@ class Planner:
             {c: "double" if as_double else t
              for c, t in zip(value_names, types)})
 
-    def _held_where(self, expr, ctx: PlanContext, rows):
-        """WHERE over held rows: a function of a `pyarrow.Table` to the
-        boolean mask Spark's WHERE gives (null where Spark's is null), or
-        None when `expr` is outside what pyarrow answers the same way.
+    def _held_where(self, expr, ctx: PlanContext, schema, ordered: set):
+        """WHERE over driver rows with Arrow `schema`: a function of a
+        `pyarrow.Table` to the boolean mask Spark's WHERE gives (null where
+        Spark's is null), or None when `expr` is outside what pyarrow
+        answers the same way. Read from the schema alone; a field compared
+        with a number is added to `ordered`, which the caller checks on
+        the rows (`_held_ordered`: a DOUBLE with NaN is left to Spark).
 
         It takes AND/OR (Kleene, three-valued like Spark's) of time
         comparisons and of a tag or field compared with a literal of its
@@ -657,8 +667,8 @@ class Planner:
         if not isinstance(expr, BinaryExpr):
             return None
         if expr.op in ("AND", "OR"):
-            left = self._held_where(expr.lhs, ctx, rows)
-            right = left and self._held_where(expr.rhs, ctx, rows)
+            left = self._held_where(expr.lhs, ctx, schema, ordered)
+            right = left and self._held_where(expr.rhs, ctx, schema, ordered)
             if right is None:
                 return None
             both = pc.and_kleene if expr.op == "AND" else pc.or_kleene
@@ -670,10 +680,11 @@ class Planner:
             col, val = TIME_COL, self._time_bound(op, rhs, ctx)
         else:
             col, val = lhs.name, getattr(rhs, "value", None)
-            if not ((isinstance(rhs, StringLit)
-                     and _held_type(rows, col) == "string")
-                    or (isinstance(rhs, (NumberLit, IntegerLit))
-                        and _held_ordered(rows, col))):
+            typ = _held_type(schema, col)
+            if isinstance(rhs, (NumberLit, IntegerLit)) \
+                    and typ in ("long", "double"):
+                ordered.add(col)
+            elif not (isinstance(rhs, StringLit) and typ == "string"):
                 return None
         if isinstance(val, int) and not _INT64[0] <= val <= _INT64[1]:
             return None

@@ -524,7 +524,7 @@ class Engine:
         planner = expr = None
         if cond:
             from .influxql.parser import Parser
-            from .planner import PlanContext
+            from .planner import PlanContext, _held_ordered
             expr = Parser(cond).parse_expr()
             planner = Planner(self.catalog, db, now_ns=self.now_ns)
         for n in names:
@@ -540,9 +540,12 @@ class Engine:
                     continue
                 ctx = PlanContext(meas, planner.now_ns)
                 # a point WHERE does not match (a null tag compared) stays
-                hit = (planner._held_where(expr, ctx, meas.rows)
+                ordered = set()
+                hit = (planner._held_where(expr, ctx, meas.rows.schema,
+                                           ordered)
                        if meas.rows is not None else None)
-                if hit is not None:
+                if hit is not None and all(_held_ordered(meas.rows, c)
+                                           for c in ordered):
                     drop = pc.fill_null(hit(meas.rows), False)
                     meas.hold(meas.rows.filter(pc.invert(drop)))
                     continue

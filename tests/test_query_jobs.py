@@ -183,6 +183,10 @@ def test_multi_split_source_keeps_two_jobs(spark, events_dir):
         spark.conf.set(key, old)
 
 
+# the columns of `events` a driver copy keeps: not the string field props
+COPIED = ["time", "event_type", "value", "event_id", "user_id"]
+
+
 def _copy_of(eng):
     from influxdb_ha_spark.model import _COPY
     return eng.catalog.get("default", "events").df.__dict__.get(_COPY)
@@ -213,7 +217,10 @@ def test_copy_costs_one_job_per_generation(spark, events_dir):
     assert got == [(1, 0)] + [(0, 0)] * 6
     assert isinstance(eng.query_df(dict(ROTATION)["group_1h"], answer=True),
                       FinishSpec)
-    assert _copy_of(eng).num_rows == 5000
+    copy = _copy_of(eng)
+    assert copy.num_rows == 5000 and copy.column_names == COPIED
+    assert copy.schema.types == \
+        eng.catalog.get("default", "events").answer_schema().types
 
 
 def test_concurrent_first_answers_take_one_copy(spark, events_dir,
@@ -253,9 +260,118 @@ def test_concurrent_first_answers_take_one_copy(spark, events_dir,
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads) and not errors, errors
-    assert len(taken) == 1 and taken[0] is df
+    assert len(taken) == 1 and taken[0].columns == COPIED
     assert len(copies) == 8 and len({id(c) for c in copies}) == 1
     assert all(a == answers[0] for a in answers)
+
+
+def test_a_kept_copy_never_waits_for_another_generations_copy(
+        spark, events_dir, monkeypatch):
+    """While one measurement's first copy is being taken, an answer over
+    another measurement whose copy is kept returns: the copy is taken
+    under its own DataFrame's lock, and a kept copy takes no lock."""
+    import threading
+    eng = _engine(spark, events_dir)
+    cat = eng.catalog
+    cat.register_dataframe("default", "events2",
+                           spark.read.parquet(f"{events_dir}/events.parquet"),
+                           time_col="ts", tags=["event_type"],
+                           fields=["value", "event_id", "user_id", "props"])
+    q = dict(ROTATION)["group_1d_tag"]
+    kept = eng.query(q.replace("FROM events", "FROM events2"), epoch="ns")
+    df = cat.get("default", "events").df
+    started, release = threading.Event(), threading.Event()
+    to_arrow = type(df).toArrow
+
+    def slow(self):   # only the copy of `events` is taken from here on
+        started.set()
+        release.wait(120)
+        return to_arrow(self)
+
+    monkeypatch.setattr(type(df), "toArrow", slow)
+    out = {}
+    first = threading.Thread(target=lambda: out.update(
+        first=eng.query(q, epoch="ns")))
+    other = threading.Thread(target=lambda: out.update(
+        other=eng.query(q.replace("FROM events", "FROM events2"),
+                        epoch="ns")))
+    first.start()
+    try:
+        assert started.wait(120)
+        other.start()
+        other.join(60)
+        assert not other.is_alive() and first.is_alive()
+    finally:
+        release.set()
+        first.join(120)
+        other.join(120)
+    assert out["other"] == kept
+    assert [dict(s, name="events2")
+            for s in out["first"]["results"][0]["series"]] == \
+        kept["results"][0]["series"]
+
+
+def test_copy_budget_drops_the_least_recently_read_copy(spark, events_dir,
+                                                        monkeypatch):
+    """The copies share COPY_BUDGET_BYTES: with room for one, copying a
+    second generation drops the first, whose next answer copies it again
+    (one job) and drops the second."""
+    from influxdb_ha_spark import model
+    eng = _engine(spark, events_dir)
+    cat = eng.catalog
+    cat.register_dataframe("default", "events2",
+                           spark.read.parquet(f"{events_dir}/events.parquet"),
+                           time_col="ts", tags=["event_type"],
+                           fields=["value", "event_id", "user_id", "props"])
+    one, two = cat.get("default", "events"), cat.get("default", "events2")
+    monkeypatch.setattr(model, "COPY_BUDGET_BYTES",
+                        3 * one.answer_rows().nbytes // 2)
+    assert two.answer_rows() is not None
+    assert model._COPY not in one.df.__dict__
+    assert model._COPY in two.df.__dict__
+    q = dict(ROTATION)["group_1h"]
+    counts, series = _counted(spark, eng, f"budget-{id(eng)}", q)
+    assert counts == (1, 0) and series == _full_series(eng, q)
+    assert model._COPY in one.df.__dict__
+    assert model._COPY not in two.df.__dict__
+
+
+def test_copy_over_the_budget_is_not_taken_or_kept(spark, events_dir,
+                                                  monkeypatch):
+    """A generation whose copy the plan estimates over COPY_BUDGET_BYTES
+    takes none; one whose table is larger than the budget answers once
+    from it and is not kept, and its later answers run in Spark."""
+    from influxdb_ha_spark import model
+    q = dict(ROTATION)["group_1h"]
+    eng = _engine(spark, events_dir)
+    monkeypatch.setattr(model, "COPY_BUDGET_BYTES", 1)
+    counts, series = _counted(spark, eng, f"over-est-{id(eng)}", q)
+    assert counts == (0, 1) and _copy_of(eng) is None
+    assert series == _full_series(eng, q)
+    monkeypatch.undo()
+
+    eng = _engine(spark, events_dir)
+    m = eng.catalog.get("default", "events")
+    assert m.answer_schema().names == COPIED   # estimated under the budget
+    monkeypatch.setattr(model, "COPY_BUDGET_BYTES", 1000)
+    counts, series = _counted(spark, eng, f"over-1-{id(eng)}", q)
+    assert counts == (1, 0) and series == _full_series(eng, q)
+    assert _copy_of(eng) is None and m.answer_schema() is None
+    counts, _ = _counted(spark, eng, f"over-2-{id(eng)}", q)
+    assert counts == (0, 1) and _copy_of(eng) is None
+
+
+def test_where_outside_the_subset_takes_no_copy(spark, events_dir):
+    """A WHERE pyarrow does not answer (a regex, field math) is declined
+    on the schema, before any copy: a fresh generation's answer runs its
+    one Spark job and takes no copy."""
+    eng = _engine(spark, events_dir)
+    for i, where in enumerate(["event_type =~ /cl.*/", "value * 2 > 1"]):
+        q = ("SELECT mean(value) FROM events "
+             f"WHERE {_w(3, 7)} AND {where} GROUP BY time(1h)")
+        counts, series = _counted(spark, eng, f"where-{i}-{id(eng)}", q)
+        assert counts == (0, 1) and _copy_of(eng) is None
+        assert series and series == _full_series(eng, q)
 
 
 @pytest.mark.parametrize("change", ["delete", "retention"])
