@@ -147,15 +147,17 @@ ARROW_AGGREGATES: dict[str, bool] = {"count": False, "sum": True,
                                      "mean": True, "min": True, "max": True}
 
 
-def held_aggregate(rows, keep, time_col: str, interval_ns: int,
+def held_aggregate(rows, keep, time_col: str, interval_ns: int | None,
                    offset_ns: int, group_tags: list[str],
                    values: list[tuple[str, str, str]]):
     """`GROUP BY time(interval, offset), group_tags` of driver-held rows
     (a `pyarrow.Table`) in pyarrow: the aggregated frame the planner
     would run in Spark, with columns `time_col`, `group_tags`, then one per
-    `values` entry (output name, ARROW_AGGREGATES name, field). `keep`
-    maps the rows to the WHERE mask (a null drops the row, as in Spark's
-    WHERE), or is None.
+    `values` entry (output name, ARROW_AGGREGATES name, field). With
+    `interval_ns` None it groups by `group_tags` alone and has no time
+    column; grouped by nothing it is one row, as Spark's global aggregate
+    is, even over no rows. `keep` maps the rows to the WHERE mask (a null
+    drops the row, as in Spark's WHERE), or is None.
 
     The values equal Spark's over the same rows in one partition: groups
     are built in row order (`use_threads=False`), so each float sum adds
@@ -171,9 +173,11 @@ def held_aggregate(rows, keep, time_col: str, interval_ns: int,
 
     if keep is not None:
         rows = rows.filter(keep(rows))
-    cols = {"b": time_bucket_values(rows.column(time_col), interval_ns,
-                                    offset_ns)}
-    keys = ["b"]
+    cols, keys = {}, []
+    if interval_ns is not None:
+        keys.append("b")
+        cols["b"] = time_bucket_values(rows.column(time_col), interval_ns,
+                                       offset_ns)
     for i, t in enumerate(group_tags):
         keys.append(f"k{i}")
         cols[keys[-1]] = rows.column(t)
@@ -195,10 +199,10 @@ def held_aggregate(rows, keep, time_col: str, interval_ns: int,
                                     out[f"v{j}_count"].cast(pa.float64()))
         else:
             done[fn, f] = out[f"v{j}_{fn}"]
+    timed = [time_col] if interval_ns is not None else []
     return pa.Table.from_arrays(
-        [out["b"], *[out[k] for k in keys[1:]],
-         *[done[fn, f] for _, fn, f in values]],
-        names=[time_col, *group_tags, *[n for n, _, _ in values]])
+        [*[out[k] for k in keys], *[done[fn, f] for _, fn, f in values]],
+        names=[*timed, *group_tags, *[n for n, _, _ in values]])
 
 
 def is_aggregate(name: str) -> bool:

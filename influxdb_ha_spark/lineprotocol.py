@@ -46,25 +46,35 @@ _ESCAPED_COMMA_SPACE = re.compile(r"\\([,\s=])")
 # InfluxDB 1.x number grammar (models/points.go scanNumber): an optional
 # minus, ASCII digits with at most one decimal point and, for a float, an
 # exponent; an integer ends in `i`, an unsigned one in `u`. No NaN, no
-# infinity, no `+` sign, no digit separators.
-_FLOAT = re.compile(r"-?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?")
-_INT = re.compile(r"-?[0-9]+i|[0-9]+u")
+# infinity, no `+` sign, no digit separators. `_number` checks it without
+# a regex: Python's `int` and `float` read a superset of it, and what they
+# read beyond it (spaces around the number, a leading `+`, `_` separators,
+# non-ASCII digits, `nan`/`inf`) is excluded by the checks before them.
 _TIMESTAMP = re.compile(r"[+-]?[0-9]+")
 _INT64 = (-2**63, 2**63 - 1)
+_FLOAT_FIRST = frozenset("-.0123456789")
+_FLOAT_LAST = frozenset(".0123456789")
 
 
 def _number(v: str) -> tuple[str, float | int]:
     """A field value in the number grammar → ("f_int", int) or
     ("f_float", float); ValueError "invalid number" for anything else, a
     float that is not finite (1e400) or an integer outside BIGINT."""
-    if _INT.fullmatch(v):
-        n = int(v[:-1])
-        if _INT64[0] <= n <= _INT64[1]:
-            return "f_int", n
-    elif _FLOAT.fullmatch(v):
-        x = float(v)
-        if math.isfinite(x):
-            return "f_float", x
+    last = v[-1:]
+    if last in _FLOAT_LAST:
+        if v[0] in _FLOAT_FIRST and v.isascii() and "_" not in v:
+            try:
+                x = float(v)
+            except ValueError:
+                x = math.inf
+            if math.isfinite(x):
+                return "f_float", x
+    elif last == "i" or last == "u":
+        digits = v[1:-1] if last == "i" and v[0] == "-" else v[:-1]
+        if digits.isdecimal() and digits.isascii():
+            n = int(v[:-1])
+            if _INT64[0] <= n <= _INT64[1]:
+                return "f_int", n
     raise ValueError(f"invalid number {v!r}")
 
 

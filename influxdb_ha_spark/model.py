@@ -407,26 +407,37 @@ class Catalog:
                             [("measurement", "STRING"), ("fieldKey", "STRING"),
                              ("fieldType", "STRING")])
 
-    def show_tag_values(self, database: str, measurement: str, tag: str,
-                        answer: bool = False) -> DataFrame:
-        """The distinct values of one tag, nulls first. Over rows the
-        driver holds, or with `answer` (/query's answer) over the driver
-        copy of a one-split source (`Measurement.answer_rows`), they are a
-        VALUES relation and run no Spark job."""
+    def tag_values(self, database: str, measurement: str, tag: str,
+                   answer: bool = False) -> list[str | None] | None:
+        """The distinct values of one tag, nulls first, read on the driver
+        with no Spark job: from rows the driver holds, or with `answer`
+        (/query's answer) from the driver copy of a one-split source
+        (`Measurement.answer_rows`); None when Spark has to read them."""
         import pyarrow as pa
 
         m = self.get(database, measurement)
         schema = m.answer_schema() if answer or m.rows is not None else None
-        if schema is not None and tag in schema.names \
-                and schema.field(tag).type == pa.string():
-            rows = m.answer_rows()
-            if rows is not None:
-                values = rows.column(tag).unique().to_pylist()
-                values.sort(key=lambda v: (v is not None, v))
-                return local_result(self.spark, [(tag, v) for v in values],
-                                    [("key", "STRING"), ("value", "STRING")])
+        if schema is None or tag not in schema.names \
+                or schema.field(tag).type != pa.string():
+            return None
+        rows = m.answer_rows()
+        if rows is None:
+            return None
+        values = rows.column(tag).unique().to_pylist()
+        values.sort(key=lambda v: (v is not None, v))
+        return values
+
+    def show_tag_values(self, database: str, measurement: str, tag: str,
+                        answer: bool = False) -> DataFrame:
+        """The distinct values of one tag, nulls first: a VALUES relation
+        of `tag_values` when the driver reads them, else the Spark scan."""
+        values = self.tag_values(database, measurement, tag, answer)
+        if values is not None:
+            return local_result(self.spark, [(tag, v) for v in values],
+                                [("key", "STRING"), ("value", "STRING")])
         # the distinct values are few (a tag's cardinality): gathered into
         # one partition, the sort needs no range-partitioner sampling job
+        m = self.get(database, measurement)
         return (m.df.select(F.lit(tag).alias("key"), F.col(tag).alias("value"))
                 .distinct().coalesce(1).orderBy("value"))
 

@@ -37,7 +37,8 @@ from .influxql.ast import (BinaryExpr, Call, DurationLit, IntegerLit,
                            SourceList, StringLit, SubQuery, VarRef, Wildcard)
 from .model import Catalog, Measurement, TIME_COL
 from .operators.util import one_split
-from .result import FinishSpec, attach_finish, local_result
+from .result import (DriverAnswer, FinishSpec, attach_finish, collect_rows,
+                     local_result)
 from .timeutil import parse_time_literal_ns, time_bucket, time_bucket_tz
 
 TRANSFORMS = {"derivative", "non_negative_derivative", "difference",
@@ -110,6 +111,33 @@ def _held_type(schema, name: str) -> str | None:
             pa.float64(): "double", pa.bool_(): "boolean"}.get(typ, str(typ))
 
 
+def _held_raw_rows(rows, keep, columns: list[str], tags: list[str],
+                   desc: bool, offset: int, limit: int | None) -> list[tuple]:
+    """The rows of a raw select over driver rows (a `pyarrow.Table`), as
+    the Spark plan collects them: the WHERE mask `keep` (or None), ORDER
+    BY time with equal times in the measurement's `tags` order (ASC NULLS
+    FIRST; the sort is stable), OFFSET/LIMIT, then `columns` (time first,
+    then the selected columns; a name may repeat)."""
+    import pyarrow.compute as pc
+
+    read = list(dict.fromkeys([*columns, *tags]))
+    if keep is not None:
+        rows = rows.select(read).filter(keep(rows))
+    order = pc.sort_indices(
+        rows, sort_keys=[(TIME_COL, "descending" if desc else "ascending"),
+                         *[(t, "ascending") for t in tags]],
+        null_placement="at_start")
+    stop = None if limit is None else offset + limit
+    picked = rows.select(list(dict.fromkeys(columns))).take(
+        order[offset:stop])
+    return list(zip(*[picked.column(c).to_pylist() for c in columns]))
+
+
+# Arrow types of the Spark type names a driver answer's columns have
+_ARROW_TYPES = {"long": "int64", "double": "float64", "string": "string",
+                "boolean": "bool"}
+
+
 def _held_ordered(rows, name: str) -> bool:
     """Whether pyarrow orders column `name` of driver rows as Spark does: a
     BIGINT, or a DOUBLE without NaN (Spark orders NaN above every number
@@ -134,37 +162,29 @@ class Planner:
 
     # ------------------------------------------------------------------
     def plan(self, stmt: SelectStatement, nested: bool = False,
-             answer: bool = False) -> DataFrame:
+             answer: bool = False) -> DataFrame | FinishSpec | DriverAnswer:
         """DataFrame of a SELECT; `nested` for a subquery's inner plan.
 
         `answer` asks for the plan /query runs: a statement the driver
         finishes (result.FinishSpec) is planned only up to the aggregated
-        frame it collects, which carries the spec. When pyarrow can
-        aggregate it from rows on the driver (`_held_finish`), the answer
-        is the spec itself and no DataFrame is built: over a measurement
-        the driver holds, or, with `answer` only, over the driver copy of
-        a catalog measurement Spark reads as one split
-        (`Measurement.answer_rows`). Without `answer`, and for every other
-        statement, this is the full Spark plan (EXPLAIN, SELECT … INTO,
-        subqueries and the contract keys run that one); it never takes a
-        driver copy, so it does not depend on earlier answers."""
+        frame it collects, which carries the spec. When pyarrow can answer
+        it from rows on the driver, the answer is a FinishSpec
+        (`_held_finish`: an aggregate) or a result.DriverAnswer
+        (`_held_raw`: a raw select) and no DataFrame is built: over a
+        measurement the driver holds, or, with `answer` only, over the
+        driver copy of a catalog measurement Spark reads as one split
+        (`Measurement.answer_rows`) or over a subquery whose inner
+        statement is itself answered so (`_subquery_measurement`).
+        Without `answer`, and for every other statement, this is the full
+        Spark plan (EXPLAIN, SELECT … INTO, subqueries and the contract
+        keys run that one); it never takes a driver copy, so it does not
+        depend on earlier answers."""
         db = stmt.source.database or self.database
         if stmt.source.regex is not None:
             return self._plan_regex_source(stmt, db, nested)
         if isinstance(stmt.source, SourceList):
             return self._plan_source_list(stmt, db, nested)
-        if isinstance(stmt.source, SubQuery):
-            m = self._subquery_measurement(stmt.source, db)
-        else:
-            m = self.catalog.get(db, stmt.source.name)
-        ctx = PlanContext(measurement=m, now_ns=self.now_ns,
-                          to_driver=not nested and stmt.into is None,
-                          answer=answer)
-        # decided before any Spark Column is built: a statement answered
-        # from driver rows needs no DataFrame and, over held rows, no job
-        copy = answer and not isinstance(stmt.source, SubQuery)
-        held = (self._held_finish(stmt, m, ctx, db, copy)
-                if ctx.to_driver and (copy or m.rows is not None) else None)
+        m, ctx, held = self._source(stmt, db, nested, answer)
         if held is not None and answer:
             return held
 
@@ -186,6 +206,11 @@ class Planner:
                                                if n != TIME_COL]
             return local_result(df.sparkSession, [], schema)
         calls = self._find_calls(stmt)
+        # after time: what orders equal times, and the series of an
+        # aggregate without GROUP BY time() (InfluxDB orders series by tag
+        # set); ASC NULLS FIRST, as the driver's answers order them
+        ties = None
+        aggregated = False
 
         if not calls:
             if stmt.group_by_time_ns:
@@ -194,6 +219,8 @@ class Planner:
                 # aggregate function")
                 raise QueryError("GROUP BY time() requires an aggregate function")
             out = self._plan_raw(stmt, df, m)
+            # every tag of the source, even one an alias's name shadows
+            ties = [df[t] for t in m.tags if t in df.columns]
         elif len(calls) == 1 and calls[0].name in ROW_SELECTORS:
             out = self._plan_row_selector(stmt, df, m, group_tags, ctx)
         elif len(calls) == 1 and calls[0].name in TRANSFORMS and \
@@ -210,14 +237,21 @@ class Planner:
             if answer and ctx.finish is not None:
                 attach_finish(out, ctx.finish)
                 return out
+            aggregated = True
 
         out = self._apply_series_limits(stmt, out, group_tags,
                                         ctx.spine_groups)
-        order = [F.col(TIME_COL).desc() if stmt.order_desc else F.col(TIME_COL).asc()] \
-            if TIME_COL in out.columns else []
-        if order:
-            out = out.orderBy(*order, *[F.col(t) for t in group_tags
-                                        if t in out.columns])
+        if ties is None:
+            ties = [F.col(t) for t in group_tags if t in out.columns]
+        if TIME_COL in out.columns:
+            out = out.orderBy(F.col(TIME_COL).desc() if stmt.order_desc
+                              else F.col(TIME_COL).asc(), *ties)
+        elif aggregated and ties and (ctx.to_driver or stmt.offset
+                                      or stmt.limit is not None):
+            # one row per series: gathered into one partition, the sort
+            # needs no range-partitioner sampling job. A subquery's inner
+            # plan is sorted only when OFFSET/LIMIT picks its series.
+            out = out.coalesce(1).orderBy(*ties)
         if stmt.offset:
             out = out.offset(stmt.offset)
         if stmt.limit is not None:
@@ -301,17 +335,66 @@ class Planner:
                 out.fields.append(f)
         return out
 
-    def _subquery_measurement(self, src: SubQuery, db: str) -> Measurement:
+    def _source(self, stmt: SelectStatement, db: str, nested: bool,
+                answer: bool, raw: bool = True):
+        """(measurement, PlanContext, answer from driver rows or None) of a
+        statement over one measurement or subquery; with `raw` False only
+        an aggregate's FinishSpec is looked for. The answer is decided
+        before any Spark Column is built: a statement answered from driver
+        rows needs no DataFrame and, over rows already held, no job."""
+        to_driver = not nested and stmt.into is None
+        if isinstance(stmt.source, SubQuery):
+            m = self._subquery_measurement(stmt.source, db,
+                                           answer and to_driver)
+        else:
+            m = self.catalog.get(db, stmt.source.name)
+        ctx = PlanContext(measurement=m, now_ns=self.now_ns,
+                          to_driver=to_driver, answer=answer)
+        copy = answer and not isinstance(stmt.source, SubQuery)
+        held = None
+        if ctx.to_driver and (copy or m.rows is not None):
+            held = self._held_finish(stmt, m, ctx, db, copy)
+            if held is None and answer and raw:
+                held = self._held_raw(stmt, m, ctx, db, copy)
+        return m, ctx, held
+
+    def _subquery_measurement(self, src: SubQuery, db: str,
+                              answer: bool = False) -> Measurement:
         """FROM (SELECT …) — plan the inner statement and adopt its result
         as a synthetic measurement. The reference cannot do this
         (README.md:190-194 "subqueries currently do not work at all",
         though coordinator.go:376-387 recurses into SubQuery nodes in
-        preparation); on Spark the inner plan simply becomes the scan."""
+        preparation); on Spark the inner plan simply becomes the scan.
+
+        With `answer`, an inner statement over one source that /query
+        would itself answer as a FinishSpec (from driver rows) is answered
+        now, and its rows, typed as the spec plans its columns, are held
+        by the synthetic measurement, so the outer statement can be
+        answered from them too."""
+        import pyarrow as pa
+
         inner_stmt = src.stmt
-        inner_df = self.plan(inner_stmt, nested=True)
-        cols = inner_df.columns
-        tags: list[str] = []
         isrc = inner_stmt.source
+        spec = None
+        if answer and isrc.regex is None \
+                and not isinstance(isrc, SourceList):
+            spec = self._source(inner_stmt, isrc.database or self.database,
+                                False, True, raw=False)[2]
+        if isinstance(spec, FinishSpec):
+            cols, rows = collect_rows(spec)
+            types = [pa.int64()] if spec.interval_ns is not None else []
+            types += [pa.string()] * len(spec.group_tags)
+            types += [pa.type_for_alias(_ARROW_TYPES[t])
+                      for t in spec.value_types]
+            columns = list(zip(*rows)) or [()] * len(cols)
+            inner_rows = pa.Table.from_arrays(
+                [pa.array(c, type=t) for c, t in zip(columns, types)],
+                names=cols)
+        else:
+            inner_rows = None
+            inner_df = self.plan(inner_stmt, nested=True)
+            cols = inner_df.columns
+        tags: list[str] = []
         if getattr(isrc, "name", None) and getattr(isrc, "regex", None) is None \
                 and not isinstance(isrc, SubQuery):
             try:
@@ -322,6 +405,9 @@ class Planner:
         for t in inner_stmt.group_by_tags:
             if t != "*" and t in cols and t not in tags:
                 tags.append(t)
+        if inner_rows is not None:
+            return Measurement.held(self.catalog.spark, "(subquery)", db,
+                                    tags, inner_rows)
         fields = [c for c in cols if c != TIME_COL and c not in tags]
         return Measurement(name="(subquery)", database=db, tags=tags,
                            fields=fields, df=inner_df)
@@ -528,9 +614,10 @@ class Planner:
         """The FinishSpec over `aggregated`, given each value column's
         aggregated and filled type (Spark type names): a cast where the
         fill makes an integer aggregate DOUBLE, and the fill literal in
-        the filled type; None when the finisher cannot reproduce it."""
-        literal = (isinstance(stmt.fill, (int, float))
-                   and not isinstance(stmt.fill, bool))
+        the filled type; None when the finisher cannot reproduce it.
+        Without GROUP BY time() there is no fill."""
+        fill = stmt.fill if stmt.group_by_time_ns else None
+        literal = isinstance(fill, (int, float)) and not isinstance(fill, bool)
         casts, literals = [], []
         for c in value_names:
             p, b = planned_t.get(c), bucketed_t.get(c)
@@ -543,18 +630,19 @@ class Planner:
             if not literal:
                 literals.append(None)
             elif p == "double":
-                literals.append(float(stmt.fill))
-            elif p in _INTEGRAL_TYPES and isinstance(stmt.fill, int):
-                literals.append(stmt.fill)
-            elif p == "string" and isinstance(stmt.fill, int):
-                literals.append(str(stmt.fill))
+                literals.append(float(fill))
+            elif p in _INTEGRAL_TYPES and isinstance(fill, int):
+                literals.append(fill)
+            elif p == "string" and isinstance(fill, int):
+                literals.append(str(fill))
             else:
                 return None
         return FinishSpec(
             aggregated=aggregated, group_tags=tuple(group_tags),
             value_cols=tuple(value_names), casts=tuple(casts),
-            fill_values=tuple(literals), fill=stmt.fill,
-            interval_ns=stmt.group_by_time_ns,
+            fill_values=tuple(literals),
+            value_types=tuple(planned_t[c] for c in value_names), fill=fill,
+            interval_ns=stmt.group_by_time_ns or None,
             offset_ns=stmt.group_by_offset_ns, start_ns=tr[0], end_ns=tr[1],
             order_desc=bool(stmt.order_desc), offset=stmt.offset or 0,
             limit=stmt.limit, soffset=stmt.soffset, slimit=stmt.slimit)
@@ -569,21 +657,21 @@ class Planner:
         driver copy of a one-split source); column types are read from
         their Arrow schema (`Measurement.answer_schema`, no job).
 
-        It takes a plain `GROUP BY time()` aggregate the driver collects,
-        without tz(), whose select fields are each a bare count, sum, mean,
-        min or max of a field (ARROW_AGGREGATES), whose WHERE `_held_where`
-        takes, and whose group keys are string tags. The rows are read
-        only once the statement's shape, WHERE included, is in that subset
-        on the schema; then a DOUBLE that min, max or the WHERE orders
-        must hold no NaN (`_held_ordered`). Every fill is
-        finished as `_finish_spec` finishes it; the filled types follow
-        Spark's coercion of the fill expression over a BIGINT or DOUBLE
-        aggregate (fill(linear) and a float literal make it DOUBLE; an
-        integer literal keeps the type)."""
-        fill = stmt.fill
+        It takes a plain aggregate the driver collects, with or without
+        `GROUP BY time()` but without tz(), whose select fields are each a
+        bare count, sum, mean, min or max of a field (ARROW_AGGREGATES),
+        whose WHERE `_held_where` takes, and whose group keys are string
+        tags. The rows are read only once the statement's shape, WHERE
+        included, is in that subset on the schema; then a DOUBLE that min,
+        max or the WHERE orders must hold no NaN (`_held_ordered`). Every
+        fill is finished as `_finish_spec` finishes it; the filled types
+        follow Spark's coercion of the fill expression over a BIGINT or
+        DOUBLE aggregate (fill(linear) and a float literal make it DOUBLE;
+        an integer literal keeps the type)."""
+        timed = bool(stmt.group_by_time_ns)
+        fill = stmt.fill if timed else None
         literal = isinstance(fill, (int, float)) and not isinstance(fill, bool)
-        if (not stmt.group_by_time_ns or stmt.group_by_time_ns <= 0
-                or stmt.tz
+        if (stmt.tz or (timed and stmt.group_by_time_ns <= 0)
                 or not (literal or fill in (None, "null", "none", "previous",
                                             "linear"))
                 or (literal and isinstance(fill, int)
@@ -622,8 +710,74 @@ class Planner:
                 ordered.add(field)
             types.append("long" if fn == "count"
                          else "double" if fn == "mean" else typ)
-        tracked = replace(ctx)
-        keep = None
+        read = self._held_read(stmt, m, ctx, db, copy, schema, ordered)
+        if read is None:
+            return None
+        rows, keep = read
+        tr = (ctx.start_ns, ctx.end_ns)
+        if timed and fill != "none" and None not in tr:
+            checked_spine_size(tr[0], tr[1], stmt.group_by_time_ns,
+                               stmt.group_by_offset_ns)
+        as_double = fill == "linear" or isinstance(fill, float)
+        return self._spec(
+            stmt, partial(held_aggregate, rows, keep, TIME_COL,
+                          stmt.group_by_time_ns or None,
+                          stmt.group_by_offset_ns,
+                          group_tags, values),
+            group_tags, value_names, tr, dict(zip(value_names, types)),
+            {c: "double" if as_double else t
+             for c, t in zip(value_names, types)})
+
+    def _held_raw(self, stmt: SelectStatement, m: Measurement,
+                  ctx: PlanContext, db: str,
+                  copy: bool) -> DriverAnswer | None:
+        """The DriverAnswer of a raw select answered from rows on the
+        driver in pyarrow (`_held_raw_rows`, run when the answer is
+        collected), or None to plan it in Spark; the rows are read as
+        `_held_finish` reads them (`_held_read`).
+
+        It takes a select the driver collects whose fields are each a bare
+        field or tag of the rows (BIGINT, DOUBLE, BOOLEAN or string), with
+        or without an alias, with no GROUP BY, SLIMIT or tz(), whose WHERE
+        `_held_where` takes, over a measurement whose tags are all string
+        columns of the rows (they order equal times) and whose time has no
+        null. `*` and a column the rows lack (a string field is not in a
+        driver copy) are left to Spark."""
+        if (stmt.group_by_time_ns or stmt.group_by_tags
+                or stmt.tz or stmt.slimit is not None
+                or stmt.soffset is not None
+                or not all(isinstance(f.expr, VarRef)
+                           and TIME_COL not in (f.expr.name.lower(),
+                                                (f.alias or "").lower())
+                           for f in stmt.fields)):
+            return None
+        schema = m.answer_schema() if copy else m.rows.schema
+        fields = [f.expr.name for f in stmt.fields]
+        if (schema is None or _held_type(schema, TIME_COL) != "long"
+                or any(_held_type(schema, t) != "string" for t in m.tags)
+                or any(_held_type(schema, c) not in _SCALAR_TYPES
+                       for c in fields)):
+            return None
+        read = self._held_read(stmt, m, ctx, db, copy, schema, set())
+        if read is None:
+            return None
+        rows, keep = read
+        return DriverAnswer(
+            [TIME_COL, *[f.alias or f.expr.name for f in stmt.fields]],
+            partial(_held_raw_rows, rows, keep, [TIME_COL, *fields],
+                    list(m.tags), bool(stmt.order_desc), stmt.offset or 0,
+                    stmt.limit))
+
+    def _held_read(self, stmt: SelectStatement, m: Measurement,
+                   ctx: PlanContext, db: str, copy: bool, schema,
+                   ordered: set):
+        """(rows, WHERE mask or None) of a statement answered from rows on
+        the driver, or None to plan it in Spark: the WHERE is checked on
+        `schema` first (`_held_where`), then the rows are read (over a
+        copy, one job the first time) and must have no null time and no
+        NaN in an `ordered` DOUBLE. The WHERE's time bounds are set on
+        `ctx` only once the statement is taken."""
+        tracked, keep = replace(ctx), None
         if stmt.where is not None:
             keep = self._held_where(stmt.where, tracked, schema, ordered)
             if keep is None:
@@ -635,18 +789,7 @@ class Planner:
         ctx.start_ns, ctx.end_ns = tracked.start_ns, tracked.end_ns
         if self.strict_partition_key:
             self._check_partition_key(stmt, db, m)
-        tr = (ctx.start_ns, ctx.end_ns)
-        if fill != "none" and None not in tr:
-            checked_spine_size(tr[0], tr[1], stmt.group_by_time_ns,
-                               stmt.group_by_offset_ns)
-        as_double = fill == "linear" or isinstance(fill, float)
-        return self._spec(
-            stmt, partial(held_aggregate, rows, keep, TIME_COL,
-                          stmt.group_by_time_ns, stmt.group_by_offset_ns,
-                          group_tags, values),
-            group_tags, value_names, tr, dict(zip(value_names, types)),
-            {c: "double" if as_double else t
-             for c, t in zip(value_names, types)})
+        return rows, keep
 
     def _held_where(self, expr, ctx: PlanContext, schema, ordered: set):
         """WHERE over driver rows with Arrow `schema`: a function of a

@@ -7,29 +7,36 @@ by default or numeric epoch per the `epoch` parameter
 (coordinator.go:210-216).
 
 This is a presentation layer over a bounded result, and the answer is
-collected here in one of two ways before one shaper builds the JSON:
+collected here (`collect_rows`, the one seam) in one of three ways before
+one shaper builds the JSON:
 
-- a plain aggregate with `GROUP BY time()` whose answer the driver collects
-  has a `FinishSpec` (built by the planner). Its aggregated rows (WHERE
-  plus GROUP BY) come from one of two places:
+- a plain aggregate whose answer the driver collects has a `FinishSpec`
+  (built by the planner). Its aggregated rows (WHERE plus GROUP BY) come
+  from one of two places:
   - for a statement pyarrow answers as Spark does, they are aggregated in
     pyarrow when collected (`functions/aggregates.held_aggregate`) from
     rows on the driver (`Measurement.answer_rows`): the rows of a
-    measurement the driver holds (born from /write), or the driver copy
-    of a source Spark reads as one split (one `toArrow()` job the first
-    time a generation is answered, none after it). /query then builds no
-    DataFrame and runs no Spark job, and its answer is the FinishSpec
-    itself;
-  - otherwise Spark runs only the aggregated frame, collected with
-    `toArrow()`: one job over a source read as one split, two otherwise
-    (its shuffle stage and the result stage). /query plans nothing past
-    that frame.
+    measurement the driver holds (born from /write, or a subquery's
+    inner answer), or the driver copy of a source Spark reads as one
+    split (one `toArrow()` job the first time a generation is answered,
+    none after it). /query then builds no DataFrame and runs no Spark
+    job, and its answer is the FinishSpec itself. Such a spec may have
+    no `GROUP BY time()`: one row per series, ungrouped or by tags;
+  - otherwise, for a `GROUP BY time()` aggregate, Spark runs only the
+    aggregated frame, collected with `toArrow()`: one job over a source
+    read as one split, two otherwise (its shuffle stage and the result
+    stage). /query plans nothing past that frame.
   Either way the driver then fills each series' buckets
   (`functions/fill.fill_collected`), resolves open bounds from the
-  collected buckets, and applies SLIMIT/SOFFSET, ORDER BY time and
-  OFFSET/LIMIT. This is the reference's coordinator re-aggregating and
-  shaping the merged per-node answers in-process (coordinator.go:131-158,
-  196-237; merge/query_merge.go:106-209);
+  collected buckets, and applies SLIMIT/SOFFSET, ORDER BY time (series
+  in tag order without GROUP BY time()) and OFFSET/LIMIT. This is the
+  reference's coordinator re-aggregating and shaping the merged per-node
+  answers in-process (coordinator.go:131-158, 196-237;
+  merge/query_merge.go:106-209);
+- a `DriverAnswer` is built on the driver with no DataFrame: a raw select
+  over rows on the driver (WHERE, ORDER BY time, OFFSET/LIMIT in
+  pyarrow), and /query's SHOW MEASUREMENTS and SHOW TAG VALUES read from
+  the catalog or such rows;
 - every other DataFrame is collected whole with `collect()`, after the
   engine has applied its LIMITs in the plan.
 """
@@ -90,8 +97,10 @@ def local_result(spark, rows, schema: list[tuple[str, str]]) -> DataFrame:
     - model.Catalog: SHOW DATABASES / MEASUREMENTS / TAG KEYS / FIELD
       KEYS, an empty SHOW SERIES, Measurement.series_df of a tagless
       measurement, SHOW SERIES / TAG VALUES of a measurement the driver
-      holds (answered from its rows) and /query's SHOW TAG VALUES over
-      the driver copy of a one-split source;
+      holds (answered from its rows) and a SHOW TAG VALUES CARDINALITY
+      over the driver copy of a one-split source (/query answers plain
+      SHOW MEASUREMENTS and SHOW TAG VALUES as a DriverAnswer, with no
+      DataFrame);
     - admin.AdminHandler: SHOW PARTITION KEYS, SHOW NODES, SHOW
       REPLICATION FACTORS, SHOW USERS, BACKUP's export list and the
       empty acknowledgements;
@@ -121,12 +130,13 @@ def _format_time(ns: int, epoch: str | None):
 
 @dataclass(frozen=True)
 class FinishSpec:
-    """How the driver finishes a collected `GROUP BY time()` answer from
-    its aggregated rows. Built by `Planner.plan`, which attaches it to the
-    full Spark plan (EXPLAIN, SELECT … INTO, subqueries and the contract
-    keys run that one). Asked for /query's answer plan, the planner
-    attaches it to the aggregated frame itself, or, for an answer from
-    rows on the driver, returns the spec as the answer.
+    """How the driver finishes a collected aggregate answer from its
+    aggregated rows. Built by `Planner.plan`, which attaches it to the
+    full Spark plan of a `GROUP BY time()` aggregate (EXPLAIN, SELECT …
+    INTO, subqueries and the contract keys run that one). Asked for
+    /query's answer plan, the planner attaches it to the aggregated frame
+    itself, or, for an answer from rows on the driver, returns the spec as
+    the answer; only such a spec may have no `GROUP BY time()`.
 
     `columns` are the answer's columns, as a DataFrame's are."""
     # the aggregated rows (time, group tags, value columns): a DataFrame,
@@ -138,11 +148,15 @@ class FinishSpec:
     value_cols: tuple[str, ...]
     # per value column, from the filled columns' types: a cast for the
     # collected values (float where Spark's coercion made an integer
-    # aggregate DOUBLE) and the numeric fill literal in the column's type
+    # aggregate DOUBLE), the numeric fill literal in the column's type,
+    # and the Spark type name of the answer's column
     casts: tuple
     fill_values: tuple
+    value_types: tuple
     fill: str | float | int | None
-    interval_ns: int
+    # None without GROUP BY time(): the aggregated rows, and the answer,
+    # have no time column and one row per series
+    interval_ns: int | None
     offset_ns: int
     start_ns: int | None
     end_ns: int | None
@@ -154,7 +168,18 @@ class FinishSpec:
 
     @property
     def columns(self) -> list[str]:
-        return ["time", *self.group_tags, *self.value_cols]
+        timed = [] if self.interval_ns is None else ["time"]
+        return [*timed, *self.group_tags, *self.value_cols]
+
+
+@dataclass(frozen=True)
+class DriverAnswer:
+    """An answer built on the driver with no DataFrame: its columns, and
+    `rows()`, which builds its rows when the answer is collected (a raw
+    select over rows on the driver, or a SHOW answered from the catalog or
+    from such rows)."""
+    columns: list[str]
+    rows: Callable[[], list[tuple]]
 
 
 _FINISH = "_influx_finish"
@@ -176,20 +201,22 @@ def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
     """The answer rows of `spec`: the aggregated rows are collected
     (Spark's last step, or pyarrow's over driver rows); fill, bounds,
     SLIMIT, ORDER BY time and OFFSET/LIMIT run here, in the planner's
-    order."""
+    order. Without GROUP BY time() the series are ordered by their tags
+    before SLIMIT and OFFSET/LIMIT, as the Spark plan orders them."""
     agg = spec.aggregated
     tbl = agg.toArrow() if isinstance(agg, DataFrame) else agg()
-    times = tbl.column("time").to_pylist()
+    timed = spec.interval_ns is not None
+    times = tbl.column("time").to_pylist() if timed else [0] * tbl.num_rows
     keys = (list(zip(*[tbl.column(t).to_pylist() for t in spec.group_tags]))
             if spec.group_tags else [()] * len(times))
     values = list(zip(*[tbl.column(c).to_pylist() for c in spec.value_cols]))
-    spine_fill = spec.fill != "none"
+    spine_fill = timed and spec.fill != "none"
 
     series: dict[tuple, dict[int, tuple]] = {}
     if spine_fill and not spec.group_tags:
         series[()] = {}   # an ungrouped spine exists without data
     for t, k, v in zip(times, keys, values):
-        if spine_fill or any(x is not None for x in v):
+        if spine_fill or not timed or any(x is not None for x in v):
             series.setdefault(k, {})[t] = v
     picked = sorted(series, key=_tag_order)
     if spec.group_tags and (spec.slimit is not None
@@ -209,8 +236,9 @@ def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
                 for k, f in zip(picked, filled))
     else:
         rows = [(t, k, v) for k in picked for t, v in series[k].items()]
-        # stable: equal times keep the tag order of `picked`
-        rows.sort(key=itemgetter(0), reverse=spec.order_desc)
+        if timed:
+            # stable: equal times keep the tag order of `picked`
+            rows.sort(key=itemgetter(0), reverse=spec.order_desc)
     stop = None if spec.limit is None else spec.offset + spec.limit
     casts = spec.casts if any(spec.casts) else None
     out = []
@@ -218,27 +246,31 @@ def _finished_rows(spec: FinishSpec) -> tuple[list[str], list[tuple]]:
         if casts:
             v = tuple(x if c is None or x is None else c(x)
                       for x, c in zip(v, casts))
-        out.append((t,) + k + v)
+        out.append(((t,) if timed else ()) + k + v)
     return spec.columns, out
 
 
-def collect_rows(df: DataFrame | FinishSpec) -> tuple[list[str], list[tuple]]:
-    """The columns and rows of an answer: finished on the driver when it
-    is a FinishSpec or the planner attached one, else the collected
-    plan."""
+def collect_rows(df: DataFrame | FinishSpec | DriverAnswer
+                 ) -> tuple[list[str], list[tuple]]:
+    """The columns and rows of an answer: built on the driver when it is a
+    DriverAnswer, finished on the driver when it is a FinishSpec or the
+    planner attached one, else the collected plan."""
+    if isinstance(df, DriverAnswer):
+        return df.columns, df.rows()
     spec = df if isinstance(df, FinishSpec) else df.__dict__.get(_FINISH)
     if spec is not None:
         return _finished_rows(spec)
     return df.columns, df.collect()
 
 
-def to_influx_series(df: DataFrame | FinishSpec, measurement: str,
+def to_influx_series(df: DataFrame | FinishSpec | DriverAnswer,
+                     measurement: str,
                      tag_cols: list[str] | None = None,
                      epoch: str | None = None,
                      statement_id: int = 0,
                      messages: list[tuple[str, str]] | None = None) -> dict:
-    """Collect an answer (a DataFrame, or a FinishSpec) and shape it into
-    the InfluxDB JSON result object."""
+    """Collect an answer (a DataFrame, a FinishSpec or a DriverAnswer) and
+    shape it into the InfluxDB JSON result object."""
     columns, rows = collect_rows(df)
     return shape_series(columns, rows, measurement, tag_cols, epoch,
                         statement_id, messages)

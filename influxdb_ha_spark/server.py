@@ -33,7 +33,8 @@ from .influxql.clusterql import is_admin_statement
 from .influxql.parser import parse_query
 from .model import Catalog, Measurement
 from .planner import Planner, QueryError
-from .result import FinishSpec, empty_result, local_result, to_influx_series
+from .result import (DriverAnswer, FinishSpec, empty_result, local_result,
+                     to_influx_series)
 from .streaming.cq import ContinuousQuery, CQRunner
 
 # routing.go:113-119 rejects DropShard/ShowShards/ShowStats/ShowDiagnostics/
@@ -141,11 +142,13 @@ class Engine:
 
     # -- the /query surface --------------------------------------------------
     def query_df(self, q: str, database: str | None = None,
-                 answer: bool = False) -> DataFrame | FinishSpec:
+                 answer: bool = False
+                 ) -> DataFrame | FinishSpec | DriverAnswer:
         """The DataFrame of one statement: the full plan, or with `answer`
         the plan `query` collects (Planner.plan's `answer`; for an answer
-        from rows on the driver, a FinishSpec and no DataFrame). SHOW TAG
-        VALUES takes `answer` too (`Catalog.show_tag_values`)."""
+        from rows on the driver, a FinishSpec or a DriverAnswer and no
+        DataFrame). With `answer`, SHOW MEASUREMENTS and SHOW TAG VALUES
+        are DriverAnswers too when the driver reads them (`_show_rows`)."""
         db = database or self.database
         if _REJECTED.match(q):
             # routing.go:113-119 → 400
@@ -265,7 +268,8 @@ class Engine:
                               "group": group}
         sc.setJobGroup(group, q[:120], interruptOnCancel=True)
         try:
-            # a DataFrame, or a FinishSpec answered from driver rows
+            # a DataFrame, or a FinishSpec or DriverAnswer built on the
+            # driver
             answer = self.query_df(q, database, answer=True)
             columns = answer.columns
             if not columns:
@@ -393,7 +397,14 @@ class Engine:
 
     # -- SHOW routing (routing.go:121-135) ------------------------------------
     def _show(self, stmt: ShowStatement, db: str,
-              answer: bool) -> DataFrame:
+              answer: bool) -> DataFrame | DriverAnswer:
+        if answer and not stmt.cardinality:
+            got = self._show_rows(stmt, db)
+            if got is not None:
+                columns, rows = got
+                lo = stmt.offset or 0
+                rows = rows[lo:None if stmt.limit is None else lo + stmt.limit]
+                return DriverAnswer(columns, rows.copy)
         if stmt.cardinality:
             # SHOW <x> [EXACT] CARDINALITY (influxql 1.x cardinality
             # statements): EXACT counts the meta scan; the bare form is
@@ -430,6 +441,41 @@ class Engine:
             out = out.limit(stmt.limit)
         return out
 
+    def _show_rows(self, stmt: ShowStatement, db: str
+                   ) -> tuple[list[str], list[tuple]] | None:
+        """(columns, rows) of a SHOW the driver answers with no Spark round
+        trip, or None: SHOW MEASUREMENTS without a regex, from the catalog,
+        and SHOW TAG VALUES whose every key's values the driver reads from
+        rows (`Catalog.tag_values`). `_show_inner` answers the same rows
+        as a DataFrame."""
+        what = stmt.what.upper()
+        database = stmt.database or db
+        if what == "MEASUREMENTS" and not stmt.measurement_regex:
+            return ["name"], [
+                (n,) for n in sorted(self.catalog.databases.get(database, {}))
+                if not stmt.measurement or n == stmt.measurement]
+        if what == "TAG VALUES" and stmt.measurement and (
+                stmt.with_key or stmt.with_keys or stmt.with_key_regex):
+            rows = []
+            for k in self._tag_keys(stmt, database):
+                values = self.catalog.tag_values(database, stmt.measurement,
+                                                 k, answer=True)
+                if values is None:
+                    return None
+                rows += [(k, v) for v in values]
+            return ["key", "value"], rows
+        return None
+
+    def _tag_keys(self, stmt: ShowStatement, database: str) -> list[str]:
+        """The tag keys of SHOW TAG VALUES … WITH KEY."""
+        m = self.catalog.get(database, stmt.measurement)
+        if stmt.with_key:
+            return [stmt.with_key]
+        if stmt.with_keys:
+            return [k for k in stmt.with_keys if k in m.tags]
+        rx = re.compile(stmt.with_key_regex)
+        return [t for t in m.tags if rx.search(t)]
+
     def _show_inner(self, stmt: ShowStatement, db: str,
                     answer: bool) -> DataFrame:
         what = stmt.what.upper()
@@ -453,17 +499,9 @@ class Engine:
             if not stmt.measurement or not (stmt.with_key or stmt.with_keys
                                             or stmt.with_key_regex):
                 raise QueryError("SHOW TAG VALUES requires FROM and WITH KEY")
-            m = self.catalog.get(database, stmt.measurement)
-            if stmt.with_key:
-                keys = [stmt.with_key]
-            elif stmt.with_keys:
-                keys = [k for k in stmt.with_keys if k in m.tags]
-            else:
-                rx = re.compile(stmt.with_key_regex)
-                keys = [t for t in m.tags if rx.search(t)]
             dfs = [self.catalog.show_tag_values(database, stmt.measurement, k,
                                                 answer)
-                   for k in keys]
+                   for k in self._tag_keys(stmt, database)]
             if not dfs:
                 return local_result(self.catalog.spark, [],
                                     [("key", "STRING"), ("value", "STRING")])

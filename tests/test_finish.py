@@ -12,14 +12,17 @@ SELECT … INTO, subqueries) must carry no spec. Every contract `iq_*`
 statement the finisher takes is also answered through `Engine.query` and
 compared with its full plan. Over rows on the driver (a measurement born
 from /write, or the driver copy of a source Spark reads as one split) the
-aggregated rows come from pyarrow instead of Spark; those answers are
-compared with the full Spark plan over the same rows in one parquet file.
+aggregated rows come from pyarrow instead of Spark, and so do the rows of
+a raw select and of a subquery whose inner statement is answered so;
+those answers are compared with the full Spark plan over the same rows in
+one parquet file.
 """
 
 from __future__ import annotations
 
 import itertools
 import json
+import math
 
 import pytest
 from hypothesis import assume, given, settings, strategies as st
@@ -370,36 +373,45 @@ def _held_engines(spark, rows, root):
                  for c in (held, plain, file))
 
 
-def _assert_matches_full_plan(engines, q):
+def _close(got, want) -> bool:
+    """Equal, but for floats equal to 1e-9 relative."""
+    if isinstance(got, float) and isinstance(want, float):
+        return math.isclose(got, want, rel_tol=1e-9, abs_tol=1e-9)
+    if isinstance(got, (list, tuple)) and isinstance(want, (list, tuple)):
+        return len(got) == len(want) and all(map(_close, got, want))
+    if isinstance(got, dict) and isinstance(want, dict):
+        return got.keys() == want.keys() and all(
+            _close(got[k], want[k]) for k in got)
+    return got == want
+
+
+def _assert_matches_full_plan(engines, q, exact=True):
     """Every engine's /query answer equals the full Spark plan of the
     parquet engine (the Spark spine, which takes no driver copy),
     collected and shaped, byte for byte. One split keeps Spark's float
-    sums in row order, as pyarrow's are. The held and LocalRelation
-    answers also equal each other byte for byte; compared with the
-    parquet source, a statement without GROUP BY time() has its series
-    sorted first, because the engine leaves them in Spark's hash order,
-    which depends on the source (FOUND in CHANGES.md)."""
-    def by_series(res):
-        if "GROUP BY time" not in q:
-            res["results"][0]["series"].sort(key=json.dumps)
-        return json.dumps(res)
-
+    sums in row order, as pyarrow's are; the series of an aggregate
+    without GROUP BY time() are in tag order on every route. Not `exact`,
+    floats compare to 1e-9 relative: for float sums over rows Spark
+    shuffles (a subquery's inner answer), whose order it does not fix."""
     full = engines[-1].query_df(q)
     tags = [t for t in ("host", "dc") if t in full.columns]
     rows = full.collect()
     for epoch in ("ns", None):
         want = shape_series(full.columns, rows, "m", tags, epoch)
-        held, plain, file = (e.query(q, epoch=epoch) for e in engines)
-        assert json.dumps(file) == json.dumps(want), q
-        assert json.dumps(held) == json.dumps(plain), q
-        assert by_series(held) == by_series(want), q
+        for e in engines:
+            got = e.query(q, epoch=epoch)
+            if exact:
+                assert json.dumps(got) == json.dumps(want), q
+            else:
+                assert _close(got, want), q
 
 
 def _driver_answers(engines, q) -> bool:
-    """Whether /query answers `q` from driver rows (a FinishSpec), which
-    must be the same on every route."""
-    from influxdb_ha_spark.result import FinishSpec
-    got = {isinstance(e.query_df(q, answer=True), FinishSpec)
+    """Whether /query answers `q` from driver rows (a FinishSpec or a
+    DriverAnswer, not a DataFrame), which must be the same on every
+    route."""
+    from pyspark.sql import DataFrame
+    got = {not isinstance(e.query_df(q, answer=True), DataFrame)
            for e in engines}
     assert len(got) == 1, q
     return got.pop()
@@ -416,12 +428,12 @@ def _table(points):
                                 schema=schema)
 
 
-POINTS = st.lists(st.tuples(
+POINT = st.tuples(
     st.integers(-5 * H, 15 * H),                  # negative times too
     st.sampled_from(["a", "b", None]), st.sampled_from(["x", "y", None]),
     st.one_of(st.none(), st.integers(-1000, 1000)),
-    st.one_of(st.none(), st.floats(-1e6, 1e6), st.just(float("nan")))),
-    max_size=30)
+    st.one_of(st.none(), st.floats(-1e6, 1e6), st.just(float("nan"))))
+POINTS = st.lists(POINT, max_size=30)
 AGG = st.sampled_from(["count", "sum", "mean", "min", "max"])
 HELD_WHERE = ["", CLOSED, f"time >= {-3 * H + 7}", f"time <= {6 * H}",
               "time < now()", f"time >= {50 * H} AND time < {60 * H}",
@@ -465,6 +477,106 @@ def test_held_answer_matches_spark(spark, parquet_root, points, calls, where,
     _assert_matches_full_plan(engines, q)
 
 
+# one point per (time, tag set), as InfluxDB's upsert keeps them: equal
+# times then order the same on every route
+SERIES_POINTS = st.lists(POINT, max_size=30, unique_by=lambda p: p[:3])
+RAW_FIELDS = st.lists(st.tuples(st.sampled_from(["i", "v", "host", "dc"]),
+                                st.sampled_from([None, "x1", "host"])),
+                      min_size=1, max_size=3)
+
+
+@settings(max_examples=60, deadline=None)
+@given(points=SERIES_POINTS, fields=RAW_FIELDS,
+       where=st.sampled_from(HELD_WHERE), desc=st.booleans(),
+       limit=st.sampled_from(["", "LIMIT 4", "LIMIT 3 OFFSET 2", "OFFSET 5",
+                              "LIMIT 0"]))
+def test_held_raw_select_matches_spark(spark, parquet_root, points, fields,
+                                       where, desc, limit):
+    """A raw select over driver rows (pyarrow: WHERE, ORDER BY time with
+    equal times in tag order, OFFSET/LIMIT) answers byte for byte like
+    the full Spark plan, for fields and tags, aliases (one may take a
+    tag's name), every WHERE of the subset, ASC and DESC. A NaN in a
+    field the WHERE compares sends it to Spark on every route."""
+    engines = _held_engines(spark, _table(points), parquet_root)
+    sel = ", ".join(f + (f" AS {a}" if a else "") for f, a in fields)
+    order = "ORDER BY time DESC" if desc else ""
+    cond = f"WHERE {where}" if where else ""
+    q = f"SELECT {sel} FROM m {cond} {order} {limit}"
+    nan = any(p[4] != p[4] for p in points if p[4] is not None)
+    assert _driver_answers(engines, q) or nan, q
+    _assert_matches_full_plan(engines, q)
+
+
+@settings(max_examples=60, deadline=None)
+@given(points=POINTS,
+       calls=st.lists(st.tuples(AGG, st.sampled_from(["i", "v"])),
+                      min_size=1, max_size=3),
+       where=st.sampled_from(HELD_WHERE),
+       group=st.sampled_from(["", "GROUP BY host", "GROUP BY dc",
+                              "GROUP BY host, dc", "GROUP BY *"]),
+       limit=st.sampled_from(["", "LIMIT 2", "LIMIT 1 OFFSET 1"]),
+       slimit=st.sampled_from(["", "SLIMIT 2", "SLIMIT 1 SOFFSET 1"]))
+def test_held_series_aggregate_matches_spark(spark, parquet_root, points,
+                                             calls, where, group, limit,
+                                             slimit):
+    """An aggregate without GROUP BY time() over driver rows, ungrouped or
+    grouped by tags (one row per series, in tag order on both routes),
+    answers byte for byte like the full Spark plan, with SLIMIT/SOFFSET
+    and OFFSET/LIMIT."""
+    assume(group or not slimit)
+    engines = _held_engines(spark, _table(points), parquet_root)
+    fields = ", ".join(f"{fn}({f})" for fn, f in dict.fromkeys(calls))
+    cond = f"WHERE {where}" if where else ""
+    q = f"SELECT {fields} FROM m {cond} {group} {limit} {slimit}"
+    nan = any(p[4] != p[4] for p in points if p[4] is not None)
+    assert _driver_answers(engines, q) or nan, q
+    _assert_matches_full_plan(engines, q)
+
+
+@settings(max_examples=60, deadline=None)
+@given(points=SERIES_POINTS, inner=AGG, field=st.sampled_from(["i", "v"]),
+       where=st.sampled_from(HELD_WHERE), fill=st.sampled_from(HELD_FILLS),
+       group=st.sampled_from(["", "host", "host, dc", "*"]),
+       interval=st.sampled_from(["1h", "2h, 30m", None]),
+       inner_limit=st.sampled_from(["", "LIMIT 2", "LIMIT 1 OFFSET 1"]),
+       outer=st.lists(st.sampled_from(["count", "min", "max", "sum", "mean"]),
+                      min_size=1, max_size=2, unique=True),
+       outer_group=st.sampled_from(["", "GROUP BY host", "GROUP BY *"]),
+       outer_where=st.sampled_from(["", "WHERE c > 1", f"WHERE {CLOSED}"]),
+       limit=st.sampled_from(["", "LIMIT 2", "LIMIT 1 OFFSET 1"]))
+def test_held_subquery_matches_spark(spark, parquet_root, points, inner,
+                                     field, where, fill, group, interval,
+                                     inner_limit, outer, outer_group,
+                                     outer_where, limit):
+    """A subquery whose inner aggregate is answered from driver rows is
+    answered from its rows: the outer aggregate, ungrouped or by tag,
+    with a WHERE and OFFSET/LIMIT, answers like the full Spark plan, for
+    every inner fill and an inner OFFSET/LIMIT. An inner aggregate
+    without GROUP BY time() has no time column, so its outer statement is
+    planned in Spark over the inner rows. Outer sums and means of
+    fractional values compare to 1e-9: the full plan adds the inner rows
+    in the order its shuffle gives them."""
+    assume(outer_group != "GROUP BY host" or group in ("host", "host, dc",
+                                                       "*"))
+    assume(outer_group != "GROUP BY *" or group)
+    assume(interval or outer_where != f"WHERE {CLOSED}")
+    engines = _held_engines(spark, _table(points), parquet_root)
+    cond = f"WHERE {where}" if where else ""
+    keys = ([f"time({interval})"] if interval else []) + ([group] if group
+                                                         else [])
+    by = f"GROUP BY {', '.join(keys)}" if keys else ""
+    sub = (f"SELECT {inner}({field}) AS c FROM m {cond} {by} "
+           f"{fill if interval else ''} {inner_limit}")
+    fields = ", ".join(f"{fn}(c)" for fn in outer)
+    q = f"SELECT {fields} FROM ({sub}) {outer_where} {outer_group} {limit}"
+    nan = any(p[4] != p[4] for p in points if p[4] is not None)
+    assert _driver_answers(engines, q) or nan or not interval, q
+    fractional = (field == "v" or inner == "mean"
+                  or fill in ("fill(linear)", "fill(1.5)"))
+    _assert_matches_full_plan(
+        engines, q, exact=not (fractional and {"sum", "mean"} & set(outer)))
+
+
 NAN_POINTS = [(H, "a", "x", 1, float("nan")), (2 * H, "b", "y", 2, 4.0),
               (2 * H + 5, "a", None, None, -0.0), (3 * H, None, "x", 3, 0.0)]
 
@@ -482,18 +594,52 @@ NAN_POINTS = [(H, "a", "x", 1, float("nan")), (2 * H, "b", "y", 2, 4.0),
     f"SELECT max(i) FROM m WHERE i = 'a' AND {CLOSED} GROUP BY time(1h)",
     f"SELECT max(i) FROM m WHERE {CLOSED} GROUP BY time(1h), i",
     f"SELECT sum(host) FROM m WHERE {CLOSED} GROUP BY time(1h)",
-    f"SELECT max(i) FROM m WHERE {CLOSED} GROUP BY host",
-    f"SELECT i FROM m WHERE {CLOSED}",
+    f"SELECT i FROM m WHERE host =~ /a/ AND {CLOSED}",
+    f"SELECT i FROM m WHERE i * 2 > 3",
+    f"SELECT * FROM m WHERE {CLOSED}",
+    f"SELECT i + 1 FROM m WHERE {CLOSED}",
+    f"SELECT i FROM m WHERE {CLOSED} GROUP BY host",
+    f"SELECT i FROM m WHERE {CLOSED} tz('America/New_York')",
+    # the inner statement is outside the subset: the subquery is Spark's
+    f"SELECT max(p) FROM (SELECT percentile(i, 50) AS p FROM m "
+    f"WHERE {CLOSED} GROUP BY time(1h))",
+    # the inner rows have no time column: the outer statement is Spark's
+    # over them, and the inner LIMIT picks series in tag order
+    f"SELECT sum(c) FROM (SELECT max(i) AS c FROM m WHERE {CLOSED} "
+    "GROUP BY dc LIMIT 1 OFFSET 1)",
+    # the outer statement is outside the subset
+    f"SELECT percentile(c, 50) FROM (SELECT count(i) AS c FROM m "
+    f"WHERE {CLOSED} GROUP BY time(1h))",
     # Spark orders NaN above every number: min, max and comparisons of a
     # field holding NaN stay in Spark
     f"SELECT max(v) FROM m WHERE {CLOSED} GROUP BY time(1h)",
     f"SELECT count(v) FROM m WHERE v > 0 AND {CLOSED} GROUP BY time(1h)",
+    f"SELECT i FROM m WHERE v < 3",
 ])
 def test_declined_held_statements_keep_spark(spark, parquet_root, q):
     """A statement outside the pyarrow subset is planned in Spark over the
     driver's rows or the copied source, and answers like the full plan."""
     engines = _held_engines(spark, _table(NAN_POINTS), parquet_root)
     assert not _driver_answers(engines, q), q
+    _assert_matches_full_plan(engines, q)
+
+
+@pytest.mark.parametrize("q", [
+    f"SELECT max(i) FROM m WHERE {CLOSED} GROUP BY host",
+    f"SELECT i FROM m WHERE {CLOSED}",
+    f"SELECT v AS host, dc, v FROM m ORDER BY time DESC LIMIT 3 OFFSET 1",
+    f"SELECT max(c) FROM (SELECT count(v) AS c FROM m WHERE {CLOSED} "
+    "GROUP BY time(1h), host fill(0)) GROUP BY host",
+    f"SELECT c FROM (SELECT count(i) AS c FROM m WHERE {CLOSED} "
+    "GROUP BY time(1h), host) WHERE c > 0 ORDER BY time DESC LIMIT 5",
+])
+def test_answered_held_statements_match_spark(spark, parquet_root, q):
+    """An aggregate grouped by tags without GROUP BY time(), a raw select
+    (an alias may take a tag's name: equal times still follow the tags)
+    and a subquery, aggregated or raw over its inner rows, are answered
+    from driver rows over NaN too, and answer like the full plan."""
+    engines = _held_engines(spark, _table(NAN_POINTS), parquet_root)
+    assert _driver_answers(engines, q), q
     _assert_matches_full_plan(engines, q)
 
 

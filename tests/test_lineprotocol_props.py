@@ -4,15 +4,16 @@ that require escaping (commas, spaces, equals, quotes, backslashes); and
 the driver-side pivot and upsert of /write agree with the Spark ones."""
 
 import math
+import re
 
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from influxdb_ha_spark.ingest import upsert_points, upsert_rows
-from influxdb_ha_spark.lineprotocol import (format_point, parse_line,
-                                            parse_lines_df, pivot_points,
-                                            pivot_records)
+from influxdb_ha_spark.lineprotocol import (_number, format_point,
+                                            parse_line, parse_lines_df,
+                                            pivot_points, pivot_records)
 
 name = st.text(
     alphabet=st.characters(codec="ascii", exclude_characters="\n\r\\\"",
@@ -83,6 +84,50 @@ def test_valid_numbers_parse(value, col, want):
     (rec,) = parse_line(f"m v={value} 1")
     assert rec["error"] is None and rec[col] == want
     assert type(rec[col]) is type(want)
+
+
+@pytest.mark.parametrize("value,want", [
+    ("nan", None), ("inf", None), ("1e400", None), ("+1", None),
+    ("1_0", None), (" 1", None), ("1 ", None), ("١", None), ("1٣", None),
+    ("1٣i", None), ("٣u", None), ("9223372036854775808i", None),
+    (".5", ("f_float", 0.5)), ("1.", ("f_float", 1.0)),
+    ("-.5e3", ("f_float", -500.0)), ("3u", ("f_int", 3)),
+    ("-0i", ("f_int", 0)), ("1E+05", ("f_float", 1e5))])
+def test_number_table(value, want):
+    """`_number` without a regex: what Python's `float` and `int` read
+    beyond the grammar (signs, separators, spaces, non-ASCII digits,
+    nan/inf) is refused, and the grammar's edge forms are read."""
+    if want is None:
+        with pytest.raises(ValueError, match="invalid number"):
+            _number(value)
+    else:
+        got = _number(value)
+        assert got == want and type(got[1]) is type(want[1])
+
+
+# the number grammar as a regex (InfluxDB 1.x models/points.go scanNumber)
+_GRAMMAR_FLOAT = re.compile(
+    r"-?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?")
+_GRAMMAR_INT = re.compile(r"-?[0-9]+i|[0-9]+u")
+
+
+@settings(max_examples=2000, deadline=None)
+@given(v=st.text(alphabet="0123456789.-+eEiu_ nNaIf\t٣²x", max_size=8))
+def test_number_accepts_exactly_the_grammar(v):
+    """`_number` reads a string iff the grammar matches it and its value
+    is a finite float or an integer inside BIGINT."""
+    if _GRAMMAR_INT.fullmatch(v):
+        n = int(v[:-1])
+        want = ("f_int", n) if -2**63 <= n < 2**63 else None
+    elif _GRAMMAR_FLOAT.fullmatch(v) and math.isfinite(float(v)):
+        want = ("f_float", float(v))
+    else:
+        want = None
+    try:
+        got = _number(v)
+    except ValueError:
+        got = None
+    assert got == want, v
 
 
 @pytest.mark.parametrize("ts", ["1_0", "1e3", "1.0", "٣", "9223372036854775808"])

@@ -9,13 +9,16 @@ table from the repo's own generator (tools/gen_scale.gen_events), plus the
 `ingest` benchmark's read. Each answer is planned and collected the way
 /query does it (`Engine.query_df(..., answer=True)`, `to_influx_series`).
 `events` is one parquet file, which Spark reads as one split, so /query
-answers a plain GROUP BY time() aggregate and SHOW TAG VALUES from one
-driver copy of it (`Measurement.answer_rows`): the copy costs one job the
-first time a generation is answered and none after it. The `ingest` read
-targets a measurement born from /write, whose rows the driver holds: it
-is aggregated in pyarrow and runs no job at all. When Spark does run a
-finished answer (no copy), it plans and runs only the aggregated frame,
-in one partition over a one-split source.
+answers every rotation statement from one driver copy of it
+(`Measurement.answer_rows`) or from the catalog: the plain GROUP BY time()
+aggregates, the raw ORDER BY time LIMIT, the subquery (its inner and its
+outer aggregate) and SHOW TAG VALUES in pyarrow, SHOW MEASUREMENTS from
+the catalog's names. The copy costs one job the first time a generation
+is answered and none after it. The `ingest` read targets a measurement
+born from /write, whose rows the driver holds: it is aggregated in
+pyarrow and runs no job at all. When Spark does run a finished answer (no
+copy), it plans and runs only the aggregated frame, in one partition over
+a one-split source.
 """
 
 from __future__ import annotations
@@ -65,18 +68,17 @@ ROTATION = [
 ]
 
 # (jobs while building the DataFrame, jobs while collecting it), once the
-# `events` generation's driver copy exists: the five GROUP BY time() shapes
-# and SHOW TAG VALUES are answered from it in pyarrow, the ingest read
-# from the rows the driver holds. The raw LIMIT and the subquery stay in
-# Spark.
+# `events` generation's driver copy exists: every rotation statement is
+# answered from it in pyarrow or from the catalog, the ingest read from
+# the rows the driver holds.
 EXPECTED_JOBS = {
     "group_1h": (0, 0),
     "group_1h_tag": (0, 0),
     "group_1d_tag": (0, 0),
-    "raw_limit": (0, 1),
+    "raw_limit": (0, 0),
     "fill_linear": (0, 0),
     "fill_open": (0, 0),
-    "subquery": (0, 4),
+    "subquery": (0, 0),
     "show_tag_values": (0, 0),
     "show_measurements": (0, 0),
     "ingest_read": (0, 0),
@@ -162,11 +164,21 @@ def test_rotation_job_counts(spark, events_engine):
     assert got == EXPECTED_JOBS
 
 
+# Spark jobs per statement over a source read as more than one split,
+# which takes no driver copy: the two-stage aggregates run their shuffle
+# stage and the result stage; the raw LIMIT one TakeOrderedAndProject
+# job; the subquery its inner and outer stages.
+MULTI_SPLIT_JOBS = {"group_1h": (0, 2), "fill_open": (0, 2),
+                    "ingest_read": (0, 2), "raw_limit": (0, 1),
+                    "subquery": (0, 4)}
+
+
 def test_multi_split_source_keeps_two_jobs(spark, events_dir):
     """A source Spark reads as more than one split keeps the two-stage
-    aggregate: its shuffle stage and the result stage. The one-split
-    check reads the conf once per measurement generation, so the engine
-    here is built under the small split size."""
+    aggregate: its shuffle stage and the result stage; the raw LIMIT and
+    the subquery keep their Spark jobs too (MULTI_SPLIT_JOBS). The
+    one-split check reads the conf once per measurement generation, so the
+    engine here is built under the small split size."""
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
     spark.conf.set(key, "4k")
@@ -174,11 +186,11 @@ def test_multi_split_source_keeps_two_jobs(spark, events_dir):
         eng = _engine(spark, events_dir)
         assert eng.catalog.get("default", "events").df \
             .rdd.getNumPartitions() > 1
-        for kind in ["group_1h", "fill_open", "ingest_read"]:
+        for kind, want in MULTI_SPLIT_JOBS.items():
             q = (INGEST_READ_SPARK if kind == "ingest_read"
                  else dict(ROTATION)[kind])
             counts, series = _counted(spark, eng, f"multi-{kind}", q)
-            assert series and counts == (0, 2), kind
+            assert series and counts == want, kind
     finally:
         spark.conf.set(key, old)
 
@@ -401,6 +413,83 @@ def test_delete_and_retention_drop_the_copy(spark, events_dir, change):
                    if v[1] is not None) == JAN1 + 10 * DAY
 
 
+@pytest.mark.parametrize("q", [
+    # props is a string field, which the copy does not keep
+    f"SELECT value, props FROM events WHERE {_w(1, 7)} "
+    "AND event_type = 'view' ORDER BY time LIMIT 20",
+    f"SELECT * FROM events WHERE {_w(1, 7)} AND event_type = 'view' "
+    "ORDER BY time DESC LIMIT 20",
+    f"SELECT value FROM events WHERE {_w(1, 7)} "
+    "AND event_type =~ /vi.*/ LIMIT 20",
+])
+def test_raw_selects_outside_the_copy_keep_spark(spark, events_engine, q):
+    """A raw select reading a column the copy lacks, `*` or a regex WHERE
+    is planned in Spark (one TakeOrderedAndProject job) and answers like
+    the full plan."""
+    events_engine.catalog.get("default", "events").answer_rows()
+    counts, series = _counted(spark, events_engine, f"raw-{hash(q)}", q)
+    assert counts == (0, 1) and series == _full_series(events_engine, q)
+
+
+def test_concurrent_driver_answers_equal_serial(events_engine):
+    """Eight threads (more than the cores) sending the raw LIMIT and the
+    subquery against one driver copy at once each get the serial
+    answer."""
+    import sys
+    import threading
+    qs = [dict(ROTATION)[k] for k in ("raw_limit", "subquery")]
+    serial = [events_engine.query(q, epoch="ns") for q in qs]
+    assert all(s["results"][0]["series"] for s in serial)
+    answers, errors = [], []
+
+    def answer(i):
+        try:
+            for j in range(6):
+                k = (i + j) % 2
+                answers.append((k, events_engine.query(qs[k], epoch="ns")))
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=answer, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert len(answers) == 48
+    assert all(a == serial[k] for k, a in answers)
+
+
+def test_show_answers_are_built_on_the_driver(events_engine):
+    """/query's SHOW MEASUREMENTS and SHOW TAG VALUES are DriverAnswers
+    (no VALUES DataFrame, no py4j round trip) with the rows of the
+    DataFrame `query_df` still returns without `answer`, LIMIT and OFFSET
+    included."""
+    from influxdb_ha_spark.result import DriverAnswer, collect_rows
+    from pyspark.sql import DataFrame
+    for q in ["SHOW MEASUREMENTS", "SHOW MEASUREMENTS LIMIT 1 OFFSET 1",
+              "SHOW TAG VALUES FROM events WITH KEY = event_type",
+              "SHOW TAG VALUES FROM events WITH KEY = event_type "
+              "LIMIT 2 OFFSET 1",
+              'SHOW TAG VALUES FROM events WITH KEY IN ("event_type")']:
+        answer = events_engine.query_df(q, answer=True)
+        full = events_engine.query_df(q)
+        assert isinstance(answer, DriverAnswer), q
+        assert isinstance(full, DataFrame), q
+        cols, rows = collect_rows(answer)
+        assert (cols, rows) == (full.columns,
+                                [tuple(r) for r in full.collect()]), q
+    assert collect_rows(events_engine.query_df("SHOW MEASUREMENTS",
+                                               answer=True))[1] == [
+        ("cpu",), ("cpu_spark",), ("events",)]
+
+
 def test_write_into_events_sends_reads_to_spark(spark, events_dir):
     """A /write into `events` registers an upsert over the file scan,
     which is not one split: its answers go back to Spark (the aggregated
@@ -423,8 +512,9 @@ def test_write_into_events_sends_reads_to_spark(spark, events_dir):
 
 def test_full_plans_and_explain_take_no_copy(spark, events_dir):
     """Planner.plan without `answer` (EXPLAIN, SELECT … INTO, subqueries,
-    the contract keys, the traced benchmark pass) and EXPLAIN itself never
-    take the copy, so their plans do not depend on earlier answers."""
+    the contract keys, the traced benchmark pass), EXPLAIN itself and a
+    SELECT … INTO over a subquery never take the copy, so their plans do
+    not depend on earlier answers."""
     from influxdb_ha_spark.influxql.parser import parse_query
     from influxdb_ha_spark.planner import Planner
     eng = _engine(spark, events_dir)
@@ -444,6 +534,8 @@ def test_full_plans_and_explain_take_no_copy(spark, events_dir):
     assert _copy_of(eng) is None
     assert _jobs(sc, group) == 0
     eng.query(f"EXPLAIN ANALYZE {dict(ROTATION)['group_1h']}")
+    eng.query(dict(ROTATION)["subquery"].replace(
+        "SELECT max(c), min(c) FROM", "SELECT max(c) INTO sub_max FROM"))
     assert _copy_of(eng) is None
 
 
@@ -518,11 +610,14 @@ def _shape(df):
     "fill(0) tz('America/New_York')",
     f"SELECT derivative(mean(value), 1h) FROM events WHERE {_w(3, 7)} "
     "GROUP BY time(1h)"])
-def test_unfinished_statements_plan_as_before(events_engine, q):
-    """SELECT … INTO, subqueries and every statement the driver does not
-    finish get the full plan with or without `answer`."""
+def test_unfinished_statements_plan_as_before(events_engine, q,
+                                               monkeypatch):
+    """Without a driver copy, SELECT … INTO, subqueries and every
+    statement the driver does not finish get the full plan with or
+    without `answer`."""
     from influxdb_ha_spark.influxql.parser import parse_query
     from influxdb_ha_spark.planner import Planner
+    monkeypatch.setattr(Measurement, "answer_rows", lambda m: m.rows)
     planner = Planner(events_engine.catalog, "default", now_ns=NOW)
     full = planner.plan(parse_query(q))
     assert _shape(planner.plan(parse_query(q), answer=True)) == _shape(full)

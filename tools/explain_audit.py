@@ -148,6 +148,16 @@ BOUNDED_SINGLE_PARTITION = {
     "show_tag_values": "SHOW TAG VALUES sorts the DISTINCT values of one "
                        "tag in one partition: rows = the tag's cardinality "
                        "(a series-count bound), after a keyed distinct",
+    # a tag-grouped aggregate without GROUP BY time() whose answer the
+    # driver collects sorts its series by tag set in one partition
+    # (planner.Planner.plan), as SHOW TAG VALUES sorts its values
+    **dict.fromkeys(
+        ["iq_count_distinct", "iq_first_last", "iq_math_over_agg",
+         "iq_regex_tag", "iq_slimit", "iq_spread_tag", "iq_stats",
+         "iq_subquery", "iq_where_math"],
+        "the series sort of a collected aggregate without GROUP BY time(): "
+        "rows = one per series (a series-count bound), after the keyed "
+        "aggregate"),
     "emb_kmeans_train": "two 1-row global-aggregate summaries joined",
     "text_zipf": "the rank window runs on the top_n-row (default 500) "
                  "TakeOrderedAndProject result — bounded by the "
