@@ -374,8 +374,11 @@ def _held_engines(spark, rows, root):
 
 
 def _close(got, want) -> bool:
-    """Equal, but for floats equal to 1e-9 relative."""
+    """Equal, but for floats equal to 1e-9 relative. NaN equals NaN, as
+    in the exact comparison of the JSON both render."""
     if isinstance(got, float) and isinstance(want, float):
+        if math.isnan(got) or math.isnan(want):
+            return math.isnan(got) and math.isnan(want)
         return math.isclose(got, want, rel_tol=1e-9, abs_tol=1e-9)
     if isinstance(got, (list, tuple)) and isinstance(want, (list, tuple)):
         return len(got) == len(want) and all(map(_close, got, want))
